@@ -213,9 +213,9 @@ object Bench {
         }
     }
 
-  /** Force-release every persisted RDD that survived the registered
-    * clearCaches() teardowns, returning one descriptor per leak (id +
-    * name or toString) for the artifact's `leaked_rdds` field — r18's
+  /** Force-release every persisted RDD that survived the session-artifact
+    * teardown (QueryArtifacts.clearAll), returning one descriptor per leak
+    * (id + name or toString) for the artifact's `leaked_rdds` field — r18's
     * `leaked_persists: 1` was undiagnosable because only the count was
     * logged, and the leak itself outlived the bench JVM's storage. */
   private[graft] def drainLeaked(spark: SparkSession): Seq[String] = {
@@ -425,25 +425,17 @@ object Bench {
         s"both passes: ${failedQueries.mkString(", ")}")
     // reopen wall-times read BEFORE teardown clears them (see summaryJson)
     val reopenMs = graft.queries.ServeAllQueries.reopenMillis(spark, sfDir)
-    // teardown: release the shared persisted intermediates (jaccard /
-    // minhash candidate pairs, IVF inverted files) and prove nothing
+    // teardown: release every session artifact and prove nothing
     // leaked — a long-lived session accumulating (session, dir)-keyed
     // persists would otherwise grow storage unboundedly.
-    graft.queries.DedupQueries.clearCaches()
-    graft.queries.SimilarityQueries.clearCaches()
-    graft.queries.MultimodalQueries.clearCaches()
-    graft.queries.PipelineQueries.clearCaches()
-    graft.queries.TextQueries.clearCaches()
-    graft.queries.AnalyticsQueries.clearCaches()
-    graft.queries.RagQueries.clearCaches()
-    graft.queries.ServeAllQueries.clearCaches()
+    graft.queries.QueryArtifacts.clearAll()
     // name + force-unpersist every survivor (diagnosable from the
     // artifact alone, and the storage is actually released)
     val leakedRdds = drainLeaked(spark)
     val leaked = leakedRdds.size
     if (leaked != 0)
       System.err.println(s"[bench] WARNING: $leaked persisted RDDs leaked " +
-        s"past clearCaches() (force-unpersisted): ${leakedRdds.mkString("; ")}")
+        s"past clearAll() (force-unpersisted): ${leakedRdds.mkString("; ")}")
     // one summary string, used verbatim for stdout and the file artifact
     // (two hand-maintained copies drifted once already); see summaryJson
     // for the artifact contract (failure names, sentinel handling, field

@@ -1,7 +1,5 @@
 package graft
 
-import scala.collection.immutable.ListMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.engine.DemoApp

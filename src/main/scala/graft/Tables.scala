@@ -34,17 +34,18 @@ object Tables {
     * (file list + schema), NEVER rows: every action on it still scans
     * the parquet inputs. Lake dirs here are immutable fixtures (tests
     * that write parquet use fresh temp dirs), so the snapshot semantics
-    * match a catalog's. Bounded: #tables x #dirs entries per session. */
+    * match a catalog's. Bounded: #tables x #dirs entries per session;
+    * nothing to release (no rows are held). */
   private val planCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
+    queries.QueryArtifacts.cache[(SparkSession, String, String), DataFrame]()
 
   /** Load `<dir>/<name>.parquet`, normalizing known event-time columns. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     prepare(spark)
-    planCache.getOrElseUpdate((spark, dir, name), {
+    planCache((spark, dir, name)) {
       val df = spark.read.parquet(s"$dir/$name.parquet")
       if (name == "events") normalizeEventTime(df, "ts") else df
-    })
+    }
   }
 
   /** Normalize an event-time column to TimestampType in place (same name,
@@ -71,9 +72,4 @@ object Tables {
           col(colName).cast(org.apache.spark.sql.types.TimestampType))
       case _ => df
     }
-
-  /** Former name of [[normalizeEventTime]], kept for source compatibility. */
-  @deprecated("use normalizeEventTime", "r11")
-  def normalizeNanos(df: DataFrame, colName: String): DataFrame =
-    normalizeEventTime(df, colName)
 }

@@ -46,16 +46,9 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // teardown: drop the shared persisted intermediates (candidate-pair
-    // caches, IVF inverted files) before the session goes away
-    graft.queries.DedupQueries.clearCaches()
-    graft.queries.SimilarityQueries.clearCaches()
-    graft.queries.MultimodalQueries.clearCaches()
-    graft.queries.PipelineQueries.clearCaches()
-    graft.queries.TextQueries.clearCaches()
-    graft.queries.AnalyticsQueries.clearCaches()
-    graft.queries.RagQueries.clearCaches()
-    graft.queries.ServeAllQueries.clearCaches()
+    // teardown: release every session artifact before the session goes
+    // away
+    graft.queries.QueryArtifacts.clearAll()
     spark.stop()
   }
 }

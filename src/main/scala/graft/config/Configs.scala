@@ -139,7 +139,7 @@ object Configs {
         case Some(m) =>
           try java.util.regex.Pattern.compile(m.group(2))
           catch {
-            case e: java.util.regex.PatternSyntaxException =>
+            case _: java.util.regex.PatternSyntaxException =>
               throw new InvalidConfigurationException(
                 s"""Entry "$ident" in unmanaged_files.yml contains an invalid regular expression""")
           }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Supervised token-count quality/domain classifier with the TRAIN/SERVE
@@ -219,7 +218,7 @@ final class QualityClassifier private[operators] (
         (round(num.cast("double") / den.cast("double") * 1e6, 0) / 1e6)
           .as("expected_p"))
     }
-    val win = array_max(array(scored: _*))
+    val win = array_max(array(scored.toIndexedSeq: _*))
     struct(nTok.as("n_tokens"), win.getField("label").as("pred_label"),
       win.getField("expected_p").as("expected_p"))
   }

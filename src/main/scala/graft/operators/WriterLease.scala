@@ -51,7 +51,7 @@ object WriterLease {
 
   /** pid@host — names the maintainer PROCESS, readable in the refusal. */
   private[operators] def defaultOwner: String =
-    java.lang.ProcessHandle.current().pid() + "@" +
+    s"${java.lang.ProcessHandle.current().pid()}@" +
       java.net.InetAddress.getLocalHost.getHostName
 
   private val invocationSeq = new java.util.concurrent.atomic.AtomicLong(0)

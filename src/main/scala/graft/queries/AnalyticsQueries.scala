@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.QueryArtifacts.SessionDir
 
 /** Standard analytics surface: aggregation, multi-join with broadcast dims,
   * window functions, top-k, sessionization, JSON extraction.
@@ -48,13 +49,12 @@ object AnalyticsQueries {
     * suppliers); symmetrizing would collapse the two roles. PERSISTED once
     * per (session, dir) (the dedup candidate-cache pattern): three graph
     * rows consume this fact-fact join + distinct, and each bench pass
-    * would otherwise rebuild it per row. Released by [[clearCaches]]. */
-  private val tradeEdgesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), org.apache.spark.sql.DataFrame]
+    * would otherwise rebuild it per row. */
+  private val tradeEdgesCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def tradeGraphDirected(spark: SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame =
-    QueryArtifacts.runOnce(tradeEdgesCache, (spark, dir))({
+    tradeEdgesCache((spark, dir)) {
       val orders = Tables.load(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"))
       val li = Tables.load(spark, dir, "lineitem")
@@ -65,46 +65,43 @@ object AnalyticsQueries {
           concat(lit("S"), col("l_suppkey")).as("dst"))
         .distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** The [[graft.operators.PageRank.prepare]]d SYMMETRIZED trade graph
     * both PageRank rows rank over — src-partitioned edges, node set,
     * degree-joined edges, each persisted once per (session, dir) (the
     * build-once / rank-many shape a real curation pipeline uses: one
     * graph build serves the uniform prior, every seed-set PPR, and any
-    * later ranking variant). Released by [[clearCaches]]. */
+    * later ranking variant). */
   private val preparedGraphCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.operators.PageRank.Graph]
+    QueryArtifacts.cache[SessionDir, graft.operators.PageRank.Graph](_.unpersist())
 
   private def preparedTradeGraph(spark: SparkSession,
       dir: String): graft.operators.PageRank.Graph =
-    QueryArtifacts.runOnce(preparedGraphCache, (spark, dir))(
+    preparedGraphCache((spark, dir))(
       graft.operators.PageRank.prepare(tradeGraphEdges(spark, dir),
         "src", "dst", persist = true))
 
   /** [[graft.operators.Hits.prepare]]d DIRECTED trade graph for the HITS
     * row — same build-once / rank-many shape as [[preparedTradeGraph]],
-    * over the bipartite (unsymmetrized) form. Released by
-    * [[clearCaches]]. */
+    * over the bipartite (unsymmetrized) form. */
   private val preparedHitsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.operators.Hits.Graph]
+    QueryArtifacts.cache[SessionDir, graft.operators.Hits.Graph](_.unpersist())
 
   private def preparedHitsGraph(spark: SparkSession,
       dir: String): graft.operators.Hits.Graph =
-    QueryArtifacts.runOnce(preparedHitsCache, (spark, dir))(
+    preparedHitsCache((spark, dir))(
       graft.operators.Hits.prepare(tradeGraphDirected(spark, dir),
         "src", "dst", persist = true))
 
   /** The per-user transition-PAIRS table (user_id, from_type, to_type)
     * every behavioral row reads — ONE `lead()` window pass persisted per
     * (session, dir) instead of one window per consumer (before r16 the
-    * transition report and the anomaly scorer each re-ran it). Released
-    * by [[clearCaches]]. */
-  private val transitionPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * transition report and the anomaly scorer each re-ran it). */
+  private val transitionPairsCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def transitionPairs(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(transitionPairsCache, (spark, dir))(
+    transitionPairsCache((spark, dir))(
       graft.operators.MarkovModel.pairs(
           Tables.load(spark, dir, "events")
             .select(col("user_id"), col("event_type"), col("ts"),
@@ -115,19 +112,8 @@ object AnalyticsQueries {
   /** Source tag for the durable Markov model: the events table's file
     * metadata (names, lengths, mtimes — the lmSourceTag discipline), so
     * a regenerated fixture invalidates the manifest without a scan. */
-  private def eventsSourceTag(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val statuses =
-      if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).sortBy(_.getPath.toString)
-      else Array(fs.getFileStatus(p))
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    statuses.foreach { s =>
-      md.update(s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime};"
-        .getBytes("UTF-8"))
-    }
-    dir + "#" + md.digest().map("%02x".format(_)).mkString.take(16)
-  }
+  private def eventsSourceTag(spark: SparkSession, dir: String): String =
+    dir + "#" + QueryArtifacts.sourceDigest(spark, dir, "events")
 
   private def markovModelPath(dir: String): String =
     QueryArtifacts.path("target/markov-model", dir)
@@ -138,12 +124,11 @@ object AnalyticsQueries {
     * training jobs on a hit). The transition report, the anomaly
     * scorer, and the streaming replay's probability join all serve from
     * THIS frozen model. */
-  private val markovCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.MarkovModel]
+  private val markovCache = QueryArtifacts.cache[SessionDir, graft.operators.MarkovModel]()
 
   private def markovPersisted(spark: SparkSession,
       dir: String): graft.operators.MarkovModel =
-    QueryArtifacts.runOnce(markovCache, (spark, dir))({
+    markovCache((spark, dir)) {
       val path = markovModelPath(dir)
       val tag = eventsSourceTag(spark, dir)
       graft.operators.MarkovModel.loadIfValid(spark, path, tag).getOrElse {
@@ -151,7 +136,7 @@ object AnalyticsQueries {
           .write(path, tag)
         graft.operators.MarkovModel.load(spark, path)
       }
-    })
+    }
 
   /** The degree-capped (customer, supplier) interaction table the
     * co-occurrence row pairs over, PERSISTED once per (session, dir)
@@ -160,12 +145,11 @@ object AnalyticsQueries {
     * one plan (the supplier counts and the quadratic-per-key pair
     * self-join reads it TWICE), so the eager cut point is required for
     * correctness of cost, and session-scoping it makes warm passes
-    * reuse it. Released by [[clearCaches]]. */
-  private val cooccurKeptCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * reuse it. */
+  private val cooccurKeptCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def cooccurKept(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(cooccurKeptCache, (spark, dir))({
+    cooccurKeptCache((spark, dir)) {
       val e = tradeGraphDirected(spark, dir)
         .select(substring(col("src"), 2, 100).cast("long").as("c"),
           substring(col("dst"), 2, 100).cast("long").as("s"))
@@ -175,7 +159,7 @@ object AnalyticsQueries {
       kept.count() // materialize NOW: the pair self-join must read the
       // persisted table, not race two scans into an unfilled cache
       kept
-    })
+    }
 
   /** Appended-model twin of [[markovPersisted]] — the Markov family's
     * daily-growth lifecycle on ONE durable artifact: trained on the
@@ -186,12 +170,11 @@ object AnalyticsQueries {
     * first serve (the ann_ivf_appended discipline). Build-once via the
     * manifest+ledger: a manifest whose source is the APPEND tag proves
     * the whole chain completed; anything else rebuilds it. */
-  private val markovAppendCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.MarkovModel]
+  private val markovAppendCache = QueryArtifacts.cache[SessionDir, graft.operators.MarkovModel]()
 
   private def markovAppended(spark: SparkSession,
       dir: String): graft.operators.MarkovModel =
-    QueryArtifacts.runOnce(markovAppendCache, (spark, dir))({
+    markovAppendCache((spark, dir)) {
       val path = QueryArtifacts.path("target/markov-model-appended", dir)
       val baseTag = eventsSourceTag(spark, dir) + "#append-base"
       val appendTag = eventsSourceTag(spark, dir) + "#append-batch"
@@ -206,7 +189,7 @@ object AnalyticsQueries {
           "replaying an already-applied pairs batch must be a ledger no-op")
       }
       graft.operators.MarkovModel.load(spark, path)
-    })
+    }
 
   /** Excised-model twin of [[markovAppended]] — EXACT UNLEARNING on one
     * durable artifact (r19, completing train → append → EXCISE for the
@@ -219,12 +202,11 @@ object AnalyticsQueries {
     * before first serve (the excised-family discipline). Build-once via
     * the manifest+ledger: a manifest whose source is the EXCISE tag
     * proves the whole chain completed; anything else rebuilds it. */
-  private val markovExciseCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.MarkovModel]
+  private val markovExciseCache = QueryArtifacts.cache[SessionDir, graft.operators.MarkovModel]()
 
   private def markovExcised(spark: SparkSession,
       dir: String): graft.operators.MarkovModel =
-    QueryArtifacts.runOnce(markovExciseCache, (spark, dir))({
+    markovExciseCache((spark, dir)) {
       val path = QueryArtifacts.path("target/markov-model-excised", dir)
       val baseTag = eventsSourceTag(spark, dir) + "#excise-base"
       val exciseTag = eventsSourceTag(spark, dir) + "#excise-batch"
@@ -238,7 +220,7 @@ object AnalyticsQueries {
           "replaying an already-applied excise batch must be a ledger no-op")
       }
       graft.operators.MarkovModel.load(spark, path)
-    })
+    }
 
   /** The co-occurrence COUNT table (s1, s2, co >= 5) over the capped
     * interactions, persisted once per (session, dir) — the item-item
@@ -251,13 +233,11 @@ object AnalyticsQueries {
     * cap-bounded. (An r15 experiment replaced it with a per-key
     * collect_set + nested-transform pair explode; the higher-order
     * lambdas run INTERPRETED per element and measured ~1.7x SLOWER than
-    * the codegen'd sort-merge join at sf0.1 — the join stays.) Released
-    * by [[clearCaches]]. */
-  private val cooccurPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * the codegen'd sort-merge join at sf0.1 — the join stays.) */
+  private val cooccurPairsCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def cooccurPairs(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(cooccurPairsCache, (spark, dir))({
+    cooccurPairsCache((spark, dir)) {
       val kept = cooccurKept(spark, dir)
       kept.as("a").join(kept.as("b"),
           col("a.c") === col("b.c") && col("a.s") < col("b.s"))
@@ -265,7 +245,7 @@ object AnalyticsQueries {
         .agg(count(lit(1)).as("co"))
         .filter(col("co") >= 5)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** The CONVERGED fixed point over the trade graph, run once per
     * (session, dir) — build-once / serve-many like the prepared graph
@@ -273,31 +253,33 @@ object AnalyticsQueries {
     * prior every downstream consumer reads), not a per-query derivation,
     * so one session runs the 8 eager rounds once and every bench pass
     * reads the checkpointed table. The rounds count rides as a column.
-    * localCheckpoint-backed (GC-released), nothing to unpersist. */
-  private val prConvergedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * localCheckpoint-backed: the clear releases the checkpoint blocks
+    * deterministically (the ContextCleaner's GC sweep can lag past the
+    * bench's leak check). */
+  private val prConvergedCache = QueryArtifacts.cache[SessionDir, DataFrame](
+    org.apache.spark.sql.graft.bridge.unpersistCheckpoints)
 
   private def convergedTradeRanks(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(prConvergedCache, (spark, dir))({
+    prConvergedCache((spark, dir)) {
       val (ranks, rounds) = graft.operators.PageRank.runOnCounted(
         preparedTradeGraph(spark, dir), iterations = 30,
         tolScaled = Some(4490000000L), danglingFree = true)
       ranks.withColumn("rounds", lit(rounds.toLong))
-    })
+    }
 
   /** The converged HITS fixed point over the directed trade graph —
     * [[convergedTradeRanks]]' twin on the bipartite form, run once per
     * (session, dir). */
-  private val hitsConvergedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val hitsConvergedCache = QueryArtifacts.cache[SessionDir, DataFrame](
+    org.apache.spark.sql.graft.bridge.unpersistCheckpoints)
 
   private def convergedHitsScores(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(hitsConvergedCache, (spark, dir))({
+    hitsConvergedCache((spark, dir)) {
       val (scores, rounds) = graft.operators.Hits.runOnCounted(
         preparedHitsGraph(spark, dir), iterations = 12,
         tolScaled = Some(4000000L))
       scores.withColumn("rounds", lit(rounds.toLong))
-    })
+    }
 
   /** Cold-reopen hook for the serve-everything capstone (see
     * [[ServeAllQueries]]): fresh manifest reopen of the durable Markov
@@ -322,40 +304,14 @@ object AnalyticsQueries {
           eventsSourceTag(spark, dir) + "#excise-batch")
         .map(_.transitions().count())))
 
-  /** Release the persisted trade-graph + transition-pairs + co-occurrence
-    * artifacts (bench/verify teardown). */
-  def clearCaches(): Unit = {
-    preparedGraphCache.values.foreach(_.unpersist())
-    preparedGraphCache.clear()
-    preparedHitsCache.values.foreach(_.unpersist())
-    preparedHitsCache.clear()
-    tradeEdgesCache.values.foreach(_.unpersist())
-    tradeEdgesCache.clear()
-    transitionPairsCache.values.foreach(_.unpersist())
-    transitionPairsCache.clear()
-    markovCache.clear()
-    markovAppendCache.clear()
-    markovExciseCache.clear()
-    cooccurKeptCache.values.foreach(_.unpersist())
-    cooccurKeptCache.clear()
-    cooccurPairsCache.values.foreach(_.unpersist())
-    cooccurPairsCache.clear()
-    // checkpoint-backed: release the blocks deterministically (the
-    // ContextCleaner's GC sweep can lag past the bench's leak check)
-    prConvergedCache.values.foreach(
-      org.apache.spark.sql.graft.bridge.unpersistCheckpoints)
-    prConvergedCache.clear()
-    hitsConvergedCache.values.foreach(
-      org.apache.spark.sql.graft.bridge.unpersistCheckpoints)
-    hitsConvergedCache.clear()
-  }
+  /** Release every family's session artifacts ([[QueryArtifacts.clearAll]]). */
+  def clearCaches(): Unit = QueryArtifacts.clearAll()
 
   // Pseudo-replay WARM-UP: the trade-graph edge list (orders x lineitem
   // fact-fact join + distinct) and its prepared PageRank artifacts feed
-  // all three graph-authority rows and runOnce-persist anyway — force
-  // them under the warm-up fan-out (see ReplayOrchestrator); teardown =
-  // this family's clearCaches (idempotent).
-  ReplayOrchestrator.register("warm-graph", () => clearCaches()) {
+  // all three graph-authority rows and are persisted anyway — force
+  // them under the warm-up fan-out (see ReplayOrchestrator).
+  ReplayOrchestrator.register("warm-graph") {
     (spark, dir) =>
       tradeGraphDirected(spark, dir).count()
       preparedTradeGraph(spark, dir)
@@ -370,8 +326,8 @@ object AnalyticsQueries {
   // Pseudo-replay WARM-UP: the shared transition-pairs persist (the one
   // lead() window pass) and the durable Markov model feed four
   // behavioral rows — force the window + train/reopen under the warm-up
-  // fan-out; teardown = this family's clearCaches (idempotent).
-  ReplayOrchestrator.register("warm-markov", () => clearCaches()) {
+  // fan-out.
+  ReplayOrchestrator.register("warm-markov") {
     (spark, dir) =>
       transitionPairs(spark, dir).count()
       markovPersisted(spark, dir)
@@ -382,7 +338,7 @@ object AnalyticsQueries {
   // interaction persist (one of the two dominant cold first-touch costs
   // the r15 cold pass carried) — building it here overlaps the
   // fact-fact join with the streaming replays' orchestration stalls.
-  ReplayOrchestrator.register("warm-cooccur", () => clearCaches()) {
+  ReplayOrchestrator.register("warm-cooccur") {
     (spark, dir) =>
       cooccurKept(spark, dir)
       cooccurPairs(spark, dir).count()

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.{CdcChunking, Multimodal}
+import graft.queries.QueryArtifacts.SessionDir
 
 /** Content-defined chunking queries: the Gear-CDC chunk table and the
   * chunk-hash dedup over it. Stateless cut rule (maskBits = 6, expected
@@ -26,26 +27,14 @@ object CdcQueries {
 
   /** Source tag for the durable chunk index: a digest of the documents
     * parquet's file statuses — any regeneration invalidates the index. */
-  private def chunkSourceTag(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val statuses =
-      if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).sortBy(_.getPath.toString)
-      else Array(fs.getFileStatus(p))
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    statuses.foreach { s =>
-      md.update(s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime};"
-        .getBytes("UTF-8"))
-    }
-    md.digest().map("%02x".format(_)).mkString.take(16)
-  }
+  private def chunkSourceTag(spark: SparkSession, dir: String): String =
+    QueryArtifacts.sourceDigest(spark, dir, "documents")
 
   /** One durable chunk index per (session, dir) — written once, validated
-    * reopens after that (see operators.ChunkIndex). The synchronized
-    * block keeps two concurrent first calls from racing overwrite writes
-    * to the same path. */
-  private val chunkFileCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.ChunkIndex]
+    * reopens after that (see operators.ChunkIndex). The at-most-once fill
+    * keeps two concurrent first calls from racing overwrite writes to the
+    * same path. */
+  private val chunkFileCache = QueryArtifacts.cache[SessionDir, graft.operators.ChunkIndex]()
 
   /** Durable chunk-index location for a dir — (path, expected source
     * tag), the reopen coordinates [[RagQueries]]' fresh-load fence shares
@@ -55,14 +44,14 @@ object CdcQueries {
     (QueryArtifacts.path("target/cdc-chunk-index", dir), chunkSourceTag(spark, dir))
 
   private[queries] def chunkPersisted(spark: SparkSession, dir: String): graft.operators.ChunkIndex =
-    QueryArtifacts.runOnce(chunkFileCache, (spark, dir))({
+    chunkFileCache((spark, dir)) {
       val path = QueryArtifacts.path("target/cdc-chunk-index", dir)
       val tag = chunkSourceTag(spark, dir)
       graft.operators.ChunkIndex.loadIfValid(spark, path, tag).getOrElse {
         graft.operators.ChunkIndex.build(media(spark, dir), maskBits = 6).write(path, tag)
         graft.operators.ChunkIndex.load(spark, path)
       }
-    })
+    }
 
   /** Appended-and-COMPACTED durable chunk index (r17) — the incremental
     * lifecycle driver-gated like [[graft.operators.IvfIndex.appendTo]]'s
@@ -71,12 +60,11 @@ object CdcQueries {
     * then compacted to one file. Build-once via the manifest+ledger: a
     * manifest whose source is the APPEND tag proves the chain completed
     * and reopens with zero chunking jobs. */
-  private val chunkAppendCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.ChunkIndex]
+  private val chunkAppendCache = QueryArtifacts.cache[SessionDir, graft.operators.ChunkIndex]()
 
   private def chunkAppendedCompacted(spark: SparkSession,
       dir: String): graft.operators.ChunkIndex =
-    QueryArtifacts.runOnce(chunkAppendCache, (spark, dir))({
+    chunkAppendCache((spark, dir)) {
       val path = QueryArtifacts.path("target/cdc-chunk-index-appended", dir)
       val baseTag = chunkSourceTag(spark, dir) + "#append-base"
       val appendTag = chunkSourceTag(spark, dir) + "#append-batch"
@@ -94,7 +82,7 @@ object CdcQueries {
         graft.operators.ChunkIndex.compact(spark, path)
       }
       graft.operators.ChunkIndex.load(spark, path)
-    })
+    }
 
   /** Excision-PLANTED durable chunk index (r17) — the takedown story for
     * the ingest gate's artifact: built over the full corpus, the
@@ -103,12 +91,11 @@ object CdcQueries {
     * the tombRows validation; the physical drop is pinned in
     * ChunkIndexPersistSpec). A removed document must vanish from overlap
     * checks too, or it keeps rejecting its own re-crawls forever. */
-  private val chunkExciseCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.ChunkIndex]
+  private val chunkExciseCache = QueryArtifacts.cache[SessionDir, graft.operators.ChunkIndex]()
 
   private def chunkExcised(spark: SparkSession,
       dir: String): graft.operators.ChunkIndex =
-    QueryArtifacts.runOnce(chunkExciseCache, (spark, dir))({
+    chunkExciseCache((spark, dir)) {
       val path = QueryArtifacts.path("target/cdc-chunk-index-excised", dir)
       val exciseTag = chunkSourceTag(spark, dir) + "#excise-batch"
       if (graft.operators.ChunkIndex.loadIfValid(spark, path, exciseTag).isEmpty) {
@@ -127,7 +114,7 @@ object CdcQueries {
           "replaying an already-applied excise batch must be a ledger no-op")
       }
       graft.operators.ChunkIndex.load(spark, path)
-    })
+    }
 
   // Pseudo-replay WARM-UP: the append and excise chains pay several
   // chunking passes cold — overlap them with the replay fan-out (the

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.Dedup
+import graft.queries.QueryArtifacts.SessionDir
 
 /** Driver-facing dedup queries — thin wrappers over the library operators
   * in `graft.operators.Dedup` (see there for the scale rationale): exact
@@ -44,11 +45,10 @@ object DedupQueries {
     * dedup_minhash_recall (which needs the margin for the round-6
     * boundary at jaccard = 0.6). Same residency rationale as
     * [[jaccardPairs08]]: the result is near-dup-sized. */
-  private val minhashCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val minhashCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def minhashPairs041(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(minhashCache, (spark, dir))(Dedup.minhashPairs(Tables.load(spark, dir, "documents"), "doc_id", "text",
+    minhashCache((spark, dir))(Dedup.minhashPairs(Tables.load(spark, dir, "documents"), "doc_id", "text",
           maxJaccardDistance = 0.41)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
@@ -59,11 +59,10 @@ object DedupQueries {
     * (see `Dedup.ngramJaccardPairs`) and endorses RESULT-level
     * persistence by callers that reuse the pairs — this is that caller;
     * the result is near-dup-sized (KBs at any SF). */
-  private val jaccard06Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val jaccard06Cache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def jaccardPairs06Full(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(jaccard06Cache, (spark, dir))({
+    jaccard06Cache((spark, dir)) {
       // prefix-filter threshold strictly below the 0.6 rounding boundary
       // (rounded >= 0.6 iff unrounded >= 0.5999995, so 0.5999 cannot
       // lose a qualifying pair); exact filter on the rounded value
@@ -72,7 +71,7 @@ object DedupQueries {
         .withColumn("jaccard", round(col("jaccard"), 6))
         .filter(col("jaccard") >= 0.6)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   private def jaccardPairs06(spark: SparkSession, dir: String): DataFrame =
     jaccardPairs06Full(spark, dir).select("doc_id_1", "doc_id_2")
@@ -82,11 +81,10 @@ object DedupQueries {
     * first-touch cost on every cold pass as a per-call build; with the
     * persist the build runs once, under the warm-up fan-out). Pair-set
     * sized like the other candidate caches. */
-  private val cosinePairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val cosinePairsCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def cosinePairs05(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(cosinePairsCache, (spark, dir))({
+    cosinePairsCache((spark, dir)) {
       // operator pre-filter strictly below the 0.5 rounding boundary (no
       // candidate that could round up is lost; the LSH radius derives
       // from the same bound, so candidate generation can't lose a
@@ -96,24 +94,23 @@ object DedupQueries {
         .withColumn("cosine", round(col("cosine"), 6))
         .filter(col("cosine") >= 0.5)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Cluster-scoped SemDeDup pair set at the documented nAssign=4
     * operating point, rounded and thresholded — persisted once per
     * (session, dir) and shared by `dedup_semantic` (the report) and
     * `dedup_semantic_recall` (the gate), which otherwise both ran the
     * per-cell quadratic. Near-dup-sized like the other pair caches. */
-  private val semanticPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val semanticPairsCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def semanticPairs05(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(semanticPairsCache, (spark, dir))({
+    semanticPairsCache((spark, dir)) {
       Dedup.semanticPairs(SimilarityQueries.ivfIndex(spark, dir),
           minCosine = 0.4999, nAssign = 4)
         .withColumn("cosine", round(col("cosine"), 6))
         .filter(col("cosine") >= 0.5)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Corpus-side serving artifacts for the ingest-dedup family over the
     * %5!=0 reference slice — content hash table + bloom literal (exact
@@ -124,12 +121,13 @@ object DedupQueries {
     * aggregate job, so neither must recur per trigger (or per bench
     * pass). Bloom sized 2^16 (the fixture corpus is thousands of docs;
     * sizing bounds join traffic, never results). */
-  private val ingestArtifactsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.streaming.StreamingOps.IngestCorpusArtifacts]
+  private val ingestArtifactsCache =
+    QueryArtifacts.cache[SessionDir, graft.streaming.StreamingOps.IngestCorpusArtifacts](
+      a => { a.hashes.unpersist(); a.sigs.unpersist() })
 
   private def ingestArtifacts(spark: SparkSession,
       dir: String): graft.streaming.StreamingOps.IngestCorpusArtifacts =
-    QueryArtifacts.runOnce(ingestArtifactsCache, (spark, dir))({
+    ingestArtifactsCache((spark, dir)) {
       val corpus = Tables.load(spark, dir, "documents")
         .filter(col("doc_id") % 5 =!= 0).select("doc_id", "text")
       val hashes = Dedup.corpusContentHashes(corpus, "text")
@@ -140,17 +138,7 @@ object DedupQueries {
       // populates the shared hash table
       graft.streaming.StreamingOps.IngestCorpusArtifacts(hashes,
         Dedup.corpusContentBloom(hashes, expectedCorpusItems = 1L << 16), sigs)
-    })
-
-  /** Release the ingest-artifact persists — the teardown the two dedup
-    * replays register with [[ReplayOrchestrator]] (idempotent; also the
-    * ingest leg of [[clearCaches]]). */
-  private[queries] def releaseIngestArtifacts(): Unit = {
-    ingestArtifactsCache.values.foreach { a =>
-      a.hashes.unpersist(); a.sigs.unpersist()
     }
-    ingestArtifactsCache.clear()
-  }
 
   /** Repeat-excision interval table (>= 50-token verbatim repeats),
     * persisted once per (session, dir): detection (`dedup_substring`) and
@@ -158,11 +146,10 @@ object DedupQueries {
     * table is excision-sized (rows only where repeats exist), so one
     * persisted copy is the right residency, and a real pipeline reports
     * and applies one interval set, not two computations of it. */
-  private val repeatIvCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val repeatIvCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def repeatIntervals(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(repeatIvCache, (spark, dir))(Dedup.substringRepeatIntervals(Tables.load(spark, dir, "documents"),
+    repeatIvCache((spark, dir))(Dedup.substringRepeatIntervals(Tables.load(spark, dir, "documents"),
           "doc_id", "text", k = 13, minRun = 50)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
@@ -171,23 +158,20 @@ object DedupQueries {
     * repair (`corpus_excise_dup_lines`) consume the SAME table — the
     * repeatIntervals discipline applied to the line family (a real
     * pipeline reports and applies one duplicate-line table, not two
-    * corpus-wide aggregations of it). Duplicate-line-sized residency.
-    * Released by [[releaseCandidateCaches]]. */
-  private val dupLinesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * corpus-wide aggregations of it). Duplicate-line-sized residency. */
+  private val dupLinesCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def dupLinesTable(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(dupLinesCache, (spark, dir))(Dedup.duplicateLines(pagedDocs(spark, dir), "doc_id", "page")
+    dupLinesCache((spark, dir))(Dedup.duplicateLines(pagedDocs(spark, dir), "doc_id", "page")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** The detection artifact's filter half: the bloom literal over the
     * persisted table's keys, derived once per (session, dir) — table and
     * filter travel together like an index and its manifest. */
-  private val dupLinesBloomCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Option[Array[Byte]]]
+  private val dupLinesBloomCache = QueryArtifacts.cache[SessionDir, Option[Array[Byte]]]()
 
   private def dupLinesBloom(spark: SparkSession, dir: String): Option[Array[Byte]] =
-    QueryArtifacts.runOnce(dupLinesBloomCache, (spark, dir))(
+    dupLinesBloomCache((spark, dir))(
       Dedup.dupLinesBloom(dupLinesTable(spark, dir)))
 
   /** Per-document simhash sketch table, persisted once per (session, dir):
@@ -196,11 +180,10 @@ object DedupQueries {
     * extraction, not sketching — sharing sketches means a sketch
     * difference can't mask an extraction bug). Tiny residency: (id,
     * 8-byte sketch) per doc. */
-  private val simhashCacheTbl =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val simhashCacheTbl = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def simhashSketchTable(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(simhashCacheTbl, (spark, dir))(Dedup.simhashSketches(Tables.load(spark, dir, "documents"), "doc_id", "text")
+    simhashCacheTbl((spark, dir))(Dedup.simhashSketches(Tables.load(spark, dir, "documents"), "doc_id", "text")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** EXACT-ingest replay body (see [[ReplayOrchestrator]] — launched
@@ -235,22 +218,15 @@ object DedupQueries {
         stream, art, "text"))
   }
 
-  // teardown = release the ingest-artifact persists the bodies fill: the
-  // orchestrator's eager fan-out launches these from OTHER families'
-  // awaits, so their release must not depend on this object's clearCaches
-  // being the one called (see ReplayOrchestrator ownership note)
-  ReplayOrchestrator.register("dedup-ingest",
-    () => releaseIngestArtifacts())(buildIngestReplaySink)
-  ReplayOrchestrator.register("dedup-neardup",
-    () => releaseIngestArtifacts())(buildNeardupReplaySink)
+  ReplayOrchestrator.register("dedup-ingest")(buildIngestReplaySink)
+  ReplayOrchestrator.register("dedup-neardup")(buildNeardupReplaySink)
 
   // Pseudo-replay WARM-UP: the shared >=0.6-jaccard candidate table and
   // the repeat-excision intervals are the two biggest non-replay cold
-  // builds in this family (~5 s summed) and runOnce persists anyway —
+  // builds in this family (~5 s summed) and are persisted anyway —
   // forcing them here overlaps the builds with the replays' micro-batch
   // orchestration on the family's first touch (see ReplayOrchestrator).
-  ReplayOrchestrator.register("warm-dedup-candidates",
-    () => releaseCandidateCaches()) { (spark, dir) =>
+  ReplayOrchestrator.register("warm-dedup-candidates") { (spark, dir) =>
     jaccardPairs06Full(spark, dir).count()
     repeatIntervals(spark, dir).count()
     dupLinesTable(spark, dir).count()
@@ -264,22 +240,6 @@ object DedupQueries {
     java.lang.Boolean.TRUE
   }
 
-  /** Release the warm-up persists (idempotent; also legs of
-    * [[clearCaches]]). */
-  private[queries] def releaseCandidateCaches(): Unit = {
-    jaccard06Cache.values.foreach(_.unpersist())
-    jaccard06Cache.clear()
-    repeatIvCache.values.foreach(_.unpersist())
-    repeatIvCache.clear()
-    dupLinesCache.values.foreach(_.unpersist())
-    dupLinesCache.clear()
-    dupLinesBloomCache.clear()
-    semanticPairsCache.values.foreach(_.unpersist())
-    semanticPairsCache.clear()
-    cosinePairsCache.values.foreach(_.unpersist())
-    cosinePairsCache.clear()
-  }
-
   /** Stage `delivered` as three files (the third a VERBATIM re-delivery of
     * the first), run `mkStream(fileSource)` to completion under
     * Trigger.AvailableNow into a parquet sink, and return the sink path —
@@ -287,7 +247,7 @@ object DedupQueries {
   private def runReplay(spark: SparkSession, prefix: String, dir: String,
       delivered: DataFrame)(mkStream: DataFrame => DataFrame): String = {
     // paths live under the session root: they are delete-and-rewrite,
-    // and the runOnce caches only dedup WITHIN a session (see
+    // and the session caches only dedup WITHIN a session (see
     // QueryArtifacts.sessionTag / sessionRoot).
     val root = QueryArtifacts.sessionRoot(spark)
     val src = QueryArtifacts.path(s"$root/$prefix-src", dir)
@@ -312,21 +272,8 @@ object DedupQueries {
     out
   }
 
-  /** Release the shared candidate-pair caches (bench/verify teardown — a
-    * long-lived session would otherwise accumulate one persisted pair set
-    * per (session, dir) key). */
-  def clearCaches(): Unit = {
-    ReplayOrchestrator.drainAndClear() // waits out in-flight replays,
-    // runs launched teardowns (incl. other families')
-    minhashCache.values.foreach(_.unpersist())
-    minhashCache.clear()
-    releaseCandidateCaches()
-    semanticPairsCache.values.foreach(_.unpersist())
-    semanticPairsCache.clear()
-    releaseIngestArtifacts()
-    simhashCacheTbl.values.foreach(_.unpersist())
-    simhashCacheTbl.clear()
-  }
+  /** Release every family's session artifacts ([[QueryArtifacts.clearAll]]). */
+  def clearCaches(): Unit = QueryArtifacts.clearAll()
 
   val queries: ListMap[String, Q] = ListMap(
     "dedup_exact" -> ((spark, dir) => {

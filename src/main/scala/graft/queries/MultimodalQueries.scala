@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.Multimodal
+import graft.queries.QueryArtifacts.SessionDir
 
 /** Multimodal-column queries: binary payload metadata + the stubbed decode
   * pipeline (real Spark plumbing, deterministic fake codec). The batch
@@ -21,28 +22,22 @@ object MultimodalQueries {
     * corpus is the expensive deterministic pass (at sf0.1 it dominated the
     * pair query ~10:1), the banded pair join over 64-bit fingerprints is
     * cheap. The table is tiny (one bits array + four band ints per doc).
-    * Same (session, dir) lifecycle contract as DedupQueries' pair caches;
-    * released by [[clearCaches]]. */
-  private val ahashCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * Same (session, dir) lifecycle contract as DedupQueries' pair caches. */
+  private val ahashCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def ahashTable(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(ahashCache, (spark, dir))(Multimodal.aHash(spark,
+    ahashCache((spark, dir))(Multimodal.aHash(spark,
           Multimodal.asMediaTable(Tables.load(spark, dir, "documents")))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  /** Release the fingerprint cache (bench/verify teardown). */
-  def clearCaches(): Unit = {
-    ahashCache.values.foreach(_.unpersist())
-    ahashCache.clear()
-  }
+  /** Release every family's session artifacts ([[QueryArtifacts.clearAll]]). */
+  def clearCaches(): Unit = QueryArtifacts.clearAll()
 
   // Pseudo-replay WARM-UP: the aHash fingerprint table (a synthetic-frame
   // decode + per-pixel fold over every payload) is this family's one
-  // expensive cold build and runOnce-persists anyway — force it under the
-  // warm-up fan-out (see ReplayOrchestrator); teardown = this family's
-  // clearCaches leg (idempotent).
-  ReplayOrchestrator.register("warm-multimodal", () => clearCaches()) {
+  // expensive cold build and is persisted anyway — force it under the
+  // warm-up fan-out (see ReplayOrchestrator).
+  ReplayOrchestrator.register("warm-multimodal") {
     (spark, dir) =>
       ahashTable(spark, dir).count()
       java.lang.Boolean.TRUE

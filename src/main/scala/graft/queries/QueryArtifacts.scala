@@ -1,13 +1,21 @@
 package graft.queries
 
-/** Canonical on-disk location for a (query-family, source-dir) durable
-  * artifact under target/: a readable sanitized dir name plus a SHA-256
-  * digest of the RAW dir string, so distinct dirs (/a/b vs /a_b) can
-  * never collide. ONE definition — every durable-artifact cache (file
-  * indexes, drift indexes, z-order layouts) depends on the exact scheme,
-  * and a drifted copy would silently fork artifact paths: stale index
-  * reuse or duplicate on-disk layouts. */
+import scala.collection.concurrent.TrieMap
+
+import org.apache.spark.sql.SparkSession
+
+/** The query families' artifacts: where durable ones live on disk, the
+  * source tags they validate against, and the registry of per-session
+  * caches with its single clear ([[clearAll]]). */
 private[graft] object QueryArtifacts {
+
+  /** Canonical on-disk location for a (query-family, source-dir) durable
+    * artifact under target/: a readable sanitized dir name plus a SHA-256
+    * digest of the RAW dir string, so distinct dirs (/a/b vs /a_b) can
+    * never collide. ONE definition — every durable-artifact cache (file
+    * indexes, drift indexes, z-order layouts) depends on the exact scheme,
+    * and a drifted copy would silently fork artifact paths: stale index
+    * reuse or duplicate on-disk layouts. */
   def path(prefix: String, dir: String): String = {
     val digest = java.security.MessageDigest.getInstance("SHA-256")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
@@ -16,7 +24,7 @@ private[graft] object QueryArtifacts {
 
   /** Session-unique token for artifact paths that are DELETED AND
     * REWRITTEN on (re)build (streaming replay staging/sink/checkpoint
-    * dirs): the in-memory runOnce caches are keyed by (session, dir), so
+    * dirs): the in-memory session caches are keyed by (session, dir), so
     * a second session over the same dir legally rebuilds — and without a
     * session component in the PATH it would delete directories the first
     * session's lazily-evaluated readers may still be scanning. A random
@@ -26,7 +34,7 @@ private[graft] object QueryArtifacts {
     * exists to prevent. Durable build-once artifacts (LM/index/layout
     * files) deliberately do NOT use this: they are never deleted, only
     * validated-and-reused. */
-  def sessionTag(spark: org.apache.spark.sql.SparkSession): String =
+  def sessionTag(spark: SparkSession): String =
     tags.synchronized {
       Option(tags.get(spark)).getOrElse {
         val t = java.util.UUID.randomUUID().toString.replace("-", "").take(16)
@@ -48,12 +56,12 @@ private[graft] object QueryArtifacts {
   // weak keys: a stopped-and-collected session drops its entry; the next
   // session mints a FRESH random tag, never a reused address
   private val tags =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, String]()
+    new java.util.WeakHashMap[SparkSession, String]()
 
   /** One root directory per session for ALL salted delete-and-rewrite
     * replay dirs — grouping them makes stale-session cleanup a single
     * prefix listing instead of a hunt across per-prefix trees. */
-  def sessionRoot(spark: org.apache.spark.sql.SparkSession): String =
+  def sessionRoot(spark: SparkSession): String =
     "target/replay-session-" + sessionTag(spark)
 
   /** Best-effort removal of replay-session roots left by PREVIOUS runs
@@ -109,17 +117,79 @@ private[graft] object QueryArtifacts {
     org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(src), d)
   }
 
-  /** AT-MOST-ONCE cache fill: `TrieMap.getOrElseUpdate(k, synchronized {
-    * body })` only SERIALIZES duplicate evaluations — two concurrent
-    * first calls both run `body`, and for a side-effecting body (a
-    * streaming replay that deletes and rewrites its sink) the loser's
-    * re-run deletes files the winner's caller may be mid-read on. Here
-    * the double-checked form runs `body` exactly once per key: writers
-    * race to the lock, and inside it the map is re-consulted before
-    * evaluating. */
-  def runOnce[K, V](cache: scala.collection.concurrent.TrieMap[K, V],
-      key: K)(body: => V): V =
-    cache.getOrElse(key, cache.synchronized {
-      cache.getOrElseUpdate(key, body)
-    })
+  /** Digest of `<dir>/<table>.parquet`'s file listing (names, lengths,
+    * mtimes; 16 hex chars) — the source tag durable artifacts validate
+    * their manifests against, so a regenerated fixture invalidates them
+    * without a data scan. Listing only — never reads data bytes. */
+  def sourceDigest(spark: SparkSession, dir: String, table: String): String = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val statuses =
+      if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).sortBy(_.getPath.toString)
+      else Array(fs.getFileStatus(p))
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    statuses.foreach { s =>
+      md.update(s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime};"
+        .getBytes("UTF-8"))
+    }
+    md.digest().map("%02x".format(_)).mkString.take(16)
+  }
+
+  /** The key almost every session artifact is built per. */
+  type SessionDir = (SparkSession, String)
+
+  /** One family of session artifacts: values built at most once per key
+    * and released by `release` (unpersist, close, checkpoint release, or
+    * nothing for file-backed handles and driver-side values) when
+    * [[clearAll]] runs. Every instance registers itself at construction,
+    * so one clear reaches every family. */
+  final class SessionCache[K, V] private[QueryArtifacts] (release: V => Unit) {
+    private val entries = TrieMap.empty[K, V]
+
+    /** AT-MOST-ONCE fill: `TrieMap.getOrElseUpdate` alone only SERIALIZES
+      * duplicate evaluations — two concurrent first calls both run
+      * `build`, and for a side-effecting build (a streaming replay that
+      * deletes and rewrites its sink) the loser's re-run deletes files the
+      * winner's caller may be mid-read on. Here a hit is one lookup, and
+      * on a miss writers race to the lock and re-consult the map inside
+      * it, so `build` runs exactly once per key. */
+    def apply(key: K)(build: => V): V =
+      entries.getOrElse(key, entries.synchronized {
+        entries.getOrElseUpdate(key, build)
+      })
+
+    /** The cached value for `key`, never building it. */
+    def get(key: K): Option[V] = entries.get(key)
+
+    private[QueryArtifacts] def size: Int = entries.size
+
+    private[QueryArtifacts] def clear(): Unit = entries.synchronized {
+      val held = entries.values.toList
+      entries.clear()
+      held.foreach(v =>
+        try release(v) catch { case scala.util.control.NonFatal(_) => () })
+    }
+  }
+
+  private val caches =
+    new java.util.concurrent.CopyOnWriteArrayList[SessionCache[_, _]]()
+
+  /** A registered session cache; `release` frees what one value holds. */
+  def cache[K, V](release: V => Unit = (_: V) => ()): SessionCache[K, V] = {
+    val c = new SessionCache[K, V](release)
+    caches.add(c)
+    c
+  }
+
+  /** Release every session artifact of every family (bench/verify/spec
+    * teardown). The warm-up fan-out is drained first: its bodies fill
+    * caches owned by any family, and a body still in flight could
+    * otherwise re-fill a cache just cleared. Idempotent. */
+  def clearAll(): Unit = synchronized {
+    ReplayOrchestrator.drainAndClear()
+    caches.forEach(_.clear())
+  }
+
+  /** Entries held across every registered cache. */
+  private[graft] def entryCount: Int = caches.stream.mapToInt(_.size).sum
 }

@@ -155,7 +155,7 @@ object ReferenceQueries {
   // registration — the bench's first parquet touches) — force it under
   // the warm-up fan-out (see ReplayOrchestrator) so the reference rows
   // measure their projections, not session bring-up. Rebuilding for a dir
-  // is idempotent (createOrReplaceTempView), so no teardown is needed.
+  // is idempotent (createOrReplaceTempView).
   ReplayOrchestrator.register("warm-engine") { (spark, dir) =>
     DemoApp.build(spark, dir)
     java.lang.Boolean.TRUE

@@ -19,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   * (~26 s summed for the four streaming replays alone on a quiet box).
   * The first `await` for a (session, dir)
   * launches EVERY registered replay on daemon threads — exactly once
-  * per (session, dir, name), the double-checked runOnce discipline —
+  * per (session, dir, name), the double-checked at-most-once discipline —
   * and barriers on the lot (see [[await]]); every later row then finds
   * a completed future. Overlapping independent streaming pipelines is
   * the production posture too: a real ingest tier runs its exact-dedup,
@@ -36,12 +36,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Ownership: eager fan-out crosses query-object boundaries — awaiting a
   * text row launches the dedup and topic replays too, whose bodies fill
-  * persisted caches owned by OTHER query objects. Each registration
-  * therefore carries an idempotent `teardown` releasing exactly what its
-  * body fills, and [[drainAndClear]] (called from EVERY replay-owning
-  * family's clearCaches) runs the teardowns of all launched replays — so
-  * a caller that runs only one family's rows and clears only that family
-  * still releases every persist the fan-out created.
+  * session caches owned by OTHER query objects. Those caches release
+  * themselves: [[QueryArtifacts.clearAll]] runs [[drainAndClear]] and then
+  * empties every registered cache, whichever family filled it.
   */
 private[graft] object ReplayOrchestrator {
 
@@ -54,13 +51,9 @@ private[graft] object ReplayOrchestrator {
   private implicit val ec: ExecutionContext =
     ExecutionContext.fromExecutor(pool)
 
-  private final case class Entry(body: (SparkSession, String) => AnyRef,
-      teardown: () => Unit)
-
-  /** Replay bodies (+ teardowns) by name; populated from the owning query
-    * objects' initializers (all forced by SparkEntry.queries
-    * construction). */
-  private val registry = TrieMap.empty[String, Entry]
+  /** Replay bodies by name; populated from the owning query objects'
+    * initializers (all forced by SparkEntry.queries construction). */
+  private val registry = TrieMap.empty[String, (SparkSession, String) => AnyRef]
 
   private val started =
     TrieMap.empty[(SparkSession, String, String), Future[AnyRef]]
@@ -76,18 +69,18 @@ private[graft] object ReplayOrchestrator {
   /** Bound on waiting out ONE in-flight replay during [[drainAndClear]]. */
   private[graft] var drainBound: Duration = 10.minutes
 
-  def register(name: String, teardown: () => Unit = () => ())(
-      body: (SparkSession, String) => AnyRef): Unit =
-    registry.putIfAbsent(name, Entry(body, teardown))
+  def register(name: String)(body: (SparkSession, String) => AnyRef): Unit =
+    registry.putIfAbsent(name, body)
 
   private def launch(spark: SparkSession, dir: String,
       name: String): Future[AnyRef] = {
     val key = (spark, dir, name)
-    // runOnce discipline: a bare getOrElseUpdate could evaluate the
+    // at-most-once discipline (see QueryArtifacts.SessionCache): a bare
+    // getOrElseUpdate could evaluate the
     // Future-spawning thunk twice under concurrent first calls, running
     // one replay's delete-and-rewrite staging twice concurrently
     started.getOrElse(key, started.synchronized {
-      started.getOrElseUpdate(key, Future(registry(name).body(spark, dir)))
+      started.getOrElseUpdate(key, Future(registry(name)(spark, dir)))
     })
   }
 
@@ -143,7 +136,7 @@ private[graft] object ReplayOrchestrator {
     * instead of stalling the first replay-owning row behind the whole
     * concurrent family; the bench then blocks on [[awaitFanOut]] so the
     * measured loop cannot start while any body is still in flight.
-    * Launching is idempotent per (spark, dir, name) — the runOnce
+    * Launching is idempotent per (spark, dir, name) — the at-most-once
     * discipline in [[launch]] — so a prelaunch followed by await never
     * double-runs a body. */
   def prelaunch(spark: SparkSession, dir: String): Unit =
@@ -218,7 +211,7 @@ private[graft] object ReplayOrchestrator {
 
   /** Bodies whose `started` future was force-replaced by [[markTimedOut]]
     * but that are still RUNNING on their daemon thread — drainAndClear
-    * must keep waiting on these originals, or a teardown could run
+    * must keep waiting on these originals, or the caches could be cleared
     * concurrently with a wedged body's late cache fill (a persist the
     * just-cleared cache can never release). */
   private val timedOutBodies =
@@ -245,18 +238,15 @@ private[graft] object ReplayOrchestrator {
       }
     }
 
-  /** Wait out in-flight replays (bounded), forget all results, then run
-    * every LAUNCHED replay's teardown (bench/verify/family-clearCaches
-    * teardown). Waiting first means an in-flight delete-and-rewrite body
-    * can never overlap a post-clear relaunch over the same session-salted
-    * staging paths; running teardowns of everything that was launched —
-    * not just the calling family's — means eager fan-out can't leak a
-    * persist past a partial teardown. Idempotent; teardowns must be too
-    * (they are unpersist+clear of runOnce caches). */
-  def drainAndClear(): Unit = synchronized {
+  /** Wait out in-flight replays (bounded), then forget all results — the
+    * first step of [[QueryArtifacts.clearAll]]. Waiting first means an
+    * in-flight delete-and-rewrite body can never overlap a post-clear
+    * relaunch over the same session-salted staging paths, and can never
+    * fill a cache after the clear emptied it. Idempotent. */
+  private[queries] def drainAndClear(): Unit = synchronized {
     // include bodies whose started entry was force-failed by a timeout —
     // the ORIGINAL future may still be running and must be waited out
-    // before its teardown runs (see timedOutBodies)
+    // before the caches it fills are cleared (see timedOutBodies)
     val snapshot = started.readOnlySnapshot().toSeq ++
       timedOutBodies.readOnlySnapshot().toSeq
     snapshot.foreach { case ((_, _, n), f) =>
@@ -272,10 +262,6 @@ private[graft] object ReplayOrchestrator {
     }
     started.clear()
     timedOutBodies.clear()
-    snapshot.map(_._1._3).distinct.foreach(n =>
-      registry.get(n).foreach(e =>
-        try e.teardown()
-        catch { case scala.util.control.NonFatal(_) => () }))
   }
 
   /** Test hook: forget a spec-registered replay and its futures WITHOUT

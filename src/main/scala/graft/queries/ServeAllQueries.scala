@@ -5,6 +5,8 @@ import scala.concurrent.duration._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.queries.QueryArtifacts.SessionDir
+
 /** The ZERO-BUILD serve-everything capstone — the cross-session
   * cold-start story a 100 TB deployment actually lives by: a fresh
   * session (or here, a fresh reopen past every session cache) opens
@@ -64,29 +66,26 @@ object ServeAllQueries {
     * quiet box — r17 judge re-bench: 15.4 s total over the then-18, max
     * 1.85 s per artifact; the excised-model
     * reopens added r19/r20 are matrix-/model-table-sized scans), not a
-    * per-pass derivation; every later call reads the verdicts. */
-  private val verdictCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(String, Boolean, Boolean)]]
-
-  /** Wall time of each artifact's counter-fenced reopen+serve, measured
-    * once per (session, dir) alongside the verdicts — the actual
-    * manifest-validation + bounded-serve cost the cached verdict row no
-    * longer shows. Surfaced into the bench artifact
-    * (`serveall_reopen_ms`) so a regression in reopen cost is visible
-    * round-over-round; kept OUT of the hashed verdict rows (wall time is
-    * not reproducible). */
-  private val reopenMsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(String, Long)]]
+    * per-pass derivation; every later call reads the verdicts.
+    *
+    * Each entry also carries the wall time of every artifact's
+    * counter-fenced reopen+serve — the actual manifest-validation +
+    * bounded-serve cost the cached verdict row no longer shows. Surfaced
+    * into the bench artifact (`serveall_reopen_ms`) so a regression in
+    * reopen cost is visible round-over-round; kept OUT of the hashed
+    * verdict rows (wall time is not reproducible). */
+  private val verdictCache = QueryArtifacts
+    .cache[SessionDir, (Seq[(String, Boolean, Boolean)], Seq[(String, Long)])]()
 
   /** Per-artifact reopen wall-times for (spark, dir), if the capstone ran
     * this session. */
   def reopenMillis(spark: SparkSession,
       dir: String): Option[Seq[(String, Long)]] =
-    reopenMsCache.get((spark, dir))
+    verdictCache.get((spark, dir)).map(_._2)
 
   private def verdicts(spark: SparkSession, dir: String,
       self: Option[String] = None): Seq[(String, Boolean, Boolean)] =
-    QueryArtifacts.runOnce(verdictCache, (spark, dir))({
+    verdictCache((spark, dir)) {
       val hs = hooks(spark, dir)
       hs.foreach(_._2()) // ensure phase: durable forms exist
       // the replay fan-out's bodies fill the same persisted caches —
@@ -94,17 +93,15 @@ object ServeAllQueries {
       // reopen-phase counter bump (self-excluded when running AS a
       // warm-up body, or awaiting our own future would stall the bound)
       ReplayOrchestrator.awaitQuiesce(spark, dir, 10.minutes, self)
-      val timed = hs.map { case (name, _, reopen) =>
+      hs.map { case (name, _, reopen) =>
         val before = buildCounters()
         val t0 = System.nanoTime()
         val served = reopen()
         val ms = (System.nanoTime() - t0) / 1000000L
         val zeroBuild = buildCounters() == before && served.isDefined
         ((name, zeroBuild, served.exists(_ > 0)), (name, ms))
-      }.sortBy(_._1._1)
-      reopenMsCache.put((spark, dir), timed.map(_._2))
-      timed.map(_._1)
-    })
+      }.sortBy(_._1._1).unzip
+    }._1
 
   // Pseudo-replay WARM-UP: the whole cold-start check (ensure + 23
   // counter-fenced reopens, ~15 s of reopen at sf0.1 on a quiet box —
@@ -116,14 +113,14 @@ object ServeAllQueries {
   // than any fixed all-bodies grace, which is why the bench's warm-up
   // gate is ReplayOrchestrator.awaitFanOut (complete barrier), not a
   // fixed-bound quiesce (r17's 5-min grace was overrun exactly here).
-  ReplayOrchestrator.register("warm-serveall", () => clearCaches()) {
+  ReplayOrchestrator.register("warm-serveall") {
     (spark, dir) =>
       verdicts(spark, dir, self = Some("warm-serveall"))
       java.lang.Boolean.TRUE
   }
 
-  /** Drop the per-session verdict rows (bench/verify teardown). */
-  def clearCaches(): Unit = { verdictCache.clear(); reopenMsCache.clear() }
+  /** Release every family's session artifacts ([[QueryArtifacts.clearAll]]). */
+  def clearCaches(): Unit = QueryArtifacts.clearAll()
 
   val queries: ListMap[String, Q] = ListMap(
     "serve_everything_cold" -> ((spark, dir) => {

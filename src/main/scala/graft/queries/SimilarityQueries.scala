@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.QueryArtifacts.SessionDir
 
 /** Similarity search over the embedding column (`array<float>`):
   *
@@ -48,13 +49,11 @@ object SimilarityQueries {
     * persisted assignment scan) runs once and both ivf queries — and any
     * repeated bench pass — reuse the inverted file, matching the explicit
     * BUILD/QUERY lifecycle the operator documents. Assumes the driver
-    * contract that a `dir`'s parquet is immutable. Released by
-    * [[clearCaches]]. */
-  private val ivfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.operators.IvfIndex]
+    * contract that a `dir`'s parquet is immutable. */
+  private val ivfCache = QueryArtifacts.cache[SessionDir, graft.operators.IvfIndex](_.close())
 
   private[graft] def ivfIndex(spark: SparkSession, dir: String): graft.operators.IvfIndex =
-    QueryArtifacts.runOnce(ivfCache, (spark, dir))(graft.operators.IvfIndex.build(
+    ivfCache((spark, dir))(graft.operators.IvfIndex.build(
         Tables.load(spark, dir, "embeddings"), "vec_id", "embedding", nCells = 8))
 
   /** Durable twin of [[ivfIndex]]: a cell-partitioned parquet table under
@@ -68,24 +67,12 @@ object SimilarityQueries {
     * pays only metadata validation, zero build jobs (IvfPersistSpec
     * asserts this). The loaded index holds no persist; its residency is
     * the partitioned table. */
-  private val ivfFileCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.operators.IvfIndex]
+  private val ivfFileCache = QueryArtifacts.cache[SessionDir, graft.operators.IvfIndex]()
 
   /** Identity of the indexed data: dir plus a metadata fingerprint of its
-    * embeddings files. Listing only — never reads data bytes. */
-  private def ivfSourceTag(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val statuses =
-      if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).sortBy(_.getPath.toString)
-      else Array(fs.getFileStatus(p))
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    statuses.foreach { s =>
-      md.update(s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime};"
-        .getBytes("UTF-8"))
-    }
-    dir + "#" + md.digest().map("%02x".format(_)).mkString.take(16)
-  }
+    * embeddings files. */
+  private def ivfSourceTag(spark: SparkSession, dir: String): String =
+    dir + "#" + QueryArtifacts.sourceDigest(spark, dir, "embeddings")
 
   /** Durable IVF location for a dir — (path, expected source tag), the
     * reopen coordinates [[RagQueries]]' fresh-load fence shares with
@@ -95,10 +82,9 @@ object SimilarityQueries {
     (QueryArtifacts.path("target/ivf-file-index", dir), ivfSourceTag(spark, dir))
 
   private[queries] def ivfPersisted(spark: SparkSession, dir: String): graft.operators.IvfIndex =
-    // the synchronized block (not TrieMap.getOrElseUpdate, whose thunk may
-    // run twice under contention) keeps two concurrent first calls from
-    // racing overwrite-mode writes to the same path
-    QueryArtifacts.runOnce(ivfFileCache, (spark, dir))({
+    // the at-most-once fill keeps two concurrent first calls from racing
+    // overwrite-mode writes to the same path
+    ivfFileCache((spark, dir)) {
       // path keyed by a digest of the RAW dir string besides the readable
       // sanitization: distinct dirs (/a/b vs /a_b) can never collide
       val path = QueryArtifacts.path("target/ivf-file-index", dir)
@@ -107,7 +93,7 @@ object SimilarityQueries {
         ivfIndex(spark, dir).write(path, tag)
         graft.operators.IvfIndex.load(spark, path)
       }
-    })
+    }
 
   /** Cold-reopen hooks for the serve-everything capstone (see
     * [[ServeAllQueries]]): (artifact, ensure-the-durable-form-exists,
@@ -174,11 +160,10 @@ object SimilarityQueries {
 
   /** One PQ index per (session, dir) — build/encode once, every query and
     * bench pass reuses the persisted code table (see operators.PqIndex). */
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.operators.PqIndex]
+  private val pqCache = QueryArtifacts.cache[SessionDir, graft.operators.PqIndex](_.close())
 
   private def pqIndex(spark: SparkSession, dir: String): graft.operators.PqIndex =
-    QueryArtifacts.runOnce(pqCache, (spark, dir))(graft.operators.PqIndex.build(
+    pqCache((spark, dir))(graft.operators.PqIndex.build(
         Tables.load(spark, dir, "embeddings"), "vec_id", "embedding",
         m = 8, ksub = 256))
 
@@ -186,18 +171,17 @@ object SimilarityQueries {
     * target/, manifest-validated on reopen so a second session loads with
     * ZERO build/encode jobs (same build-once lifecycle as
     * [[ivfPersisted]]; PqPersistSpec asserts the skip). */
-  private val pqFileCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.operators.PqIndex]
+  private val pqFileCache = QueryArtifacts.cache[SessionDir, graft.operators.PqIndex]()
 
   private def pqPersisted(spark: SparkSession, dir: String): graft.operators.PqIndex =
-    QueryArtifacts.runOnce(pqFileCache, (spark, dir))({
+    pqFileCache((spark, dir)) {
       val path = QueryArtifacts.path("target/pq-file-index", dir)
       val tag = ivfSourceTag(spark, dir)
       graft.operators.PqIndex.loadIfValid(spark, path, tag).getOrElse {
         pqIndex(spark, dir).write(path, tag)
         graft.operators.PqIndex.load(spark, path)
       }
-    })
+    }
 
   /** One drift-PLANTED durable IVF index per (session, dir): the coarse
     * quantizer is built (and its cell-balance snapshot committed) over the
@@ -206,11 +190,10 @@ object SimilarityQueries {
     * index-maintenance situation [[graft.operators.IvfIndex.staleness]]
     * exists to flag. Build-once like [[ivfPersisted]]: a manifest whose
     * source tag matches the appended state reopens with zero build jobs. */
-  private val driftCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val driftCache = QueryArtifacts.cache[SessionDir, String]()
 
   private def driftIndexPath(spark: SparkSession, dir: String): String =
-    QueryArtifacts.runOnce(driftCache, (spark, dir))({
+    driftCache((spark, dir)) {
       val path = QueryArtifacts.path("target/ivf-drift-index", dir)
       val baseTag = ivfSourceTag(spark, dir) + "#drift-base"
       val appendTag = ivfSourceTag(spark, dir) + "#drift-append"
@@ -230,15 +213,14 @@ object SimilarityQueries {
         graft.operators.IvfIndex.compact(spark, path)
       }
       path
-    })
+    }
 
   /** PQ twin of [[driftIndexPath]]: codebook frozen on the odd half, even
     * half encoded + appended under it. */
-  private val pqDriftCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val pqDriftCache = QueryArtifacts.cache[SessionDir, String]()
 
   private def pqDriftIndexPath(spark: SparkSession, dir: String): String =
-    QueryArtifacts.runOnce(pqDriftCache, (spark, dir))({
+    pqDriftCache((spark, dir)) {
       val path = QueryArtifacts.path("target/pq-drift-index", dir)
       val baseTag = ivfSourceTag(spark, dir) + "#drift-base"
       val appendTag = ivfSourceTag(spark, dir) + "#drift-append"
@@ -257,7 +239,7 @@ object SimilarityQueries {
         graft.operators.PqIndex.compact(spark, path)
       }
       path
-    })
+    }
 
   /** Serving handle on [[driftIndexPath]]'s appended index (build at
     * %2==1, append %2==0 — the full incremental lifecycle), with the
@@ -266,12 +248,11 @@ object SimilarityQueries {
     * (return false) — the crashed-job-retry protection a daily-append
     * corpus actually leans on. One load per (session, dir); the serve
     * plan is the usual statically-pruned partitioned scan. */
-  private val appendServeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.IvfIndex]
+  private val appendServeCache = QueryArtifacts.cache[SessionDir, graft.operators.IvfIndex]()
 
   private def appendedServeIndex(spark: SparkSession,
       dir: String): graft.operators.IvfIndex =
-    QueryArtifacts.runOnce(appendServeCache, (spark, dir))({
+    appendServeCache((spark, dir)) {
       val path = driftIndexPath(spark, dir)
       val appendTag = ivfSourceTag(spark, dir) + "#drift-append"
       val emb = Tables.load(spark, dir, "embeddings")
@@ -280,7 +261,7 @@ object SimilarityQueries {
       require(!replayed,
         "replaying an already-applied append batch must be a ledger no-op")
       graft.operators.IvfIndex.load(spark, path)
-    })
+    }
 
   /** Streaming ingest → durable index FOLD replay body (r17; see
     * [[graft.streaming.StreamingOps.foldIntoIvf]]): a real Structured
@@ -352,12 +333,11 @@ object SimilarityQueries {
     * must be a ZERO-BUILD no-op (the no-drift branch, fenced by the
     * build counter). Build-once via the manifest+ledger: a manifest
     * whose source is the refit tag proves the whole chain completed. */
-  private val refitCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.IvfIndex]
+  private val refitCache = QueryArtifacts.cache[SessionDir, graft.operators.IvfIndex]()
 
   private def refittedIndex(spark: SparkSession,
       dir: String): graft.operators.IvfIndex =
-    QueryArtifacts.runOnce(refitCache, (spark, dir))({
+    refitCache((spark, dir)) {
       val path = QueryArtifacts.path("target/ivf-refit-index", dir)
       val refitTag = ivfSourceTag(spark, dir) + "#refit-done"
       if (graft.operators.IvfIndex.loadIfValid(spark, path, refitTag).isEmpty) {
@@ -385,7 +365,7 @@ object SimilarityQueries {
           "the no-drift branch must run zero build jobs")
       }
       graft.operators.IvfIndex.load(spark, path)
-    })
+    }
 
   /** Drift-REMEDIATED durable PQ index (r18) — [[refittedIndex]]'s
     * codebook twin, completing measure → decide → act for the code
@@ -398,12 +378,11 @@ object SimilarityQueries {
     * [[pqIndex]], so the refreshed codebook is the proven one) — and the
     * immediately repeated call must be a ZERO-build no-op (counter
     * fence). Build-once via the manifest+ledger. */
-  private val pqRefitCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.PqIndex]
+  private val pqRefitCache = QueryArtifacts.cache[SessionDir, graft.operators.PqIndex]()
 
   private def pqRefittedIndex(spark: SparkSession,
       dir: String): graft.operators.PqIndex =
-    QueryArtifacts.runOnce(pqRefitCache, (spark, dir))({
+    pqRefitCache((spark, dir)) {
       val path = QueryArtifacts.path("target/pq-refit-index", dir)
       val refitTag = ivfSourceTag(spark, dir) + "#pq-refit-done"
       if (graft.operators.PqIndex.loadIfValid(spark, path, refitTag).isEmpty) {
@@ -419,7 +398,7 @@ object SimilarityQueries {
           "the no-drift branch must run zero build jobs")
       }
       graft.operators.PqIndex.load(spark, path)
-    })
+    }
 
   // Pseudo-replay WARM-UP: build + append + retrain is the family's
   // heaviest cold chain — overlap it with the replay fan-out (the PQ
@@ -438,12 +417,11 @@ object SimilarityQueries {
     * batch's append under its original tag must REFUSE — and loads the
     * completed artifact. One load per (session, dir); serving is the
     * usual code-column ADC scan. */
-  private val pqAppendServeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.PqIndex]
+  private val pqAppendServeCache = QueryArtifacts.cache[SessionDir, graft.operators.PqIndex]()
 
   private def pqAppendedServeIndex(spark: SparkSession,
       dir: String): graft.operators.PqIndex =
-    QueryArtifacts.runOnce(pqAppendServeCache, (spark, dir))({
+    pqAppendServeCache((spark, dir)) {
       val path = pqDriftIndexPath(spark, dir)
       val appendTag = ivfSourceTag(spark, dir) + "#drift-append"
       val emb = Tables.load(spark, dir, "embeddings")
@@ -452,7 +430,7 @@ object SimilarityQueries {
       require(!replayed,
         "replaying an already-applied append batch must be a ledger no-op")
       graft.operators.PqIndex.load(spark, path)
-    })
+    }
 
   /** Excision-PLANTED durable IVF index (r17) — the DELETE chapter:
     * built over the full corpus, the vec_id%7==0 slice then excised as a
@@ -464,12 +442,11 @@ object SimilarityQueries {
     * between a takedown and its next scheduled OPTIMIZE. The physical
     * drop at compact is pinned in IvfPersistSpec. Build-once via the
     * manifest+ledger (the [[driftIndexPath]] discipline). */
-  private val ivfExciseCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.IvfIndex]
+  private val ivfExciseCache = QueryArtifacts.cache[SessionDir, graft.operators.IvfIndex]()
 
   private def excisedServeIndex(spark: SparkSession,
       dir: String): graft.operators.IvfIndex =
-    QueryArtifacts.runOnce(ivfExciseCache, (spark, dir))({
+    ivfExciseCache((spark, dir)) {
       val path = QueryArtifacts.path("target/ivf-excised-index", dir)
       val exciseTag = ivfSourceTag(spark, dir) + "#excise-batch"
       if (graft.operators.IvfIndex.loadIfValid(spark, path, exciseTag).isEmpty) {
@@ -491,19 +468,18 @@ object SimilarityQueries {
           "replaying an already-applied excise batch must be a ledger no-op")
       }
       graft.operators.IvfIndex.load(spark, path)
-    })
+    }
 
   /** PQ twin of [[excisedServeIndex]]: codes built over the full corpus,
     * the vec_id%7==0 slice tombstoned (NOT compacted — the served
     * artifact keeps its pending tombstones, gating the anti-join ADC
     * path and the tombRows manifest validation); physical drop at
     * compact is pinned in PqPersistSpec. */
-  private val pqExciseCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.PqIndex]
+  private val pqExciseCache = QueryArtifacts.cache[SessionDir, graft.operators.PqIndex]()
 
   private def pqExcisedServeIndex(spark: SparkSession,
       dir: String): graft.operators.PqIndex =
-    QueryArtifacts.runOnce(pqExciseCache, (spark, dir))({
+    pqExciseCache((spark, dir)) {
       val path = QueryArtifacts.path("target/pq-excised-index", dir)
       val baseTag = ivfSourceTag(spark, dir) + "#excise-base"
       val exciseTag = ivfSourceTag(spark, dir) + "#excise-batch"
@@ -521,7 +497,7 @@ object SimilarityQueries {
           "replaying an already-applied excise batch must be a ledger no-op")
       }
       graft.operators.PqIndex.load(spark, path)
-    })
+    }
 
   // Pseudo-replay WARM-UP: the build+excise chains are multi-write cold
   // builds like the drift chain — overlap them with the replay fan-out.
@@ -553,12 +529,11 @@ object SimilarityQueries {
     * classifier_persisted pattern) — hash-green at every SF. Computed
     * once per (session, dir); the work is one tiny build + one tiny
     * append on <=200 vectors. */
-  private val fenceCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(String, Boolean)]]
+  private val fenceCache = QueryArtifacts.cache[SessionDir, Seq[(String, Boolean)]]()
 
   private def fencingVerdicts(spark: SparkSession,
       dir: String): Seq[(String, Boolean)] =
-    QueryArtifacts.runOnce(fenceCache, (spark, dir))({
+    fenceCache((spark, dir)) {
       val emb = Tables.load(spark, dir, "embeddings")
         .filter(col("vec_id") < 200)
       val path = QueryArtifacts.path(
@@ -615,7 +590,7 @@ object SimilarityQueries {
         ("live_lease_refuses_naming_holder", refusedNamingHolder),
         ("refusal_leaves_artifact_untouched", untouchedAfterRefusal),
         ("takeover_releases_lease", releasedAfter))
-    })
+    }
 
   /** Topic-cluster assignment under a FROZEN SEEDED quantizer (r12):
     * the K centroids are the K corpus vectors with the smallest
@@ -628,8 +603,7 @@ object SimilarityQueries {
     * K-row collect for the seeds; the assignment itself is a single lazy
     * scan through literal centroid dot products. Cached per (session,
     * dir): the report and the cluster-balanced sampler share it. */
-  private val topicCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val topicCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private val TopicK = 8
 
@@ -638,22 +612,21 @@ object SimilarityQueries {
     * and the streaming drift monitor (which must assign arrivals under
     * the IDENTICAL literals to land in the identical cells). Bounded:
     * K rows collected. */
-  private val topicCentroidCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Int, Array[Float])]]
+  private val topicCentroidCache = QueryArtifacts.cache[SessionDir, Seq[(Int, Array[Float])]]()
 
   private def topicCentroids(spark: SparkSession,
       dir: String): Seq[(Int, Array[Float])] =
-    QueryArtifacts.runOnce(topicCentroidCache, (spark, dir))({
+    topicCentroidCache((spark, dir)) {
       Tables.load(spark, dir, "embeddings")
         .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
         .select("embedding").limit(TopicK).collect()
         .zipWithIndex.map { case (r, i) =>
           (i, r.getSeq[Float](0).toArray)
         }.toSeq
-    })
+    }
 
   private def topicCells(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(topicCache, (spark, dir))({
+    topicCache((spark, dir)) {
       val emb = Tables.load(spark, dir, "embeddings")
       val base = emb.select(col("vec_id").as("c_id"), col("embedding").as("cv"))
         .withColumn("cn", vec_l2norm(col("cv")))
@@ -661,7 +634,7 @@ object SimilarityQueries {
           topicCentroids(spark, dir))
         .select("cell", "cell_dist", "c_id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Topic-drift streaming replay body (see [[ReplayOrchestrator]]): the
     * %5==0 "new crawl" vectors stream in three pinned-order micro-batches
@@ -702,27 +675,15 @@ object SimilarityQueries {
     Array(all.maxBy(_.n_new))
   }
 
-  // teardown = release the topic-assignment persist the body fills via
-  // topicCells (eager fan-out can launch this from another family's
-  // await — see ReplayOrchestrator ownership note)
-  ReplayOrchestrator.register("topic-drift",
-    () => releaseTopicCells())(buildTopicDriftReplay)
-
-  /** Release the persisted topic-cell assignments (idempotent; the
-    * replay teardown and the topic leg of [[clearCaches]]). */
-  private[queries] def releaseTopicCells(): Unit = {
-    topicCache.values.foreach(_.unpersist())
-    topicCache.clear()
-  }
+  ReplayOrchestrator.register("topic-drift")(buildTopicDriftReplay)
 
   // Pseudo-replay WARM-UP: the in-session IVF (sample collect + k-means
   // multi-restart + assignment persist) and PQ (subspace codebook fits +
   // encode) builds are this family's biggest per-session cold costs, and
-  // runOnce shares them across ~15 ANN rows anyway — force them under the
-  // warm-up fan-out so the first ANN row reads artifacts instead of
-  // paying the fits (see ReplayOrchestrator). Teardown mirrors
-  // clearCaches' in-session legs (idempotent).
-  ReplayOrchestrator.register("warm-ann", () => releaseSessionIndexes()) {
+  // their caches share them across ~15 ANN rows anyway — force them under
+  // the warm-up fan-out so the first ANN row reads artifacts instead of
+  // paying the fits (see ReplayOrchestrator).
+  ReplayOrchestrator.register("warm-ann") {
     (spark, dir) =>
       ivfIndex(spark, dir)
       pqIndex(spark, dir)
@@ -737,50 +698,20 @@ object SimilarityQueries {
     * `ann_ivfpq_persisted`'s in-memory parity side re-reads it — the two
     * rows ran the identical composed plan (probe join + ADC scan +
     * two-level cut + re-rank) twice per bench pass each. */
-  private val ivfPqTopCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val ivfPqTopCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def ivfPqTop(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(ivfPqTopCache, (spark, dir))({
+    ivfPqTopCache((spark, dir)) {
       val emb = Tables.load(spark, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
       new graft.operators.IvfPq(ivfIndex(spark, dir), pqIndex(spark, dir))
         .topK(q, k = 5, nprobe = 6, nCandidates = 256)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
-  /** Release the in-session index builds (idempotent; the warm-up
-    * teardown and the first legs of [[clearCaches]]). */
-  private[queries] def releaseSessionIndexes(): Unit = {
-    ivfPqTopCache.values.foreach(_.unpersist())
-    ivfPqTopCache.clear()
-    ivfCache.values.foreach(_.close())
-    ivfCache.clear()
-    pqCache.values.foreach(_.close())
-    pqCache.clear()
-  }
-
-  /** Release every cached inverted file (bench/verify teardown — a
-    * long-lived session would otherwise accumulate one persisted
-    * assignment set per (session, dir) key). */
-  def clearCaches(): Unit = {
-    ReplayOrchestrator.drainAndClear() // waits out in-flight replays,
-    // runs launched teardowns (incl. other families')
-    releaseSessionIndexes()
-    ivfFileCache.clear() // no persist to release — file-backed
-    pqFileCache.clear() // no persist to release — file-backed
-    driftCache.clear() // no persist to release — file-backed
-    pqDriftCache.clear() // no persist to release — file-backed
-    appendServeCache.clear() // no persist to release — file-backed
-    pqAppendServeCache.clear() // no persist to release — file-backed
-    ivfExciseCache.clear() // no persist to release — file-backed
-    pqExciseCache.clear() // no persist to release — file-backed
-    refitCache.clear() // no persist to release — file-backed
-    pqRefitCache.clear() // no persist to release — file-backed
-    fenceCache.clear() // no persist to release — verdict literals
-    releaseTopicCells()
-  }
+  /** Release every family's session artifacts ([[QueryArtifacts.clearAll]]). */
+  def clearCaches(): Unit = QueryArtifacts.clearAll()
 
   /** Exact brute-force cosine top-5 neighbor pairs (q_id, c_id) for query
     * vectors vec_id < 5 — the baseline side of the recall-gate queries. */
@@ -1371,7 +1302,7 @@ object SimilarityQueries {
     // that ann_ivf_persisted / ann_pq_persisted give each index alone
     // (the durable x durable pairing was previously pinned only in
     // IvfPqSpec). COST PROFILE (r18 audit, the r17 watch item): both
-    // index handles are session-cached (runOnce — manifests validate
+    // index handles are session-cached (manifests validate
     // ONCE, never per pass); the ~1 s warm pass is the composed durable
     // serve plan itself executing per pass (probed-cells collect + ADC
     // scan + re-rank) — deliberately uncached, because putting the

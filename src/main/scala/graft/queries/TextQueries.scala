@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.QueryArtifacts.SessionDir
 
 /** Text-analysis operators for a training-data pipeline: token/char stats,
   * n-gram-heuristic language ID, quality scoring, regex tokenization,
@@ -53,15 +54,11 @@ object TextQueries {
     * IDENTICAL vocabulary, which is the contract a tokenizer must keep
     * anyway. Training scans the corpus once for the bounded top-word
     * sample (see BpeTokenizer.train). */
-  private val bpeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Array[Array[String]]]
+  private val bpeCache = QueryArtifacts.cache[SessionDir, Array[Array[String]]]()
 
   private def bpeMerges(spark: SparkSession, dir: String): Array[Array[String]] =
-    QueryArtifacts.runOnce(bpeCache, (spark, dir))({
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val path = "target/bpe-merges/" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_") + "-" + digest
+    bpeCache((spark, dir)) {
+      val path = QueryArtifacts.path("target/bpe-merges", dir)
       val tag = lmSourceTag(spark, dir)
       graft.operators.BpeTokenizer.loadIfValid(spark, path, tag).getOrElse {
         val merges = graft.operators.BpeTokenizer.train(
@@ -70,7 +67,7 @@ object TextQueries {
         graft.operators.BpeTokenizer.write(spark, path, merges, tag)
         merges
       }
-    })
+    }
 
   /** One persisted bigram-LM score table per (session, dir), shared by
     * lm_bigram_quality and perplexity_buckets — the bucketing query reads
@@ -79,12 +76,11 @@ object TextQueries {
     * re-run per consumer (and twice inside one consumer). The result is
     * one row per document with three numeric columns — far smaller than
     * the corpus text it derives from. Same residency rationale and
-    * lifecycle as DedupQueries' pair caches; released by [[clearCaches]]. */
-  private val bigramScoresCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    * lifecycle as DedupQueries' pair caches. */
+  private val bigramScoresCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def bigramScores(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(bigramScoresCache, (spark, dir))(TextAnalysis.bigramLm(Tables.load(spark, dir, "documents"),
+    bigramScoresCache((spark, dir))(TextAnalysis.bigramLm(Tables.load(spark, dir, "documents"),
           "doc_id", "text")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
@@ -95,16 +91,15 @@ object TextQueries {
     * CCNet reference LM is a 5-gram; the bigram table above remains as
     * the lighter signal). Same residency rationale as [[bigramScores]]:
     * the bucketing consumer reads it twice. */
-  private val trigramScoresCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val trigramScoresCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def trigramScores(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(trigramScoresCache, (spark, dir))({
+    trigramScoresCache((spark, dir)) {
       val docs = Tables.load(spark, dir, "documents")
       graft.operators.TrigramLm.train(docs, "text")
         .score(docs, "doc_id", "text")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** The perplexity-tercile bucket table, shared by perplexity_buckets
     * and curriculum_order (same residency rationale as the LM scores it
@@ -113,11 +108,10 @@ object TextQueries {
     * aggregates per consumer). Since r12 the score underneath is the
     * interpolated TRIGRAM LM — a sharper fluency signal than the add-one
     * bigram, same deterministic-rational discipline. */
-  private val bucketsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val bucketsCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def perplexityBuckets(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(bucketsCache, (spark, dir))(TextAnalysis.quantileBuckets(
+    bucketsCache((spark, dir))(TextAnalysis.quantileBuckets(
           trigramScores(spark, dir).select(col("doc_id"), col("pred_prob")),
           "doc_id", "pred_prob", Seq("tail", "middle", "head"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -132,11 +126,10 @@ object TextQueries {
     * pass (r14 measured the warm pass SLOWER than the cold one from the
     * rebuild competing with resident caches). A plain persist (not
     * localCheckpoint) so the teardown can release it explicitly. */
-  private val fullSurvCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val fullSurvCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def fullSurvivors(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(fullSurvCache, (spark, dir))({
+    fullSurvCache((spark, dir)) {
       val docs = Tables.load(spark, dir, "documents")
       val corpus = docs.filter(col("doc_id") % 5 =!= 0)
       val evalSet = docs.filter(col("doc_id") % 5 === 0)
@@ -156,7 +149,7 @@ object TextQueries {
         .filter(col("n_tokens") >= 20)
         .select("doc_id", "lang", "n_tokens")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** corpus_materialize_curriculum's survivor manifest (exact-dedup semi +
     * length gate over the WHOLE corpus — no blocklist/decontamination
@@ -165,11 +158,10 @@ object TextQueries {
     * the mixture filter, and the min-of-2 second pass previously re-ran
     * the dedup subtree into a fresh per-pass localCheckpoint every pass.
     * Same narrow (doc_id, lang, n_tokens) row, same teardown leg. */
-  private val currSurvCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val currSurvCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def curriculumSurvivors(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(currSurvCache, (spark, dir))({
+    currSurvCache((spark, dir)) {
       val docs = Tables.load(spark, dir, "documents")
       val keepers = graft.operators.Dedup.exact(docs, "doc_id", "text")
         .select(col("keep_doc_id").as("doc_id"))
@@ -178,7 +170,7 @@ object TextQueries {
         .filter(col("n_tokens") >= 20)
         .select("doc_id", "lang", "n_tokens")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** The waterfill RATE MAP over a session-cached survivor manifest —
     * a pure |strata|-row function of (manifest, weights, budget), so one
@@ -187,26 +179,15 @@ object TextQueries {
     * dominant per-pass driver round-trip). Bounded: five (lang -> rate)
     * doubles per entry, the metadata-contract of the mixing samplers. */
   private val waterfillRatesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Map[String, Double]]
+    QueryArtifacts.cache[(SparkSession, String, String), Map[String, Double]]()
 
   private def waterfillRates(surv: DataFrame, spark: SparkSession,
       dir: String, manifestTag: String, budget: Long): Map[String, Double] =
-    QueryArtifacts.runOnce(waterfillRatesCache,
-        (spark, dir, s"$manifestTag:$budget"))(
+    waterfillRatesCache((spark, dir, s"$manifestTag:$budget"))(
       graft.operators.Sampling.waterfillAllocation(surv, "lang",
           "n_tokens", Map("de" -> 2L, "en" -> 1L, "es" -> 2L, "fr" -> 2L,
             "zh" -> 2L), budget = budget)
         .collect().map(r => r.getString(0) -> r.getDouble(4)).toMap)
-
-  /** Release the persisted survivor manifests and the rate folds derived
-    * from them (idempotent; a leg of [[clearCaches]]). */
-  private[queries] def releaseFullSurvivors(): Unit = {
-    fullSurvCache.values.foreach(_.unpersist())
-    fullSurvCache.clear()
-    currSurvCache.values.foreach(_.unpersist())
-    currSurvCache.clear()
-    waterfillRatesCache.clear()
-  }
 
   /** Drift-monitor replay body (see [[ReplayOrchestrator]] — launched
     * concurrently with the two dedup replays on first touch; the result
@@ -287,38 +268,31 @@ object TextQueries {
     out
   }
 
-  // teardown = the classifier family's release: the body reopens (or on
-  // a cold dir, trains) the durable classifier through clfPersisted
-  ReplayOrchestrator.register("gate-chain",
-    () => releaseClassifierFamily())(buildGateChainReplaySink)
+  ReplayOrchestrator.register("gate-chain")(buildGateChainReplaySink)
 
   // Pseudo-replay WARM-UP: the LM score tables (bigram + interpolated
   // trigram with its tercile buckets) are the most expensive non-replay
-  // cold builds in the bench (~5.5 s summed) and runOnce persists anyway
+  // cold builds in the bench (~5.5 s summed) and are persisted anyway
   // — forcing them here overlaps the builds with the replays' micro-batch
   // orchestration on the family's first touch, instead of charging them
-  // serially to whichever LM row happens to run first. Teardown mirrors
-  // clearCaches' LM legs (idempotent).
-  ReplayOrchestrator.register("warm-text-lm",
-    () => { releaseLmCaches(); releaseFullSurvivors() }) {
+  // serially to whichever LM row happens to run first.
+  ReplayOrchestrator.register("warm-text-lm") {
     (spark, dir) =>
       perplexityBuckets(spark, dir).count() // forces trigramScores too
       bigramScores(spark, dir).count()
       // the capstone's survivor manifest: a dedup semi + bloom-join
-      // subtree (~2 s cold at sf0.1) that runOnce-persists anyway
+      // subtree (~2 s cold at sf0.1) that is persisted anyway
       fullSurvivors(spark, dir).count()
       java.lang.Boolean.TRUE
   }
 
   // Same warm-up for the classifier family: the char-trigram language-ID
   // train and the in-session word-feature train are each one seed-slice
-  // aggregation pair into persisted model tables (runOnce), ~2-3 s
-  // summed cold at sf0.1 — overlap them with the replays instead of
-  // charging whichever classifier row runs first. Both trains read the
-  // ONE persisted seed slice (see [[seedSlice]]). Teardown mirrors
-  // clearCaches' classifier leg (idempotent).
-  ReplayOrchestrator.register("warm-lang-clf",
-    () => releaseClassifierFamily()) {
+  // aggregation pair into persisted model tables, ~2-3 s summed cold at
+  // sf0.1 — overlap them with the replays instead of charging whichever
+  // classifier row runs first. Both trains read the ONE persisted seed
+  // slice (see [[seedSlice]]).
+  ReplayOrchestrator.register("warm-lang-clf") {
     (spark, dir) =>
       val clf = langIdClassifier(spark, dir)
       clf.counts.count() // materializes the persisted count table
@@ -339,11 +313,10 @@ object TextQueries {
     * but the parquet scan + filter materializes ONCE instead of once per
     * train (r14's only reproducible warm-cost growth was this family's
     * duplicate corpus scans). */
-  private val seedSliceCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val seedSliceCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def seedSlice(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(seedSliceCache, (spark, dir))(
+    seedSliceCache((spark, dir))(
       Tables.load(spark, dir, "documents")
         .filter(col("doc_id") % 5 === 0)
         .select("doc_id", "lang", "text")
@@ -353,21 +326,14 @@ object TextQueries {
     * side of classifier_persisted's parity gate, trained once on the
     * shared seed slice with its bounded model tables persisted (scoring
     * twice per bench row re-ran the whole train before r15). */
-  private val memClfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.QualityClassifier]
+  private val memClfCache =
+    QueryArtifacts.cache[SessionDir, graft.operators.QualityClassifier](_.unpersistTables())
 
   private def memClf(spark: SparkSession,
       dir: String): graft.operators.QualityClassifier =
-    QueryArtifacts.runOnce(memClfCache, (spark, dir))(
+    memClfCache((spark, dir))(
       graft.operators.QualityClassifier
         .train(seedSlice(spark, dir), "text", "lang").cacheTables())
-
-  /** Release the persisted trained-language-ID model tables (idempotent;
-    * a leg of [[releaseClassifierFamily]]). */
-  private[queries] def releaseLangClf(): Unit = {
-    langClfCache.values.foreach(_.unpersistTables())
-    langClfCache.clear()
-  }
 
   /** The durable classifier's scored HELD-OUT table (%5!=0 under the
     * frozen %5==0-trained model), persisted once per (session, dir) —
@@ -376,52 +342,17 @@ object TextQueries {
     * side compares against it, and corpus_filter_classifier reuses it for
     * the held-out 80% of its corpus-wide scoring, so the word-feature
     * serve scan runs ONCE instead of three times. */
-  private val clfHeldScoresCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val clfHeldScoresCache = QueryArtifacts.cache[SessionDir, DataFrame](_.unpersist())
 
   private def clfHeldScores(spark: SparkSession, dir: String): DataFrame =
-    QueryArtifacts.runOnce(clfHeldScoresCache, (spark, dir))(
+    clfHeldScoresCache((spark, dir))(
       clfPersisted(spark, dir).score(
           Tables.load(spark, dir, "documents")
             .filter(col("doc_id") % 5 =!= 0), "doc_id", "text")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  /** Release every classifier-family persist: both trained models' tables,
-    * the shared seed slice, and the shared held-out score table
-    * (idempotent; the warm-up teardown and the classifier leg of
-    * [[clearCaches]]). */
-  private[queries] def releaseClassifierFamily(): Unit = {
-    releaseLangClf()
-    memClfCache.values.foreach(_.unpersistTables())
-    memClfCache.clear()
-    clfHeldScoresCache.values.foreach(_.unpersist())
-    clfHeldScoresCache.clear()
-    seedSliceCache.values.foreach(_.unpersist())
-    seedSliceCache.clear()
-  }
-
-  /** Release the persisted LM score/bucket tables (idempotent; the
-    * warm-up teardown and the LM legs of [[clearCaches]]). */
-  private[queries] def releaseLmCaches(): Unit = {
-    bigramScoresCache.values.foreach(_.unpersist())
-    bigramScoresCache.clear()
-    trigramScoresCache.values.foreach(_.unpersist())
-    trigramScoresCache.clear()
-    bucketsCache.values.foreach(_.unpersist())
-    bucketsCache.clear()
-  }
-
-  /** Release every persisted intermediate this object holds. */
-  def clearCaches(): Unit = {
-    // drift replay results are bounded local arrays, but awaiting this
-    // family's replay eagerly launched the OTHER families' too — drain
-    // runs their registered teardowns so a text-only caller can't leak
-    // the dedup/topic persists the fan-out created
-    ReplayOrchestrator.drainAndClear()
-    releaseLmCaches()
-    releaseClassifierFamily()
-    releaseFullSurvivors()
-  }
+  /** Release every family's session artifacts ([[QueryArtifacts.clearAll]]). */
+  def clearCaches(): Unit = QueryArtifacts.clearAll()
 
   val queries: ListMap[String, Q] = ListMap(
     // Char/token statistics per document
@@ -1425,22 +1356,10 @@ object TextQueries {
     * — the same build-once file lifecycle as SimilarityQueries'
     * ivfPersisted (manifest-validated reopen, path keyed by a digest of
     * the dir, source tag from the documents table's file metadata). */
-  private val lmFileCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.operators.BigramLm]
+  private val lmFileCache = QueryArtifacts.cache[SessionDir, graft.operators.BigramLm]()
 
-  private def lmSourceTag(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val statuses =
-      if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).sortBy(_.getPath.toString)
-      else Array(fs.getFileStatus(p))
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    statuses.foreach { s =>
-      md.update(s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime};"
-        .getBytes("UTF-8"))
-    }
-    dir + "#" + md.digest().map("%02x".format(_)).mkString.take(16)
-  }
+  private def lmSourceTag(spark: SparkSession, dir: String): String =
+    dir + "#" + QueryArtifacts.sourceDigest(spark, dir, "documents")
 
   /** Appended-and-COMPACTED durable inverted index — the index family's
     * full maintenance lifecycle on one artifact: built over the odd
@@ -1451,12 +1370,11 @@ object TextQueries {
     * whole chain completed, so a later session reopens with zero
     * tokenize/aggregate jobs; anything else (absent, torn, stale
     * fixture) rebuilds the chain from scratch. */
-  private val invAppendCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.InvertedIndex]
+  private val invAppendCache = QueryArtifacts.cache[SessionDir, graft.operators.InvertedIndex]()
 
   private def invAppendedCompacted(spark: SparkSession,
       dir: String): graft.operators.InvertedIndex =
-    QueryArtifacts.runOnce(invAppendCache, (spark, dir))({
+    invAppendCache((spark, dir)) {
       val path = QueryArtifacts.path("target/inverted-index-appended", dir)
       val baseTag = lmSourceTag(spark, dir) + "#append-base"
       val appendTag = lmSourceTag(spark, dir) + "#append-batch"
@@ -1470,12 +1388,11 @@ object TextQueries {
         graft.operators.InvertedIndex.compact(spark, path)
       }
       graft.operators.InvertedIndex.load(spark, path)
-    })
+    }
 
   // Pseudo-replay WARM-UP: the append+compact chain is the family's one
   // multi-write cold build — overlap it with the replay fan-out on a
   // fresh target/ tree (on a warm tree the manifest reopen is free).
-  // No persists to tear down; the cache holds lazy parquet scans.
   ReplayOrchestrator.register("warm-inv-append") { (spark, dir) =>
     invAppendedCompacted(spark, dir)
     java.lang.Boolean.TRUE
@@ -1490,12 +1407,11 @@ object TextQueries {
     * manifest+ledger (the [[invAppendedCompacted]] discipline): a
     * manifest whose source is the EXCISE tag proves the whole chain
     * completed and reopens with zero tokenize jobs. */
-  private val invExciseCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.InvertedIndex]
+  private val invExciseCache = QueryArtifacts.cache[SessionDir, graft.operators.InvertedIndex]()
 
   private def invExcisedCompacted(spark: SparkSession,
       dir: String): graft.operators.InvertedIndex =
-    QueryArtifacts.runOnce(invExciseCache, (spark, dir))({
+    invExciseCache((spark, dir)) {
       val path = QueryArtifacts.path("target/inverted-index-excised", dir)
       val exciseTag = lmSourceTag(spark, dir) + "#excise-batch"
       if (graft.operators.InvertedIndex.loadIfValid(spark, path, exciseTag).isEmpty) {
@@ -1520,7 +1436,7 @@ object TextQueries {
         graft.operators.InvertedIndex.compact(spark, path)
       }
       graft.operators.InvertedIndex.load(spark, path)
-    })
+    }
 
   // Pseudo-replay WARM-UP: the build-full/excise/compact chain is a
   // multi-write cold build like the append chain — overlap it with the
@@ -1604,11 +1520,8 @@ object TextQueries {
   }
 
   private def bigramLmPersisted(spark: SparkSession, dir: String): graft.operators.BigramLm =
-    QueryArtifacts.runOnce(lmFileCache, (spark, dir))({
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val path = "target/bigram-lm/" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_") + "-" + digest
+    lmFileCache((spark, dir)) {
+      val path = QueryArtifacts.path("target/bigram-lm", dir)
       val tag = lmSourceTag(spark, dir)
       graft.operators.BigramLm.loadIfValid(spark, path, tag).getOrElse {
         val docs = Tables.load(spark, dir, "documents")
@@ -1616,7 +1529,7 @@ object TextQueries {
           .write(path, tag)
         graft.operators.BigramLm.load(spark, path)
       }
-    })
+    }
 
   /** Excised twin of [[bigramLmPersisted]] — EXACT UNLEARNING for the
     * reference LM (r19, the MarkovModel excise recipe on the CCNet
@@ -1627,12 +1540,11 @@ object TextQueries {
     * scalar v re-derives as the surviving vocab rows, so held-out docs
     * scored under the excised model must hash against a fresh
     * survivor-only train; replayed-ledger no-op pinned. */
-  private val lmExciseCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.BigramLm]
+  private val lmExciseCache = QueryArtifacts.cache[SessionDir, graft.operators.BigramLm]()
 
   private def bigramLmExcised(spark: SparkSession,
       dir: String): graft.operators.BigramLm =
-    QueryArtifacts.runOnce(lmExciseCache, (spark, dir))({
+    lmExciseCache((spark, dir)) {
       val srcPath = QueryArtifacts.path("target/bigram-lm", dir)
       val path = QueryArtifacts.path("target/bigram-lm-excised", dir)
       val exciseTag = lmSourceTag(spark, dir) + "#excise-batch"
@@ -1648,17 +1560,16 @@ object TextQueries {
           "replaying an already-applied excise batch must be a ledger no-op")
       }
       graft.operators.BigramLm.load(spark, path)
-    })
+    }
 
   /** One durable trigram LM per (session, dir), trained on the %5!=0
     * slice — the [[bigramLmPersisted]] lifecycle for the interpolated
     * trigram model (manifest-validated reopen, zero training jobs on a
     * hit). */
-  private val trigramFileCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.operators.TrigramLm]
+  private val trigramFileCache = QueryArtifacts.cache[SessionDir, graft.operators.TrigramLm]()
 
   private def trigramLmPersisted(spark: SparkSession, dir: String): graft.operators.TrigramLm =
-    QueryArtifacts.runOnce(trigramFileCache, (spark, dir))({
+    trigramFileCache((spark, dir)) {
       val path = QueryArtifacts.path("target/trigram-lm", dir)
       val tag = lmSourceTag(spark, dir)
       graft.operators.TrigramLm.loadIfValid(spark, path, tag).getOrElse {
@@ -1667,7 +1578,7 @@ object TextQueries {
           .write(path, tag)
         graft.operators.TrigramLm.load(spark, path)
       }
-    })
+    }
 
   /** Excised twin of [[trigramLmPersisted]] — EXACT UNLEARNING for the
     * interpolated trigram LM (r20, the [[bigramLmExcised]] chain one
@@ -1678,12 +1589,11 @@ object TextQueries {
     * nTok) re-derive from the surviving unigram table, so held-out docs
     * scored under the excised model must hash against a fresh
     * survivor-only train; replayed-ledger no-op pinned. */
-  private val trigramExciseCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.TrigramLm]
+  private val trigramExciseCache = QueryArtifacts.cache[SessionDir, graft.operators.TrigramLm]()
 
   private def trigramLmExcised(spark: SparkSession,
       dir: String): graft.operators.TrigramLm =
-    QueryArtifacts.runOnce(trigramExciseCache, (spark, dir))({
+    trigramExciseCache((spark, dir)) {
       val srcPath = QueryArtifacts.path("target/trigram-lm", dir)
       val path = QueryArtifacts.path("target/trigram-lm-excised", dir)
       val exciseTag = lmSourceTag(spark, dir) + "#excise-batch"
@@ -1699,14 +1609,13 @@ object TextQueries {
           "replaying an already-applied excise batch must be a ledger no-op")
       }
       graft.operators.TrigramLm.load(spark, path)
-    })
+    }
 
   /** One durable inverted index per (session, dir) — same build-once file
     * lifecycle as [[bigramLmPersisted]] (manifest-validated reopen, zero
     * tokenize jobs on a hit); serving reads only the query terms' hash
     * buckets via static partition pruning. */
-  private val invFileCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.operators.InvertedIndex]
+  private val invFileCache = QueryArtifacts.cache[SessionDir, graft.operators.InvertedIndex]()
 
   /** Durable inverted-index location for a dir — (path, expected source
     * tag), the reopen coordinates [[RagQueries]]' fresh-load fence and the
@@ -1717,7 +1626,7 @@ object TextQueries {
 
   private[queries] def invertedIndexPersisted(spark: SparkSession,
       dir: String): graft.operators.InvertedIndex =
-    QueryArtifacts.runOnce(invFileCache, (spark, dir))({
+    invFileCache((spark, dir)) {
       val path = QueryArtifacts.path("target/inverted-index", dir)
       val tag = lmSourceTag(spark, dir)
       graft.operators.InvertedIndex.loadIfValid(spark, path, tag).getOrElse {
@@ -1726,20 +1635,16 @@ object TextQueries {
           .write(path, tag)
         graft.operators.InvertedIndex.load(spark, path)
       }
-    })
+    }
 
   /** One durable quality classifier per (session, dir), trained on the
     * %5==0 labeled seed slice — same build-once file lifecycle as
     * [[bigramLmPersisted]]. */
-  private val clfFileCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.operators.QualityClassifier]
+  private val clfFileCache = QueryArtifacts.cache[SessionDir, graft.operators.QualityClassifier]()
 
   private def clfPersisted(spark: SparkSession, dir: String): graft.operators.QualityClassifier =
-    QueryArtifacts.runOnce(clfFileCache, (spark, dir))({
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-      val path = "target/quality-clf/" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_") + "-" + digest
+    clfFileCache((spark, dir)) {
+      val path = QueryArtifacts.path("target/quality-clf", dir)
       val tag = lmSourceTag(spark, dir)
       graft.operators.QualityClassifier.loadIfValid(spark, path, tag).getOrElse {
         graft.operators.QualityClassifier
@@ -1747,7 +1652,7 @@ object TextQueries {
           .write(path, tag)
         graft.operators.QualityClassifier.load(spark, path)
       }
-    })
+    }
 
   /** Excised twin of [[clfPersisted]] — EXACT UNLEARNING for the trained
     * curation classifier (r20, the [[bigramLmExcised]] chain on the
@@ -1759,12 +1664,11 @@ object TextQueries {
     * words, so held-out docs scored under the excised model must hash
     * against a fresh survivor-only train; replayed-ledger no-op
     * pinned. */
-  private val clfExciseCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.QualityClassifier]
+  private val clfExciseCache = QueryArtifacts.cache[SessionDir, graft.operators.QualityClassifier]()
 
   private def clfExcised(spark: SparkSession,
       dir: String): graft.operators.QualityClassifier =
-    QueryArtifacts.runOnce(clfExciseCache, (spark, dir))({
+    clfExciseCache((spark, dir)) {
       val srcPath = QueryArtifacts.path("target/quality-clf", dir)
       val path = QueryArtifacts.path("target/quality-clf-excised", dir)
       val exciseTag = lmSourceTag(spark, dir) + "#excise-batch"
@@ -1781,20 +1685,20 @@ object TextQueries {
           "replaying an already-applied excise batch must be a ledger no-op")
       }
       graft.operators.QualityClassifier.load(spark, path)
-    })
+    }
 
   /** One TRAINED char-trigram language-ID model per (session, dir) —
     * the same NB sufficient statistics as [[clfPersisted]] but over the
     * [[TextAnalysis.charNgrams]] feature space (fastText-lid's), fitted
     * on the labeled %5==0 seed slice. The bounded model tables (|L| +
     * vocab×|L| rows) are persisted so repeat scoring doesn't re-run the
-    * training aggregates; [[clearCaches]] releases them. */
-  private val langClfCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.operators.QualityClassifier]
+    * training aggregates. */
+  private val langClfCache =
+    QueryArtifacts.cache[SessionDir, graft.operators.QualityClassifier](_.unpersistTables())
 
   private def langIdClassifier(spark: SparkSession,
       dir: String): graft.operators.QualityClassifier =
-    QueryArtifacts.runOnce(langClfCache, (spark, dir))(
+    langClfCache((spark, dir))(
       graft.operators.QualityClassifier.trainFeatures(
         seedSlice(spark, dir),
         TextAnalysis.charNgrams(col("text"), 3), "lang").cacheTables())

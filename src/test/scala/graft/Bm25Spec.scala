@@ -2,8 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.TextAnalysis
 
 /** BM25 retrieval: hand-computed scores on a 3-doc corpus (N = 3,

@@ -2,32 +2,31 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.{DedupQueries, MultimodalQueries, PipelineQueries, SimilarityQueries, TextQueries}
+import graft.queries.{CdcQueries, DedupQueries, MultimodalQueries, PipelineQueries, QueryArtifacts,
+  SimilarityQueries, TextQueries}
 
-/** The shared (session, dir)-keyed persisted intermediates — jaccard /
-  * minhash candidate pairs (DedupQueries), IVF inverted files
-  * (SimilarityQueries), and aHash fingerprint tables (MultimodalQueries) —
-  * must all be released by the clearCaches() hooks
-  * that Bench/Verify call at teardown, or a long-lived session accumulates
-  * storage per key. Asserted against the session's persistent-RDD registry
+/** The shared (session, dir)-keyed session artifacts — persisted
+  * intermediates (candidate pairs, IVF inverted files, aHash fingerprint
+  * tables) and file-backed handles (chunk index, z-order layouts,
+  * inverted index) alike — must all be released by the one teardown
+  * Bench/Verify call (QueryArtifacts.clearAll), or a long-lived session
+  * accumulates storage per key and keeps every session it was keyed by
+  * reachable. Asserted against the session's persistent-RDD registry
   * relative to a baseline (the shared test session may hold unrelated
-  * persists from other suites).
+  * persists from other suites) and against the registry's entry count.
   */
 class CacheLifecycleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("clearCaches releases every query-cache persist") {
-    // start from a clean slate for OUR caches (idempotent if already clean)
-    DedupQueries.clearCaches()
-    SimilarityQueries.clearCaches()
-    MultimodalQueries.clearCaches()
-    PipelineQueries.clearCaches()
-    TextQueries.clearCaches()
+    // start from a clean slate (idempotent if already clean)
+    QueryArtifacts.clearAll()
     val baseline = spark.sparkContext.getPersistentRDDs.keySet
 
     // populate the caches: jaccard pairs (0.8 + 0.6), minhash pairs,
     // IVF index, aHash fingerprints, repeat + contamination intervals,
-    // ingest corpus signatures
+    // ingest corpus signatures — plus file-backed handles: the durable
+    // chunk index, the z-order layouts and the durable inverted index
     DedupQueries.queries("dedup_ngram_jaccard")(spark, TestSpark.sfDir).count()
     DedupQueries.queries("dedup_minhash_recall")(spark, TestSpark.sfDir).count()
     DedupQueries.queries("dedup_substring")(spark, TestSpark.sfDir).count()
@@ -36,19 +35,21 @@ class CacheLifecycleSpec extends AnyFunSuite {
     SimilarityQueries.queries("corpus_topic_report")(spark, TestSpark.sfDir).count()
     MultimodalQueries.queries("multimodal_ahash_pairs")(spark, TestSpark.sfDir).count()
     PipelineQueries.queries("decontaminate_spans")(spark, TestSpark.sfDir).count()
+    PipelineQueries.queries("zorder_box_scan")(spark, TestSpark.sfDir).count()
     TextQueries.queries("perplexity_buckets")(spark, TestSpark.sfDir).count()
+    TextQueries.queries("bm25_served")(spark, TestSpark.sfDir).count()
+    CdcQueries.queries("cdc_chunks_persisted")(spark, TestSpark.sfDir).count()
     val populated = spark.sparkContext.getPersistentRDDs.keySet
-    assert((populated -- baseline).nonEmpty,
+    assert(populated.diff(baseline).nonEmpty,
       "expected the query caches to register persisted RDDs")
+    assert(QueryArtifacts.entryCount > 0)
 
-    DedupQueries.clearCaches()
-    SimilarityQueries.clearCaches()
-    MultimodalQueries.clearCaches()
-    PipelineQueries.clearCaches()
-    TextQueries.clearCaches()
+    QueryArtifacts.clearAll()
     val after = spark.sparkContext.getPersistentRDDs.keySet
-    assert((after -- baseline).isEmpty,
-      s"persists leaked past clearCaches(): ${(after -- baseline).toSeq.sorted}")
+    assert(after.diff(baseline).isEmpty,
+      s"persists leaked past clearAll(): ${after.diff(baseline).toSeq.sorted}")
+    assert(QueryArtifacts.entryCount == 0,
+      s"${QueryArtifacts.entryCount} session-cache entries survived clearAll()")
   }
 
   test("drainLeaked names and force-releases an unregistered persist") {
@@ -77,11 +78,10 @@ class CacheLifecycleSpec extends AnyFunSuite {
   }
 
   test("clearCaches is idempotent and caches rebuild after a clear") {
-    DedupQueries.clearCaches()
-    DedupQueries.clearCaches() // second call must not throw
+    QueryArtifacts.clearAll()
+    QueryArtifacts.clearAll() // second call must not throw
     val df = DedupQueries.queries("dedup_ngram_jaccard")(spark, TestSpark.sfDir)
-    assert(df.count() > 0, "cache must repopulate after clearCaches()")
-    DedupQueries.clearCaches()
-    SimilarityQueries.clearCaches()
+    assert(df.count() > 0, "cache must repopulate after clearAll()")
+    QueryArtifacts.clearAll()
   }
 }

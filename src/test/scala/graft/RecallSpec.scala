@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.{DedupQueries, SimilarityQueries}
+import graft.queries.SimilarityQueries
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
 

@@ -1,21 +1,25 @@
 package graft
 
 import java.util.concurrent.TimeoutException
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.ReplayOrchestrator
+import graft.queries.{QueryArtifacts, ReplayOrchestrator}
 
 /** The replay-launcher contracts that keep a wedged or half-torn-down
   * streaming replay from silently poisoning a run: a hung body becomes a
   * NAMED, fail-sticky per-query failure within the await bound (never an
-  * unbounded hang of the whole bench), drainAndClear waits out in-flight
-  * bodies before a relaunch could overlap their staging paths, and
-  * teardowns of everything LAUNCHED run even when only one family clears
-  * its caches (the eager fan-out crosses module ownership). */
+  * unbounded hang of the whole bench), and the session-artifact clear
+  * waits out in-flight bodies before a relaunch could overlap their
+  * staging paths, then releases what they filled into any family's
+  * cache (the eager fan-out crosses module ownership). */
 class ReplayOrchestratorSpec extends AnyFunSuite {
 
   private val spark = TestSpark.spark
@@ -52,17 +56,28 @@ class ReplayOrchestratorSpec extends AnyFunSuite {
     }
   }
 
-  test("drainAndClear waits out an in-flight body and runs launched teardowns") {
+  test("clearAll waits out an in-flight body and releases its cache fill") {
     val bodyDone = new AtomicBoolean(false)
-    val torndown = new AtomicInteger(0)
+    // what the body persisted into a registry cache, one entry per launch
+    val persisted = new ConcurrentLinkedQueue[DataFrame]()
+    val fills = QueryArtifacts.cache[String, DataFrame](_.unpersist())
+    def released = persisted.asScala.forall(_.storageLevel == StorageLevel.NONE)
     val name = "spec-inflight"
-    ReplayOrchestrator.register(name, () => torndown.incrementAndGet()) {
-      (_, _) => Thread.sleep(1500); bodyDone.set(true); "done"
+    ReplayOrchestrator.register(name) { (spark, dir) =>
+      Thread.sleep(1500)
+      val df = fills(dir) {
+        val d = spark.range(0, 10, 1, 1).selectExpr("id", s"'$dir' AS dir").persist()
+        persisted.add(d)
+        d
+      }
+      df.count()
+      bodyDone.set(true); "done"
     }
     try {
       assert(ReplayOrchestrator.await[String](spark, "/spec/dir-a", name)
         == "done")
       assert(bodyDone.get())
+      assert(persisted.size == 1 && !released, "the body must fill a persist")
       // relaunch under a second dir but DO NOT await it — leave it
       // in-flight, the CacheLifecycleSpec-mid-JVM scenario
       bodyDone.set(false)
@@ -72,24 +87,26 @@ class ReplayOrchestratorSpec extends AnyFunSuite {
         ReplayOrchestrator.await[String](spark, "/spec/dir-b", name)
       }(scala.concurrent.ExecutionContext.global)
       Thread.sleep(100) // let the launch land in `started`
-      ReplayOrchestrator.drainAndClear()
+      QueryArtifacts.clearAll()
       // the in-flight body must have COMPLETED before clear dropped it —
       // a post-clear relaunch can never overlap its staging writes
       assert(bodyDone.get(),
-        "drainAndClear returned while a launched body was still running")
-      // teardown ran for the launched replay (once per drain, not per key)
-      assert(torndown.get() == 1, s"teardown ran ${torndown.get()} times")
+        "clearAll returned while a launched body was still running")
+      // ... and what it filled (after the clear began) is released too
+      assert(persisted.size == 2 && released,
+        "a persist filled by the in-flight body survived clearAll")
       scala.concurrent.Await.ready(inflight, 10.seconds)
       // a fresh await AFTER the clear relaunches cleanly
       bodyDone.set(false)
       assert(ReplayOrchestrator.await[String](spark, "/spec/dir-a", name)
         == "done")
       assert(bodyDone.get(), "post-clear await must relaunch the body")
-      ReplayOrchestrator.drainAndClear()
-      assert(torndown.get() == 2)
-      // idempotent: nothing launched since → no further teardowns
-      ReplayOrchestrator.drainAndClear()
-      assert(torndown.get() == 2)
+      assert(persisted.size == 3 && !released)
+      QueryArtifacts.clearAll()
+      assert(released)
+      // idempotent: nothing launched since → nothing more to release
+      QueryArtifacts.clearAll()
+      assert(persisted.size == 3 && released)
     } finally ReplayOrchestrator.unregisterForTest(name)
   }
 

@@ -142,7 +142,7 @@ class SemDedupSpec extends AnyFunSuite {
     // its twin (strict vec_id_1 < vec_id_2), and the all-zero vector must
     // drop at the threshold via its NaN cosine
     val rows = (0L until 40L).map { i =>
-      (i, Array.tabulate(8)(d => (math.sin(i * 3 + d) * 0.7).toFloat))
+      (i, Array.tabulate(8)(d => (math.sin((i * 3 + d).toDouble) * 0.7).toFloat))
     } ++ Seq(
       (7L, Array.tabulate(8)(d => (math.cos(d) * 0.5).toFloat)),
       (41L, Array.fill(8)(0.0f)))
@@ -179,7 +179,7 @@ class SemDedupSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     def entry(id: Long): Any = {
-      val v = Array.tabulate(6)(d => math.sin(id * 5 + d) * 0.8)
+      val v = Array.tabulate(6)(d => math.sin((id * 5 + d).toDouble) * 0.8)
       val nrm = math.sqrt(v.map(x => x * x).sum)
       new GenericInternalRow(Array[Any](id,
         new GenericArrayData(v.map(_.asInstanceOf[Any])), nrm))

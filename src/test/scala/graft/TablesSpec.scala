@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
