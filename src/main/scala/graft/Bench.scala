@@ -26,7 +26,7 @@ object Bench {
       leaked: Int, sfDir: String, loadAvg: Seq[Double] = Nil,
       reference: Option[(Double, Seq[Double])] = None,
       reopenMs: Option[Seq[(String, Long)]] = None,
-      warmupBarrier: Option[String] = None,
+      warmupSec: Option[Double] = None,
       measured: Option[(Seq[Double], Boolean, Long)] = None,
       leakedRdds: Seq[String] = Nil,
       cpus: Option[Int] = None): String = {
@@ -47,12 +47,13 @@ object Bench {
     // swung ±40% with co-tenant load, so the artifact carries the
     // contamination evidence itself (empty when /proc/loadavg is absent)
     val load = loadAvg.mkString("[", ",", "]")
-    // barrier outcome: "ok" on a clean fan-out, "wedged:<names>" when
-    // bodies timed out (they fail by name at their own rows) — a
-    // contaminated run is distinguishable from a clean one IN the
-    // artifact, not just on stderr (r18 advice)
-    val barrier = warmupBarrier.map(b =>
-      s""","warmup_barrier":"${jsonEscape(b)}"""").getOrElse("")
+    // the COLD cost next to the warm headline: the machinery warm-up's
+    // wall time and the sum of every row's successful pass 1 (which pays
+    // each family's artifact builds) — moving work off the measured
+    // minimum shows up here instead of vanishing
+    val pass1Total = results.map(_._2._1).filter(_ >= 0).sum
+    val cold = warmupSec.map(w => s""","warmup_sec":$w""").getOrElse("") +
+      s""","pass1_total":$pass1Total"""
     // the QUIET GATE's verdict: the 1/5/15-min load read immediately
     // before pass 1 (after the bounded wait-for-quiet), whether the gate
     // gave up waiting (measured_under_load=true means the headline total
@@ -98,7 +99,7 @@ object Bench {
     // rotate in as the "quiet reference" every 32-core run then reads
     // as a regression against
     val cpusField = cpus.map(c => s""","cpus":$c""").getOrElse("")
-    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":$sfJson,"sf_dir":"${jsonEscape(sfDir)}"$cpusField,"passes":$passes$reopen,"leaked_rdds":$leakList,"loadavg":$load$barrier$meas$ref,"failed_queries":${failedQueries.size},"failed":$failedJson,"total_sec":$total,"leaked_persists":$leaked}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":$sfJson,"sf_dir":"${jsonEscape(sfDir)}"$cpusField,"passes":$passes$reopen,"leaked_rdds":$leakList,"loadavg":$load$meas$ref$cold,"failed_queries":${failedQueries.size},"failed":$failedJson,"total_sec":$total,"leaked_persists":$leaked}"""
   }
 
   /** Numeric scale factor parsed from a data-dir path's last `sfN[.N]`
@@ -115,10 +116,9 @@ object Bench {
   }
 
   /** Complete JSON string escape for every interpolated NAME in the
-    * summary (barrier verdicts, leaked-RDD descriptors): today's values
-    * are static identifiers, but any future body name carrying a quote,
-    * backslash, or control character (an RDD setName with a newline)
-    * would otherwise silently corrupt the artifact and break
+    * summary (data dir, leaked-RDD descriptors): a name carrying a
+    * quote, backslash, or control character (an RDD setName with a
+    * newline) would otherwise silently corrupt the artifact and break
     * [[referenceFrom]] for every later run. */
   private[graft] def jsonEscape(s: String): String = {
     val sb = new StringBuilder(s.length + 8)
@@ -149,6 +149,41 @@ object Bench {
     }
     (if (root == null) from.toAbsolutePath else root)
       .resolve("BENCH_SUMMARY.json")
+  }
+
+  /** This core count's own summary next to `summary`
+    * (BENCH_SUMMARY_c32.json for 32 cores). */
+  private[graft] def coreSummaryPath(summary: java.nio.file.Path,
+      cpus: Int): java.nio.file.Path =
+    summary.resolveSibling(s"BENCH_SUMMARY_c$cpus.json")
+
+  /** Read this core count's previous run, `build` the summary line from
+    * its reference ([[referenceFrom]]), and write the line both to
+    * `summary` (the latest run at any core count) and to the core count's
+    * own file ([[coreSummaryPath]]). The driver benches the same dir at
+    * 32 and 8 cores, and a run adopts a reference only from its own core
+    * count: in one shared file each core count's run would overwrite the
+    * other's chain. The core count's own file is read first, `summary` only
+    * when it is absent (artifacts from before per-core files). I/O is
+    * best-effort: an unreadable file yields no reference, a failed write
+    * never fails the bench. */
+  private[graft] def recordSummary(summary: java.nio.file.Path,
+      sfDir: String, cpus: Option[Int])(
+      build: Option[(Double, Seq[Double])] => String): String = {
+    val own = cpus.map(coreSummaryPath(summary, _))
+    val previous = own.filter(java.nio.file.Files.exists(_)).getOrElse(summary)
+    val reference = try {
+      referenceFrom(new String(java.nio.file.Files.readAllBytes(previous),
+        "UTF-8"), sfDir, cpus)
+    } catch { case scala.util.control.NonFatal(_) => None }
+    val line = build(reference)
+    (summary +: own.toSeq).foreach { p =>
+      try {
+        val w = new java.io.PrintWriter(p.toFile, "UTF-8")
+        try w.println(line) finally w.close()
+      } catch { case scala.util.control.NonFatal(_) => () }
+    }
+    line
   }
 
   /** 1-min loadavg above which a run's total is considered
@@ -189,29 +224,6 @@ object Bench {
     }
     (waited, cur.exists(_ > bound))
   }
-
-  /** Run the warm-up fan-out barrier, RE-AWAITING once on failure and
-    * ABORTING the bench (throwing, so no measured pass can follow) if
-    * the barrier itself fails twice — the prior catch-and-warn fallback
-    * reproduced exactly the contamination the barrier exists to prevent
-    * (a measured loop racing an unquiesced fan-out). Body timeouts are
-    * NOT barrier failures: they return as the wedged-names list and
-    * fail by name at their own rows. No artifact is written on abort —
-    * a zero-total summary could rotate in as the quiet reference. */
-  private[graft] def barrierOrAbort(await: () => Seq[String]): Seq[String] =
-    try await() catch {
-      case t1: Throwable =>
-        System.err.println(
-          s"[bench] fan-out barrier failed ($t1); re-awaiting once")
-        try await() catch {
-          case t2: Throwable =>
-            throw new IllegalStateException(
-              "fan-out barrier failed twice (" + t1 + "; then " + t2 +
-                ") — refusing to measure through an unquiesced warm-up " +
-                "fan-out; fix the barrier failure and re-run the bench",
-              t2)
-        }
-    }
 
   /** Force-release every persisted RDD that survived the session-artifact
     * teardown (QueryArtifacts.clearAll), returning one descriptor per leak
@@ -315,20 +327,9 @@ object Bench {
     // steady-state warm-up: first parquet touch + first shuffle pay
     // one-off classloading, codegen-compiler, FileSourceStrategy and
     // shuffle-machinery init that would otherwise be charged to whichever
-    // query happens to run first
+    // query happens to run first. Its wall time rides in the artifact.
+    val warmup0 = System.nanoTime()
     try {
-      // fire-and-forget replay fan-out FIRST: the four driver-ledger
-      // replays + pseudo-replay warm-ups are the dominant cold cost
-      // (~17 s charged to whichever replay row ran first in r14, then
-      // +4.6 s of contention on the earliest measured queries when left
-      // in flight past warm-up in r15's first cut). Launched here they
-      // run concurrently UNDER the rest of the warm-up, and the complete
-      // barrier below keeps them off the measured per-query clock — the
-      // production shape: monitors run continuously, not inside a query.
-      // Touching SparkEntry.queries forces the query objects'
-      // initializers, which register the replays.
-      val _ = SparkEntry.queries
-      graft.queries.ReplayOrchestrator.prelaunch(spark, sfDir)
       spark.read.parquet(s"$sfDir/region.parquet").count()
       import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.functions.{broadcast, col, row_number}
@@ -355,27 +356,7 @@ object Bench {
         .format("memory").queryName("bench_warmup").start()
       wq.awaitTermination()
     } catch { case _: Throwable => () }
-    // COMPLETE barrier on the prelaunched fan-out: the measured loop
-    // must never start while any warm-up body is in flight (r17's
-    // fixed 5-min grace was overrun by the grown 26-body fan-out —
-    // warm-serveall alone waits up to 10 min for its siblings before
-    // its reopen phase — and the overrun bled ~25 s of contention
-    // into each of the first measured queries). Warm-up wall time is
-    // unmeasured by design; a genuinely wedged body times out after
-    // the orchestrator's per-body bound and fails by name at its own
-    // row via the fail-sticky await accounting. OUTSIDE the warm-up
-    // try above: its catch swallows warm-up hiccups by design, and a
-    // swallowed failure between prelaunch and here must not silently
-    // skip the barrier (that would reproduce the r17 contamination).
-    // A barrier that itself throws is re-awaited once, then ABORTS the
-    // bench — never warned past (see barrierOrAbort).
-    val wedged = barrierOrAbort(() =>
-      graft.queries.ReplayOrchestrator.awaitFanOut(spark, sfDir))
-    if (wedged.nonEmpty)
-      System.err.println("[bench] WARNING: warm-up bodies timed out " +
-        s"(still running, will fail by name): ${wedged.mkString(", ")}")
-    val warmupBarrier =
-      if (wedged.isEmpty) "ok" else "wedged:" + wedged.mkString(",")
+    val warmupSec = (System.nanoTime() - warmup0) / 1e9
     // QUIET GATE: the measured loop starts only once the 1-min loadavg
     // is back under the quiet bound (bounded wait) — the driver invokes
     // this harness on a shared box at arbitrary times, and r17/r18 both
@@ -394,15 +375,16 @@ object Bench {
     // each query its real steady-state cost. Both raw passes are emitted
     // alongside the min so a skewed pass stays visible.
     //
-    // SEMANTICS NOTE — the reported min is WARM-CACHE steady state: a few
-    // query families share one-time (session, dir)-keyed intermediates
-    // (the jaccard/minhash candidate-pair persists, the IVF inverted
-    // file), so pass 1 of the first query in a family pays the build and
+    // SEMANTICS NOTE — the reported min is WARM-CACHE steady state: query
+    // families share one-time (session, dir)-keyed artifacts (the
+    // jaccard/minhash candidate-pair persists, the IVF inverted file, the
+    // streaming replays' sinks), and nothing builds them ahead of the
+    // loop, so pass 1 of the first query in a family pays the build and
     // pass 2 wins the min. That is the cost profile of a long-lived
     // engine (build once, query many), but it means `total` is not
     // comparable to a single-shot cold number; the build cost is visible
-    // in pass 1 of the emitted `passes` array, and teardown is proven by
-    // `leaked_persists` == 0 below.
+    // in pass 1 of the emitted `passes` array and in `pass1_total`, and
+    // teardown is proven by `leaked_persists` == 0 below.
     // a failed pass returns the -1.0 sentinel but LOGS the cause — an
     // artifact showing -1.0 with no error anywhere is undiagnosable
     def time(name: String)(thunk: => Unit): Double = {
@@ -436,35 +418,20 @@ object Bench {
     if (leaked != 0)
       System.err.println(s"[bench] WARNING: $leaked persisted RDDs leaked " +
         s"past clearAll() (force-unpersisted): ${leakedRdds.mkString("; ")}")
-    // one summary string, used verbatim for stdout and the file artifact
+    // one summary string, used verbatim for stdout and the file artifacts
     // (two hand-maintained copies drifted once already); see summaryJson
     // for the artifact contract (failure names, sentinel handling, field
-    // order), which BenchSummarySpec pins against a planted failure
-    // previous committed run's headline (read BEFORE overwriting the
-    // artifact below; repo-root-resolved, sf-checked — see summaryPath /
-    // referenceFrom); best-effort — a malformed, absent, or
-    // different-scale file yields no reference fields, never a failed
-    // bench
+    // order), which BenchSummarySpec pins against a planted failure. The
+    // files keep the FULL summary: the driver's BENCH_r{N}.json stores
+    // only the stdout TAIL, which truncates the per-query pairs once the
+    // query count is large. The reference is this core count's previous
+    // run (repo-root-resolved, sf-checked — see recordSummary).
     val nCpus = scala.util.Try(cpus.toInt).toOption
-    val reference = try {
-      referenceFrom(new String(java.nio.file.Files.readAllBytes(
-        summaryPath()), "UTF-8"), sfDir, nCpus)
-    } catch { case scala.util.control.NonFatal(_) => None }
-    val summary = summaryJson(results, leaked, sfDir, loadAvg, reference,
-      reopenMs, Some(warmupBarrier),
-      Some((measuredLoad, underLoad, waitedMs / 1000)), leakedRdds, nCpus)
+    val summary = recordSummary(summaryPath(), sfDir, nCpus)(reference =>
+      summaryJson(results, leaked, sfDir, loadAvg, reference, reopenMs,
+        Some(warmupSec), Some((measuredLoad, underLoad, waitedMs / 1000)),
+        leakedRdds, nCpus))
     println(summary)
-    // durable artifact: the driver's BENCH_r{N}.json stores only the
-    // stdout TAIL, which truncates the total line and most per-query
-    // pairs once the query count is large — so round-over-round
-    // comparison kept depending on what survived the tail. Write the
-    // full summary (total + per-query min + BOTH raw passes, so a
-    // load-skewed pass is diagnosable from the artifact alone) to a file
-    // as well; best-effort, never fails the bench.
-    try {
-      val w = new java.io.PrintWriter(summaryPath().toFile, "UTF-8")
-      try w.println(summary) finally w.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
     spark.stop()
   }
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.queries.QueryArtifacts.SessionDir
+import graft.streaming.StreamingOps
 
 /** Standard analytics surface: aggregation, multi-join with broadcast dims,
   * window functions, top-k, sessionization, JSON extraction.
@@ -307,92 +308,41 @@ object AnalyticsQueries {
   /** Release every family's session artifacts ([[QueryArtifacts.clearAll]]). */
   def clearCaches(): Unit = QueryArtifacts.clearAll()
 
-  // Pseudo-replay WARM-UP: the trade-graph edge list (orders x lineitem
-  // fact-fact join + distinct) and its prepared PageRank artifacts feed
-  // all three graph-authority rows and are persisted anyway — force
-  // them under the warm-up fan-out (see ReplayOrchestrator).
-  ReplayOrchestrator.register("warm-graph") {
-    (spark, dir) =>
-      tradeGraphDirected(spark, dir).count()
-      preparedTradeGraph(spark, dir)
-      preparedHitsGraph(spark, dir)
-      // the converged fixed points (8 PageRank / 3 HITS eager rounds) —
-      // the family's multi-job cold builds, overlapped like the prepares
-      convergedTradeRanks(spark, dir)
-      convergedHitsScores(spark, dir)
-      java.lang.Boolean.TRUE
-  }
+  /** Transition-monitor replay, run once per (session, dir) by the first
+    * call of either row that reads it: the events table streamed in three
+    * TS-RANGE micro-batches — the delivery shape
+    * [[graft.streaming.StreamingOps.transitionMonitorStream]]'s ordering
+    * contract names (any time-ordered ingest satisfies it) — through the
+    * per-user sequence state into a parquet sink; returns the sink path.
+    * The range cuts come from ONE 1-row min/max aggregate; the cut VALUES
+    * never affect the result (the monitor is split-invariant under any
+    * ts-range delivery), only the staging. */
+  private val transitionsReplayCache = QueryArtifacts.cache[SessionDir, String]()
 
-  // Pseudo-replay WARM-UP: the shared transition-pairs persist (the one
-  // lead() window pass) and the durable Markov model feed four
-  // behavioral rows — force the window + train/reopen under the warm-up
-  // fan-out.
-  ReplayOrchestrator.register("warm-markov") {
-    (spark, dir) =>
-      transitionPairs(spark, dir).count()
-      markovPersisted(spark, dir)
-      java.lang.Boolean.TRUE
-  }
-
-  // Pseudo-replay WARM-UP: the co-occurrence row's degree-capped
-  // interaction persist (one of the two dominant cold first-touch costs
-  // the r15 cold pass carried) — building it here overlaps the
-  // fact-fact join with the streaming replays' orchestration stalls.
-  ReplayOrchestrator.register("warm-cooccur") {
-    (spark, dir) =>
-      cooccurKept(spark, dir)
-      cooccurPairs(spark, dir).count()
-      java.lang.Boolean.TRUE
-  }
-
-  /** Transition-monitor replay body (see [[ReplayOrchestrator]]): the
-    * events table streamed in three TS-RANGE micro-batches — the delivery
-    * shape [[graft.streaming.StreamingOps.transitionMonitorStream]]'s
-    * ordering contract names (any time-ordered ingest satisfies it) —
-    * through the per-user sequence state into a parquet sink; returns the
-    * sink path. The range cuts come from ONE 1-row min/max aggregate; the
-    * cut VALUES never affect the result (the monitor is split-invariant
-    * under any ts-range delivery), only the staging. */
-  private def buildTransitionsReplaySink(spark: SparkSession,
-      dir: String): String = {
-    val ev = Tables.load(spark, dir, "events")
-      .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-    val root = QueryArtifacts.sessionRoot(spark)
-    val src = QueryArtifacts.path(s"$root/transitions-src", dir)
-    val out = QueryArtifacts.path(s"$root/transitions-sink", dir)
-    val ckpt = QueryArtifacts.path(s"$root/transitions-ckpt", dir)
-    Seq(src, out, ckpt).foreach(p =>
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
-    val r = ev.agg(min(unix_micros(col("ts"))).as("lo"),
-      max(unix_micros(col("ts"))).as("hi")).head()
-    if (r.isNullAt(0)) {
-      // empty events table: min/max are NULL — stage one empty delivery
-      // instead of NPEing (which would wedge the replay future until the
-      // await bound converts it to a timeout)
-      graft.streaming.StreamingOps.stageOrdered(src, Seq(ev))
-    } else {
-      val (lo, hi) = (r.getLong(0), r.getLong(1))
-      val third = (hi - lo) / 3
-      val (c1, c2) = (lo + third, lo + 2 * third)
-      val us = unix_micros(col("ts"))
-      // equal-ts rows can never straddle a batch: membership is a pure
-      // function of ts, so the monitor's cross-batch per-user order holds
-      graft.streaming.StreamingOps.stageOrdered(src, Seq(
-        ev.filter(us < c1), ev.filter(us >= c1 && us < c2),
-        ev.filter(us >= c2)))
+  private def transitionsReplaySink(spark: SparkSession, dir: String): String =
+    transitionsReplayCache((spark, dir)) {
+      val ev = Tables.load(spark, dir, "events")
+        .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
+      val r = ev.agg(min(unix_micros(col("ts"))).as("lo"),
+        max(unix_micros(col("ts"))).as("hi")).head()
+      val deliveries =
+        // empty events table: min/max are NULL — stage one empty delivery
+        // instead of NPEing
+        if (r.isNullAt(0)) Seq(ev)
+        else {
+          val (lo, hi) = (r.getLong(0), r.getLong(1))
+          val third = (hi - lo) / 3
+          val (c1, c2) = (lo + third, lo + 2 * third)
+          val us = unix_micros(col("ts"))
+          // equal-ts rows can never straddle a batch: membership is a pure
+          // function of ts, so the monitor's cross-batch per-user order holds
+          Seq(ev.filter(us < c1), ev.filter(us >= c1 && us < c2),
+            ev.filter(us >= c2))
+        }
+      StreamingOps.replay(spark, "event-transitions", dir, deliveries)(
+        StreamingOps.transitionMonitorStream(spark, _))(
+        StreamingOps.appendParquet).out
     }
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = graft.streaming.StreamingOps
-      .transitionMonitorStream(spark, stream)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .format("parquet").option("path", out).start()
-    q.awaitTermination()
-    out
-  }
-  ReplayOrchestrator.register("event-transitions")(buildTransitionsReplaySink)
 
   val queries: ListMap[String, Q] = ListMap(
     // TPC-H Q1-style pricing summary: the canonical partial-agg benchmark
@@ -744,8 +694,7 @@ object AnalyticsQueries {
     // derivation verbatim: a monitor/batch divergence (lost carry state,
     // intra-batch disorder, double emission) turns this row red.
     "streaming_transitions_replay" -> ((spark, dir) => {
-      val sink = ReplayOrchestrator.await[String](spark, dir,
-        "event-transitions")
+      val sink = transitionsReplaySink(spark, dir)
       // counts come from the MONITOR'S OWN emissions (the integrity
       // payload — any lost carry state / double emission shows up in n
       // directly); the per-from totals come from the shared DURABLE
@@ -770,8 +719,7 @@ object AnalyticsQueries {
     // user's transition count and exact surprise sum against the batch
     // derivation, so it cannot.
     "streaming_anomaly_replay" -> ((spark, dir) => {
-      val sink = ReplayOrchestrator.await[String](spark, dir,
-        "event-transitions")
+      val sink = transitionsReplaySink(spark, dir)
       markovPersisted(spark, dir)
         .scoreSessions(spark.read.parquet(sink)
           .select("user_id", "from_type", "to_type"), "user_id")

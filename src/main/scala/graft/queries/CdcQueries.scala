@@ -116,15 +116,6 @@ object CdcQueries {
       graft.operators.ChunkIndex.load(spark, path)
     }
 
-  // Pseudo-replay WARM-UP: the append and excise chains pay several
-  // chunking passes cold — overlap them with the replay fan-out (the
-  // manifest reopen is free on a warm tree).
-  ReplayOrchestrator.register("warm-chunk-append") { (spark, dir) =>
-    chunkAppendedCompacted(spark, dir)
-    chunkExcised(spark, dir)
-    java.lang.Boolean.TRUE
-  }
-
   /** Cold-reopen hook for the serve-everything capstone (see
     * [[ServeAllQueries]]): fresh manifest reopen of the durable chunk
     * index past the session cache + one bounded chunk lookup. */

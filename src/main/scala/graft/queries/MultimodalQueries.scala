@@ -33,16 +33,6 @@ object MultimodalQueries {
   /** Release every family's session artifacts ([[QueryArtifacts.clearAll]]). */
   def clearCaches(): Unit = QueryArtifacts.clearAll()
 
-  // Pseudo-replay WARM-UP: the aHash fingerprint table (a synthetic-frame
-  // decode + per-pixel fold over every payload) is this family's one
-  // expensive cold build and is persisted anyway — force it under the
-  // warm-up fan-out (see ReplayOrchestrator).
-  ReplayOrchestrator.register("warm-multimodal") {
-    (spark, dir) =>
-      ahashTable(spark, dir).count()
-      java.lang.Boolean.TRUE
-  }
-
   val queries: ListMap[String, Q] = ListMap(
     // Binary payload metadata: byte length + content digest
     "multimodal_bytes" -> ((spark, dir) => {

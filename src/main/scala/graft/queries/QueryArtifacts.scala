@@ -182,11 +182,9 @@ private[graft] object QueryArtifacts {
   }
 
   /** Release every session artifact of every family (bench/verify/spec
-    * teardown). The warm-up fan-out is drained first: its bodies fill
-    * caches owned by any family, and a body still in flight could
-    * otherwise re-fill a cache just cleared. Idempotent. */
+    * teardown). A build in flight finishes before its cache is cleared
+    * (each clear takes the cache's fill lock). Idempotent. */
   def clearAll(): Unit = synchronized {
-    ReplayOrchestrator.drainAndClear()
     caches.forEach(_.clear())
   }
 

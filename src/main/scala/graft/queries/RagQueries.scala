@@ -140,13 +140,6 @@ object RagQueries {
       TextQueries.invertedIndexPersisted(spark, dir)
       SimilarityQueries.ivfPersisted(spark, dir)
       CdcQueries.chunkPersisted(spark, dir)
-      // QUIESCE: the warm-up fan-out's bodies call the same build paths;
-      // a concurrent build must not read as a serve-phase counter bump.
-      // COMPLETE per-body barrier (not a fixed all-bodies bound, which
-      // the grown fan-out can structurally overrun — the r17 bench
-      // lesson); safe here because no fan-out body calls this function,
-      // so there is no self-await to deadlock on.
-      ReplayOrchestrator.awaitFanOut(spark, dir)
       // FENCE + FRESH manifest reopens past every session cache: from
       // here to the MMR collect, zero build/train jobs may run
       val before = buildCounters()
@@ -224,10 +217,7 @@ object RagQueries {
             xDocs.select("doc_id"), xTag(chTag)),
           "replaying an already-applied takedown must be a ledger no-op")
       }
-      // QUIESCE (cheap: ragServed above already barriered the fan-out;
-      // this only re-awaits a straggler that timed out there) + FENCE +
-      // FRESH reopens of the three TOMBSTONED artifacts
-      ReplayOrchestrator.awaitFanOut(spark, dir)
+      // FENCE + FRESH reopens of the three TOMBSTONED artifacts
       val before = buildCounters()
       val inv2 = graft.operators.InvertedIndex
         .loadIfValid(spark, invX, xTag(invTag))

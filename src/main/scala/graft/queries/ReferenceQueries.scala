@@ -149,15 +149,4 @@ object ReferenceQueries {
         "FROM (VALUES ('LMS.'),('LMS_PII.')) AS pp(p), " +
         "(VALUES ('customer'),('documents'),('embeddings'),('events'),('lineitem'),('nation'),('orders'),('part'),('region'),('supplier')) AS v(t) " +
         "ORDER BY qualified_name"))
-
-  // Pseudo-replay WARM-UP: the first trifecta row pays the whole engine
-  // build (catalog scan over every table's parquet footer + trifecta view
-  // registration — the bench's first parquet touches) — force it under
-  // the warm-up fan-out (see ReplayOrchestrator) so the reference rows
-  // measure their projections, not session bring-up. Rebuilding for a dir
-  // is idempotent (createOrReplaceTempView).
-  ReplayOrchestrator.register("warm-engine") { (spark, dir) =>
-    DemoApp.build(spark, dir)
-    java.lang.Boolean.TRUE
-  }
 }

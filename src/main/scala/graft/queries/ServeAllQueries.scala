@@ -1,7 +1,6 @@
 package graft.queries
 
 import scala.collection.immutable.ListMap
-import scala.concurrent.duration._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -27,14 +26,12 @@ import graft.queries.QueryArtifacts.SessionDir
   * their owners ([[SimilarityQueries.coldServeHooks]],
   * [[TextQueries.coldServeHooks]], [[CdcQueries.coldServeHooks]],
   * [[AnalyticsQueries.coldServeHooks]]); this object only sequences the
-  * three phases — ensure (the durable forms exist; builds are legal
-  * here), quiesce (the background replay fan-out calls the same build
-  * paths and must not bump counters mid-measurement), reopen+serve
-  * (counter-fenced per artifact). ServeAllSpec additionally pins the
-  * whole reopen phase's cost with a Spark JOB budget: manifest
-  * validation + one bounded serve is a handful of jobs per artifact,
-  * where any accidental retrain (BPE's merge loop, the k-means fit)
-  * fires hundreds.
+  * two phases — ensure (the durable forms exist; builds are legal
+  * here) and reopen+serve (counter-fenced per artifact). ServeAllSpec
+  * additionally pins the whole reopen phase's cost with a Spark JOB
+  * budget: manifest validation + one bounded serve is a handful of jobs
+  * per artifact, where any accidental retrain (BPE's merge loop, the
+  * k-means fit) fires hundreds.
   */
 object ServeAllQueries {
 
@@ -83,16 +80,11 @@ object ServeAllQueries {
       dir: String): Option[Seq[(String, Long)]] =
     verdictCache.get((spark, dir)).map(_._2)
 
-  private def verdicts(spark: SparkSession, dir: String,
-      self: Option[String] = None): Seq[(String, Boolean, Boolean)] =
+  private def verdicts(spark: SparkSession,
+      dir: String): Seq[(String, Boolean, Boolean)] =
     verdictCache((spark, dir)) {
       val hs = hooks(spark, dir)
       hs.foreach(_._2()) // ensure phase: durable forms exist
-      // the replay fan-out's bodies fill the same persisted caches —
-      // barrier it so a concurrent warm-up build can't read as a
-      // reopen-phase counter bump (self-excluded when running AS a
-      // warm-up body, or awaiting our own future would stall the bound)
-      ReplayOrchestrator.awaitQuiesce(spark, dir, 10.minutes, self)
       hs.map { case (name, _, reopen) =>
         val before = buildCounters()
         val t0 = System.nanoTime()
@@ -102,22 +94,6 @@ object ServeAllQueries {
         ((name, zeroBuild, served.exists(_ > 0)), (name, ms))
       }.sortBy(_._1._1).unzip
     }._1
-
-  // Pseudo-replay WARM-UP: the whole cold-start check (ensure + 23
-  // counter-fenced reopens, ~15 s of reopen at sf0.1 on a quiet box —
-  // the bench's largest warm-up body) runs under the fan-out after
-  // quiescing every SIBLING body — so no concurrent warm-up train can
-  // trip the counter fence, and the measured row just reads the
-  // verdicts. NOTE the worst-case wall time of this body is its sibling
-  // quiesce bound PLUS the ensure+reopen phases — structurally larger
-  // than any fixed all-bodies grace, which is why the bench's warm-up
-  // gate is ReplayOrchestrator.awaitFanOut (complete barrier), not a
-  // fixed-bound quiesce (r17's 5-min grace was overrun exactly here).
-  ReplayOrchestrator.register("warm-serveall") {
-    (spark, dir) =>
-      verdicts(spark, dir, self = Some("warm-serveall"))
-      java.lang.Boolean.TRUE
-  }
 
   /** Release every family's session artifacts ([[QueryArtifacts.clearAll]]). */
   def clearCaches(): Unit = QueryArtifacts.clearAll()

@@ -1,8 +1,11 @@
 package graft.streaming
 
+import scala.concurrent.duration.{DurationInt, FiniteDuration}
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, Trigger}
 
 /** Structured Streaming surface: the events table consumed as a stream.
   *
@@ -124,6 +127,60 @@ object StreamingOps {
       org.apache.commons.io.FileUtils.deleteQuietly(tmpDir)
     }
   }
+
+  /** Where one replay run lives: staged deliveries (`src`), sink dir
+    * (`out`), checkpoint (`ckpt`), all under the session root, plus the
+    * query name a memory sink registers (`table`). */
+  final case class ReplayRun(src: String, out: String, ckpt: String,
+      table: String)
+
+  /** Bound on one replay's stream. A replay is seconds of work even at
+    * sf0.1, so a stream still running after this is wedged (e.g. a
+    * file-source listing stall). Mutable so the spec can shrink it. */
+  private[graft] var replayBound: FiniteDuration = 10.minutes
+
+  /** Run one driver-ledger streaming replay to completion and return its
+    * paths; reading the sink is the caller's. The session-rooted dirs are
+    * deleted first (delete-and-rewrite: the session caches only dedup
+    * WITHIN a session, see QueryArtifacts.sessionTag), so a run after a
+    * failed one starts clean. `deliveries` are staged in pinned order
+    * ([[stageOrdered]]) and read one file per micro-batch; `transform`
+    * builds the streaming plan and `sink` configures its writer (output
+    * mode, format, path or foreachBatch). A stream still running after
+    * [[replayBound]] is stopped and fails by name instead of hanging its
+    * row. */
+  def replay[T](spark: SparkSession, name: String, dir: String,
+      deliveries: Seq[DataFrame])(transform: DataFrame => Dataset[T])(
+      sink: (DataStreamWriter[T], ReplayRun) => DataStreamWriter[T])
+      : ReplayRun = {
+    val root = graft.queries.QueryArtifacts.sessionRoot(spark)
+    def at(kind: String) =
+      graft.queries.QueryArtifacts.path(s"$root/$name-$kind", dir)
+    val skey = dir + "#" + graft.queries.QueryArtifacts.sessionTag(spark)
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(skey.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
+    val run = ReplayRun(at("src"), at("sink"), at("ckpt"),
+      name.replace('-', '_') + "_" + digest)
+    Seq(run.src, run.out, run.ckpt).foreach(p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    stageOrdered(run.src, deliveries)
+    val stream = spark.readStream.schema(deliveries.head.schema)
+      .option("maxFilesPerTrigger", "1").parquet(run.src)
+    val q = sink(transform(stream).writeStream
+        .option("checkpointLocation", run.ckpt), run)
+      .trigger(Trigger.AvailableNow()).start()
+    if (!q.awaitTermination(replayBound.toMillis)) {
+      q.stop()
+      throw new java.util.concurrent.TimeoutException(
+        s"streaming replay '$name' for $dir did not complete within $replayBound")
+    }
+    run
+  }
+
+  /** The append-to-parquet sink most replays write: one row per arrival
+    * fact, read back from `out`. */
+  def appendParquet[T](w: DataStreamWriter[T], run: ReplayRun): DataStreamWriter[T] =
+    w.outputMode("append").format("parquet").option("path", run.out)
 
   final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
       event_type: String, value: Double)

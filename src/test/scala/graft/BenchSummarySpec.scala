@@ -27,7 +27,13 @@ class BenchSummarySpec extends AnyFunSuite {
   }
 
   test("line starts with the documented headline; scalar diagnostics trail it") {
-    val s = Bench.summaryJson(results, leaked = 0, sfDir = "/x/sf0.5")
+    val s = Bench.summaryJson(results, leaked = 0, sfDir = "/x/sf0.5",
+      warmupSec = Some(3.0))
+    // ONE line (main prints it last on stdout) that parses as JSON
+    assert(!s.contains("\n"), s)
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s)
+    assert(node.get("warmup_sec").asDouble() == 3.0, s)
+    assert(node.get("pass1_total").asDouble() == 0.5, s)
     // the driver contract prefix, verbatim order: metric, value, unit,
     // queries, sf — a parser keying on the `{"metric"` prefix (or
     // json-loading the whole last line) must find the headline first
@@ -77,6 +83,31 @@ class BenchSummarySpec extends AnyFunSuite {
       .contains((41.0, Seq(0.4, 0.5, 0.6))))
   }
 
+  test("each core count keeps its own quiet-reference chain") {
+    // the driver benches the same dir at 32, then 8, then 32 cores: the
+    // 8-core run must not break the 32-core chain by overwriting the one
+    // summary the next 32-core run reads its reference from
+    val tmp = java.nio.file.Files.createTempDirectory("bench-chain")
+    val summary = tmp.resolve("BENCH_SUMMARY.json")
+    def run(cpus: Int, secs: Double): String =
+      Bench.recordSummary(summary, "/x/sf0.1", Some(cpus))(ref =>
+        Bench.summaryJson(Seq("a" -> ((secs, secs))), leaked = 0,
+          sfDir = "/x/sf0.1", loadAvg = Seq(0.5, 0.5, 0.5), reference = ref,
+          cpus = Some(cpus)))
+    try {
+      val first = run(32, 40.0)
+      assert(!first.contains("reference_quiet_total"), first)
+      val c8 = run(8, 50.0)
+      assert(!c8.contains("reference_quiet_total"), c8)
+      val third = run(32, 42.0)
+      assert(third.contains(""""reference_quiet_total":40.0"""), third)
+      // the shared file holds the latest run at any core count
+      assert(new String(java.nio.file.Files.readAllBytes(summary), "UTF-8")
+        .trim == third)
+      assert(java.nio.file.Files.exists(Bench.coreSummaryPath(summary, 8)))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
+  }
+
   test("clean run reports an empty failure list") {
     val s = Bench.summaryJson(Seq("a" -> ((1.0, 2.0))), leaked = 0, sfDir = "d")
     assert(s.contains(""""failed":[]""") && s.contains(""""failed_queries":0"""), s)
@@ -94,9 +125,10 @@ class BenchSummarySpec extends AnyFunSuite {
     val many = (0 until 320).map(i => s"q_$i" -> ((0.1 + i * 0.01, 0.2 + i * 0.01))) ++
       Seq("q_dead_tail" -> ((-1.0, -1.0)))
     val s = Bench.summaryJson(many, leaked = 2, sfDir = "/x/sf",
-      loadAvg = Seq(1.0, 2.0, 3.0))
+      loadAvg = Seq(1.0, 2.0, 3.0), warmupSec = Some(12.25))
     val tail = s.takeRight(300)
-    Seq("\"total_sec\":", "\"failed\":", "\"leaked_persists\":").foreach(f =>
+    Seq("\"total_sec\":", "\"failed\":", "\"leaked_persists\":",
+        "\"warmup_sec\":", "\"pass1_total\":").foreach(f =>
       assert(tail.contains(f), s"$f not in last-300 tail: $tail"))
     assert(tail.contains("q_dead_tail"),
       "the failed-query NAME must survive the tail capture too")
@@ -210,22 +242,17 @@ class BenchSummarySpec extends AnyFunSuite {
     assert(!none.contains("measured_under_load"), none)
   }
 
-  test("warmup barrier outcome rides in the artifact") {
-    val ok = Bench.summaryJson(Seq("a" -> ((1.0, 2.0))), leaked = 0, sfDir = "d",
-      warmupBarrier = Some("ok"))
-    assert(ok.contains(""""warmup_barrier":"ok""""), ok)
-    val wedged = Bench.summaryJson(Seq("a" -> ((1.0, 2.0))), leaked = 0,
-      sfDir = "d", warmupBarrier = Some("wedged:warm-inv,warm-ivf"))
-    assert(wedged.contains(""""warmup_barrier":"wedged:warm-inv,warm-ivf""""),
-      wedged)
-    assert(wedged.indexOf("\"warmup_barrier\":") < wedged.indexOf("\"leaked_persists\":"),
-      wedged)
-    // a quote/backslash-bearing body name must not corrupt the JSON —
-    // the same escape leaked_rdds descriptors get (r19 advice)
-    val hostile = Bench.summaryJson(Seq("a" -> ((1.0, 2.0))), leaked = 0,
-      sfDir = "d", warmupBarrier = Some("""wedged:warm-"x"\y"""))
-    assert(hostile.contains(""""warmup_barrier":"wedged:warm-\"x\"\\y""""),
-      hostile)
+  test("warm-up wall time and pass-1 sum ride just before failed_queries") {
+    // the cold cost sits next to the warm headline: q_ok's pass 1 (0.5)
+    // plus q_flaky's (failed, excluded) plus q_dead's (failed, excluded)
+    val s = Bench.summaryJson(results ++ Seq("q_slow_first" -> ((3.0, 0.25))),
+      leaked = 0, sfDir = "d", warmupSec = Some(4.5))
+    assert(s.contains(""""warmup_sec":4.5,"pass1_total":3.5,"failed_queries":1"""), s)
+    assert(s.indexOf("\"loadavg\":") < s.indexOf("\"warmup_sec\":"), s)
+    // a unit-spec call without a warm-up: no warmup_sec, pass1_total stays
+    val none = Bench.summaryJson(Seq("a" -> ((1.0, 2.0))), leaked = 0, sfDir = "d")
+    assert(!none.contains("warmup_sec"), none)
+    assert(none.contains(""""pass1_total":1.0,"failed_queries":0"""), none)
   }
 
   test("leaked RDD descriptors ride in the artifact before the headline") {
@@ -261,25 +288,6 @@ class BenchSummarySpec extends AnyFunSuite {
       bound = 2.0, maxWaitMs = 500, pollMs = 200, sleep = sleep)
     assert(gaveUp === 500L && still,
       "the gate must give up at maxWaitMs and flag the load")
-  }
-
-  test("a twice-failing barrier ABORTS the bench instead of measuring through it") {
-    // r18 advice: the catch-and-warn fallback reproduced exactly the
-    // contamination the barrier prevents. One retry is allowed; a second
-    // failure must throw so no measured pass can follow.
-    var calls = 0
-    val boom = () => { calls += 1; throw new RuntimeException(s"fs down $calls") }
-    val e = intercept[IllegalStateException](Bench.barrierOrAbort(boom))
-    assert(calls === 2, "the barrier must be re-awaited exactly once")
-    assert(e.getMessage.contains("refusing to measure"), e.getMessage)
-    // first failure + clean retry: the wedged list passes through
-    var again = 0
-    val flaky = () => {
-      again += 1
-      if (again == 1) throw new RuntimeException("transient")
-      Seq("warm-x")
-    }
-    assert(Bench.barrierOrAbort(flaky) === Seq("warm-x"))
   }
 
   test("the quiet-rotation decision prefers the measurement-time loadavg") {

@@ -56,12 +56,8 @@ class CacheLifecycleSpec extends AnyFunSuite {
     // r18's driver bench recorded leaked_persists:1 with no way to say
     // WHICH RDD leaked (and the leak outlived teardown). The drain must
     // return a descriptor carrying the RDD's name and actually unpersist
-    // it. Quiesce the replay fan-out first (its daemon bodies fill caches
-    // concurrently — the ServeAllSpec discipline) and scope the asserts
-    // to the PLANTED id: the shared session may re-grow unrelated
-    // persists at any time, so absolute-empty is not assertable here.
-    graft.queries.ReplayOrchestrator.awaitQuiesce(spark, TestSpark.sfDir,
-      scala.concurrent.duration.Duration(10, "min"))
+    // it. The asserts are scoped to the PLANTED id: the shared session
+    // may hold unrelated persists from other suites.
     val planted = spark.sparkContext.parallelize(1 to 10, 2)
     planted.setName("planted-unregistered-persist")
     planted.persist().count()

@@ -27,10 +27,6 @@ class ServeAllSpec extends AnyFunSuite {
       "markov_appended", "markov_excised", "pq", "pq_excised",
       "pq_refitted", "trigram_lm", "trigram_lm_excised"))
     hs.foreach(_._2()) // ensure phase: builds are legal here
-    // quiesce the replay fan-out other suites may have launched — its
-    // bodies fill the same caches and would pollute the job count
-    graft.queries.ReplayOrchestrator.awaitQuiesce(spark, dir,
-      scala.concurrent.duration.Duration(10, "min"))
     val jobs = new java.util.concurrent.atomic.AtomicLong(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =

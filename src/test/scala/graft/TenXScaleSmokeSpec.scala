@@ -90,18 +90,7 @@ class TenXScaleSmokeSpec extends AnyFunSuite {
       case _ => -1.0
     }
 
-  /** One-time quiesce of the background replay fan-out other suites may
-    * have launched in this JVM: its daemon bodies burn CPU on their own
-    * threads, and process-CPU time is JVM-wide — without this, a body
-    * landing in a timed lap would contaminate the cpu clock exactly the
-    * way co-tenant load contaminates the wall clock (the ServeAllSpec
-    * discipline, applied to timing instead of counters). */
-  private lazy val fanOutQuiesced: Unit =
-    graft.queries.ReplayOrchestrator.awaitQuiesce(spark, TestSpark.sfDir,
-      scala.concurrent.duration.Duration(10, "min"))
-
   private def timed[T](body: => T): (T, Lap) = {
-    fanOutQuiesced
     val c0 = processCpuSec
     val t0 = System.nanoTime()
     val r = body

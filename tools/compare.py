@@ -3,6 +3,13 @@
 DuckDB over the same parquet tables and diff against the Verify parquet dump.
 
 Usage: python3 tools/compare.py <sfDir> <verifyOutDir>
+
+DuckDB runs with an explicit memory limit and thread count derived from the
+host the way the tier-1 command derives SPARK_DRIVER_MEM (half of MemTotal,
+clamped to 2-8 GiB) and nproc, so an oracle query that blows up fails by
+name instead of running the machine out of memory. An oracle query that
+raises prints `[ERROR] <row>: <message>`, counts as not passing, and the
+sweep goes on.
 """
 import json
 import math
@@ -34,15 +41,34 @@ def values_equal(a, b) -> bool:
     return a == b
 
 
+def host_memory_gib() -> int:
+    """Half of MemTotal in whole GiB, clamped to 2-8 (2 if unreadable)."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(line.split()[1]) for line in f
+                       if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return 2
+    return min(max(kib // 2097152, 2), 8)
+
+
+def host_threads() -> int:
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": f"{host_memory_gib()}GiB",
+                                 "threads": host_threads()})
     for t in ("region nation customer supplier part orders lineitem events "
               "documents embeddings").split():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
-    n_pass = n_fail = 0
+    n_pass = n_fail = n_error = 0
     for name in sorted(os.listdir(out_dir)):
         path = os.path.join(out_dir, name)
         if not os.path.isdir(path):
@@ -51,7 +77,13 @@ def main():
         if name not in oracle:
             print(f"[rows-only] {name}: rows={len(got)}")
             continue
-        want = canon(con.sql(oracle[name]).df())
+        try:
+            want = canon(con.sql(oracle[name]).df())
+        except Exception as e:  # noqa: BLE001 - any failure names its row
+            n_error += 1
+            msg = (str(e).splitlines() or [type(e).__name__])[0]
+            print(f"[ERROR] {name}: {msg}")
+            continue
         ok = list(got.columns) == list(want.columns) and len(got) == len(want)
         detail = ""
         if not ok:
@@ -71,8 +103,8 @@ def main():
         else:
             n_fail += 1
             print(f"[FAIL] {name}: {detail}")
-    print(f"== {n_pass} pass, {n_fail} fail")
-    sys.exit(1 if n_fail else 0)
+    print(f"== {n_pass} pass, {n_fail} fail, {n_error} error")
+    sys.exit(1 if n_fail or n_error else 0)
 
 
 if __name__ == "__main__":
