@@ -39,10 +39,10 @@ import org.apache.spark.sql.functions._
   * stay DataFrames). Scoring joins the document bigrams against the model
   * tables keyed by bigram/context — co-partitioned shuffle joins, AQE
   * handling hot-bigram skew ("of the"-style keys; SkewStressSpec pins the
-  * shape). The durable form (`write`/`loadIfValid`) follows the
-  * [[PqIndex]] manifest contract: build-once / serve-many-sessions, reopen
-  * validated by metadata only, zero training jobs on a hit
-  * (BigramLmPersistSpec asserts the skip).
+  * shape). The durable form (`write`/`loadIfValid`) is a durable artifact
+  * (ARCHITECTURE.md "Durable artifacts"): build-once /
+  * serve-many-sessions, reopen validated by metadata only, zero training
+  * jobs on a hit (BigramLmPersistSpec asserts the skip).
   */
 final class BigramLm private[operators] (
     /** (bg, c12) corpus bigram counts. */
@@ -54,7 +54,7 @@ final class BigramLm private[operators] (
     /** Training-corpus vocabulary size (= vocab row count). */
     val v: Long) {
 
-  /** Durable form: model + ctx + vocab tables and a validation manifest. */
+  /** Durable form: model + ctx + vocab tables and a manifest. */
   def write(path: String, source: String = ""): Unit = {
     val spark = model.sparkSession
     // rebuild IS the crash recovery: drop any lease a dead maintainer left
@@ -63,21 +63,10 @@ final class BigramLm private[operators] (
     ctx.write.mode("overwrite").parquet(s"$path/ctx")
     vocab.write.mode("overwrite").parquet(s"$path/vocab")
     // footer-stats counts of what was just written — metadata, not a scan
-    val modelRows = spark.read.parquet(s"$path/model").count()
-    val ctxRows = spark.read.parquet(s"$path/ctx").count()
-    val vocabRows = spark.read.parquet(s"$path/vocab").count()
-    val props = new java.util.Properties()
-    props.setProperty("version", BigramLm.ManifestVersion)
-    props.setProperty("source", source)
-    props.setProperty("v", v.toString)
-    props.setProperty("modelRows", modelRows.toString)
-    props.setProperty("ctxRows", ctxRows.toString)
-    props.setProperty("vocabRows", vocabRows.toString)
-    val mPath = BigramLm.manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mPath, true)
-    try props.store(out, "graft bigram-LM manifest")
-    finally out.close()
+    Manifest.writeBuilt(spark, path, BigramLm.Format, "source" -> source,
+      "v" -> v, "modelRows" -> spark.read.parquet(s"$path/model").count(),
+      "ctxRows" -> spark.read.parquet(s"$path/ctx").count(),
+      "vocabRows" -> spark.read.parquet(s"$path/vocab").count())
   }
 
   /** Score `df` under THIS model: (idCol, n_bigrams, pred_prob, oov_rate)
@@ -109,13 +98,8 @@ object BigramLm {
 
   /** "2" since r19: the durable form gained the vocab occurrence table
     * (the unlearning sidecar) — v1 artifacts reopen invalid and rebuild. */
-  private val ManifestVersion = "2"
-
-  /** Ledger separator — the IvfIndex escape-sequence convention. */
-  private val SourceSep = ""
-
-  private def manifestPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_MANIFEST.properties")
+  private val Format = Manifest.Format("2", "bigram LM",
+    Seq("modelRows" -> "model", "ctxRows" -> "ctx", "vocabRows" -> "vocab"))
 
   private def tokensOf(textCol: String) = split(lower(col(textCol)), " ")
 
@@ -162,33 +146,11 @@ object BigramLm {
     * the torn-state recount), whole-directory staged swap with the
     * manifest last (count VALUES can change with no row-count change,
     * so per-table recounts cannot catch a half-landed merge), and the
-    * writer lease follow the MarkovModel commit discipline. */
+    * writer lease are [[Manifest.applyBatch]] and
+    * [[Manifest.commitStaged]]. */
   def exciseFrom(spark: SparkSession, path: String, excisedDocs: DataFrame,
       textCol: String, newSource: String): Boolean =
-      WriterLease.withLease(spark, path) {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    def field(k: String) = Option(prior.getProperty(k))
-    require(field("version").contains(ManifestVersion),
-      s"bigram LM at $path has manifest version " +
-        s"${field("version").getOrElse("<none>")}; this excisor " +
-        s"understands only $ManifestVersion — rebuild instead of excising")
-    val ledger = field("appliedSources")
-      .map(_.split(SourceSep).toSet)
-      .getOrElse(Set(prior.getProperty("source", "")))
-    if (ledger.contains(newSource)) return false // already applied: no-op
-    require(
-      spark.read.parquet(s"$path/model").count() ==
-        field("modelRows").map(_.toLong).getOrElse(-1L) &&
-        spark.read.parquet(s"$path/ctx").count() ==
-          field("ctxRows").map(_.toLong).getOrElse(-1L) &&
-        spark.read.parquet(s"$path/vocab").count() ==
-          field("vocabRows").map(_.toLong).getOrElse(-1L),
-      s"bigram LM at $path does not match its committed manifest — a " +
-        "previous excise crashed mid-write; rebuild instead of excising")
+      Manifest.applyBatch(spark, path, Format, "excising", newSource) { prior =>
     // batch deltas under train's exact tokenization
     val occ = excisedDocs.select(bigramsOf(textCol))
     val dModel = occ.groupBy("bg").agg(count(lit(1)).as("dn"))
@@ -196,97 +158,68 @@ object BigramLm {
       .agg(count(lit(1)).as("dn"))
     val dVocab = excisedDocs.select(explode(tokensOf(textCol)).as("w"))
       .groupBy("w").agg(count(lit(1)).as("dn"))
-    // subset proof BEFORE any write, per table: an unseen key or an
-    // over-subtraction means the batch was not part of the trained
-    // corpus — unlearning it is undefined, and clamping would leave the
-    // model silently off the survivor truth
-    def subtracted(liveTable: String, key: String, cnt: String,
-        delta: DataFrame): DataFrame = {
-      val live = spark.read.parquet(s"$path/$liveTable")
-      val unseen = delta.join(live, Seq(key), "left_anti").count()
-      val merged = live.join(delta, Seq(key), "left")
-        .select(col(key),
-          (col(cnt) - coalesce(col("dn"), lit(0L))).cast("long").as(cnt))
-      val negative = merged.filter(col(cnt) < 0).count()
-      require(unseen == 0 && negative == 0,
-        s"excise batch is not a subset of the corpus the LM at $path was " +
-          s"trained on ($unseen unseen $liveTable keys, $negative " +
-          "over-subtracted) — rebuild over the survivors instead")
-      merged.filter(col(cnt) > 0)
+    val nextModel = subtractCounts(spark, path, "model", "bg", "c12", dModel)
+    val nextCtx = subtractCounts(spark, path, "ctx", "w1", "c1", dCtx)
+    val nextVocab = subtractCounts(spark, path, "vocab", "w", "cnt", dVocab)
+    // stage the WHOLE next model beside the live one, manifest LAST
+    Manifest.commitStaged(spark, path) { next =>
+      nextModel.write.mode("overwrite").parquet(s"$next/model")
+      nextCtx.write.mode("overwrite").parquet(s"$next/ctx")
+      nextVocab.write.mode("overwrite").parquet(s"$next/vocab")
+      val modelRows = spark.read.parquet(s"$next/model").count()
+      val ctxRows = spark.read.parquet(s"$next/ctx").count()
+      val vocabRows = spark.read.parquet(s"$next/vocab").count()
+      // the survivor v IS the surviving vocab row count — the exact value
+      // a fresh train over the survivors computes
+      Manifest.write(spark, next, Format, prior.applying(newSource,
+        "v" -> vocabRows, "modelRows" -> modelRows, "ctxRows" -> ctxRows,
+        "vocabRows" -> vocabRows))
     }
-    val nextModel = subtracted("model", "bg", "c12", dModel)
-    val nextCtx = subtracted("ctx", "w1", "c1", dCtx)
-    val nextVocab = subtracted("vocab", "w", "cnt", dVocab)
-    // stage the WHOLE next model beside the live one, manifest LAST —
-    // then swap by two directory renames (the MarkovModel commit shape)
-    val next = s"$path-next"
-    val nextPath = new org.apache.hadoop.fs.Path(next)
-    fs.delete(nextPath, true) // orphan from a crashed prior excise
-    nextModel.write.mode("overwrite").parquet(s"$next/model")
-    nextCtx.write.mode("overwrite").parquet(s"$next/ctx")
-    nextVocab.write.mode("overwrite").parquet(s"$next/vocab")
-    val modelRows = spark.read.parquet(s"$next/model").count()
-    val ctxRows = spark.read.parquet(s"$next/ctx").count()
-    val vocabRows = spark.read.parquet(s"$next/vocab").count()
-    val props = new java.util.Properties()
-    props.setProperty("version", ManifestVersion)
-    props.setProperty("source", newSource)
-    props.setProperty("appliedSources",
-      (ledger + newSource).toSeq.sorted.mkString(SourceSep))
-    // the survivor v IS the surviving vocab row count — the exact value
-    // a fresh train over the survivors computes
-    props.setProperty("v", vocabRows.toString)
-    props.setProperty("modelRows", modelRows.toString)
-    props.setProperty("ctxRows", ctxRows.toString)
-    props.setProperty("vocabRows", vocabRows.toString)
-    val nOut = fs.create(manifestPath(next), true)
-    try props.store(nOut, "graft bigram-LM manifest")
-    finally nOut.close()
-    WriterLease.swapStaged(fs, path)
-    true
+  }
+
+  /** The live count table `liveTable` (key, cnt) minus a batch `delta`
+    * (key, dn), with the subset proof run BEFORE any write: an unseen key
+    * or an over-subtraction means the batch was not part of the trained
+    * corpus — unlearning it is undefined, and clamping would leave the
+    * model silently off the survivor truth. Keys reaching zero are
+    * dropped, as a fresh survivor train would. Shared with
+    * [[TrigramLm.exciseFrom]]. */
+  private[operators] def subtractCounts(spark: SparkSession, path: String,
+      liveTable: String, key: String, cnt: String,
+      delta: DataFrame): DataFrame = {
+    val live = spark.read.parquet(s"$path/$liveTable")
+    val unseen = delta.join(live, Seq(key), "left_anti").count()
+    val merged = live.join(delta, Seq(key), "left")
+      .select(col(key),
+        (col(cnt) - coalesce(col("dn"), lit(0L))).cast("long").as(cnt))
+    val negative = merged.filter(col(cnt) < 0).count()
+    require(unseen == 0 && negative == 0,
+      s"excise batch is not a subset of the corpus the LM at $path was " +
+        s"trained on ($unseen unseen $liveTable keys, $negative " +
+        "over-subtracted) — rebuild over the survivors instead")
+    merged.filter(col(cnt) > 0)
   }
 
   /** Reopen a written model ONLY if its manifest proves it complete,
     * current, and trained from the caller's `source` — metadata-sized
     * validation, never a data scan, zero training jobs on a hit. */
   def loadIfValid(spark: SparkSession, path: String,
-      source: String): Option[BigramLm] = {
-    val mPath = manifestPath(path)
-    try {
-      val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-      // a crash between exciseFrom's two renames leaves the complete
-      // next beside an empty live path — adopt it rather than force the
-      // corpus-sized retrain that is otherwise this family's recovery
-      if (!fs.exists(mPath) &&
-        !WriterLease.adoptOrphanNext(spark, path)) return None
-      val props = new java.util.Properties()
-      val in = fs.open(mPath)
-      try props.load(in) finally in.close()
-      def field(k: String) = Option(props.getProperty(k))
-      if (!field("version").contains(ManifestVersion) ||
-        !field("source").contains(source)) return None
-      val lm = load(spark, path)
-      val valid = field("v").contains(lm.v.toString) &&
-        field("modelRows").exists(_.toLong == lm.model.count()) &&
-        field("ctxRows").exists(_.toLong == lm.ctx.count()) &&
-        field("vocabRows").exists(_.toLong == lm.vocab.count())
-      if (valid) Some(lm) else None
-    } catch {
-      case scala.util.control.NonFatal(_) => None
+      source: String): Option[BigramLm] =
+    Manifest.reopen(spark, path, Format, source) { m =>
+      val lm = open(spark, path, m)
+      Some(lm).filter(_ => m.get("v").contains(lm.v.toString) &&
+        m.counts("modelRows", lm.model) && m.counts("ctxRows", lm.ctx) &&
+        m.counts("vocabRows", lm.vocab))
     }
-  }
 
   /** Reopen a written model: lazy parquet scans + the manifest scalar. */
-  def load(spark: SparkSession, path: String): BigramLm = {
-    val props = new java.util.Properties()
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(mPath)
-    try props.load(in) finally in.close()
+  def load(spark: SparkSession, path: String): BigramLm =
+    open(spark, path, Manifest.read(spark, path))
+
+  private def open(spark: SparkSession, path: String, m: Manifest): BigramLm =
     new BigramLm(
       spark.read.parquet(s"$path/model"),
       spark.read.parquet(s"$path/ctx"),
       spark.read.parquet(s"$path/vocab"),
-      props.getProperty("v").toLong)
-  }
+      m.long("v"))
 }

@@ -97,17 +97,14 @@ object BpeTokenizer {
   private val trainsRun = new java.util.concurrent.atomic.AtomicInteger(0)
   private[graft] def trainCount: Int = trainsRun.get
 
-  private val ManifestVersion = "1"
-
-  private def manifestPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_MANIFEST.properties")
+  private val Format = Manifest.Format("1", "BPE merge-table")
 
   /** Order-sensitive fingerprint of the merge table: BPE merges apply in
     * rank order, so the sha pins the sequence, not just the set. */
   private def mergesSha(merges: Array[Array[String]]): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
     merges.zipWithIndex.foreach { case (m, i) =>
-      md.update(s"$i:${m(0)}${m(1)};".getBytes("UTF-8"))
+      md.update(s"$i:${m(0)}\u0001${m(1)};".getBytes("UTF-8"))
     }
     md.digest().map("%02x".format(_)).mkString
   }
@@ -115,51 +112,31 @@ object BpeTokenizer {
   /** Durable form of a trained merge table — the TRAIN/SERVE lifecycle
     * every other expensive artifact here has (BigramLm, QualityClassifier,
     * the indexes): merges land as a (rank, a, b) parquet table plus a
-    * validation manifest, so a later session reopens the tokenizer with
-    * ZERO training jobs and encodes under the identical vocabulary — the
-    * contract a tokenizer must keep anyway, since two corpora encoded
-    * under different merge tables are not comparable. */
+    * manifest (ARCHITECTURE.md "Durable artifacts"), so a later session
+    * reopens the tokenizer with ZERO training jobs and encodes under the
+    * identical vocabulary — the contract a tokenizer must keep anyway,
+    * since two corpora encoded under different merge tables are not
+    * comparable. */
   def write(spark: org.apache.spark.sql.SparkSession, path: String,
       merges: Array[Array[String]], source: String = ""): Unit = {
     import spark.implicits._
     merges.zipWithIndex.map { case (m, i) => (i, m(0), m(1)) }.toSeq
       .toDF("rank", "a", "b")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/merges")
-    val props = new java.util.Properties()
-    props.setProperty("version", ManifestVersion)
-    props.setProperty("source", source)
-    props.setProperty("nMerges", merges.length.toString)
-    props.setProperty("mergesSha", mergesSha(merges))
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mPath, true)
-    try props.store(out, "graft BPE merge-table manifest")
-    finally out.close()
+    Manifest.writeBuilt(spark, path, Format, "source" -> source,
+      "nMerges" -> merges.length, "mergesSha" -> mergesSha(merges))
   }
 
   /** Reopen a written merge table ONLY if its manifest proves it complete,
     * current, and trained from the caller's `source` — metadata-sized
     * validation, zero training jobs on a hit. */
   def loadIfValid(spark: org.apache.spark.sql.SparkSession, path: String,
-      source: String): Option[Array[Array[String]]] = {
-    val mPath = manifestPath(path)
-    try {
-      val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(mPath)) return None
-      val props = new java.util.Properties()
-      val in = fs.open(mPath)
-      try props.load(in) finally in.close()
-      def field(k: String) = Option(props.getProperty(k))
-      if (!field("version").contains(ManifestVersion) ||
-        !field("source").contains(source)) return None
+      source: String): Option[Array[Array[String]]] =
+    Manifest.reopen(spark, path, Format, source) { m =>
       val merges = load(spark, path)
-      val valid = field("nMerges").contains(merges.length.toString) &&
-        field("mergesSha").contains(mergesSha(merges))
-      if (valid) Some(merges) else None
-    } catch {
-      case scala.util.control.NonFatal(_) => None
+      Some(merges).filter(_ => m.get("nMerges").contains(merges.length.toString) &&
+        m.get("mergesSha").contains(mergesSha(merges)))
     }
-  }
 
   /** Reopen a written merge table in rank order. */
   def load(spark: org.apache.spark.sql.SparkSession,

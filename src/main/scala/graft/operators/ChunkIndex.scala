@@ -1,10 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Durable CDC chunk table — the serving artifact behind chunk-level
-  * dedup and the chunk-overlap ingest gate, under the same
-  * build-once / serve-many manifest contract as [[BigramLm]] / [[PqIndex]]:
+  * dedup and the chunk-overlap ingest gate, a build-once / serve-many
+  * durable artifact (ARCHITECTURE.md "Durable artifacts"):
   * chunking the corpus is the expensive deterministic pass (one codegen'd
   * scan over every payload byte), while every consumer — duplicate-group
   * audits, pair joins, the stream-static admission join — reads only the
@@ -14,7 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * accepted arrivals with an idempotent [[ChunkIndex.appendTo]] — the
   * applied-sources ledger makes a crashed job's retry a no-op instead of
   * a silent double-count, and a torn table (data landed, manifest didn't)
-  * is detected by recount and refused, exactly the [[IvfIndex]] semantics.
+  * is detected by recount and refused (ARCHITECTURE.md "Durable
+  * artifacts").
   */
 final class ChunkIndex private[operators] (
     /** The chunk table: (doc_id, chunk_no, chunk_start, chunk_len, chunk_md5). */
@@ -22,27 +24,15 @@ final class ChunkIndex private[operators] (
     /** Cut-rule mask width the table was built under. */
     val maskBits: Int) {
 
-  /** Durable form: chunk rows + validation manifest. */
+  /** Durable form: chunk rows + manifest. */
   def write(path: String, source: String = ""): Unit = {
     val spark = chunks.sparkSession
     // rebuild IS the crash recovery: drop any lease a dead maintainer left
     WriterLease.clear(spark, path)
     chunks.write.mode("overwrite").parquet(s"$path/chunks")
-    val rows = spark.read.parquet(s"$path/chunks").count()
-    val props = new java.util.Properties()
-    props.setProperty("version", ChunkIndex.ManifestVersion)
-    props.setProperty("source", source)
-    props.setProperty("appliedSources", source)
-    props.setProperty("maskBits", maskBits.toString)
-    props.setProperty("rows", rows.toString)
-    props.setProperty("tombRows", "0")
-    val mPath = ChunkIndex.manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    // a rebuild must not leave a stale tombstone list beside fresh rows
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-    val out = fs.create(mPath, true)
-    try props.store(out, "graft CDC chunk-index manifest")
-    finally out.close()
+    Manifest.writeBuilt(spark, path, ChunkIndex.Format,
+      "source" -> source, "appliedSources" -> source, "maskBits" -> maskBits,
+      "rows" -> spark.read.parquet(s"$path/chunks").count(), "tombRows" -> 0)
   }
 }
 
@@ -50,13 +40,8 @@ object ChunkIndex {
   private val buildsRun = new java.util.concurrent.atomic.AtomicInteger(0)
   private[graft] def buildCount: Int = buildsRun.get
 
-  private val ManifestVersion = "1"
-
-  /** Ledger separator — same escape-sequence convention as IvfIndex. */
-  private val SourceSep = "\u0001"
-
-  private def manifestPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_MANIFEST.properties")
+  private val Format = Manifest.Format("1", "chunk index",
+    Seq("rows" -> "chunks"), tombstones = true)
 
   /** BUILD: chunk a media table (doc_id, payload). One codegen'd pass;
     * the table stays a lazy DataFrame until written or acted on. */
@@ -70,37 +55,17 @@ object ChunkIndex {
     * `source` — metadata validation plus one footer-stats recount, zero
     * chunking jobs on a hit. */
   def loadIfValid(spark: SparkSession, path: String, source: String,
-      maskBits: Int = 6): Option[ChunkIndex] = {
-    val mPath = manifestPath(path)
-    try {
-      val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(mPath)) return None
-      val props = new java.util.Properties()
-      val in = fs.open(mPath)
-      try props.load(in) finally in.close()
-      def field(k: String) = Option(props.getProperty(k))
-      if (!field("version").contains(ManifestVersion) ||
-        !field("source").contains(source) ||
-        !field("maskBits").contains(maskBits.toString)) return None
-      val idx = load(spark, path)
-      // PHYSICAL row count (the served chunks view already excludes
-      // pending tombstones)
-      val valid = field("rows").exists(_.toLong ==
-        spark.read.parquet(s"$path/chunks").count()) &&
-        field("tombRows").map(_.toLong).getOrElse(0L) ==
-          tombstoneCount(spark, path)
-      if (valid) Some(idx) else None
-    } catch {
-      case scala.util.control.NonFatal(_) => None
+      maskBits: Int = 6): Option[ChunkIndex] =
+    Manifest.reopen(spark, path, Format, source) { m =>
+      if (!m.get("maskBits").contains(maskBits.toString)) None
+      else {
+        val idx = open(spark, path, m)
+        // PHYSICAL row count (the served chunks view already excludes
+        // pending tombstones)
+        Some(idx).filter(_ =>
+          m.counts("rows", spark.read.parquet(s"$path/chunks")))
+      }
     }
-  }
-
-  /** Row count of the tombstone list — 0 when the dir does not exist. */
-  private def tombstoneCount(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) spark.read.parquet(s"$path/tombstones").count() else 0L
-  }
 
   /** EXCISE documents' chunk rows from a written index —
     * [[IvfIndex.excise]]'s chunk twin (takedowns must vanish from the
@@ -108,182 +73,46 @@ object ChunkIndex {
     * rejecting its own re-crawls as duplicates). Tombstone-then-compact:
     * excised doc_ids land in a tombstone list baked into [[load]]'s
     * chunks view as an anti join; the next [[compact]] drops the rows
-    * physically. IDEMPOTENT via the ledger; torn states refused. `ids`
-    * is a single-column DataFrame named `doc_id`. */
+    * physically. `ids` is a single-column DataFrame named `doc_id`. */
   def excise(spark: SparkSession, path: String, ids: DataFrame,
       newSource: String): Boolean =
-      WriterLease.withLease(spark, path) {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    require(Option(prior.getProperty("version")).contains(ManifestVersion),
-      s"chunk index at $path has manifest version " +
-        s"${prior.getProperty("version")}; this excisor understands only " +
-        s"$ManifestVersion")
-    val ledger = Option(prior.getProperty("appliedSources"))
-      .map(_.split(SourceSep).toSet)
-      .getOrElse(Set(prior.getProperty("source", "")))
-    if (ledger.contains(newSource)) return false // already applied: no-op
-    val priorRows = Option(prior.getProperty("rows")).map(_.toLong).getOrElse(-1L)
-    val priorTomb = Option(prior.getProperty("tombRows")).map(_.toLong).getOrElse(0L)
-    require(spark.read.parquet(s"$path/chunks").count() == priorRows &&
-      tombstoneCount(spark, path) == priorTomb,
-      s"chunk index at $path does not match its committed manifest — a " +
-        "previous append or excise crashed mid-write; rebuild instead of " +
-        "excising")
-    ids.select(org.apache.spark.sql.functions.col("doc_id"))
-      .write.mode("append").parquet(s"$path/tombstones")
-    val tombRows = spark.read.parquet(s"$path/tombstones").count()
-    prior.setProperty("source", newSource)
-    prior.setProperty("appliedSources",
-      (ledger + newSource).toSeq.sorted.mkString(SourceSep))
-    prior.setProperty("tombRows", tombRows.toString)
-    val out = fs.create(mPath, true)
-    try prior.store(out, "graft CDC chunk-index manifest")
-    finally out.close()
-    true
-  }
+    Manifest.excise(spark, path, Format, ids.select(col("doc_id")), newSource)
 
   /** Reopen a written index: one lazy parquet scan + manifest params;
     * pending tombstones ([[excise]]) are baked into the chunks view. */
-  def load(spark: SparkSession, path: String): ChunkIndex = {
-    val props = new java.util.Properties()
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(mPath)
-    try props.load(in) finally in.close()
-    val raw = spark.read.parquet(s"$path/chunks")
-    val tombRows = Option(props.getProperty("tombRows")).map(_.toLong).getOrElse(0L)
-    val served =
-      if (tombRows > 0)
-        raw.join(spark.read.parquet(s"$path/tombstones"), Seq("doc_id"),
-          "left_anti")
-      else raw
-    new ChunkIndex(served, props.getProperty("maskBits").toInt)
-  }
+  def load(spark: SparkSession, path: String): ChunkIndex =
+    open(spark, path, Manifest.read(spark, path))
+
+  private def open(spark: SparkSession, path: String, m: Manifest): ChunkIndex =
+    new ChunkIndex(Manifest.withoutTombstones(spark, path, m,
+      spark.read.parquet(s"$path/chunks"), "doc_id"), m.long("maskBits").toInt)
 
   /** Append the chunk rows of newly accepted documents under the EXISTING
-    * cut parameters. IDEMPOTENT via the applied-sources ledger (a replayed
-    * batch tag no-ops, returns false); a torn table from a crash between
-    * data append and manifest refresh is detected by the pre-append
-    * recount and REFUSED (recovery = rebuild + write, overwrite mode).
-    * Returns true when the append was applied. */
+    * cut parameters. Ledgered (a replayed batch tag no-ops, returns
+    * false) and recounted (a torn table from a crash between data append
+    * and manifest refresh is REFUSED; recovery = rebuild + write) as every
+    * durable-artifact append. Returns true when the append was applied. */
   def appendTo(spark: SparkSession, path: String, media: DataFrame,
       newSource: String): Boolean =
-      WriterLease.withLease(spark, path) {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    val ledger = Option(prior.getProperty("appliedSources"))
-      .map(_.split(SourceSep).toSet)
-      .getOrElse(Set(prior.getProperty("source", "")))
-    if (ledger.contains(newSource)) return false // already applied: no-op
-    val priorRows = Option(prior.getProperty("rows")).map(_.toLong).getOrElse(-1L)
-    val priorTomb = Option(prior.getProperty("tombRows")).map(_.toLong).getOrElse(0L)
-    val currentRows = spark.read.parquet(s"$path/chunks").count()
-    require(currentRows == priorRows && tombstoneCount(spark, path) == priorTomb,
-      s"chunk index at $path has $currentRows rows but its manifest " +
-        s"committed $priorRows — a previous append or excise crashed " +
-        "mid-write; rebuild the index instead of appending onto a torn table")
-    // an appended doc matching a pending tombstone would be served DEAD —
-    // refuse; compact first, then re-ingest (see InvertedIndex.appendTo)
-    if (priorTomb > 0) {
-      val collisions = media.select(org.apache.spark.sql.functions.col("doc_id"))
-        .join(spark.read.parquet(s"$path/tombstones"), Seq("doc_id"), "left_semi")
-        .count()
-      require(collisions == 0,
-        s"$collisions appended doc ids collide with pending tombstones at " +
-          s"$path — compact the index before re-ingesting those ids")
+    Manifest.applyBatch(spark, path, Format, "appending", newSource) { prior =>
+      // an appended doc matching a pending tombstone would be served DEAD
+      Manifest.refuseTombstoned(spark, path, prior, media.select(col("doc_id")),
+        "doc_id")
+      CdcChunking.chunkTable(media, prior.long("maskBits").toInt)
+        .write.mode("append").parquet(s"$path/chunks")
+      Manifest.write(spark, path, Format, prior.applying(newSource,
+        "rows" -> spark.read.parquet(s"$path/chunks").count()))
     }
-    val mb = prior.getProperty("maskBits").toInt
-    CdcChunking.chunkTable(media, mb)
-      .write.mode("append").parquet(s"$path/chunks")
-    val rows = spark.read.parquet(s"$path/chunks").count()
-    val props = new java.util.Properties()
-    props.setProperty("version", ManifestVersion)
-    props.setProperty("source", newSource)
-    props.setProperty("appliedSources",
-      (ledger + newSource).toSeq.sorted.mkString(SourceSep))
-    props.setProperty("maskBits", mb.toString)
-    props.setProperty("rows", rows.toString)
-    // pending excisions survive an append verbatim
-    props.setProperty("tombRows", priorTomb.toString)
-    val out = fs.create(mPath, true)
-    try props.store(out, "graft CDC chunk-index manifest")
-    finally out.close()
-    true
-  }
 
   /** OPTIMIZE: rewrite the fragmented chunks table of a written index
     * into `nFiles` files — the [[PqIndex.compact]] step for this flat
-    * table, whose [[appendTo]] adds one parquet file per batch. Staged
-    * write, recount against the committed manifest BEFORE the swap,
-    * rename swap; the manifest (rows, maskBits, ledger) is
-    * layout-invariant and needs no change; torn tables refuse. */
-  def compact(spark: SparkSession, path: String, nFiles: Int = 1): Unit =
-      WriterLease.withLease(spark, path) {
+    * table, whose [[appendTo]] adds one parquet file per batch — and
+    * physically drop tombstoned rows ([[Manifest.compact]]). */
+  def compact(spark: SparkSession, path: String, nFiles: Int = 1): Unit = {
     require(nFiles >= 1, s"nFiles must be >= 1, got $nFiles")
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    require(Option(prior.getProperty("version")).contains(ManifestVersion),
-      s"chunk index at $path has manifest version " +
-        s"${prior.getProperty("version")}; this compactor understands " +
-        s"only $ManifestVersion")
-    val rows = Option(prior.getProperty("rows")).map(_.toLong).getOrElse(-1L)
-    val tombRows = Option(prior.getProperty("tombRows")).map(_.toLong).getOrElse(0L)
-    require(spark.read.parquet(s"$path/chunks").count() == rows &&
-      tombstoneCount(spark, path) == tombRows,
-      s"chunk index at $path does not match its committed manifest — a " +
-        "previous append, excise, or compact crashed mid-write; rebuild " +
-        "instead of compacting")
-    val live = spark.read.parquet(s"$path/chunks")
-    val (survivors, expectRows) =
-      if (tombRows == 0) (live, rows)
-      else {
-        val tomb = spark.read.parquet(s"$path/tombstones")
-        val dropped = live.join(tomb, Seq("doc_id"), "left_semi").count()
-        (live.join(tomb, Seq("doc_id"), "left_anti"), rows - dropped)
-      }
-    val stagingPath = new org.apache.hadoop.fs.Path(s"$path/chunks-next")
-    fs.delete(stagingPath, true)
-    survivors.repartition(nFiles)
-      .write.mode("overwrite").parquet(s"$path/chunks-next")
-    require(spark.read.parquet(s"$path/chunks-next").count() == expectRows,
-      s"staged compaction at $path/chunks-next lost rows — refusing the swap")
-    val livePath = new org.apache.hadoop.fs.Path(s"$path/chunks")
-    val oldPath = new org.apache.hadoop.fs.Path(s"$path/chunks-old")
-    fs.delete(oldPath, true)
-    require(fs.rename(livePath, oldPath), s"could not move $livePath aside")
-    require(fs.rename(stagingPath, livePath),
-      s"could not rename $stagingPath into place")
-    fs.delete(oldPath, true)
-    if (tombRows > 0) {
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-      prior.setProperty("rows", expectRows.toString)
-      prior.setProperty("tombRows", "0")
-      val out = fs.create(mPath, true)
-      try prior.store(out, "graft CDC chunk-index manifest")
-      finally out.close()
+    Manifest.compact(spark, path, Format, "chunks", "rows", _ => "doc_id") {
+      (survivors, staging) =>
+        survivors.repartition(nFiles).write.mode("overwrite").parquet(staging)
     }
-  }
-
-  /** Data-file count of a written index's chunks table — the observable
-    * [[compact]] shrinks. */
-  def chunksFileCount(spark: SparkSession, path: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/chunks")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val it = fs.listFiles(p, false)
-    var n = 0
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-    }
-    n
   }
 }

@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   *
   * Reopen across sessions is manifest-validated metadata only
   * ([[InvertedIndex.loadIfValid]]): zero tokenize/aggregate jobs on a
-  * hit, the [[BigramLm]] contract.
+  * hit (ARCHITECTURE.md "Durable artifacts").
   *
   * Serving lifecycle note: an index that was built but never written
   * serves from the LAZY build plan — each serve re-derives postings and
@@ -134,25 +134,10 @@ final class InvertedIndex private[operators] (
       .partitionBy("bucket").parquet(s"$path/terms")
     val postRows = written.count()
     val termRows = spark.read.parquet(s"$path/terms").count()
-    val props = new java.util.Properties()
-    props.setProperty("version", InvertedIndex.ManifestVersion)
-    props.setProperty("source", source)
-    props.setProperty("idCol", idCol)
-    props.setProperty("nDocs", nDocs.toString)
-    props.setProperty("nDl", nDl.toString)
-    props.setProperty("sumDl", sumDl.toString)
-    props.setProperty("nBuckets", nBuckets.toString)
-    props.setProperty("postRows", postRows.toString)
-    props.setProperty("termRows", termRows.toString)
-    props.setProperty("tombRows", "0")
-    val mPath = InvertedIndex.manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    // a rebuild at a path that previously carried pending excisions must
-    // not leave the stale tombstone list beside the fresh tables
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-    val out = fs.create(mPath, true)
-    try props.store(out, "graft inverted-index manifest")
-    finally out.close()
+    Manifest.writeBuilt(spark, path, InvertedIndex.Format,
+      "source" -> source, "idCol" -> idCol, "nDocs" -> nDocs, "nDl" -> nDl,
+      "sumDl" -> sumDl, "nBuckets" -> nBuckets, "postRows" -> postRows,
+      "termRows" -> termRows, "tombRows" -> 0)
   }
 }
 
@@ -160,16 +145,14 @@ object InvertedIndex {
   private val buildsRun = new java.util.concurrent.atomic.AtomicInteger(0)
   private[graft] def buildCount: Int = buildsRun.get
 
-  private val ManifestVersion = "1"
+  private val Format = Manifest.Format("1", "inverted index",
+    Seq("postRows" -> "postings", "termRows" -> "terms"), tombstones = true)
 
   /** Largest pending-tombstone count [[excise]] still snapshots by
     * collecting to a driver-side local relation; above it the snapshot
     * is a localCheckpoint (same listing-pinning guarantee, no driver
     * heap). 1M id rows ≈ tens of MB — comfortably driver-sized. */
   private[operators] val SnapshotCollectBound: Long = 1000000L
-
-  private def manifestPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_MANIFEST.properties")
 
   /** The engine-side bucket key; [[bucketOf]] is its driver-side twin. */
   private def bucketCol(term: Column, nBuckets: Int): Column =
@@ -213,7 +196,19 @@ object InvertedIndex {
       nBuckets)
   }
 
-  private val SourceSep = "\u0001"
+  /** Merge `dfTable` (term, df) into the vocab-sized terms sidecar: write
+    * it to a staging dir and swap it in by two renames — the table is
+    * never read-and-overwritten in place or half-deleted, and a failed
+    * rename refuses instead of leaving the stale sidecar under a freshly
+    * committed manifest. */
+  private def swapTerms(spark: SparkSession, path: String, nBuckets: Int,
+      dfTable: DataFrame): Unit = {
+    dfTable.withColumn("bucket", bucketCol(col("term"), nBuckets))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "static")
+      .partitionBy("bucket").parquet(s"$path/terms-next")
+    WriterLease.swapStaged(Manifest.fileSystem(spark, path), s"$path/terms")
+  }
 
   /** Incrementally index a batch of NEW documents into a written index —
     * the daily-crawl lifecycle ([[ChunkIndex.appendTo]] semantics, with
@@ -237,120 +232,48 @@ object InvertedIndex {
     * false (no-op) when `newSource` is already in the ledger. */
   def appendTo(spark: SparkSession, path: String, newDocs: DataFrame,
       textCol: String, newSource: String): Boolean =
-      WriterLease.withLease(spark, path) {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    def field(k: String) = Option(prior.getProperty(k))
-    require(field("version").contains(ManifestVersion),
-      s"inverted index at $path has manifest version " +
-        s"${field("version").getOrElse("<none>")}; this appender " +
-        s"understands only $ManifestVersion — rebuild instead of appending")
-    val ledger = field("appliedSources")
-      .map(_.split(SourceSep).toSet)
-      .getOrElse(Set(prior.getProperty("source", "")))
-    if (ledger.contains(newSource)) return false // already applied: no-op
-    val priorPost = field("postRows").map(_.toLong).getOrElse(-1L)
-    val priorTerm = field("termRows").map(_.toLong).getOrElse(-1L)
-    val priorTomb = field("tombRows").map(_.toLong).getOrElse(0L)
-    require(spark.read.parquet(s"$path/postings").count() == priorPost &&
-      spark.read.parquet(s"$path/terms").count() == priorTerm &&
-      tombstoneCount(spark, path) == priorTomb,
-      s"inverted index at $path does not match its committed manifest — " +
-        "a previous append or excise crashed mid-write; rebuild instead " +
-        "of appending")
-    val idCol = prior.getProperty("idCol")
-    val nBuckets = prior.getProperty("nBuckets").toInt
-    // an appended id matching a pending tombstone would be served DEAD
-    // (the excision anti-join cannot tell a re-ingest from the excised
-    // original until compaction clears the list) — refuse loudly; the
-    // operator compacts first, then re-ingests
-    if (priorTomb > 0) {
-      val collisions = newDocs.select(col(idCol))
-        .join(spark.read.parquet(s"$path/tombstones"), Seq(idCol), "left_semi")
-        .count()
-      require(collisions == 0,
-        s"$collisions appended ids collide with pending tombstones at " +
-          s"$path — compact the index (physically dropping the excised " +
-          "rows) before re-ingesting those ids")
-    }
-    // same tokenization + null semantics as build, so an appended index
-    // can never drift from a fresh build over the union corpus
-    val t = TextAnalysis.tokens(col(textCol))
-    val dl = newDocs.select(col(idCol), size(t).cast("long").as("dl"))
-    val Array(dDocs, dNl, dSumDl) = dl
-      .agg(count(lit(1)).cast("long"), count(col("dl")).cast("long"),
-        sum("dl").cast("long"))
-      .head().toSeq.map(_.asInstanceOf[Long]).toArray
-    // the delta is batch-sized; persist it so the postings append and the
-    // df merge don't each re-run the tokenize+aggregate plan
-    val deltaPostings = newDocs.select(col(idCol), explode(t).as("term"))
-      .groupBy(idCol, "term").agg(count(lit(1)).as("tf"))
-      .join(dl, idCol)
-      .withColumn("bucket", bucketCol(col("term"), nBuckets))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      deltaPostings.write.mode("append").partitionBy("bucket")
-        .parquet(s"$path/postings")
-      // merge the vocab-sized df sidecar into a staging dir, then swap
-      // with two RENAMES (old aside, next into place, drop old) — the
-      // table is never half-deleted, and Hadoop delete/rename report
-      // failure by RETURNING false, so both swap steps are checked (an
-      // unchecked failed swap would leave the stale sidecar under a
-      // freshly committed manifest that every later recount accepts)
-      val deltaDf = deltaPostings.groupBy("term").agg(count(lit(1)).as("df"))
-      val merged = spark.read.parquet(s"$path/terms").select("term", "df")
-        .unionByName(deltaDf)
-        .groupBy("term").agg(sum("df").cast("long").as("df"))
+    Manifest.applyBatch(spark, path, Format, "appending", newSource) { prior =>
+      val idCol = prior("idCol")
+      val nBuckets = prior.long("nBuckets").toInt
+      // an appended id matching a pending tombstone would be served DEAD
+      // (the excision anti-join cannot tell a re-ingest from the excised
+      // original until compaction clears the list) — refuse loudly; the
+      // operator compacts first, then re-ingests
+      Manifest.refuseTombstoned(spark, path, prior, newDocs.select(col(idCol)),
+        idCol)
+      // same tokenization + null semantics as build, so an appended index
+      // can never drift from a fresh build over the union corpus
+      val t = TextAnalysis.tokens(col(textCol))
+      val dl = newDocs.select(col(idCol), size(t).cast("long").as("dl"))
+      val Array(dDocs, dNl, dSumDl) = dl
+        .agg(count(lit(1)).cast("long"), count(col("dl")).cast("long"),
+          sum("dl").cast("long"))
+        .head().toSeq.map(_.asInstanceOf[Long]).toArray
+      // the delta is batch-sized; persist it so the postings append and the
+      // df merge don't each re-run the tokenize+aggregate plan
+      val deltaPostings = newDocs.select(col(idCol), explode(t).as("term"))
+        .groupBy(idCol, "term").agg(count(lit(1)).as("tf"))
+        .join(dl, idCol)
         .withColumn("bucket", bucketCol(col("term"), nBuckets))
-      merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("bucket").parquet(s"$path/terms-next")
-      val termsPath = new org.apache.hadoop.fs.Path(s"$path/terms")
-      val nextPath = new org.apache.hadoop.fs.Path(s"$path/terms-next")
-      val oldPath = new org.apache.hadoop.fs.Path(s"$path/terms-old")
-      fs.delete(oldPath, true) // leftover from a crashed prior swap
-      require(fs.rename(termsPath, oldPath),
-        s"could not move $termsPath aside for the sidecar swap")
-      require(fs.rename(nextPath, termsPath),
-        s"could not rename $nextPath into place")
-      fs.delete(oldPath, true)
-    } finally deltaPostings.unpersist()
-    val postRows = spark.read.parquet(s"$path/postings").count()
-    val termRows = spark.read.parquet(s"$path/terms").count()
-    val props = new java.util.Properties()
-    props.setProperty("version", ManifestVersion)
-    props.setProperty("source", newSource)
-    props.setProperty("appliedSources",
-      (ledger + newSource).toSeq.sorted.mkString(SourceSep))
-    props.setProperty("idCol", idCol)
-    props.setProperty("nDocs",
-      (prior.getProperty("nDocs").toLong + dDocs).toString)
-    props.setProperty("nDl",
-      (prior.getProperty("nDl").toLong + dNl).toString)
-    props.setProperty("sumDl",
-      (prior.getProperty("sumDl").toLong + dSumDl).toString)
-    props.setProperty("nBuckets", nBuckets.toString)
-    props.setProperty("postRows", postRows.toString)
-    props.setProperty("termRows", termRows.toString)
-    // pending excisions survive an append verbatim — dropping the field
-    // would resurface every tombstoned document on the next load
-    props.setProperty("tombRows", priorTomb.toString)
-    val out = fs.create(mPath, true)
-    try props.store(out, "graft inverted-index manifest")
-    finally out.close()
-    true
-  }
-
-  /** Row count of the tombstone list — 0 when the dir does not exist
-    * (an index that never saw an excise). */
-  private def tombstoneCount(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) spark.read.parquet(s"$path/tombstones").count() else 0L
-  }
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        deltaPostings.write.mode("append").partitionBy("bucket")
+          .parquet(s"$path/postings")
+        val deltaDf = deltaPostings.groupBy("term").agg(count(lit(1)).as("df"))
+        swapTerms(spark, path, nBuckets,
+          spark.read.parquet(s"$path/terms").select("term", "df")
+            .unionByName(deltaDf)
+            .groupBy("term").agg(sum("df").cast("long").as("df")))
+      } finally deltaPostings.unpersist()
+      // pending excisions (tombRows) survive an append verbatim — dropping
+      // the field would resurface every tombstoned document on the next load
+      Manifest.write(spark, path, Format, prior.applying(newSource,
+        "nDocs" -> (prior.long("nDocs") + dDocs),
+        "nDl" -> (prior.long("nDl") + dNl),
+        "sumDl" -> (prior.long("sumDl") + dSumDl),
+        "postRows" -> spark.read.parquet(s"$path/postings").count(),
+        "termRows" -> spark.read.parquet(s"$path/terms").count()))
+    }
 
   /** EXCISE: remove documents from a written index — the takedown /
     * opt-out / decontamination lifecycle, completing the maintenance
@@ -387,33 +310,10 @@ object InvertedIndex {
     * sidecar swap. */
   def excise(spark: SparkSession, path: String, excisedDocs: DataFrame,
       textCol: String, newSource: String): Boolean =
-      WriterLease.withLease(spark, path) {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    def field(k: String) = Option(prior.getProperty(k))
-    require(field("version").contains(ManifestVersion),
-      s"inverted index at $path has manifest version " +
-        s"${field("version").getOrElse("<none>")}; this excisor " +
-        s"understands only $ManifestVersion — rebuild instead")
-    val ledger = field("appliedSources")
-      .map(_.split(SourceSep).toSet)
-      .getOrElse(Set(prior.getProperty("source", "")))
-    if (ledger.contains(newSource)) return false // already applied: no-op
-    val priorTomb = field("tombRows").map(_.toLong).getOrElse(0L)
-    require(
-      spark.read.parquet(s"$path/postings").count() ==
-        field("postRows").map(_.toLong).getOrElse(-1L) &&
-        spark.read.parquet(s"$path/terms").count() ==
-          field("termRows").map(_.toLong).getOrElse(-1L) &&
-        tombstoneCount(spark, path) == priorTomb,
-      s"inverted index at $path does not match its committed manifest — " +
-        "a previous append or excise crashed mid-write; rebuild instead " +
-        "of excising")
-    val idCol = prior.getProperty("idCol")
-    val nBuckets = prior.getProperty("nBuckets").toInt
+      Manifest.applyBatch(spark, path, Format, "excising", newSource) { prior =>
+    val priorTomb = prior.tombRows
+    val idCol = prior("idCol")
+    val nBuckets = prior.long("nBuckets").toInt
     // OVERLAP GUARD: a second takedown batch under a NEW tag may overlap
     // an earlier one (two notices naming the same document) — ids already
     // tombstoned must NOT contribute to the df/scalar deltas again, or
@@ -465,53 +365,25 @@ object InvertedIndex {
       .head().toSeq.map(x => Option(x).fold(0L)(_.asInstanceOf[Long])).toArray
     // tombstones FIRST: a crash after this append is caught by the
     // recount (tombRows off the committed manifest) and refused as torn
-    batch.select(col(idCol)).write.mode("append")
-      .parquet(s"$path/tombstones")
+    Manifest.appendTombstones(path, batch.select(col(idCol)))
     // df correction is batch-sized (the excised docs' distinct terms),
     // merged into the vocab-sized sidecar and swapped like appendTo's
     val deltaDf = batch.select(col(idCol), explode(t).as("term"))
       .groupBy(idCol, "term").agg(count(lit(1)).as("tf"))
       .groupBy("term").agg(count(lit(1)).as("delta"))
-    val merged = spark.read.parquet(s"$path/terms").select("term", "df")
-      .join(deltaDf, Seq("term"), "left")
-      .select(col("term"),
-        (col("df") - coalesce(col("delta"), lit(0L))).cast("long").as("df"))
-      .filter(col("df") > 0)
-      .withColumn("bucket", bucketCol(col("term"), nBuckets))
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("bucket").parquet(s"$path/terms-next")
-    val termsPath = new org.apache.hadoop.fs.Path(s"$path/terms")
-    val nextPath = new org.apache.hadoop.fs.Path(s"$path/terms-next")
-    val oldPath = new org.apache.hadoop.fs.Path(s"$path/terms-old")
-    fs.delete(oldPath, true) // leftover from a crashed prior swap
-    require(fs.rename(termsPath, oldPath),
-      s"could not move $termsPath aside for the sidecar swap")
-    require(fs.rename(nextPath, termsPath),
-      s"could not rename $nextPath into place")
-    fs.delete(oldPath, true)
-    val termRows = spark.read.parquet(s"$path/terms").count()
-    val tombRows = spark.read.parquet(s"$path/tombstones").count()
-    val props = new java.util.Properties()
-    props.setProperty("version", ManifestVersion)
-    props.setProperty("source", newSource)
-    props.setProperty("appliedSources",
-      (ledger + newSource).toSeq.sorted.mkString(SourceSep))
-    props.setProperty("idCol", idCol)
-    props.setProperty("nDocs",
-      (prior.getProperty("nDocs").toLong - dDocs).toString)
-    props.setProperty("nDl",
-      (prior.getProperty("nDl").toLong - dNl).toString)
-    props.setProperty("sumDl",
-      (prior.getProperty("sumDl").toLong - dSumDl).toString)
-    props.setProperty("nBuckets", nBuckets.toString)
-    props.setProperty("postRows", prior.getProperty("postRows"))
-    props.setProperty("termRows", termRows.toString)
-    props.setProperty("tombRows", tombRows.toString)
-    val out = fs.create(mPath, true)
-    try props.store(out, "graft inverted-index manifest")
-    finally out.close()
-    true
+    swapTerms(spark, path, nBuckets,
+      spark.read.parquet(s"$path/terms").select("term", "df")
+        .join(deltaDf, Seq("term"), "left")
+        .select(col("term"),
+          (col("df") - coalesce(col("delta"), lit(0L))).cast("long").as("df"))
+        .filter(col("df") > 0))
+    // postRows is untouched until compact drops the tombstoned rows
+    Manifest.write(spark, path, Format, prior.applying(newSource,
+      "nDocs" -> (prior.long("nDocs") - dDocs),
+      "nDl" -> (prior.long("nDl") - dNl),
+      "sumDl" -> (prior.long("sumDl") - dSumDl),
+      "termRows" -> spark.read.parquet(s"$path/terms").count(),
+      "tombRows" -> Manifest.countTombstones(spark, path)))
   }
 
   /** OPTIMIZE: rewrite the fragmented postings table of a written index
@@ -529,141 +401,45 @@ object InvertedIndex {
     * terms sidecar wholesale each merge, so it is always one write's
     * worth of files.
     *
-    * Crash safety (the appendTo discipline, inverted): with NO pending
-    * tombstones the committed manifest needs no change — row counts,
-    * scalars, and ledger are all layout-invariant — so there is no
-    * commit step to order. With pending tombstones the manifest's
-    * postRows/tombRows change and commit LAST; a crash after the swap
-    * but before the commit (or before the tombstone-list clear) leaves
-    * counts off the manifest, which every later recount ([[loadIfValid]],
-    * the [[appendTo]]/[[excise]] pre-checks, this method's own
-    * pre-check) refuses as torn instead of serving half an index. Either
-    * way the staged table is RECOUNTED against its expected row count
-    * before the swap, and a crash between the two renames leaves no
-    * postings directory — refused everywhere. Writer contract as for
-    * append: one maintainer at a time, no live readers across the swap. */
+    * Crash safety ([[Manifest.compact]]): with NO pending tombstones the
+    * committed manifest needs no change — row counts, scalars, and ledger
+    * are all layout-invariant. With pending tombstones postRows/tombRows
+    * change and commit LAST, so a crash after the swap leaves counts off
+    * the manifest, refused as torn everywhere. The staged table is
+    * RECOUNTED against its expected row count before the swap. Writer
+    * contract as for append: one maintainer at a time, no live readers
+    * across the swap. */
   def compact(spark: SparkSession, path: String): Unit =
-      WriterLease.withLease(spark, path) {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    require(Option(prior.getProperty("version")).contains(ManifestVersion),
-      s"inverted index at $path has manifest version " +
-        s"${prior.getProperty("version")}; this compactor understands " +
-        s"only $ManifestVersion — rebuild instead of compacting")
-    val postRows = prior.getProperty("postRows").toLong
-    val tombRows = Option(prior.getProperty("tombRows")).map(_.toLong).getOrElse(0L)
-    require(spark.read.parquet(s"$path/postings").count() == postRows &&
-      tombstoneCount(spark, path) == tombRows,
-      s"inverted index at $path does not match its committed manifest — " +
-        "a previous append, excise, or compact crashed mid-write; rebuild " +
-        "instead of compacting")
-    val live = spark.read.parquet(s"$path/postings")
-    val idCol = prior.getProperty("idCol")
-    // surviving rows + their expected count: with tombstones pending the
-    // drop count is measured on the LIVE table first, so the staged
-    // recount still proves the staging write lost nothing
-    val (survivors, expectRows) =
-      if (tombRows == 0) (live, postRows)
-      else {
-        val tomb = spark.read.parquet(s"$path/tombstones")
-        val dropped = live.join(tomb, Seq(idCol), "left_semi").count()
-        (live.join(tomb, Seq(idCol), "left_anti"), postRows - dropped)
-      }
-    val staging = s"$path/postings-next"
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    fs.delete(stagingPath, true) // leftover from a crashed prior compact
-    // one shuffle task per bucket value -> exactly one file per bucket
-    survivors
-      .repartition(col("bucket"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("bucket").parquet(staging)
-    require(spark.read.parquet(staging).count() == expectRows,
-      s"staged compaction at $staging lost rows — refusing the swap")
-    val livePath = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val oldPath = new org.apache.hadoop.fs.Path(s"$path/postings-old")
-    fs.delete(oldPath, true)
-    require(fs.rename(livePath, oldPath),
-      s"could not move $livePath aside for the compaction swap")
-    require(fs.rename(stagingPath, livePath),
-      s"could not rename $stagingPath into place")
-    fs.delete(oldPath, true)
-    if (tombRows > 0) {
-      // the tombstoned rows are physically gone: clear the list, commit
-      // the new physical count LAST (scalars/ledger are excise-time facts
-      // and unchanged here)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-      prior.setProperty("postRows", expectRows.toString)
-      prior.setProperty("tombRows", "0")
-      val out = fs.create(mPath, true)
-      try prior.store(out, "graft inverted-index manifest")
-      finally out.close()
+    Manifest.compact(spark, path, Format, "postings", "postRows", _("idCol")) {
+      (survivors, staging) =>
+        // one shuffle task per bucket value -> exactly one file per bucket
+        survivors
+          .repartition(col("bucket"))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "static")
+          .partitionBy("bucket").parquet(staging)
     }
-  }
-
-  /** Data-file count of a written index's postings table — the
-    * observable [[compact]] shrinks (one file per appended batch per
-    * bucket before, one per bucket after). */
-  def postingsFileCount(spark: SparkSession, path: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val it = fs.listFiles(p, true)
-    var n = 0
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) n += 1
-    }
-    n
-  }
 
   /** Reopen a written index ONLY if its manifest proves it complete,
     * current, and built from the caller's `source` — metadata-sized
     * validation, zero build jobs on a hit. */
   def loadIfValid(spark: SparkSession, path: String,
-      source: String): Option[InvertedIndex] = {
-    val mPath = manifestPath(path)
-    try {
-      val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(mPath)) return None
-      val props = new java.util.Properties()
-      val in = fs.open(mPath)
-      try props.load(in) finally in.close()
-      def field(k: String) = Option(props.getProperty(k))
-      if (!field("version").contains(ManifestVersion) ||
-        !field("source").contains(source)) return None
-      val idx = load(spark, path)
-      val valid =
-        field("postRows").exists(_.toLong == idx.postings.count()) &&
-          field("termRows").exists(_.toLong == idx.terms.count()) &&
-          field("tombRows").map(_.toLong).getOrElse(0L) ==
-            tombstoneCount(spark, path)
-      if (valid) Some(idx) else None
-    } catch {
-      case scala.util.control.NonFatal(_) => None
+      source: String): Option[InvertedIndex] =
+    Manifest.reopen(spark, path, Format, source) { m =>
+      val idx = open(spark, path, m)
+      Some(idx).filter(_ => m.counts("postRows", idx.postings) &&
+        m.counts("termRows", idx.terms))
     }
-  }
 
   /** Reopen a written index: lazy partitioned scans + manifest scalars
     * (+ the pending-tombstone list when excisions await compaction). */
-  def load(spark: SparkSession, path: String): InvertedIndex = {
-    val props = new java.util.Properties()
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(mPath)
-    try props.load(in) finally in.close()
-    val tombRows = Option(props.getProperty("tombRows")).map(_.toLong).getOrElse(0L)
+  def load(spark: SparkSession, path: String): InvertedIndex =
+    open(spark, path, Manifest.read(spark, path))
+
+  private def open(spark: SparkSession, path: String, m: Manifest): InvertedIndex =
     new InvertedIndex(spark,
       spark.read.parquet(s"$path/postings"),
       spark.read.parquet(s"$path/terms"),
-      props.getProperty("idCol"),
-      props.getProperty("nDocs").toLong,
-      props.getProperty("nDl").toLong,
-      props.getProperty("sumDl").toLong,
-      props.getProperty("nBuckets").toInt,
-      if (tombRows > 0) Some(spark.read.parquet(s"$path/tombstones"))
-      else None)
-  }
+      m("idCol"), m.long("nDocs"), m.long("nDl"), m.long("sumDl"),
+      m.long("nBuckets").toInt, Manifest.pendingTombstones(spark, path, m))
 }

@@ -174,10 +174,15 @@ final class IvfIndex private (
     * indexed data (a path plus a file fingerprint, say); a later session
     * passing the same tag to [[IvfIndex.loadIfValid]] reopens the index
     * WITHOUT paying the build — the build-once / serve-many-sessions
-    * lifecycle a 100 TB index requires. The manifest is written LAST, so
-    * its presence marks a complete write (a crash mid-write leaves no
-    * manifest and the next session rebuilds). */
-  def write(path: String, source: String = ""): Unit = {
+    * lifecycle a 100 TB index requires (format and commit protocol:
+    * ARCHITECTURE.md "Durable artifacts"). */
+  def write(path: String, source: String = ""): Unit =
+    writeLedger(path, source, Set(source))
+
+  /** [[write]] with an explicit applied-sources ledger: [[IvfIndex.retrain]]
+    * stages its rebuild with the carried ledger already in the manifest. */
+  private[operators] def writeLedger(path: String, source: String,
+      ledger: Set[String]): Unit = {
     val spark = cells.sparkSession
     import spark.implicits._
     // rebuild IS the crash recovery: drop any lease a dead maintainer left
@@ -189,40 +194,20 @@ final class IvfIndex private (
     // metadata pass, not a data scan, at any scale (the zero-column
     // count(*) per cell partition is satisfied from file row counts)
     val sizes = IvfIndex.cellCounts(spark, path)
-    val rows = sizes.map(_._2).sum
-    val props = new java.util.Properties()
-    props.setProperty("version", IvfIndex.ManifestVersion)
-    props.setProperty("source", source)
-    props.setProperty("appliedSources", source)
-    props.setProperty("nCells", nCells.toString)
-    props.setProperty("rows", rows.toString)
-    props.setProperty("tombRows", "0")
-    props.setProperty("centroidSha", IvfIndex.centroidSha(centroids))
-    // build-time cell-balance snapshot: the baseline every later
-    // staleness() call compares against (appends preserve it verbatim)
-    props.setProperty("buildCellSizes", IvfIndex.formatSizes(sizes))
-    val mPath = IvfIndex.manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    // a rebuild at a path that previously carried pending excisions must
-    // not leave the stale tombstone list beside the fresh table
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-    val out = fs.create(mPath, true)
-    try props.store(out, "graft IVF inverted-file manifest")
-    finally out.close()
+    Manifest.writeBuilt(spark, path, IvfIndex.Format,
+      "source" -> source, Manifest.ledgerField(ledger), "nCells" -> nCells,
+      "rows" -> sizes.map(_._2).sum, "tombRows" -> 0,
+      "centroidSha" -> IvfIndex.centroidSha(centroids),
+      // build-time cell-balance snapshot: the baseline every later
+      // staleness() call compares against (appends preserve it verbatim)
+      "buildCellSizes" -> IvfIndex.formatSizes(sizes))
   }
 }
 
 object IvfIndex {
 
-  private val ManifestVersion = "1"
-
-  /** Separator for the appliedSources ledger (escape sequence, not a raw
-    * control byte, so the source file stays text for git): U+0001 cannot
-    * occur in a path-derived source tag. */
-  private val SourceSep = "\u0001"
-
-  private def manifestPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_MANIFEST.properties")
+  private val Format = Manifest.Format("1", "IVF index",
+    Seq("rows" -> "cells"), tombstones = true)
 
   /** Builds run this JVM — lets tests assert the load-without-rebuild
     * path really skipped the quantizer fit. */
@@ -251,41 +236,15 @@ object IvfIndex {
     * listing instead of the corpus-sampling quantizer fit and the full
     * partitioned rewrite. */
   def loadIfValid(spark: org.apache.spark.sql.SparkSession, path: String,
-      source: String): Option[IvfIndex] = {
-    val mPath = manifestPath(path)
-    try {
-      val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(mPath)) return None
-      val props = new java.util.Properties()
-      val in = fs.open(mPath)
-      try props.load(in) finally in.close()
-      def field(k: String) = Option(props.getProperty(k))
-      if (!field("version").contains(ManifestVersion) ||
-        !field("source").contains(source)) return None
-      val idx = load(spark, path)
-      val valid = field("nCells").contains(idx.nCells.toString) &&
-        field("centroidSha").contains(centroidSha(idx.centroids)) &&
+      source: String): Option[IvfIndex] =
+    Manifest.reopen(spark, path, Format, source) { m =>
+      val idx = open(spark, path, m)
+      Some(idx).filter(_ => m.get("nCells").contains(idx.nCells.toString) &&
+        m.get("centroidSha").contains(centroidSha(idx.centroids)) &&
         // PHYSICAL row count (the manifest commits physical facts; the
         // served idx.cells view already excludes pending tombstones)
-        field("rows").exists(_.toLong ==
-          spark.read.parquet(s"$path/cells").count()) &&
-        field("tombRows").map(_.toLong).getOrElse(0L) ==
-          tombstoneCount(spark, path)
-      if (valid) Some(idx) else None
-    } catch {
-      // an unreadable/corrupt index is a rebuild, never a crash
-      case scala.util.control.NonFatal(_) => None
+        m.counts("rows", spark.read.parquet(s"$path/cells")))
     }
-  }
-
-  /** Row count of the tombstone list — 0 when the dir does not exist
-    * (an index that never saw an excise). */
-  private def tombstoneCount(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) spark.read.parquet(s"$path/tombstones").count() else 0L
-  }
 
   /** Reopen an index [[IvfIndex#write]]ten as a cell-partitioned table.
     * The cells DataFrame is a lazy partitioned scan — nothing is cached;
@@ -297,25 +256,19 @@ object IvfIndex {
     * softCells, the [[IvfPq]] composition — excludes the excised vectors
     * while the probe's static partition filter still pushes down to the
     * scan beneath the anti-join. */
-  def load(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
+  def load(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex =
+    open(spark, path, Manifest.read(spark, path))
+
+  private def open(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: Manifest): IvfIndex = {
     val centroids = spark.read.parquet(s"$path/centroids").collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1).toSeq
     require(centroids.nonEmpty, s"no centroids found under $path")
     val raw = spark.read.parquet(s"$path/cells")
       .select("cell", "c_id", "cv", "cn")
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = new java.util.Properties()
-    val in = fs.open(mPath)
-    try props.load(in) finally in.close()
-    val tombRows = Option(props.getProperty("tombRows")).map(_.toLong).getOrElse(0L)
-    val cells =
-      if (tombRows > 0)
-        raw.join(spark.read.parquet(s"$path/tombstones"), Seq("c_id"),
-          "left_anti")
-      else raw
-    new IvfIndex(cells, centroids, centroids.size, fileBacked = true)
+    new IvfIndex(Manifest.withoutTombstones(spark, path, m, raw, "c_id"),
+      centroids, centroids.size, fileBacked = true)
   }
 
   /** Fit the coarse quantizer and declare the inverted file. The quantizer
@@ -430,75 +383,31 @@ object IvfIndex {
     * distribution moves, rebuild; the manifest's centroid checksum pins
     * which quantizer every row was assigned under either way.
     *
-    * IDEMPOTENT: the manifest keeps a ledger of every applied source tag,
-    * and a tag already in the ledger makes the call a no-op (returns
-    * false) — so the common failure, a crashed job RETRYING the same
-    * day's append, cannot silently duplicate vectors. A crash in the
-    * window between the data append and the manifest refresh is caught
-    * by the PRE-APPEND RECOUNT below: the table no longer matches the
-    * manifest's row count, so a retry (whose tag is not yet in the
-    * ledger) REFUSES instead of appending a second copy on top of the
-    * partial write and then counting the duplicates into a manifest that
-    * `loadIfValid` would validate. The operator's recovery for that
-    * refused state is a rebuild ([[build]] + [[IvfIndex#write]] —
-    * overwrite mode replaces the torn table). Returns true when the
-    * append was applied. */
+    * IDEMPOTENT and torn-state safe as every durable-artifact append
+    * (ARCHITECTURE.md "Durable artifacts"): a tag already in the ledger
+    * makes the call a no-op (false), so a crashed job RETRYING the same
+    * day's append cannot silently duplicate vectors; a crash between the
+    * data append and the manifest refresh leaves the table off the
+    * committed count, and the retry REFUSES instead of appending a second
+    * copy (recovery: [[build]] + [[IvfIndex#write]]). Returns true when
+    * the append was applied. */
   def appendTo(spark: org.apache.spark.sql.SparkSession, path: String,
       df: DataFrame, idCol: String, vecCol: String, newSource: String): Boolean =
-      WriterLease.withLease(spark, path) {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    val ledger = Option(prior.getProperty("appliedSources"))
-      .map(_.split(SourceSep).toSet)
-      .getOrElse(Set(prior.getProperty("source", "")))
-    if (ledger.contains(newSource)) return false // already applied: no-op
-    // partial-append guard: the table must still match the last committed
-    // manifest before new files land — a footer-stats recount, not a scan
-    val priorRows = Option(prior.getProperty("rows")).map(_.toLong).getOrElse(-1L)
-    val priorTomb = Option(prior.getProperty("tombRows")).map(_.toLong).getOrElse(0L)
-    val currentRows = spark.read.parquet(s"$path/cells").count()
-    require(currentRows == priorRows && tombstoneCount(spark, path) == priorTomb,
-      s"index at $path has $currentRows rows but its manifest committed " +
-        s"$priorRows — a previous append or excise crashed mid-write; " +
-        "rebuild the index instead of appending onto a torn table")
-    // an appended id matching a pending tombstone would be served DEAD
-    // (see InvertedIndex.appendTo) — refuse; compact first, then re-ingest
-    if (priorTomb > 0) {
-      val collisions = df.select(col(idCol).as("c_id"))
-        .join(spark.read.parquet(s"$path/tombstones"), Seq("c_id"), "left_semi")
-        .count()
-      require(collisions == 0,
-        s"$collisions appended ids collide with pending tombstones at " +
-          s"$path — compact the index before re-ingesting those ids")
+    Manifest.applyBatch(spark, path, Format, "appending", newSource) { prior =>
+      // an appended id matching a pending tombstone would be served DEAD
+      Manifest.refuseTombstoned(spark, path, prior,
+        df.select(col(idCol).as("c_id")), "c_id")
+      val idx = open(spark, path, prior)
+      val base = df.select(col(idCol).as("c_id"), col(vecCol).as("cv"))
+        .withColumn("cn", vec_l2norm(col("cv")))
+      assignCells(base, idx.centroids)
+        .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
+      // same centroids, new row count + source + ledger; pending
+      // excisions and the BUILD-TIME cell snapshot carry over verbatim —
+      // it is the staleness() baseline, not a description of the table
+      Manifest.write(spark, path, Format, prior.applying(newSource,
+        "rows" -> spark.read.parquet(s"$path/cells").count()))
     }
-    val idx = load(spark, path)
-    val base = df.select(col(idCol).as("c_id"), col(vecCol).as("cv"))
-      .withColumn("cn", vec_l2norm(col("cv")))
-    assignCells(base, idx.centroids)
-      .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
-    // manifest refresh: same centroids, new row count + source + ledger;
-    // the BUILD-TIME cell snapshot is preserved verbatim — it is the
-    // staleness() baseline, not a description of the current table
-    val rows = spark.read.parquet(s"$path/cells").count()
-    val props = new java.util.Properties()
-    props.setProperty("version", ManifestVersion)
-    props.setProperty("source", newSource)
-    props.setProperty("appliedSources", (ledger + newSource).toSeq.sorted.mkString(SourceSep))
-    props.setProperty("nCells", idx.nCells.toString)
-    props.setProperty("rows", rows.toString)
-    // pending excisions survive an append verbatim
-    props.setProperty("tombRows", priorTomb.toString)
-    props.setProperty("centroidSha", centroidSha(idx.centroids))
-    Option(prior.getProperty("buildCellSizes"))
-      .foreach(props.setProperty("buildCellSizes", _))
-    val out = fs.create(mPath, true)
-    try props.store(out, "graft IVF inverted-file manifest")
-    finally out.close()
-    true
-  }
 
   /** EXCISE: remove vectors from a written index — the takedown /
     * opt-out lifecycle ([[InvertedIndex.excise]]'s vector twin),
@@ -513,129 +422,30 @@ object IvfIndex {
     * IVF serving is pure geometry over the surviving rows.
     *
     * `ids` is a single-column DataFrame of the excised ids (named
-    * `idCol`). IDEMPOTENT via the applied-sources ledger (replayed tag →
-    * no-op, false); torn states are detected by recount and REFUSED.
-    * Writer contract as for append. */
+    * `idCol`). Ledgered and torn-state refused as [[appendTo]]. */
   def excise(spark: org.apache.spark.sql.SparkSession, path: String,
       ids: DataFrame, idCol: String, newSource: String): Boolean =
-      WriterLease.withLease(spark, path) {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    require(Option(prior.getProperty("version")).contains(ManifestVersion),
-      s"index at $path has manifest version ${prior.getProperty("version")}; " +
-        s"this excisor understands only $ManifestVersion")
-    val ledger = Option(prior.getProperty("appliedSources"))
-      .map(_.split(SourceSep).toSet)
-      .getOrElse(Set(prior.getProperty("source", "")))
-    if (ledger.contains(newSource)) return false // already applied: no-op
-    val priorRows = Option(prior.getProperty("rows")).map(_.toLong).getOrElse(-1L)
-    val priorTomb = Option(prior.getProperty("tombRows")).map(_.toLong).getOrElse(0L)
-    require(spark.read.parquet(s"$path/cells").count() == priorRows &&
-      tombstoneCount(spark, path) == priorTomb,
-      s"index at $path does not match its committed manifest — a previous " +
-        "append or excise crashed mid-write; rebuild instead of excising")
-    // tombstones FIRST: a crash after this append is caught by the
-    // recount (tombRows off the committed manifest) and refused as torn
-    ids.select(col(idCol).as("c_id")).write.mode("append")
-      .parquet(s"$path/tombstones")
-    val tombRows = spark.read.parquet(s"$path/tombstones").count()
-    prior.setProperty("source", newSource)
-    prior.setProperty("appliedSources",
-      (ledger + newSource).toSeq.sorted.mkString(SourceSep))
-    prior.setProperty("tombRows", tombRows.toString)
-    val out = fs.create(mPath, true)
-    try prior.store(out, "graft IVF inverted-file manifest")
-    finally out.close()
-    true
-  }
+    Manifest.excise(spark, path, Format, ids.select(col(idCol).as("c_id")),
+      newSource)
 
   /** OPTIMIZE: rewrite the fragmented cells table of a written index
     * into one file per cell — the [[InvertedIndex.compact]] step for the
     * inverted file — AND physically drop any rows tombstoned by
     * [[excise]] (the rewrite happens anyway; folding the deletes in
     * means excision never pays a corpus-sized pass of its own). Every
-    * [[appendTo]] batch appends one parquet file per touched cell, so
-    * after many daily batches a probe opens one small file per append
-    * per probed cell; compaction repartitions the SURVIVING cells by the
-    * partition key into a STAGED directory (one task — one file — per
-    * cell) and swaps it in by rename. With no pending tombstones the
-    * manifest needs NO change (rows, centroid fingerprint, ledger, and
-    * the build-time balance snapshot are all layout-invariant); with
-    * tombstones the new physical count and the cleared list commit LAST,
-    * so any crash window leaves counts off the manifest — refused
-    * everywhere. The staged table is RECOUNTED before the swap, a torn
-    * live table refuses compaction outright, and a crash between the
-    * renames leaves a missing table every later recount refuses. Writer
-    * contract as for append: one maintainer at a time, no live readers
-    * across the swap. */
+    * [[appendTo]] batch appends one parquet file per touched cell;
+    * compaction repartitions the SURVIVING cells by the partition key
+    * (one task — one file — per cell) through [[Manifest.compact]]:
+    * staged, recounted before the swap, committed last. */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-      WriterLease.withLease(spark, path) {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    require(Option(prior.getProperty("version")).contains(ManifestVersion),
-      s"index at $path has manifest version ${prior.getProperty("version")}; " +
-        s"this compactor understands only $ManifestVersion")
-    val rows = Option(prior.getProperty("rows")).map(_.toLong).getOrElse(-1L)
-    val tombRows = Option(prior.getProperty("tombRows")).map(_.toLong).getOrElse(0L)
-    require(spark.read.parquet(s"$path/cells").count() == rows &&
-      tombstoneCount(spark, path) == tombRows,
-      s"index at $path does not match its committed manifest — a previous " +
-        "append, excise, or compact crashed mid-write; rebuild instead of " +
-        "compacting")
-    val live = spark.read.parquet(s"$path/cells")
-    val (survivors, expectRows) =
-      if (tombRows == 0) (live, rows)
-      else {
-        val tomb = spark.read.parquet(s"$path/tombstones")
-        val dropped = live.join(tomb, Seq("c_id"), "left_semi").count()
-        (live.join(tomb, Seq("c_id"), "left_anti"), rows - dropped)
-      }
-    val staging = s"$path/cells-next"
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    fs.delete(stagingPath, true) // leftover from a crashed prior compact
-    survivors
-      .repartition(col("cell"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("cell").parquet(staging)
-    require(spark.read.parquet(staging).count() == expectRows,
-      s"staged compaction at $staging lost rows — refusing the swap")
-    val livePath = new org.apache.hadoop.fs.Path(s"$path/cells")
-    val oldPath = new org.apache.hadoop.fs.Path(s"$path/cells-old")
-    fs.delete(oldPath, true)
-    require(fs.rename(livePath, oldPath), s"could not move $livePath aside")
-    require(fs.rename(stagingPath, livePath),
-      s"could not rename $stagingPath into place")
-    fs.delete(oldPath, true)
-    if (tombRows > 0) {
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-      prior.setProperty("rows", expectRows.toString)
-      prior.setProperty("tombRows", "0")
-      val out = fs.create(mPath, true)
-      try prior.store(out, "graft IVF inverted-file manifest")
-      finally out.close()
+    Manifest.compact(spark, path, Format, "cells", "rows", _ => "c_id") {
+      (survivors, staging) =>
+        survivors
+          .repartition(col("cell"))
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "static")
+          .partitionBy("cell").parquet(staging)
     }
-  }
-
-  /** Data-file count of a written index's cells table — the observable
-    * [[compact]] shrinks. */
-  def cellsFileCount(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/cells")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val it = fs.listFiles(p, true)
-    var n = 0
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-    }
-    n
-  }
 
   /** (cell, rows) of the written cells table — a zero-data-column count
     * per partition, satisfied from parquet file row counts (metadata). */
@@ -672,16 +482,12 @@ object IvfIndex {
     * quantizer — either way the operator's move is [[retrain]]. */
   def staleness(spark: org.apache.spark.sql.SparkSession, path: String,
       skewGrowth: Double = 2.0, appendedFrac: Double = 0.5): DriftReport = {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = new java.util.Properties()
-    val in = fs.open(mPath)
-    try props.load(in) finally in.close()
-    val buildSizes = parseSizes(Option(props.getProperty("buildCellSizes"))
+    val props = Manifest.read(spark, path)
+    val buildSizes = parseSizes(props.get("buildCellSizes")
       .getOrElse(sys.error(s"manifest at $path predates buildCellSizes — " +
         "rewrite the index to enable drift tracking")))
     val nowSizes = cellCounts(spark, path)
-    val nCells = props.getProperty("nCells").toInt
+    val nCells = props.long("nCells").toInt
     def skew(sizes: Seq[(Int, Long)]): Double = {
       val total = sizes.map(_._2).sum.toDouble
       if (total == 0) 1.0 else sizes.map(_._2).max / (total / nCells)
@@ -716,47 +522,24 @@ object IvfIndex {
   }
 
   /** Rebuild the index under a FRESH quantizer fitted to everything the
-    * table now holds, and atomically swap it in — the recovery move when
-    * [[staleness]] flags drift. The new index is written to a staging
-    * directory first (the current table keeps serving reads throughout
-    * the rebuild — build's bounded sample and the assignment scan read
-    * the live table, the partitioned rewrite lands in staging), then
-    * swapped via delete + rename with the manifest already inside; the
-    * applied-sources ledger is CARRIED OVER (plus `newSource`), so a
-    * late retry of any pre-retrain batch is still refused. A crash
-    * between delete and rename leaves no manifest at `path` — detected,
-    * and the staging dir still holds the complete rebuild. */
+    * table now holds, and swap it in — the recovery move when
+    * [[staleness]] flags drift. The new index is staged at `path-next`
+    * (the current table keeps serving reads throughout the rebuild —
+    * build's bounded sample and the assignment scan read the live table)
+    * with the applied-sources ledger CARRIED OVER (plus `newSource`) in
+    * its manifest, so a late retry of any pre-retrain batch is still
+    * refused, and swapped by [[Manifest.commitStaged]]: a crash between
+    * its two renames is adopted by the next [[loadIfValid]]. */
   def retrain(spark: org.apache.spark.sql.SparkSession, path: String,
       nCells: Int, newSource: String, seed: Long = 42L, maxIter: Int = 10,
       sampleSize: Int = 4096): IvfIndex =
       WriterLease.withLease(spark, path) {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    val ledger = Option(prior.getProperty("appliedSources"))
-      .map(_.split(SourceSep).toSet)
-      .getOrElse(Set(prior.getProperty("source", "")))
-    val staging = s"$path.retrain"
+    val ledger = Manifest.readLive(spark, path, Format, "retraining").ledger
     val current = load(spark, path).cells.select("c_id", "cv")
     val rebuilt = build(current, "c_id", "cv", nCells, seed, maxIter, sampleSize)
-    try {
-      rebuilt.write(staging, source = newSource)
-      // carry the pre-retrain ledger into the fresh manifest
-      val sPath = manifestPath(staging)
-      val sProps = new java.util.Properties()
-      val sIn = fs.open(sPath)
-      try sProps.load(sIn) finally sIn.close()
-      sProps.setProperty("appliedSources",
-        (ledger + newSource).toSeq.sorted.mkString(SourceSep))
-      val sOut = fs.create(sPath, true)
-      try sProps.store(sOut, "graft IVF inverted-file manifest")
-      finally sOut.close()
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      require(fs.rename(new org.apache.hadoop.fs.Path(staging),
-        new org.apache.hadoop.fs.Path(path)), s"rename $staging -> $path failed")
-    } finally rebuilt.close()
+    try Manifest.commitStaged(spark, path)(
+      rebuilt.writeLedger(_, newSource, ledger + newSource))
+    finally rebuilt.close()
     load(spark, path)
   }
 

@@ -28,11 +28,12 @@ import org.apache.spark.sql.functions._
   * surprise mass is an exact order-free decimal(38,0) sum and one
   * truncating division (the diversity-report rule-9 discipline).
   *
-  * The durable form (`write`/`loadIfValid`) follows the [[BigramLm]]
-  * manifest contract: build-once / serve-many-sessions, reopen validated
-  * by metadata only (version, source tag, row counts), zero training
-  * jobs on a hit — MarkovModelSpec asserts the skip, and the
-  * `markov_model_persisted` driver row pins reopen == in-session.
+  * The durable form (`write`/`loadIfValid`) is a durable artifact
+  * (ARCHITECTURE.md "Durable artifacts"): build-once /
+  * serve-many-sessions, reopen validated by metadata only (version,
+  * source tag, row counts), zero training jobs on a hit —
+  * MarkovModelSpec asserts the skip, and the `markov_model_persisted`
+  * driver row pins reopen == in-session.
   */
 final class MarkovModel private[operators] (
     /** (from_type, to_type, n) transition-class counts. */
@@ -79,10 +80,9 @@ final class MarkovModel private[operators] (
         expr("CAST((-s) DIV n_transitions AS BIGINT)")
           .as("surprise_micro_avg"))
 
-  /** Durable form: counts + totals tables and a validation manifest
-    * (the [[BigramLm.write]] contract). Matrix-sized tables coalesce to
-    * one file each — the model is small by construction even when the
-    * training corpus is not. */
+  /** Durable form: counts + totals tables and a manifest. Matrix-sized
+    * tables coalesce to one file each — the model is small by
+    * construction even when the training corpus is not. */
   def write(path: String, source: String = ""): Unit = {
     val spark = counts.sparkSession
     // rebuild IS the crash recovery: drop any lease a dead maintainer left
@@ -90,18 +90,9 @@ final class MarkovModel private[operators] (
     counts.coalesce(1).write.mode("overwrite").parquet(s"$path/counts")
     totals.coalesce(1).write.mode("overwrite").parquet(s"$path/totals")
     // footer-stats counts of what was just written — metadata, not a scan
-    val countRows = spark.read.parquet(s"$path/counts").count()
-    val totalRows = spark.read.parquet(s"$path/totals").count()
-    val props = new java.util.Properties()
-    props.setProperty("version", MarkovModel.ManifestVersion)
-    props.setProperty("source", source)
-    props.setProperty("countRows", countRows.toString)
-    props.setProperty("totalRows", totalRows.toString)
-    val mPath = MarkovModel.manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mPath, true)
-    try props.store(out, "graft markov-model manifest")
-    finally out.close()
+    Manifest.writeBuilt(spark, path, MarkovModel.Format, "source" -> source,
+      "countRows" -> spark.read.parquet(s"$path/counts").count(),
+      "totalRows" -> spark.read.parquet(s"$path/totals").count())
   }
 }
 
@@ -113,10 +104,8 @@ object MarkovModel {
     * unchanged. */
   private[graft] def trainCount: Int = trainsRun.get
 
-  private val ManifestVersion = "1"
-
-  private def manifestPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_MANIFEST.properties")
+  private val Format = Manifest.Format("1", "markov model",
+    Seq("countRows" -> "counts", "totalRows" -> "totals"))
 
   /** The ONE corpus-scale pass of the family: per-entity transition
     * pairs (idCol, from_type, to_type) via a single `lead()` window
@@ -148,9 +137,6 @@ object MarkovModel {
     new MarkovModel(counts, totals)
   }
 
-  /** Ledger separator - same escape-sequence convention as IvfIndex. */
-  private val SourceSep = ""
-
   /** Incrementally fold a new batch of transition PAIRS into a written
     * model — the daily-events lifecycle ([[InvertedIndex.appendTo]]
     * semantics): transition-class counts are ADDITIVE over any
@@ -168,28 +154,20 @@ object MarkovModel {
     * beside the live one and swapped in by two directory renames: a
     * crash before the swap leaves the OLD model fully valid (the staged
     * dir is an invisible orphan, deleted on retry); a crash between the
-    * renames leaves NO model directory, which every reopen refuses
-    * (rebuild is the documented recovery). Returns false (no-op) when
-    * `newSource` is already in the ledger — a crashed job's retry can
-    * never double-count a batch. Writer contract as for the index
-    * family: one appender at a time, no live readers across the swap. */
+    * renames is adopted by the next [[loadIfValid]]
+    * ([[Manifest.commitStaged]]). Returns false (no-op) when `newSource`
+    * is already in the ledger — a crashed job's retry can never
+    * double-count a batch. Writer contract as for the index family: one
+    * appender at a time, no live readers across the swap. */
   def appendTo(spark: SparkSession, path: String, pairs: DataFrame,
       newSource: String): Boolean =
-      WriterLease.withLease(spark, path) {
-    val (prior, ledger) = readPrior(spark, path, op = "appending")
-    // ledger no-op BEFORE the recount: a replayed already-applied tag
-    // must return false even on an artifact a LATER op tore (the
-    // idempotent-retry contract a takedown/ingest queue replays
-    // against), and a healthy replay must not pay two count jobs
-    if (ledger.contains(newSource)) return false // already applied: no-op
-    requireIntact(spark, path, prior, op = "appending")
+      Manifest.applyBatch(spark, path, Format, "appending", newSource) { prior =>
     val delta = pairs.groupBy("from_type", "to_type")
       .agg(count(lit(1)).as("n"))
     val merged = spark.read.parquet(s"$path/counts")
       .unionByName(delta)
       .groupBy("from_type", "to_type").agg(sum("n").cast("long").as("n"))
-    stageAndSwap(spark, path, merged, ledger + newSource, newSource)
-    true
+    stageAndSwap(spark, path, prior.applying(newSource), merged)
   }
 
   /** EXACT UNLEARNING for the additive-count family — subtract an
@@ -220,10 +198,7 @@ object MarkovModel {
     * [[appendTo]]'s, via the shared commit. */
   def exciseFrom(spark: SparkSession, path: String, pairs: DataFrame,
       newSource: String): Boolean =
-      WriterLease.withLease(spark, path) {
-    val (prior, ledger) = readPrior(spark, path, op = "excising")
-    if (ledger.contains(newSource)) return false // already applied: no-op
-    requireIntact(spark, path, prior, op = "excising")
+      Manifest.applyBatch(spark, path, Format, "excising", newSource) { prior =>
     val delta = pairs.groupBy("from_type", "to_type")
       .agg(count(lit(1)).as("dn"))
     val live = spark.read.parquet(s"$path/counts")
@@ -241,115 +216,41 @@ object MarkovModel {
         s"was trained on ($unseen unseen transition classes, $negative " +
         "over-subtracted) — a count model cannot unlearn data it never " +
         "learned; rebuild over the survivors instead")
-    stageAndSwap(spark, path, merged.filter(col("n") > 0),
-      ledger + newSource, newSource)
-    true
-  }
-
-  /** Read the live manifest for a maintenance op: version understood,
-    * ledger parsed. Metadata only — the torn-table recount is the
-    * separate [[requireIntact]], run AFTER the caller's ledger no-op
-    * check (a replayed tag must no-op without paying count jobs, and
-    * must no-op even on an artifact a LATER op tore). */
-  private def readPrior(spark: SparkSession, path: String,
-      op: String): (java.util.Properties, Set[String]) = {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    def field(k: String) = Option(prior.getProperty(k))
-    require(field("version").contains(ManifestVersion),
-      s"markov model at $path has manifest version " +
-        s"${field("version").getOrElse("<none>")}; this maintainer " +
-        s"understands only $ManifestVersion — rebuild instead of $op")
-    val ledger = field("appliedSources")
-      .map(_.split(SourceSep).toSet)
-      .getOrElse(Set(prior.getProperty("source", "")))
-    (prior, ledger)
-  }
-
-  /** Torn-state refusal: counts/totals row counts must match the
-    * committed manifest (a previous append/excise crashed mid-write —
-    * rebuild is the recovery). */
-  private def requireIntact(spark: SparkSession, path: String,
-      prior: java.util.Properties, op: String): Unit = {
-    def field(k: String) = Option(prior.getProperty(k))
-    require(
-      spark.read.parquet(s"$path/counts").count() ==
-        field("countRows").map(_.toLong).getOrElse(-1L) &&
-        spark.read.parquet(s"$path/totals").count() ==
-          field("totalRows").map(_.toLong).getOrElse(-1L),
-      s"markov model at $path does not match its committed manifest — " +
-        s"a previous append or excise crashed mid-write; rebuild instead of $op")
+    stageAndSwap(spark, path, prior.applying(newSource),
+      merged.filter(col("n") > 0))
   }
 
   /** Stage the WHOLE next model (merged counts, totals re-derived from
     * the staged counts so the two tables can never disagree, manifest
-    * LAST) beside the live one and swap it in by two directory renames —
-    * the shared crash-safe commit of [[appendTo]] and [[exciseFrom]]
-    * (see appendTo's scaladoc for why the swap must be whole-directory:
-    * a merge can change count VALUES without changing row counts, so
-    * per-table recounts cannot catch a crash that landed one table). */
+    * LAST) and swap it in — the shared crash-safe commit of [[appendTo]]
+    * and [[exciseFrom]] (see appendTo's scaladoc for why the swap must be
+    * whole-directory: a merge can change count VALUES without changing
+    * row counts, so per-table recounts cannot catch a crash that landed
+    * one table). */
   private def stageAndSwap(spark: SparkSession, path: String,
-      mergedCounts: DataFrame, sources: Set[String],
-      newSource: String): Unit = {
-    val fs = manifestPath(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val next = s"$path-next"
-    val nextPath = new org.apache.hadoop.fs.Path(next)
-    fs.delete(nextPath, true) // orphan from a crashed prior maintenance
-    mergedCounts.coalesce(1).write.mode("overwrite").parquet(s"$next/counts")
-    // totals from the STAGED merged counts — one consistent derivation
-    spark.read.parquet(s"$next/counts")
-      .groupBy("from_type").agg(sum("n").cast("long").as("n_from"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$next/totals")
-    val countRows = spark.read.parquet(s"$next/counts").count()
-    val totalRows = spark.read.parquet(s"$next/totals").count()
-    val props = new java.util.Properties()
-    props.setProperty("version", ManifestVersion)
-    props.setProperty("source", newSource)
-    props.setProperty("appliedSources",
-      sources.toSeq.sorted.mkString(SourceSep))
-    props.setProperty("countRows", countRows.toString)
-    props.setProperty("totalRows", totalRows.toString)
-    // staged manifest LAST: its presence marks the staged model complete
-    val nOut = fs.create(manifestPath(next), true)
-    try props.store(nOut, "graft markov-model manifest")
-    finally nOut.close()
-    // directory swap: old aside, next into place, drop old — the shared
-    // commit tail, so the adopt-orphan crash contract can never drift
-    WriterLease.swapStaged(fs, path)
-  }
+      next: Manifest, mergedCounts: DataFrame): Unit =
+    Manifest.commitStaged(spark, path) { staged =>
+      mergedCounts.coalesce(1).write.mode("overwrite").parquet(s"$staged/counts")
+      // totals from the STAGED merged counts — one consistent derivation
+      spark.read.parquet(s"$staged/counts")
+        .groupBy("from_type").agg(sum("n").cast("long").as("n_from"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$staged/totals")
+      Manifest.write(spark, staged, Format, next ++ Seq(
+        "countRows" -> spark.read.parquet(s"$staged/counts").count(),
+        "totalRows" -> spark.read.parquet(s"$staged/totals").count()))
+    }
 
   /** Reopen a written model ONLY if its manifest proves it complete,
     * current, and trained from the caller's `source` — metadata-sized
     * validation (the row counts it checks are matrix-sized footer
     * stats), zero training jobs on a hit. */
   def loadIfValid(spark: SparkSession, path: String,
-      source: String): Option[MarkovModel] = {
-    val mPath = manifestPath(path)
-    try {
-      val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-      // a crash between stageAndSwap's two renames leaves the complete
-      // next beside an empty live path — adopt it (cheaper than even
-      // this family's metadata-sized rebuild, and uniform with the LMs)
-      if (!fs.exists(mPath) &&
-        !WriterLease.adoptOrphanNext(spark, path)) return None
-      val props = new java.util.Properties()
-      val in = fs.open(mPath)
-      try props.load(in) finally in.close()
-      def field(k: String) = Option(props.getProperty(k))
-      if (!field("version").contains(ManifestVersion) ||
-        !field("source").contains(source)) return None
+      source: String): Option[MarkovModel] =
+    Manifest.reopen(spark, path, Format, source) { mf =>
       val m = load(spark, path)
-      val valid = field("countRows").exists(_.toLong == m.counts.count()) &&
-        field("totalRows").exists(_.toLong == m.totals.count())
-      if (valid) Some(m) else None
-    } catch {
-      case scala.util.control.NonFatal(_) => None
+      Some(m).filter(_ => mf.counts("countRows", m.counts) &&
+        mf.counts("totalRows", m.totals))
     }
-  }
 
   /** Reopen a written model: two lazy matrix-sized parquet scans. */
   def load(spark: SparkSession, path: String): MarkovModel =

@@ -47,9 +47,16 @@ final class PqIndex private (
 
   def close(): Unit = codes.unpersist()
 
-  /** Durable form: codes table + codebook sidecar + validation manifest
-    * (build-once / serve-many-sessions, like [[IvfIndex.write]]). */
-  def write(path: String, source: String = ""): Unit = {
+  /** Durable form: codes table + codebook sidecar + manifest
+    * (build-once / serve-many-sessions, like [[IvfIndex.write]]; the
+    * format is ARCHITECTURE.md "Durable artifacts"). */
+  def write(path: String, source: String = ""): Unit =
+    writeLedger(path, source, Set(source))
+
+  /** [[write]] with an explicit applied-sources ledger: [[PqIndex.retrain]]
+    * stages its rebuild with the carried ledger already in the manifest. */
+  private[operators] def writeLedger(path: String, source: String,
+      ledger: Set[String]): Unit = {
     val spark = codes.sparkSession
     import spark.implicits._
     // rebuild IS the crash recovery: drop any lease a dead maintainer left
@@ -61,29 +68,15 @@ final class PqIndex private (
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
     // footer-stats count of what was just written — metadata, not a scan
     val rows = spark.read.parquet(s"$path/codes").count()
-    val props = new java.util.Properties()
-    props.setProperty("version", PqIndex.ManifestVersion)
-    props.setProperty("source", source)
-    props.setProperty("appliedSources", source)
-    props.setProperty("m", m.toString)
-    props.setProperty("ksub", ksub.toString)
-    props.setProperty("rows", rows.toString)
-    props.setProperty("tombRows", "0")
-    props.setProperty("codebookSha", PqIndex.codebookSha(codebook))
-    // build-time staleness baselines (appends preserve both verbatim):
-    // quantization error of the frozen codebook on a bounded sample of
-    // the indexed population, and the population size it was fitted for
-    props.setProperty("buildMse",
-      PqIndex.sampleMse(spark.read.parquet(s"$path/codes"), codebook).toString)
-    props.setProperty("buildRows", rows.toString)
-    val mPath = PqIndex.manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    // a rebuild at a path that previously carried pending excisions must
-    // not leave the stale tombstone list beside the fresh table
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-    val out = fs.create(mPath, true)
-    try props.store(out, "graft PQ index manifest")
-    finally out.close()
+    Manifest.writeBuilt(spark, path, PqIndex.Format,
+      "source" -> source, Manifest.ledgerField(ledger), "m" -> m,
+      "ksub" -> ksub, "rows" -> rows, "tombRows" -> 0,
+      "codebookSha" -> PqIndex.codebookSha(codebook),
+      // build-time staleness baselines (appends preserve both verbatim):
+      // quantization error of the frozen codebook on a bounded sample of
+      // the indexed population, and the population size it was fitted for
+      "buildMse" -> PqIndex.sampleMse(spark.read.parquet(s"$path/codes"), codebook),
+      "buildRows" -> rows)
   }
 
   /** ADC lookup table for one query: lut(j*ksub + c) = <q_sub_j, cb(j)(c)>,
@@ -178,15 +171,8 @@ object PqIndex {
   private val buildsRun = new java.util.concurrent.atomic.AtomicInteger(0)
   private[graft] def buildCount: Int = buildsRun.get
 
-  private val ManifestVersion = "1"
-
-  /** Separator for the appliedSources ledger (escape sequence, not a raw
-    * control byte, so the source file stays text for git): U+0001 cannot
-    * occur in a path-derived source tag. */
-  private val SourceSep = "\u0001"
-
-  private def manifestPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_MANIFEST.properties")
+  private val Format = Manifest.Format("1", "PQ index",
+    Seq("rows" -> "codes"), tombstones = true)
 
   /** Order-independent fingerprint of the codebook (subspace, centroid
     * ids + exact double bits). */
@@ -215,32 +201,16 @@ object PqIndex {
     * lifecycle: a valid hit skips the codebook fit AND the corpus encode
     * pass entirely. */
   def loadIfValid(spark: org.apache.spark.sql.SparkSession, path: String,
-      source: String): Option[PqIndex] = {
-    val mPath = manifestPath(path)
-    try {
-      val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(mPath)) return None
-      val props = new java.util.Properties()
-      val in = fs.open(mPath)
-      try props.load(in) finally in.close()
-      def field(k: String) = Option(props.getProperty(k))
-      if (!field("version").contains(ManifestVersion) ||
-        !field("source").contains(source)) return None
-      val idx = load(spark, path)
-      val valid = field("m").contains(idx.m.toString) &&
-        field("ksub").contains(idx.ksub.toString) &&
-        field("codebookSha").contains(codebookSha(idx.codebook)) &&
+      source: String): Option[PqIndex] =
+    Manifest.reopen(spark, path, Format, source) { mf =>
+      val idx = open(spark, path, mf)
+      Some(idx).filter(_ => mf.get("m").contains(idx.m.toString) &&
+        mf.get("ksub").contains(idx.ksub.toString) &&
+        mf.get("codebookSha").contains(codebookSha(idx.codebook)) &&
         // PHYSICAL row count (the served idx.codes view already excludes
         // pending tombstones)
-        field("rows").exists(_.toLong ==
-          spark.read.parquet(s"$path/codes").count()) &&
-        field("tombRows").map(_.toLong).getOrElse(0L) ==
-          tombstoneCount(spark, path)
-      if (valid) Some(idx) else None
-    } catch {
-      case scala.util.control.NonFatal(_) => None
+        mf.counts("rows", spark.read.parquet(s"$path/codes")))
     }
-  }
 
   /** In-session index under a CALLER-FROZEN codebook — no k-means fit,
     * no sample job, no persist: one lazy encode scan through the
@@ -267,84 +237,26 @@ object PqIndex {
     * keep the composed [[IvfPq]] path serving daily arrivals with one
     * scan of the new data. Codebook drift is the operator's rebuild
     * call; the manifest's codebook checksum pins what every code was
-    * encoded under.
-    *
-    * IDEMPOTENT: the manifest keeps a ledger of every applied source tag
-    * and an already-applied tag makes the call a no-op (returns false) —
-    * a crashed-job retry of the same batch cannot silently duplicate
-    * codes. A crash between the data append and the manifest refresh is
-    * caught by the PRE-APPEND RECOUNT: a retry (tag not yet in the
-    * ledger) finds the codes table off the manifest's committed count
-    * and REFUSES, instead of stacking a second copy on the partial write
-    * and validating the duplicates into the refreshed manifest. Recovery
-    * is a rebuild (overwrite replaces the torn table). Returns true when
-    * applied. */
+    * encoded under. Ledgered, recounted and tombstone-checked as every
+    * durable-artifact append (ARCHITECTURE.md "Durable artifacts"):
+    * returns false for an already-applied tag, refuses a torn table
+    * (recovery is a rebuild). Returns true when applied. */
   def appendTo(spark: org.apache.spark.sql.SparkSession, path: String,
       df: DataFrame, idCol: String, vecCol: String, newSource: String): Boolean =
-      WriterLease.withLease(spark, path) {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    val ledger = Option(prior.getProperty("appliedSources"))
-      .map(_.split(SourceSep).toSet)
-      .getOrElse(Set(prior.getProperty("source", "")))
-    if (ledger.contains(newSource)) return false // already applied: no-op
-    // partial-append guard: refuse when the table no longer matches the
-    // last committed manifest (footer-stats recount, not a data scan)
-    val priorRows = Option(prior.getProperty("rows")).map(_.toLong).getOrElse(-1L)
-    val priorTomb = Option(prior.getProperty("tombRows")).map(_.toLong).getOrElse(0L)
-    val currentRows = spark.read.parquet(s"$path/codes").count()
-    require(currentRows == priorRows && tombstoneCount(spark, path) == priorTomb,
-      s"index at $path has $currentRows rows but its manifest committed " +
-        s"$priorRows — a previous append or excise crashed mid-write; " +
-        "rebuild the index instead of appending onto a torn table")
-    // an appended id matching a pending tombstone would be served DEAD
-    // (see InvertedIndex.appendTo) — refuse; compact first, then re-ingest
-    if (priorTomb > 0) {
-      val collisions = df.select(col(idCol).as("c_id"))
-        .join(spark.read.parquet(s"$path/tombstones"), Seq("c_id"), "left_semi")
-        .count()
-      require(collisions == 0,
-        s"$collisions appended ids collide with pending tombstones at " +
-          s"$path — compact the index before re-ingesting those ids")
+    Manifest.applyBatch(spark, path, Format, "appending", newSource) { prior =>
+      // an appended id matching a pending tombstone would be served DEAD
+      Manifest.refuseTombstoned(spark, path, prior,
+        df.select(col(idCol).as("c_id")), "c_id")
+      val idx = open(spark, path, prior)
+      df.select(col(idCol).as("c_id"), col(vecCol).as("cv"))
+        .withColumn("cn", vec_l2norm(col("cv")))
+        .withColumn("code", pq_encode(col("cv"), idx.codebook))
+        .write.mode("append").parquet(s"$path/codes")
+      // codebook fields, pending excisions and the BUILD-time staleness
+      // baselines carry over verbatim
+      Manifest.write(spark, path, Format, prior.applying(newSource,
+        "rows" -> spark.read.parquet(s"$path/codes").count()))
     }
-    val idx = load(spark, path)
-    df.select(col(idCol).as("c_id"), col(vecCol).as("cv"))
-      .withColumn("cn", vec_l2norm(col("cv")))
-      .withColumn("code", pq_encode(col("cv"), idx.codebook))
-      .write.mode("append").parquet(s"$path/codes")
-    val rows = spark.read.parquet(s"$path/codes").count()
-    val props = new java.util.Properties()
-    props.setProperty("version", ManifestVersion)
-    props.setProperty("source", newSource)
-    props.setProperty("appliedSources",
-      (ledger + newSource).toSeq.sorted.mkString(SourceSep))
-    props.setProperty("m", idx.m.toString)
-    props.setProperty("ksub", idx.ksub.toString)
-    props.setProperty("rows", rows.toString)
-    // pending excisions survive an append verbatim
-    props.setProperty("tombRows", priorTomb.toString)
-    props.setProperty("codebookSha", codebookSha(idx.codebook))
-    // staleness baselines are BUILD-time facts — preserved, not refreshed
-    Option(prior.getProperty("buildMse"))
-      .foreach(props.setProperty("buildMse", _))
-    Option(prior.getProperty("buildRows"))
-      .foreach(props.setProperty("buildRows", _))
-    val out = fs.create(mPath, true)
-    try props.store(out, "graft PQ index manifest")
-    finally out.close()
-    true
-  }
-
-  /** Row count of the tombstone list — 0 when the dir does not exist. */
-  private def tombstoneCount(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) spark.read.parquet(s"$path/tombstones").count() else 0L
-  }
 
   /** EXCISE: remove vectors from a written index — [[IvfIndex.excise]]'s
     * code-table twin, completing append → compact → DELETE for the PQ
@@ -352,117 +264,25 @@ object PqIndex {
     * list (metadata-sized write) that [[load]] bakes into the codes view
     * as an anti join, so every ADC scan and re-rank between the excise
     * and the next [[compact]] already serves only the survivors; the
-    * compact folds the physical drop into its rewrite. IDEMPOTENT via
-    * the applied-sources ledger; torn states refused by recount. `ids`
-    * is a single-column DataFrame named `idCol`. */
+    * compact folds the physical drop into its rewrite. `ids` is a
+    * single-column DataFrame named `idCol`. */
   def excise(spark: org.apache.spark.sql.SparkSession, path: String,
       ids: DataFrame, idCol: String, newSource: String): Boolean =
-      WriterLease.withLease(spark, path) {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    require(Option(prior.getProperty("version")).contains(ManifestVersion),
-      s"index at $path has manifest version ${prior.getProperty("version")}; " +
-        s"this excisor understands only $ManifestVersion")
-    val ledger = Option(prior.getProperty("appliedSources"))
-      .map(_.split(SourceSep).toSet)
-      .getOrElse(Set(prior.getProperty("source", "")))
-    if (ledger.contains(newSource)) return false // already applied: no-op
-    val priorRows = Option(prior.getProperty("rows")).map(_.toLong).getOrElse(-1L)
-    val priorTomb = Option(prior.getProperty("tombRows")).map(_.toLong).getOrElse(0L)
-    require(spark.read.parquet(s"$path/codes").count() == priorRows &&
-      tombstoneCount(spark, path) == priorTomb,
-      s"index at $path does not match its committed manifest — a previous " +
-        "append or excise crashed mid-write; rebuild instead of excising")
-    // tombstones FIRST: a crash after this append is caught by the
-    // recount (tombRows off the committed manifest) and refused as torn
-    ids.select(col(idCol).as("c_id")).write.mode("append")
-      .parquet(s"$path/tombstones")
-    val tombRows = spark.read.parquet(s"$path/tombstones").count()
-    prior.setProperty("source", newSource)
-    prior.setProperty("appliedSources",
-      (ledger + newSource).toSeq.sorted.mkString(SourceSep))
-    prior.setProperty("tombRows", tombRows.toString)
-    val out = fs.create(mPath, true)
-    try prior.store(out, "graft PQ index manifest")
-    finally out.close()
-    true
-  }
+    Manifest.excise(spark, path, Format, ids.select(col(idCol).as("c_id")),
+      newSource)
 
   /** OPTIMIZE: rewrite the fragmented codes table of a written index
     * into `nFiles` files — the [[IvfIndex.compact]] step for the flat
     * (unpartitioned) code stream, whose [[appendTo]] adds one parquet
     * file per batch — AND physically drop any rows tombstoned by
-    * [[excise]]. Staged write, recount against the expected survivor
-    * count BEFORE the swap, rename swap; with no pending tombstones the
-    * manifest is layout-invariant and needs no change, with tombstones
-    * the new physical count + cleared list commit LAST (any crash window
-    * leaves counts off the manifest — refused everywhere); torn tables
-    * refuse. */
+    * [[excise]] ([[Manifest.compact]]: staged, recounted, swapped). */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-      nFiles: Int = 1): Unit =
-      WriterLease.withLease(spark, path) {
+      nFiles: Int = 1): Unit = {
     require(nFiles >= 1, s"nFiles must be >= 1, got $nFiles")
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    require(Option(prior.getProperty("version")).contains(ManifestVersion),
-      s"index at $path has manifest version ${prior.getProperty("version")}; " +
-        s"this compactor understands only $ManifestVersion")
-    val rows = Option(prior.getProperty("rows")).map(_.toLong).getOrElse(-1L)
-    val tombRows = Option(prior.getProperty("tombRows")).map(_.toLong).getOrElse(0L)
-    require(spark.read.parquet(s"$path/codes").count() == rows &&
-      tombstoneCount(spark, path) == tombRows,
-      s"index at $path does not match its committed manifest — a previous " +
-        "append, excise, or compact crashed mid-write; rebuild instead of " +
-        "compacting")
-    val live = spark.read.parquet(s"$path/codes")
-    val (survivors, expectRows) =
-      if (tombRows == 0) (live, rows)
-      else {
-        val tomb = spark.read.parquet(s"$path/tombstones")
-        val dropped = live.join(tomb, Seq("c_id"), "left_semi").count()
-        (live.join(tomb, Seq("c_id"), "left_anti"), rows - dropped)
-      }
-    val stagingPath = new org.apache.hadoop.fs.Path(s"$path/codes-next")
-    fs.delete(stagingPath, true)
-    survivors.repartition(nFiles)
-      .write.mode("overwrite").parquet(s"$path/codes-next")
-    require(spark.read.parquet(s"$path/codes-next").count() == expectRows,
-      s"staged compaction at $path/codes-next lost rows — refusing the swap")
-    val livePath = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val oldPath = new org.apache.hadoop.fs.Path(s"$path/codes-old")
-    fs.delete(oldPath, true)
-    require(fs.rename(livePath, oldPath), s"could not move $livePath aside")
-    require(fs.rename(stagingPath, livePath),
-      s"could not rename $stagingPath into place")
-    fs.delete(oldPath, true)
-    if (tombRows > 0) {
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-      prior.setProperty("rows", expectRows.toString)
-      prior.setProperty("tombRows", "0")
-      val out = fs.create(mPath, true)
-      try prior.store(out, "graft PQ index manifest")
-      finally out.close()
+    Manifest.compact(spark, path, Format, "codes", "rows", _ => "c_id") {
+      (survivors, staging) =>
+        survivors.repartition(nFiles).write.mode("overwrite").parquet(staging)
     }
-  }
-
-  /** Data-file count of a written index's codes table — the observable
-    * [[compact]] shrinks. */
-  def codesFileCount(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val it = fs.listFiles(p, false)
-    var n = 0
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-    }
-    n
   }
 
   /** Mean squared reconstruction error ||cv - decode(code)||² of the
@@ -514,15 +334,11 @@ object PqIndex {
     * the codebook — the operator's move is [[retrain]]. */
   def staleness(spark: org.apache.spark.sql.SparkSession, path: String,
       mseGrowth: Double = 2.0, appendedFrac: Double = 0.5): DriftReport = {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = new java.util.Properties()
-    val in = fs.open(mPath)
-    try props.load(in) finally in.close()
-    val buildMse = Option(props.getProperty("buildMse")).map(_.toDouble)
+    val props = Manifest.read(spark, path)
+    val buildMse = props.get("buildMse").map(_.toDouble)
       .getOrElse(sys.error(s"manifest at $path predates buildMse — " +
         "rewrite the index to enable drift tracking"))
-    val buildRows = Option(props.getProperty("buildRows")).map(_.toDouble)
+    val buildRows = props.get("buildRows").map(_.toDouble)
       .getOrElse(sys.error(s"manifest at $path predates buildRows"))
     val idx = load(spark, path)
     val nowMse = sampleMse(idx.codes, idx.codebook)
@@ -556,40 +372,21 @@ object PqIndex {
   }
 
   /** Rebuild under a FRESH codebook fitted to everything the table now
-    * holds and atomically swap it in — the recovery for a stale index.
-    * Staging-dir write (the live table keeps serving reads), delete +
-    * rename with the manifest already inside, applied-sources ledger
-    * carried over so pre-retrain batch retries stay refused. */
+    * holds and swap it in. The rebuild is staged at `path-next` (the live
+    * table keeps serving reads) with the applied-sources ledger carried
+    * over in its manifest, so pre-retrain batch retries stay refused, and
+    * swapped by [[Manifest.commitStaged]]: a crash between its renames is
+    * adopted by the next [[loadIfValid]]. */
   def retrain(spark: org.apache.spark.sql.SparkSession, path: String,
       m: Int, ksub: Int, newSource: String, seed: Long = 42L,
       maxIter: Int = 10, sampleSize: Int = 4096): PqIndex =
       WriterLease.withLease(spark, path) {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    val ledger = Option(prior.getProperty("appliedSources"))
-      .map(_.split(SourceSep).toSet)
-      .getOrElse(Set(prior.getProperty("source", "")))
-    val staging = s"$path.retrain"
+    val ledger = Manifest.readLive(spark, path, Format, "retraining").ledger
     val current = load(spark, path).codes.select("c_id", "cv")
     val rebuilt = build(current, "c_id", "cv", m, ksub, seed, maxIter, sampleSize)
-    try {
-      rebuilt.write(staging, source = newSource)
-      val sPath = manifestPath(staging)
-      val sProps = new java.util.Properties()
-      val sIn = fs.open(sPath)
-      try sProps.load(sIn) finally sIn.close()
-      sProps.setProperty("appliedSources",
-        (ledger + newSource).toSeq.sorted.mkString(SourceSep))
-      val sOut = fs.create(sPath, true)
-      try sProps.store(sOut, "graft PQ index manifest")
-      finally sOut.close()
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      require(fs.rename(new org.apache.hadoop.fs.Path(staging),
-        new org.apache.hadoop.fs.Path(path)), s"rename $staging -> $path failed")
-    } finally rebuilt.close()
+    try Manifest.commitStaged(spark, path)(
+      rebuilt.writeLedger(_, newSource, ledger + newSource))
+    finally rebuilt.close()
     load(spark, path)
   }
 
@@ -599,7 +396,11 @@ object PqIndex {
     * sidecar. When excisions await compaction ([[excise]]) the tombstone
     * anti join is baked into the codes view here, so the ADC scan AND
     * the exact re-rank both exclude the excised vectors. */
-  def load(spark: org.apache.spark.sql.SparkSession, path: String): PqIndex = {
+  def load(spark: org.apache.spark.sql.SparkSession, path: String): PqIndex =
+    open(spark, path, Manifest.read(spark, path))
+
+  private def open(spark: org.apache.spark.sql.SparkSession, path: String,
+      mf: Manifest): PqIndex = {
     val cbRows = spark.read.parquet(s"$path/codebook")
       .select("j", "c", "ctr").collect()
     require(cbRows.nonEmpty, s"no codebook sidecar under $path")
@@ -609,19 +410,8 @@ object PqIndex {
     cbRows.foreach { r =>
       cb(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray
     }
-    val raw = spark.read.parquet(s"$path/codes")
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val props = new java.util.Properties()
-    val in = fs.open(mPath)
-    try props.load(in) finally in.close()
-    val tombRows = Option(props.getProperty("tombRows")).map(_.toLong).getOrElse(0L)
-    val codes =
-      if (tombRows > 0)
-        raw.join(spark.read.parquet(s"$path/tombstones"), Seq("c_id"),
-          "left_anti")
-      else raw
-    new PqIndex(codes, cb, m, ksub)
+    new PqIndex(Manifest.withoutTombstones(spark, path, mf,
+      spark.read.parquet(s"$path/codes"), "c_id"), cb, m, ksub)
   }
 
   /** Train per-subspace codebooks on a bounded hash-ordered sample and

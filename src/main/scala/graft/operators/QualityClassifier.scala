@@ -47,10 +47,10 @@ import org.apache.spark.sql.functions._
   * gated on the model's own vocab count (a corpus-trained vocabulary
   * past [[QualityClassifier.BroadcastVocabBound]] falls back to the
   * co-partitioned shuffle join — see [[defaultBroadcastModel]]). The
-  * durable form (`write`/`loadIfValid`) follows the [[BigramLm]] manifest
-  * contract: build-once / serve-many-sessions, reopen validated by
-  * metadata only, zero training jobs on a hit (QualityClassifierSpec
-  * asserts the skip).
+  * durable form (`write`/`loadIfValid`) is a durable artifact
+  * (ARCHITECTURE.md "Durable artifacts"): build-once /
+  * serve-many-sessions, reopen validated by metadata only, zero training
+  * jobs on a hit (QualityClassifierSpec asserts the skip).
   */
 final class QualityClassifier private[operators] (
     /** (label, n_docs, tot) per-class doc count and token total. */
@@ -60,7 +60,7 @@ final class QualityClassifier private[operators] (
     /** Training-corpus vocabulary size. */
     val v: Long) {
 
-  /** Durable form: classes + counts tables and a validation manifest. */
+  /** Durable form: classes + counts tables and a manifest. */
   def write(path: String, source: String = ""): Unit = {
     val spark = classes.sparkSession
     // rebuild IS the crash recovery: drop any lease a dead maintainer left
@@ -68,19 +68,10 @@ final class QualityClassifier private[operators] (
     classes.write.mode("overwrite").parquet(s"$path/classes")
     counts.write.mode("overwrite").parquet(s"$path/counts")
     // footer-stats counts of what was just written — metadata, not a scan
-    val classRows = spark.read.parquet(s"$path/classes").count()
-    val countRows = spark.read.parquet(s"$path/counts").count()
-    val props = new java.util.Properties()
-    props.setProperty("version", QualityClassifier.ManifestVersion)
-    props.setProperty("source", source)
-    props.setProperty("v", v.toString)
-    props.setProperty("classRows", classRows.toString)
-    props.setProperty("countRows", countRows.toString)
-    val mPath = QualityClassifier.manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mPath, true)
-    try props.store(out, "graft quality-classifier manifest")
-    finally out.close()
+    Manifest.writeBuilt(spark, path, QualityClassifier.Format,
+      "source" -> source, "v" -> v,
+      "classRows" -> spark.read.parquet(s"$path/classes").count(),
+      "countRows" -> spark.read.parquet(s"$path/counts").count())
   }
 
   /** Score `df` under THIS (frozen) model: one row per document —
@@ -255,13 +246,8 @@ object QualityClassifier {
     * [[QualityClassifier.defaultBroadcastModel]]. */
   val BroadcastVocabBound: Long = 1000000L
 
-  private val ManifestVersion = "1"
-
-  /** Ledger separator — the IvfIndex escape-sequence convention. */
-  private val SourceSep = ""
-
-  private def manifestPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_MANIFEST.properties")
+  private val Format = Manifest.Format("1", "classifier",
+    Seq("classRows" -> "classes", "countRows" -> "counts"))
 
   /** TRAIN: aggregate the NB sufficient statistics from the labeled seed
     * set `df` (textCol tokenized on single spaces, labelCol the class).
@@ -308,9 +294,9 @@ object QualityClassifier {
     * seed set: an unseen (class, word) key, an unseen class, or an
     * over-subtracted count is refused before a byte is staged, never
     * clamped. Ledger idempotence, whole-directory staged swap with the
-    * manifest last, and the writer lease follow the
-    * [[MarkovModel.exciseFrom]] commit discipline; a crash between the
-    * swap renames recovers by [[WriterLease.adoptOrphanNext]]. */
+    * manifest last, and the writer lease are [[Manifest.applyBatch]] and
+    * [[Manifest.commitStaged]]; a crash between the swap renames recovers
+    * by [[WriterLease.adoptOrphanNext]]. */
   def exciseFrom(spark: SparkSession, path: String, excisedDocs: DataFrame,
       textCol: String, labelCol: String, newSource: String): Boolean =
     exciseFromFeatures(spark, path, excisedDocs,
@@ -322,28 +308,7 @@ object QualityClassifier {
   def exciseFromFeatures(spark: SparkSession, path: String,
       excisedDocs: DataFrame, features: Column, labelCol: String,
       newSource: String): Boolean =
-      WriterLease.withLease(spark, path) {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    def field(k: String) = Option(prior.getProperty(k))
-    require(field("version").contains(ManifestVersion),
-      s"classifier at $path has manifest version " +
-        s"${field("version").getOrElse("<none>")}; this excisor " +
-        s"understands only $ManifestVersion — rebuild instead of excising")
-    val ledger = field("appliedSources")
-      .map(_.split(SourceSep).toSet)
-      .getOrElse(Set(prior.getProperty("source", "")))
-    if (ledger.contains(newSource)) return false // already applied: no-op
-    require(
-      spark.read.parquet(s"$path/classes").count() ==
-        field("classRows").map(_.toLong).getOrElse(-1L) &&
-        spark.read.parquet(s"$path/counts").count() ==
-          field("countRows").map(_.toLong).getOrElse(-1L),
-      s"classifier at $path does not match its committed manifest — a " +
-        "previous excise crashed mid-write; rebuild instead of excising")
+      Manifest.applyBatch(spark, path, Format, "excising", newSource) { prior =>
     // batch deltas under trainFeatures' exact extraction
     val occ = excisedDocs
       .select(col(labelCol).as("label"), explode(features).as("w"))
@@ -384,77 +349,44 @@ object QualityClassifier {
       s"excise batch is not a subset of the seed set the classifier at " +
         s"$path was trained on ($unseenL unseen classes, $badL " +
         "over-subtracted class rows) — rebuild over the survivors instead")
-    // stage the WHOLE next model beside the live one, manifest LAST —
-    // then swap by two directory renames (the MarkovModel commit shape)
-    val next = s"$path-next"
-    val nextPath = new org.apache.hadoop.fs.Path(next)
-    fs.delete(nextPath, true) // orphan from a crashed prior excise
-    nextClasses.filter(col("n_docs") > 0)
-      .write.mode("overwrite").parquet(s"$next/classes")
-    nextCounts.filter(col("c") > 0)
-      .write.mode("overwrite").parquet(s"$next/counts")
-    val classRows = spark.read.parquet(s"$next/classes").count()
-    // the survivor v IS the distinct surviving vocabulary — one bounded
-    // two-scalar action over the staged counts, exactly the value a
-    // fresh train over the surviving seeds computes
-    val cStats = spark.read.parquet(s"$next/counts")
-      .agg(count(lit(1)).cast("long"), countDistinct("w").cast("long"))
-      .head()
-    val (countRows, v) = (cStats.getLong(0), cStats.getLong(1))
-    val props = new java.util.Properties()
-    props.setProperty("version", ManifestVersion)
-    props.setProperty("source", newSource)
-    props.setProperty("appliedSources",
-      (ledger + newSource).toSeq.sorted.mkString(SourceSep))
-    props.setProperty("v", v.toString)
-    props.setProperty("classRows", classRows.toString)
-    props.setProperty("countRows", countRows.toString)
-    val nOut = fs.create(manifestPath(next), true)
-    try props.store(nOut, "graft quality-classifier manifest")
-    finally nOut.close()
-    WriterLease.swapStaged(fs, path)
-    true
+    // stage the WHOLE next model beside the live one, manifest LAST
+    Manifest.commitStaged(spark, path) { next =>
+      nextClasses.filter(col("n_docs") > 0)
+        .write.mode("overwrite").parquet(s"$next/classes")
+      nextCounts.filter(col("c") > 0)
+        .write.mode("overwrite").parquet(s"$next/counts")
+      val classRows = spark.read.parquet(s"$next/classes").count()
+      // the survivor v IS the distinct surviving vocabulary — one bounded
+      // two-scalar action over the staged counts, exactly the value a
+      // fresh train over the surviving seeds computes
+      val cStats = spark.read.parquet(s"$next/counts")
+        .agg(count(lit(1)).cast("long"), countDistinct("w").cast("long"))
+        .head()
+      Manifest.write(spark, next, Format, prior.applying(newSource,
+        "v" -> cStats.getLong(1), "classRows" -> classRows,
+        "countRows" -> cStats.getLong(0)))
+    }
   }
 
   /** Reopen a written model ONLY if its manifest proves it complete,
     * current, and trained from the caller's `source` — metadata-sized
     * validation, never a data scan, zero training jobs on a hit. */
   def loadIfValid(spark: SparkSession, path: String,
-      source: String): Option[QualityClassifier] = {
-    val mPath = manifestPath(path)
-    try {
-      val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-      // a crash between exciseFrom's two renames leaves the complete
-      // next beside an empty live path — adopt it rather than force a
-      // retrain (uniform with the LM family's recovery)
-      if (!fs.exists(mPath) &&
-        !WriterLease.adoptOrphanNext(spark, path)) return None
-      val props = new java.util.Properties()
-      val in = fs.open(mPath)
-      try props.load(in) finally in.close()
-      def field(k: String) = Option(props.getProperty(k))
-      if (!field("version").contains(ManifestVersion) ||
-        !field("source").contains(source)) return None
-      val clf = load(spark, path)
-      val valid = field("v").contains(clf.v.toString) &&
-        field("classRows").exists(_.toLong == clf.classes.count()) &&
-        field("countRows").exists(_.toLong == clf.counts.count())
-      if (valid) Some(clf) else None
-    } catch {
-      case scala.util.control.NonFatal(_) => None
+      source: String): Option[QualityClassifier] =
+    Manifest.reopen(spark, path, Format, source) { m =>
+      val clf = open(spark, path, m)
+      Some(clf).filter(_ => m.get("v").contains(clf.v.toString) &&
+        m.counts("classRows", clf.classes) && m.counts("countRows", clf.counts))
     }
-  }
 
   /** Reopen a written model: lazy parquet scans + the manifest scalar. */
-  def load(spark: SparkSession, path: String): QualityClassifier = {
-    val props = new java.util.Properties()
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(mPath)
-    try props.load(in) finally in.close()
+  def load(spark: SparkSession, path: String): QualityClassifier =
+    open(spark, path, Manifest.read(spark, path))
+
+  private def open(spark: SparkSession, path: String,
+      m: Manifest): QualityClassifier =
     new QualityClassifier(
       spark.read.parquet(s"$path/classes"),
       spark.read.parquet(s"$path/counts"),
-      props.getProperty("v").toLong)
-  }
+      m.long("v"))
 }

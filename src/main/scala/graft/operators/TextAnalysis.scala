@@ -107,22 +107,6 @@ object TextAnalysis {
       .otherwise("und")
   }
 
-  def stopwordRatio(text: Column): Column =
-    markerScore(text, stopwords) / size(tokens(text)).cast("double")
-
-  def avgTokenLen(text: Column): Column =
-    length(regexp_replace(text, " ", "")) / size(tokens(text)).cast("double")
-
-  /** Linear quality blend in [0,1]; arithmetic-only so it is reproducible
-    * bit-for-bit across engines. */
-  def qualityScore(text: Column): Column = {
-    val nTok = size(tokens(text)).cast("double")
-    val lenShape = lit(1.0) - least(abs(avgTokenLen(text) - 5.0) / 5.0, lit(1.0))
-    val sizeSat = least(nTok / 100.0, lit(1.0))
-    least(lit(0.3) * stopwordRatio(text) + lit(0.3) * sizeSat + lit(0.4) * lenShape,
-      lit(1.0))
-  }
-
   /** md5 of whitespace-normalized lowercase content. */
   def fingerprint(text: Column): Column =
     md5(trim(regexp_replace(lower(text), "\\s+", " ")))

@@ -48,10 +48,10 @@ import org.apache.spark.sql.functions._
   * joins the document trigrams against five model-derived tables, each
   * keyed by its own n-gram/context key — co-partitioned shuffle joins
   * with AQE handling hot-key skew, the [[BigramLm.score]] posture one
-  * order up. The durable form follows the [[BigramLm]] manifest
-  * contract: build-once / serve-many-sessions, metadata-only reopen
-  * validation, zero training jobs on a hit (TextLmSpec asserts the
-  * skip).
+  * order up. The durable form is a durable artifact (ARCHITECTURE.md
+  * "Durable artifacts"): build-once / serve-many-sessions, metadata-only
+  * reopen validation, zero training jobs on a hit (TextLmSpec asserts
+  * the skip).
   */
 final class TrigramLm private[operators] (
     /** (tg, c123) corpus trigram counts — key "w1 w2 w3". */
@@ -77,9 +77,8 @@ final class TrigramLm private[operators] (
     bi.groupBy(substring_index(col("bg"), " ", 1).as("w2c"))
       .agg(sum("c23").as("c2"), count(lit(1)).as("n2"))
 
-  /** Durable form: the three count tables and a validation manifest
-    * ([[BigramLm.write]]'s contract; context tables are re-derived on
-    * load, not stored). */
+  /** Durable form: the three count tables and a manifest (context
+    * tables are re-derived on load, not stored). */
   def write(path: String, source: String = ""): Unit = {
     val spark = tri.sparkSession
     // rebuild IS the crash recovery: drop any lease a dead maintainer left
@@ -88,22 +87,11 @@ final class TrigramLm private[operators] (
     bi.write.mode("overwrite").parquet(s"$path/bi")
     uni.write.mode("overwrite").parquet(s"$path/uni")
     // footer-stats counts of what was just written — metadata, not a scan
-    val triRows = spark.read.parquet(s"$path/tri").count()
-    val biRows = spark.read.parquet(s"$path/bi").count()
-    val uniRows = spark.read.parquet(s"$path/uni").count()
-    val props = new java.util.Properties()
-    props.setProperty("version", TrigramLm.ManifestVersion)
-    props.setProperty("source", source)
-    props.setProperty("v", v.toString)
-    props.setProperty("nTok", nTok.toString)
-    props.setProperty("triRows", triRows.toString)
-    props.setProperty("biRows", biRows.toString)
-    props.setProperty("uniRows", uniRows.toString)
-    val mPath = TrigramLm.manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mPath, true)
-    try props.store(out, "graft trigram-LM manifest")
-    finally out.close()
+    Manifest.writeBuilt(spark, path, TrigramLm.Format, "source" -> source,
+      "v" -> v, "nTok" -> nTok,
+      "triRows" -> spark.read.parquet(s"$path/tri").count(),
+      "biRows" -> spark.read.parquet(s"$path/bi").count(),
+      "uniRows" -> spark.read.parquet(s"$path/uni").count())
   }
 
   /** Score `df` under THIS model: (idCol, n_trigrams, pred_prob, oov_rate)
@@ -157,13 +145,8 @@ object TrigramLm {
   private val trainsRun = new java.util.concurrent.atomic.AtomicInteger(0)
   private[graft] def trainCount: Int = trainsRun.get
 
-  private val ManifestVersion = "1"
-
-  /** Ledger separator — the IvfIndex escape-sequence convention. */
-  private val SourceSep = ""
-
-  private def manifestPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_MANIFEST.properties")
+  private val Format = Manifest.Format("1", "trigram LM",
+    Seq("triRows" -> "tri", "biRows" -> "bi", "uniRows" -> "uni"))
 
   /** The ONE shared round-to-6 helper (TextAnalysis.round6) — pred_prob
     * feeds threshold/tercile verdicts downstream, so a private copy could
@@ -232,36 +215,12 @@ object TrigramLm {
     * Keys reaching exactly zero are dropped, as a fresh survivor train
     * would. Ledger idempotence (a replayed tag no-ops, checked BEFORE
     * the torn-state recount), whole-directory staged swap with the
-    * manifest last, and the writer lease follow the
-    * [[MarkovModel.exciseFrom]] commit discipline; a crash between the
-    * swap renames recovers by [[WriterLease.adoptOrphanNext]] at the
-    * next reopen. */
+    * manifest last, and the writer lease are [[Manifest.applyBatch]] and
+    * [[Manifest.commitStaged]]; a crash between the swap renames recovers
+    * by [[WriterLease.adoptOrphanNext]] at the next reopen. */
   def exciseFrom(spark: SparkSession, path: String, excisedDocs: DataFrame,
       textCol: String, newSource: String): Boolean =
-      WriterLease.withLease(spark, path) {
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val prior = new java.util.Properties()
-    val in = fs.open(mPath)
-    try prior.load(in) finally in.close()
-    def field(k: String) = Option(prior.getProperty(k))
-    require(field("version").contains(ManifestVersion),
-      s"trigram LM at $path has manifest version " +
-        s"${field("version").getOrElse("<none>")}; this excisor " +
-        s"understands only $ManifestVersion — rebuild instead of excising")
-    val ledger = field("appliedSources")
-      .map(_.split(SourceSep).toSet)
-      .getOrElse(Set(prior.getProperty("source", "")))
-    if (ledger.contains(newSource)) return false // already applied: no-op
-    require(
-      spark.read.parquet(s"$path/tri").count() ==
-        field("triRows").map(_.toLong).getOrElse(-1L) &&
-        spark.read.parquet(s"$path/bi").count() ==
-          field("biRows").map(_.toLong).getOrElse(-1L) &&
-        spark.read.parquet(s"$path/uni").count() ==
-          field("uniRows").map(_.toLong).getOrElse(-1L),
-      s"trigram LM at $path does not match its committed manifest — a " +
-        "previous excise crashed mid-write; rebuild instead of excising")
+      Manifest.applyBatch(spark, path, Format, "excising", newSource) { prior =>
     // batch deltas under train's exact tokenization
     val t = split(lower(col(textCol)), " ")
     val dTri = excisedDocs.select(explode(trigrams(textCol)).as("tg"))
@@ -272,104 +231,51 @@ object TrigramLm {
       .groupBy("bg").agg(count(lit(1)).as("dn"))
     val dUni = excisedDocs.select(explode(t).as("w"))
       .groupBy("w").agg(count(lit(1)).as("dn"))
-    // subset proof BEFORE any write, per table: an unseen key or an
-    // over-subtraction means the batch was not part of the trained
-    // corpus — unlearning it is undefined, and clamping would leave the
-    // model silently off the survivor truth
-    def subtracted(liveTable: String, key: String, cnt: String,
-        delta: DataFrame): DataFrame = {
-      val live = spark.read.parquet(s"$path/$liveTable")
-      val unseen = delta.join(live, Seq(key), "left_anti").count()
-      val merged = live.join(delta, Seq(key), "left")
-        .select(col(key),
-          (col(cnt) - coalesce(col("dn"), lit(0L))).cast("long").as(cnt))
-      val negative = merged.filter(col(cnt) < 0).count()
-      require(unseen == 0 && negative == 0,
-        s"excise batch is not a subset of the corpus the LM at $path was " +
-          s"trained on ($unseen unseen $liveTable keys, $negative " +
-          "over-subtracted) — rebuild over the survivors instead")
-      merged.filter(col(cnt) > 0)
+    // subset proof BEFORE any write, per table
+    val nextTri = BigramLm.subtractCounts(spark, path, "tri", "tg", "c123", dTri)
+    val nextBi = BigramLm.subtractCounts(spark, path, "bi", "bg", "c23", dBi)
+    val nextUni = BigramLm.subtractCounts(spark, path, "uni", "w", "c1u", dUni)
+    // stage the WHOLE next model beside the live one, manifest LAST
+    Manifest.commitStaged(spark, path) { next =>
+      nextTri.write.mode("overwrite").parquet(s"$next/tri")
+      nextBi.write.mode("overwrite").parquet(s"$next/bi")
+      nextUni.write.mode("overwrite").parquet(s"$next/uni")
+      val triRows = spark.read.parquet(s"$next/tri").count()
+      val biRows = spark.read.parquet(s"$next/bi").count()
+      // the survivor scalars re-derive from the staged unigram table in
+      // one bounded action: v IS its row count and nTok its count sum —
+      // exactly the values a fresh train over the survivors computes
+      val uniStats = spark.read.parquet(s"$next/uni")
+        .agg(count(lit(1)).cast("long"),
+          coalesce(sum("c1u"), lit(0L)).cast("long")).head()
+      val (uniRows, nTok) = (uniStats.getLong(0), uniStats.getLong(1))
+      Manifest.write(spark, next, Format, prior.applying(newSource,
+        "v" -> uniRows, "nTok" -> nTok, "triRows" -> triRows,
+        "biRows" -> biRows, "uniRows" -> uniRows))
     }
-    val nextTri = subtracted("tri", "tg", "c123", dTri)
-    val nextBi = subtracted("bi", "bg", "c23", dBi)
-    val nextUni = subtracted("uni", "w", "c1u", dUni)
-    // stage the WHOLE next model beside the live one, manifest LAST —
-    // then swap by two directory renames (the MarkovModel commit shape)
-    val next = s"$path-next"
-    val nextPath = new org.apache.hadoop.fs.Path(next)
-    fs.delete(nextPath, true) // orphan from a crashed prior excise
-    nextTri.write.mode("overwrite").parquet(s"$next/tri")
-    nextBi.write.mode("overwrite").parquet(s"$next/bi")
-    nextUni.write.mode("overwrite").parquet(s"$next/uni")
-    val triRows = spark.read.parquet(s"$next/tri").count()
-    val biRows = spark.read.parquet(s"$next/bi").count()
-    // the survivor scalars re-derive from the staged unigram table in
-    // one bounded action: v IS its row count and nTok its count sum —
-    // exactly the values a fresh train over the survivors computes
-    val uniStats = spark.read.parquet(s"$next/uni")
-      .agg(count(lit(1)).cast("long"),
-        coalesce(sum("c1u"), lit(0L)).cast("long")).head()
-    val (uniRows, nTok) = (uniStats.getLong(0), uniStats.getLong(1))
-    val props = new java.util.Properties()
-    props.setProperty("version", ManifestVersion)
-    props.setProperty("source", newSource)
-    props.setProperty("appliedSources",
-      (ledger + newSource).toSeq.sorted.mkString(SourceSep))
-    props.setProperty("v", uniRows.toString)
-    props.setProperty("nTok", nTok.toString)
-    props.setProperty("triRows", triRows.toString)
-    props.setProperty("biRows", biRows.toString)
-    props.setProperty("uniRows", uniRows.toString)
-    val nOut = fs.create(manifestPath(next), true)
-    try props.store(nOut, "graft trigram-LM manifest")
-    finally nOut.close()
-    WriterLease.swapStaged(fs, path)
-    true
   }
 
   /** Reopen a written model ONLY if its manifest proves it complete,
     * current, and trained from the caller's `source` — metadata-sized
     * validation, zero training jobs on a hit. */
   def loadIfValid(spark: SparkSession, path: String,
-      source: String): Option[TrigramLm] = {
-    val mPath = manifestPath(path)
-    try {
-      val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-      // a crash between exciseFrom's two renames leaves the complete
-      // next beside an empty live path — adopt it rather than force the
-      // corpus-sized retrain that is otherwise this family's recovery
-      if (!fs.exists(mPath) &&
-        !WriterLease.adoptOrphanNext(spark, path)) return None
-      val props = new java.util.Properties()
-      val in = fs.open(mPath)
-      try props.load(in) finally in.close()
-      def field(k: String) = Option(props.getProperty(k))
-      if (!field("version").contains(ManifestVersion) ||
-        !field("source").contains(source)) return None
-      val lm = load(spark, path)
-      val valid = field("v").contains(lm.v.toString) &&
-        field("nTok").contains(lm.nTok.toString) &&
-        field("triRows").exists(_.toLong == lm.tri.count()) &&
-        field("biRows").exists(_.toLong == lm.bi.count()) &&
-        field("uniRows").exists(_.toLong == lm.uni.count())
-      if (valid) Some(lm) else None
-    } catch {
-      case scala.util.control.NonFatal(_) => None
+      source: String): Option[TrigramLm] =
+    Manifest.reopen(spark, path, Format, source) { m =>
+      val lm = open(spark, path, m)
+      Some(lm).filter(_ => m.get("v").contains(lm.v.toString) &&
+        m.get("nTok").contains(lm.nTok.toString) &&
+        m.counts("triRows", lm.tri) && m.counts("biRows", lm.bi) &&
+        m.counts("uniRows", lm.uni))
     }
-  }
 
   /** Reopen a written model: lazy parquet scans + the manifest scalars. */
-  def load(spark: SparkSession, path: String): TrigramLm = {
-    val props = new java.util.Properties()
-    val mPath = manifestPath(path)
-    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(mPath)
-    try props.load(in) finally in.close()
+  def load(spark: SparkSession, path: String): TrigramLm =
+    open(spark, path, Manifest.read(spark, path))
+
+  private def open(spark: SparkSession, path: String, m: Manifest): TrigramLm =
     new TrigramLm(
       spark.read.parquet(s"$path/tri"),
       spark.read.parquet(s"$path/bi"),
       spark.read.parquet(s"$path/uni"),
-      props.getProperty("v").toLong,
-      props.getProperty("nTok").toLong)
-  }
+      m.long("v"), m.long("nTok"))
 }

@@ -43,9 +43,9 @@ object WriterLease {
     * crashed maintainer's artifact is not locked out for long. */
   val DefaultTtlMs: Long = 15L * 60 * 1000
 
-  /** SIBLING of the artifact dir, not inside it: the Markov append swaps
-    * the whole directory and IVF retrain delete-and-renames it — a lease
-    * inside would vanish mid-operation with the old dir. */
+  /** SIBLING of the artifact dir, not inside it: the count models'
+    * append/excise and the IVF/PQ retrain swap the whole directory — a
+    * lease inside would vanish mid-operation with the old dir. */
   private def leasePath(path: String) =
     new org.apache.hadoop.fs.Path(s"$path._LEASE.properties")
 
@@ -167,10 +167,8 @@ object WriterLease {
           java.util.concurrent.TimeUnit.MILLISECONDS)) {
         try {
           if (!fs.exists(lp)) { usurped = true; return }
-          val props = new java.util.Properties()
-          val in = fs.open(lp)
-          try props.load(in) finally in.close()
-          if (!Option(props.getProperty("owner")).contains(owner)) {
+          val props = Manifest.readFile(fs, lp)
+          if (!props.get("owner").contains(owner)) {
             usurped = true; return
           }
           // NEVER renew a lease whose stamp has lapsed — or is within
@@ -180,7 +178,7 @@ object WriterLease {
           // would reinstate our ownership ON TOP of the usurper's — two
           // silent holders, the exact race the fence exists to prevent.
           // Ownership certainty is gone; fail the straggler loudly.
-          val remaining = Option(props.getProperty("expiresAtMs"))
+          val remaining = props.get("expiresAtMs")
             .flatMap(s => scala.util.Try(s.toLong).toOption)
             .map(_ - System.currentTimeMillis()).getOrElse(-1L)
           if (remaining < guardMs) { usurped = true; return }
@@ -200,14 +198,9 @@ object WriterLease {
             return
           }
           val stamp = java.lang.Long.toHexString(System.nanoTime())
-          val fresh = new java.util.Properties()
-          fresh.setProperty("owner", owner)
-          fresh.setProperty("stamp", stamp)
-          fresh.setProperty("expiresAtMs",
-            (System.currentTimeMillis() + ttlMs).toString)
-          val out = fs.create(lp, true)
-          try fresh.store(out, "graft writer lease (renewed)")
-          finally out.close()
+          Manifest.writeFile(fs, lp, Map("owner" -> owner, "stamp" -> stamp,
+            "expiresAtMs" -> (System.currentTimeMillis() + ttlMs).toString),
+            "graft writer lease (renewed)")
           // VERIFY-READ: if a takeover slid in around our overwrite the
           // file now carries the usurper's owner (or not our fresh
           // stamp) — flip usurped and never touch the file again. The
@@ -215,11 +208,9 @@ object WriterLease {
           // create overwrote in the same instant (reads back as ours):
           // narrowed from ~3/4 TTL of stall to the create call's own
           // duration; the manifest-recount discipline backstops it.
-          val check = new java.util.Properties()
-          val in2 = fs.open(lp)
-          try check.load(in2) finally in2.close()
-          if (!Option(check.getProperty("owner")).contains(owner) ||
-              !Option(check.getProperty("stamp")).contains(stamp)) {
+          val check = Manifest.readFile(fs, lp)
+          if (!check.get("owner").contains(owner) ||
+              !check.get("stamp").contains(stamp)) {
             usurped = true; return
           }
           // shutdown began while the write was in flight: release() may
@@ -243,14 +234,10 @@ object WriterLease {
     while (attempts < 5) {
       attempts += 1
       try {
-        val out = fs.create(lp, false) // fails if the lease exists
-        try {
-          val props = new java.util.Properties()
-          props.setProperty("owner", owner)
-          props.setProperty("expiresAtMs",
-            (System.currentTimeMillis() + ttlMs).toString)
-          props.store(out, "graft writer lease")
-        } finally out.close()
+        // overwrite = false: the create fails if the lease exists
+        Manifest.writeFile(fs, lp, Map("owner" -> owner,
+          "expiresAtMs" -> (System.currentTimeMillis() + ttlMs).toString),
+          "graft writer lease", overwrite = false)
         return
       } catch {
         case _: java.io.IOException =>
@@ -262,11 +249,9 @@ object WriterLease {
           // and re-create it, yielding TWO live holders; it is HELD: back
           // off briefly and retry, then refuse.
           val held = try {
-            val props = new java.util.Properties()
-            val in = fs.open(lp)
-            try props.load(in) finally in.close()
-            Some((Option(props.getProperty("owner")),
-              Option(props.getProperty("expiresAtMs"))
+            val props = Manifest.readFile(fs, lp)
+            Some((props.get("owner"),
+              props.get("expiresAtMs")
                 .flatMap(s => scala.util.Try(s.toLong).toOption)))
           } catch {
             // unreadable/vanished between create and open: retry the loop
@@ -298,24 +283,20 @@ object WriterLease {
   private def release(fs: org.apache.hadoop.fs.FileSystem,
       lp: org.apache.hadoop.fs.Path, owner: String): Unit = {
     try {
-      val props = new java.util.Properties()
-      val in = fs.open(lp)
-      try props.load(in) finally in.close()
       // only the owner deletes: a post-takeover release must not drop the
       // usurper's live lease
-      if (Option(props.getProperty("owner")).contains(owner))
+      if (Manifest.readFile(fs, lp).get("owner").contains(owner))
         fs.delete(lp, false)
     } catch { case scala.util.control.NonFatal(_) => () }
   }
 
-  /** The whole-directory staged-swap COMMIT tail shared by the
-    * count-model maintenance ops ([[MarkovModel]], [[BigramLm]],
-    * [[TrigramLm]], [[QualityClassifier]]): the caller has already
-    * staged the COMPLETE next artifact — tables first, manifest LAST —
-    * at `path-next`; this swaps it live by two directory renames and
-    * drops the pre-swap copy. One definition so the crash-window
-    * contract ([[adoptOrphanNext]] recovers between the renames) can
-    * never drift between families. */
+  /** The staged-swap COMMIT tail of every durable-artifact op: the
+    * caller has already staged the COMPLETE next copy at `path-next`
+    * (a whole artifact with its manifest LAST — [[Manifest.commitStaged]]
+    * — or one table, recounted — [[Manifest.compact]]); this swaps it live
+    * by two renames and drops the pre-swap copy. One definition so the
+    * crash-window contract ([[adoptOrphanNext]] recovers between the
+    * renames of a whole artifact) can never drift between families. */
   private[operators] def swapStaged(fs: org.apache.hadoop.fs.FileSystem,
       path: String): Unit = {
     val livePath = new org.apache.hadoop.fs.Path(path)
@@ -344,7 +325,7 @@ object WriterLease {
     * recovery there) or when the lease is held (a live maintainer is
     * mid-swap and will finish its own rename). */
   def adoptOrphanNext(spark: SparkSession, path: String,
-      manifestName: String = "_MANIFEST.properties"): Boolean = {
+      manifestName: String = Manifest.FileName): Boolean = {
     val live = new org.apache.hadoop.fs.Path(path)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
     val next = new org.apache.hadoop.fs.Path(s"$path-next")

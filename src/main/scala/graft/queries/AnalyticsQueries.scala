@@ -116,8 +116,18 @@ object AnalyticsQueries {
   private def eventsSourceTag(spark: SparkSession, dir: String): String =
     dir + "#" + QueryArtifacts.sourceDigest(spark, dir, "events")
 
-  private def markovModelPath(dir: String): String =
-    QueryArtifacts.path("target/markov-model", dir)
+  /** (path, source tag) of the three durable Markov models — read by
+    * their builders and by [[coldServeHooks]]. */
+  private def markovLocation(spark: SparkSession, dir: String) =
+    (QueryArtifacts.path("target/markov-model", dir), eventsSourceTag(spark, dir))
+
+  private def markovAppendedLocation(spark: SparkSession, dir: String) =
+    (QueryArtifacts.path("target/markov-model-appended", dir),
+      eventsSourceTag(spark, dir) + "#append-batch")
+
+  private def markovExcisedLocation(spark: SparkSession, dir: String) =
+    (QueryArtifacts.path("target/markov-model-excised", dir),
+      eventsSourceTag(spark, dir) + "#excise-batch")
 
   /** One durable first-order Markov transition model per (session, dir),
     * trained on the shared [[transitionPairs]] table — the BigramLm
@@ -130,8 +140,7 @@ object AnalyticsQueries {
   private def markovPersisted(spark: SparkSession,
       dir: String): graft.operators.MarkovModel =
     markovCache((spark, dir)) {
-      val path = markovModelPath(dir)
-      val tag = eventsSourceTag(spark, dir)
+      val (path, tag) = markovLocation(spark, dir)
       graft.operators.MarkovModel.loadIfValid(spark, path, tag).getOrElse {
         graft.operators.MarkovModel.train(transitionPairs(spark, dir))
           .write(path, tag)
@@ -176,9 +185,8 @@ object AnalyticsQueries {
   private def markovAppended(spark: SparkSession,
       dir: String): graft.operators.MarkovModel =
     markovAppendCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/markov-model-appended", dir)
+      val (path, appendTag) = markovAppendedLocation(spark, dir)
       val baseTag = eventsSourceTag(spark, dir) + "#append-base"
-      val appendTag = eventsSourceTag(spark, dir) + "#append-batch"
       if (graft.operators.MarkovModel.loadIfValid(spark, path, appendTag).isEmpty) {
         val pairs = transitionPairs(spark, dir)
         graft.operators.MarkovModel
@@ -208,9 +216,8 @@ object AnalyticsQueries {
   private def markovExcised(spark: SparkSession,
       dir: String): graft.operators.MarkovModel =
     markovExciseCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/markov-model-excised", dir)
+      val (path, exciseTag) = markovExcisedLocation(spark, dir)
       val baseTag = eventsSourceTag(spark, dir) + "#excise-base"
-      val exciseTag = eventsSourceTag(spark, dir) + "#excise-batch"
       if (graft.operators.MarkovModel.loadIfValid(spark, path, exciseTag).isEmpty) {
         val pairs = transitionPairs(spark, dir)
         graft.operators.MarkovModel.train(pairs).write(path, baseTag)
@@ -289,20 +296,18 @@ object AnalyticsQueries {
       : Seq[(String, () => Unit, () => Option[Long])] = Seq(
     ("markov",
       () => { markovPersisted(spark, dir); () },
-      () => graft.operators.MarkovModel.loadIfValid(spark,
-          markovModelPath(dir), eventsSourceTag(spark, dir))
+      () => QueryArtifacts.reopenAt(spark, dir, markovLocation)(
+          graft.operators.MarkovModel.loadIfValid)
         .map(_.transitions().count())),
     ("markov_appended",
       () => { markovAppended(spark, dir); () },
-      () => graft.operators.MarkovModel.loadIfValid(spark,
-          QueryArtifacts.path("target/markov-model-appended", dir),
-          eventsSourceTag(spark, dir) + "#append-batch")
+      () => QueryArtifacts.reopenAt(spark, dir, markovAppendedLocation)(
+          graft.operators.MarkovModel.loadIfValid)
         .map(_.transitions().count())),
     ("markov_excised",
       () => { markovExcised(spark, dir); () },
-      () => graft.operators.MarkovModel.loadIfValid(spark,
-          QueryArtifacts.path("target/markov-model-excised", dir),
-          eventsSourceTag(spark, dir) + "#excise-batch")
+      () => QueryArtifacts.reopenAt(spark, dir, markovExcisedLocation)(
+          graft.operators.MarkovModel.loadIfValid)
         .map(_.transitions().count())))
 
   /** Release every family's session artifacts ([[QueryArtifacts.clearAll]]). */
@@ -605,8 +610,8 @@ object AnalyticsQueries {
     "markov_model_persisted" -> ((spark, dir) => {
       markovPersisted(spark, dir) // ensure the durable artifact exists
       val before = graft.operators.MarkovModel.trainCount
-      val reopened = graft.operators.MarkovModel
-        .loadIfValid(spark, markovModelPath(dir), eventsSourceTag(spark, dir))
+      val reopened = QueryArtifacts.reopenAt(spark, dir, markovLocation)(
+          graft.operators.MarkovModel.loadIfValid)
         .getOrElse(sys.error(
           "manifest reopen of the written Markov model must validate"))
       require(graft.operators.MarkovModel.trainCount == before,

@@ -43,10 +43,13 @@ object CdcQueries {
       dir: String): (String, String) =
     (QueryArtifacts.path("target/cdc-chunk-index", dir), chunkSourceTag(spark, dir))
 
+  private def chunkExcisedLocation(spark: SparkSession, dir: String) =
+    (QueryArtifacts.path("target/cdc-chunk-index-excised", dir),
+      chunkSourceTag(spark, dir) + "#excise-batch")
+
   private[queries] def chunkPersisted(spark: SparkSession, dir: String): graft.operators.ChunkIndex =
     chunkFileCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/cdc-chunk-index", dir)
-      val tag = chunkSourceTag(spark, dir)
+      val (path, tag) = chunkLocation(spark, dir)
       graft.operators.ChunkIndex.loadIfValid(spark, path, tag).getOrElse {
         graft.operators.ChunkIndex.build(media(spark, dir), maskBits = 6).write(path, tag)
         graft.operators.ChunkIndex.load(spark, path)
@@ -96,8 +99,7 @@ object CdcQueries {
   private def chunkExcised(spark: SparkSession,
       dir: String): graft.operators.ChunkIndex =
     chunkExciseCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/cdc-chunk-index-excised", dir)
-      val exciseTag = chunkSourceTag(spark, dir) + "#excise-batch"
+      val (path, exciseTag) = chunkExcisedLocation(spark, dir)
       if (graft.operators.ChunkIndex.loadIfValid(spark, path, exciseTag).isEmpty) {
         val takedown = Tables.load(spark, dir, "documents")
           .filter(col("doc_id") % 3 === 0).select("doc_id")
@@ -105,8 +107,7 @@ object CdcQueries {
         // index (same maskBits) — clone its completed artifact instead
         // of re-running the Gear chunking pass (r18, ensure-phase dedup)
         chunkPersisted(spark, dir)
-        QueryArtifacts.cloneArtifact(
-          QueryArtifacts.path("target/cdc-chunk-index", dir), path)
+        QueryArtifacts.cloneArtifact(chunkLocation(spark, dir)._1, path)
         graft.operators.ChunkIndex.excise(spark, path, takedown, exciseTag)
         val replayed = graft.operators.ChunkIndex.excise(spark, path,
           takedown, exciseTag)
@@ -123,15 +124,13 @@ object CdcQueries {
       : Seq[(String, () => Unit, () => Option[Long])] = Seq(
     ("chunk_index",
       () => { chunkPersisted(spark, dir); () },
-      () => graft.operators.ChunkIndex.loadIfValid(spark,
-          QueryArtifacts.path("target/cdc-chunk-index", dir),
-          chunkSourceTag(spark, dir))
+      () => QueryArtifacts.reopenAt(spark, dir, chunkLocation)(
+          graft.operators.ChunkIndex.loadIfValid(_, _, _))
         .map(_.chunks.limit(5).count())),
     ("chunk_index_excised",
       () => { chunkExcised(spark, dir); () },
-      () => graft.operators.ChunkIndex.loadIfValid(spark,
-          QueryArtifacts.path("target/cdc-chunk-index-excised", dir),
-          chunkSourceTag(spark, dir) + "#excise-batch")
+      () => QueryArtifacts.reopenAt(spark, dir, chunkExcisedLocation)(
+          graft.operators.ChunkIndex.loadIfValid(_, _, _))
         .map(_.chunks.limit(5).count())))
 
   val queries: ListMap[String, Q] = ListMap(

@@ -117,6 +117,16 @@ private[graft] object QueryArtifacts {
     org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(src), d)
   }
 
+  /** Fresh `loadIfValid` of a durable artifact at its location — the
+    * (path, source tag) pair its builder writes under, defined once per
+    * artifact next to the builder — bypassing every session cache. */
+  def reopenAt[T](spark: SparkSession, dir: String,
+      location: (SparkSession, String) => (String, String))(
+      loadIfValid: (SparkSession, String, String) => Option[T]): Option[T] = {
+    val (path, tag) = location(spark, dir)
+    loadIfValid(spark, path, tag)
+  }
+
   /** Digest of `<dir>/<table>.parquet`'s file listing (names, lengths,
     * mtimes; 16 hex chars) — the source tag durable artifacts validate
     * their manifests against, so a regenerated fixture invalidates them

@@ -80,7 +80,27 @@ object SimilarityQueries {
     * [[ivfPersisted]] and the cold-serve hooks. */
   private[queries] def ivfLocation(spark: SparkSession,
       dir: String): (String, String) =
-    (QueryArtifacts.path("target/ivf-file-index", dir), ivfSourceTag(spark, dir))
+    vectorLocation(spark, dir, "ivf-file-index")
+
+  /** (path, source tag) of each durable vector index — the one location
+    * its builder writes and [[coldServeHooks]] reopens. `suffix` names the
+    * lifecycle step a chained index's manifest must carry. */
+  private def vectorLocation(spark: SparkSession, dir: String, name: String,
+      suffix: String = ""): (String, String) =
+    (QueryArtifacts.path(s"target/$name", dir), ivfSourceTag(spark, dir) + suffix)
+
+  private def pqLocation(spark: SparkSession, dir: String) =
+    vectorLocation(spark, dir, "pq-file-index")
+  private def ivfDriftLocation(spark: SparkSession, dir: String) =
+    vectorLocation(spark, dir, "ivf-drift-index", "#drift-append")
+  private def ivfExcisedLocation(spark: SparkSession, dir: String) =
+    vectorLocation(spark, dir, "ivf-excised-index", "#excise-batch")
+  private def ivfRefitLocation(spark: SparkSession, dir: String) =
+    vectorLocation(spark, dir, "ivf-refit-index", "#refit-done")
+  private def pqExcisedLocation(spark: SparkSession, dir: String) =
+    vectorLocation(spark, dir, "pq-excised-index", "#excise-batch")
+  private def pqRefitLocation(spark: SparkSession, dir: String) =
+    vectorLocation(spark, dir, "pq-refit-index", "#pq-refit-done")
 
   private[queries] def ivfPersisted(spark: SparkSession, dir: String): graft.operators.IvfIndex =
     // the at-most-once fill keeps two concurrent first calls from racing
@@ -88,8 +108,7 @@ object SimilarityQueries {
     ivfFileCache((spark, dir)) {
       // path keyed by a digest of the RAW dir string besides the readable
       // sanitization: distinct dirs (/a/b vs /a_b) can never collide
-      val path = QueryArtifacts.path("target/ivf-file-index", dir)
-      val tag = ivfSourceTag(spark, dir)
+      val (path, tag) = ivfLocation(spark, dir)
       graft.operators.IvfIndex.loadIfValid(spark, path, tag).getOrElse {
         ivfIndex(spark, dir).write(path, tag)
         graft.operators.IvfIndex.load(spark, path)
@@ -108,54 +127,50 @@ object SimilarityQueries {
     def q5 = Tables.load(spark, dir, "embeddings")
       .filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    val ivfPath = QueryArtifacts.path("target/ivf-file-index", dir)
-    val pqPath = QueryArtifacts.path("target/pq-file-index", dir)
-    def tag = ivfSourceTag(spark, dir)
     Seq(
       ("ivf",
         () => { ivfPersisted(spark, dir); () },
-        () => graft.operators.IvfIndex.loadIfValid(spark, ivfPath, tag)
+        () => QueryArtifacts.reopenAt(spark, dir, ivfLocation)(
+            graft.operators.IvfIndex.loadIfValid)
           .map(_.topK(q5, k = 5, nprobe = 6).count())),
       ("pq",
         () => { pqPersisted(spark, dir); () },
-        () => graft.operators.PqIndex.loadIfValid(spark, pqPath, tag)
+        () => QueryArtifacts.reopenAt(spark, dir, pqLocation)(
+            graft.operators.PqIndex.loadIfValid)
           .map(_.topK(q5, k = 5, nCandidates = 64).count())),
       ("ivfpq",
         () => { ivfPersisted(spark, dir); pqPersisted(spark, dir); () },
         () => for {
-          i <- graft.operators.IvfIndex.loadIfValid(spark, ivfPath, tag)
-          p <- graft.operators.PqIndex.loadIfValid(spark, pqPath, tag)
+          i <- QueryArtifacts.reopenAt(spark, dir, ivfLocation)(
+              graft.operators.IvfIndex.loadIfValid)
+          p <- QueryArtifacts.reopenAt(spark, dir, pqLocation)(
+              graft.operators.PqIndex.loadIfValid)
         } yield new graft.operators.IvfPq(i, p)
           .topK(q5, k = 5, nprobe = 6, nCandidates = 64).count()),
       ("ivf_appended",
         () => { driftIndexPath(spark, dir); () },
-        () => graft.operators.IvfIndex.loadIfValid(spark,
-            QueryArtifacts.path("target/ivf-drift-index", dir),
-            tag + "#drift-append")
+        () => QueryArtifacts.reopenAt(spark, dir, ivfDriftLocation)(
+            graft.operators.IvfIndex.loadIfValid)
           .map(_.topK(q5, k = 5, nprobe = 6).count())),
       ("ivf_excised",
         () => { excisedServeIndex(spark, dir); () },
-        () => graft.operators.IvfIndex.loadIfValid(spark,
-            QueryArtifacts.path("target/ivf-excised-index", dir),
-            tag + "#excise-batch")
+        () => QueryArtifacts.reopenAt(spark, dir, ivfExcisedLocation)(
+            graft.operators.IvfIndex.loadIfValid)
           .map(_.topK(q5, k = 5, nprobe = 6).count())),
       ("ivf_refitted",
         () => { refittedIndex(spark, dir); () },
-        () => graft.operators.IvfIndex.loadIfValid(spark,
-            QueryArtifacts.path("target/ivf-refit-index", dir),
-            tag + "#refit-done")
+        () => QueryArtifacts.reopenAt(spark, dir, ivfRefitLocation)(
+            graft.operators.IvfIndex.loadIfValid)
           .map(_.topK(q5, k = 5, nprobe = 6).count())),
       ("pq_excised",
         () => { pqExcisedServeIndex(spark, dir); () },
-        () => graft.operators.PqIndex.loadIfValid(spark,
-            QueryArtifacts.path("target/pq-excised-index", dir),
-            tag + "#excise-batch")
+        () => QueryArtifacts.reopenAt(spark, dir, pqExcisedLocation)(
+            graft.operators.PqIndex.loadIfValid)
           .map(_.topK(q5, k = 5, nCandidates = 64).count())),
       ("pq_refitted",
         () => { pqRefittedIndex(spark, dir); () },
-        () => graft.operators.PqIndex.loadIfValid(spark,
-            QueryArtifacts.path("target/pq-refit-index", dir),
-            tag + "#pq-refit-done")
+        () => QueryArtifacts.reopenAt(spark, dir, pqRefitLocation)(
+            graft.operators.PqIndex.loadIfValid)
           .map(_.topK(q5, k = 5, nCandidates = 64).count())))
   }
 
@@ -176,8 +191,7 @@ object SimilarityQueries {
 
   private def pqPersisted(spark: SparkSession, dir: String): graft.operators.PqIndex =
     pqFileCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/pq-file-index", dir)
-      val tag = ivfSourceTag(spark, dir)
+      val (path, tag) = pqLocation(spark, dir)
       graft.operators.PqIndex.loadIfValid(spark, path, tag).getOrElse {
         pqIndex(spark, dir).write(path, tag)
         graft.operators.PqIndex.load(spark, path)
@@ -195,9 +209,8 @@ object SimilarityQueries {
 
   private def driftIndexPath(spark: SparkSession, dir: String): String =
     driftCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/ivf-drift-index", dir)
+      val (path, appendTag) = ivfDriftLocation(spark, dir)
       val baseTag = ivfSourceTag(spark, dir) + "#drift-base"
-      val appendTag = ivfSourceTag(spark, dir) + "#drift-append"
       // a completed build+append leaves source == appendTag in the
       // manifest; anything else (absent, torn, stale fixture) rebuilds
       if (graft.operators.IvfIndex.loadIfValid(spark, path, appendTag).isEmpty) {
@@ -328,8 +341,7 @@ object SimilarityQueries {
   private def refittedIndex(spark: SparkSession,
       dir: String): graft.operators.IvfIndex =
     refitCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/ivf-refit-index", dir)
-      val refitTag = ivfSourceTag(spark, dir) + "#refit-done"
+      val (path, refitTag) = ivfRefitLocation(spark, dir)
       if (graft.operators.IvfIndex.loadIfValid(spark, path, refitTag).isEmpty) {
         // the stale starting state (quantizer frozen on the odd half,
         // even half appended) is byte-identical to the drift chain's
@@ -373,8 +385,7 @@ object SimilarityQueries {
   private def pqRefittedIndex(spark: SparkSession,
       dir: String): graft.operators.PqIndex =
     pqRefitCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/pq-refit-index", dir)
-      val refitTag = ivfSourceTag(spark, dir) + "#pq-refit-done"
+      val (path, refitTag) = pqRefitLocation(spark, dir)
       if (graft.operators.PqIndex.loadIfValid(spark, path, refitTag).isEmpty) {
         QueryArtifacts.cloneArtifact(pqDriftIndexPath(spark, dir), path)
         require(graft.operators.PqIndex.refitIfStale(spark, path,
@@ -428,8 +439,7 @@ object SimilarityQueries {
   private def excisedServeIndex(spark: SparkSession,
       dir: String): graft.operators.IvfIndex =
     ivfExciseCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/ivf-excised-index", dir)
-      val exciseTag = ivfSourceTag(spark, dir) + "#excise-batch"
+      val (path, exciseTag) = ivfExcisedLocation(spark, dir)
       if (graft.operators.IvfIndex.loadIfValid(spark, path, exciseTag).isEmpty) {
         val emb = Tables.load(spark, dir, "embeddings")
         val takedown = emb.filter(col("vec_id") % 7 === 0).select("vec_id")
@@ -439,8 +449,7 @@ object SimilarityQueries {
         // ensure-phase dedup); a takedown acts on the live serving
         // index, so starting from its files is the production shape
         ivfPersisted(spark, dir)
-        QueryArtifacts.cloneArtifact(
-          QueryArtifacts.path("target/ivf-file-index", dir), path)
+        QueryArtifacts.cloneArtifact(ivfLocation(spark, dir)._1, path)
         graft.operators.IvfIndex.excise(spark, path, takedown, "vec_id",
           exciseTag)
         val replayed = graft.operators.IvfIndex.excise(spark, path,
@@ -461,9 +470,8 @@ object SimilarityQueries {
   private def pqExcisedServeIndex(spark: SparkSession,
       dir: String): graft.operators.PqIndex =
     pqExciseCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/pq-excised-index", dir)
+      val (path, exciseTag) = pqExcisedLocation(spark, dir)
       val baseTag = ivfSourceTag(spark, dir) + "#excise-base"
-      val exciseTag = ivfSourceTag(spark, dir) + "#excise-batch"
       if (graft.operators.PqIndex.loadIfValid(spark, path, exciseTag).isEmpty) {
         val emb = Tables.load(spark, dir, "embeddings")
         val takedown = emb.filter(col("vec_id") % 7 === 0).select("vec_id")

@@ -59,8 +59,7 @@ object TextQueries {
 
   private def bpeMerges(spark: SparkSession, dir: String): Array[Array[String]] =
     bpeCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/bpe-merges", dir)
-      val tag = lmSourceTag(spark, dir)
+      val (path, tag) = bpeLocation(spark, dir)
       graft.operators.BpeTokenizer.loadIfValid(spark, path, tag).getOrElse {
         val merges = graft.operators.BpeTokenizer.train(
           Tables.load(spark, dir, "documents"), "text",
@@ -1295,6 +1294,33 @@ object TextQueries {
   private def lmSourceTag(spark: SparkSession, dir: String): String =
     dir + "#" + QueryArtifacts.sourceDigest(spark, dir, "documents")
 
+  /** (path, source tag) of each durable text artifact — the one location
+    * its builder writes and [[coldServeHooks]] reopens
+    * ([[invIndexLocation]] is shared with [[RagQueries]] too). `suffix`
+    * names the lifecycle step a chained artifact's manifest must carry. */
+  private def textLocation(spark: SparkSession, dir: String, name: String,
+      suffix: String = ""): (String, String) =
+    (QueryArtifacts.path(s"target/$name", dir), lmSourceTag(spark, dir) + suffix)
+
+  private def bpeLocation(spark: SparkSession, dir: String) =
+    textLocation(spark, dir, "bpe-merges")
+  private def bigramLocation(spark: SparkSession, dir: String) =
+    textLocation(spark, dir, "bigram-lm")
+  private def bigramExcisedLocation(spark: SparkSession, dir: String) =
+    textLocation(spark, dir, "bigram-lm-excised", "#excise-batch")
+  private def trigramLocation(spark: SparkSession, dir: String) =
+    textLocation(spark, dir, "trigram-lm")
+  private def trigramExcisedLocation(spark: SparkSession, dir: String) =
+    textLocation(spark, dir, "trigram-lm-excised", "#excise-batch")
+  private def clfLocation(spark: SparkSession, dir: String) =
+    textLocation(spark, dir, "quality-clf")
+  private def clfExcisedLocation(spark: SparkSession, dir: String) =
+    textLocation(spark, dir, "quality-clf-excised", "#excise-batch")
+  private def invAppendedLocation(spark: SparkSession, dir: String) =
+    textLocation(spark, dir, "inverted-index-appended", "#append-batch")
+  private def invExcisedLocation(spark: SparkSession, dir: String) =
+    textLocation(spark, dir, "inverted-index-excised", "#excise-batch")
+
   /** Appended-and-COMPACTED durable inverted index — the index family's
     * full maintenance lifecycle on one artifact: built over the odd
     * doc_ids, the even half appended as a daily batch (df merge + ledger),
@@ -1309,9 +1335,8 @@ object TextQueries {
   private def invAppendedCompacted(spark: SparkSession,
       dir: String): graft.operators.InvertedIndex =
     invAppendCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/inverted-index-appended", dir)
+      val (path, appendTag) = invAppendedLocation(spark, dir)
       val baseTag = lmSourceTag(spark, dir) + "#append-base"
-      val appendTag = lmSourceTag(spark, dir) + "#append-batch"
       if (graft.operators.InvertedIndex.loadIfValid(spark, path, appendTag).isEmpty) {
         val docs = Tables.load(spark, dir, "documents")
         graft.operators.InvertedIndex
@@ -1338,8 +1363,7 @@ object TextQueries {
   private def invExcisedCompacted(spark: SparkSession,
       dir: String): graft.operators.InvertedIndex =
     invExciseCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/inverted-index-excised", dir)
-      val exciseTag = lmSourceTag(spark, dir) + "#excise-batch"
+      val (path, exciseTag) = invExcisedLocation(spark, dir)
       if (graft.operators.InvertedIndex.loadIfValid(spark, path, exciseTag).isEmpty) {
         val docs = Tables.load(spark, dir, "documents")
         val takedown = docs.filter(col("doc_id") % 3 === 0)
@@ -1349,8 +1373,7 @@ object TextQueries {
         // takedown acts on the live serving index, so starting from its
         // files is the production shape
         invertedIndexPersisted(spark, dir)
-        QueryArtifacts.cloneArtifact(
-          QueryArtifacts.path("target/inverted-index", dir), path)
+        QueryArtifacts.cloneArtifact(invIndexLocation(spark, dir)._1, path)
         graft.operators.InvertedIndex.excise(spark, path, takedown, "text",
           exciseTag)
         // crashed-job-retry protection, pinned on the driver path: a
@@ -1372,63 +1395,57 @@ object TextQueries {
     * one literal encode for the BPE merges. */
   private[queries] def coldServeHooks(spark: SparkSession, dir: String)
       : Seq[(String, () => Unit, () => Option[Long])] = {
-    def tag = lmSourceTag(spark, dir)
     def docs3 = Tables.load(spark, dir, "documents").filter(col("doc_id") < 3)
     Seq(
       ("bigram_lm",
         () => { bigramLmPersisted(spark, dir); () },
-        () => graft.operators.BigramLm.loadIfValid(spark,
-            QueryArtifacts.path("target/bigram-lm", dir), tag)
+        () => QueryArtifacts.reopenAt(spark, dir, bigramLocation)(
+            graft.operators.BigramLm.loadIfValid)
           .map(_.score(docs3, "doc_id", "text").count())),
       ("bigram_lm_excised",
         () => { bigramLmExcised(spark, dir); () },
-        () => graft.operators.BigramLm.loadIfValid(spark,
-            QueryArtifacts.path("target/bigram-lm-excised", dir),
-            tag + "#excise-batch")
+        () => QueryArtifacts.reopenAt(spark, dir, bigramExcisedLocation)(
+            graft.operators.BigramLm.loadIfValid)
           .map(_.score(docs3, "doc_id", "text").count())),
       ("trigram_lm",
         () => { trigramLmPersisted(spark, dir); () },
-        () => graft.operators.TrigramLm.loadIfValid(spark,
-            QueryArtifacts.path("target/trigram-lm", dir), tag)
+        () => QueryArtifacts.reopenAt(spark, dir, trigramLocation)(
+            graft.operators.TrigramLm.loadIfValid)
           .map(_.score(docs3, "doc_id", "text").count())),
       ("trigram_lm_excised",
         () => { trigramLmExcised(spark, dir); () },
-        () => graft.operators.TrigramLm.loadIfValid(spark,
-            QueryArtifacts.path("target/trigram-lm-excised", dir),
-            tag + "#excise-batch")
+        () => QueryArtifacts.reopenAt(spark, dir, trigramExcisedLocation)(
+            graft.operators.TrigramLm.loadIfValid)
           .map(_.score(docs3, "doc_id", "text").count())),
       ("inverted_index",
         () => { invertedIndexPersisted(spark, dir); () },
-        () => graft.operators.InvertedIndex.loadIfValid(spark,
-            QueryArtifacts.path("target/inverted-index", dir), tag)
+        () => QueryArtifacts.reopenAt(spark, dir, invIndexLocation)(
+            graft.operators.InvertedIndex.loadIfValid)
           .map(_.serve(Seq("hash", "join", "vector")).count())),
       ("classifier",
         () => { clfPersisted(spark, dir); () },
-        () => graft.operators.QualityClassifier.loadIfValid(spark,
-            QueryArtifacts.path("target/quality-clf", dir), tag)
+        () => QueryArtifacts.reopenAt(spark, dir, clfLocation)(
+            graft.operators.QualityClassifier.loadIfValid)
           .map(_.score(docs3, "doc_id", "text").count())),
       ("classifier_excised",
         () => { clfExcised(spark, dir); () },
-        () => graft.operators.QualityClassifier.loadIfValid(spark,
-            QueryArtifacts.path("target/quality-clf-excised", dir),
-            tag + "#excise-batch")
+        () => QueryArtifacts.reopenAt(spark, dir, clfExcisedLocation)(
+            graft.operators.QualityClassifier.loadIfValid)
           .map(_.score(docs3, "doc_id", "text").count())),
       ("inverted_index_appended",
         () => { invAppendedCompacted(spark, dir); () },
-        () => graft.operators.InvertedIndex.loadIfValid(spark,
-            QueryArtifacts.path("target/inverted-index-appended", dir),
-            tag + "#append-batch")
+        () => QueryArtifacts.reopenAt(spark, dir, invAppendedLocation)(
+            graft.operators.InvertedIndex.loadIfValid)
           .map(_.serve(Seq("hash", "join", "vector")).count())),
       ("inverted_index_excised",
         () => { invExcisedCompacted(spark, dir); () },
-        () => graft.operators.InvertedIndex.loadIfValid(spark,
-            QueryArtifacts.path("target/inverted-index-excised", dir),
-            tag + "#excise-batch")
+        () => QueryArtifacts.reopenAt(spark, dir, invExcisedLocation)(
+            graft.operators.InvertedIndex.loadIfValid)
           .map(_.serve(Seq("hash", "join", "vector")).count())),
       ("bpe",
         () => { bpeMerges(spark, dir); () },
-        () => graft.operators.BpeTokenizer.loadIfValid(spark,
-            QueryArtifacts.path("target/bpe-merges", dir), tag)
+        () => QueryArtifacts.reopenAt(spark, dir, bpeLocation)(
+            graft.operators.BpeTokenizer.loadIfValid)
           .map { m =>
             spark.range(1).select(
               size(graft.operators.BpeTokenizer.encode(
@@ -1439,8 +1456,7 @@ object TextQueries {
 
   private def bigramLmPersisted(spark: SparkSession, dir: String): graft.operators.BigramLm =
     lmFileCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/bigram-lm", dir)
-      val tag = lmSourceTag(spark, dir)
+      val (path, tag) = bigramLocation(spark, dir)
       graft.operators.BigramLm.loadIfValid(spark, path, tag).getOrElse {
         val docs = Tables.load(spark, dir, "documents")
         graft.operators.BigramLm.train(docs.filter(col("doc_id") % 5 =!= 0), "text")
@@ -1463,9 +1479,8 @@ object TextQueries {
   private def bigramLmExcised(spark: SparkSession,
       dir: String): graft.operators.BigramLm =
     lmExciseCache((spark, dir)) {
-      val srcPath = QueryArtifacts.path("target/bigram-lm", dir)
-      val path = QueryArtifacts.path("target/bigram-lm-excised", dir)
-      val exciseTag = lmSourceTag(spark, dir) + "#excise-batch"
+      val srcPath = bigramLocation(spark, dir)._1
+      val (path, exciseTag) = bigramExcisedLocation(spark, dir)
       if (graft.operators.BigramLm.loadIfValid(spark, path, exciseTag).isEmpty) {
         bigramLmPersisted(spark, dir) // ensure the source artifact exists
         QueryArtifacts.cloneArtifact(srcPath, path)
@@ -1488,8 +1503,7 @@ object TextQueries {
 
   private def trigramLmPersisted(spark: SparkSession, dir: String): graft.operators.TrigramLm =
     trigramFileCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/trigram-lm", dir)
-      val tag = lmSourceTag(spark, dir)
+      val (path, tag) = trigramLocation(spark, dir)
       graft.operators.TrigramLm.loadIfValid(spark, path, tag).getOrElse {
         val docs = Tables.load(spark, dir, "documents")
         graft.operators.TrigramLm.train(docs.filter(col("doc_id") % 5 =!= 0), "text")
@@ -1512,9 +1526,8 @@ object TextQueries {
   private def trigramLmExcised(spark: SparkSession,
       dir: String): graft.operators.TrigramLm =
     trigramExciseCache((spark, dir)) {
-      val srcPath = QueryArtifacts.path("target/trigram-lm", dir)
-      val path = QueryArtifacts.path("target/trigram-lm-excised", dir)
-      val exciseTag = lmSourceTag(spark, dir) + "#excise-batch"
+      val srcPath = trigramLocation(spark, dir)._1
+      val (path, exciseTag) = trigramExcisedLocation(spark, dir)
       if (graft.operators.TrigramLm.loadIfValid(spark, path, exciseTag).isEmpty) {
         trigramLmPersisted(spark, dir) // ensure the source artifact exists
         QueryArtifacts.cloneArtifact(srcPath, path)
@@ -1540,13 +1553,12 @@ object TextQueries {
     * cold-serve hooks share with [[invertedIndexPersisted]]. */
   private[queries] def invIndexLocation(spark: SparkSession,
       dir: String): (String, String) =
-    (QueryArtifacts.path("target/inverted-index", dir), lmSourceTag(spark, dir))
+    textLocation(spark, dir, "inverted-index")
 
   private[queries] def invertedIndexPersisted(spark: SparkSession,
       dir: String): graft.operators.InvertedIndex =
     invFileCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/inverted-index", dir)
-      val tag = lmSourceTag(spark, dir)
+      val (path, tag) = invIndexLocation(spark, dir)
       graft.operators.InvertedIndex.loadIfValid(spark, path, tag).getOrElse {
         graft.operators.InvertedIndex
           .build(Tables.load(spark, dir, "documents"), "doc_id", "text")
@@ -1562,8 +1574,7 @@ object TextQueries {
 
   private def clfPersisted(spark: SparkSession, dir: String): graft.operators.QualityClassifier =
     clfFileCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/quality-clf", dir)
-      val tag = lmSourceTag(spark, dir)
+      val (path, tag) = clfLocation(spark, dir)
       graft.operators.QualityClassifier.loadIfValid(spark, path, tag).getOrElse {
         graft.operators.QualityClassifier
           .train(seedSlice(spark, dir), "text", "lang")
@@ -1587,9 +1598,8 @@ object TextQueries {
   private def clfExcised(spark: SparkSession,
       dir: String): graft.operators.QualityClassifier =
     clfExciseCache((spark, dir)) {
-      val srcPath = QueryArtifacts.path("target/quality-clf", dir)
-      val path = QueryArtifacts.path("target/quality-clf-excised", dir)
-      val exciseTag = lmSourceTag(spark, dir) + "#excise-batch"
+      val srcPath = clfLocation(spark, dir)._1
+      val (path, exciseTag) = clfExcisedLocation(spark, dir)
       if (graft.operators.QualityClassifier
           .loadIfValid(spark, path, exciseTag).isEmpty) {
         clfPersisted(spark, dir) // ensure the source artifact exists

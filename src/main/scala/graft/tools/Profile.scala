@@ -1,13 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
-/** Dev harness: time query variants / dump plans. Not part of the driver
-  * contract. Usage: runMain graft.tools.Profile <name> [sfDir] */
+/** Dev harness: time driver queries / dump plans. Not part of the driver
+  * contract. Usage: runMain graft.tools.Profile <mode> [sfDir] <query>...
+  * with mode one of time, timeN, jobs, plantime, explain, run. */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val what = args.headOption.getOrElse("jaccard")
+    val what = args.headOption.getOrElse("time")
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val spark = SparkSession.builder()
       .master("local[32]")
@@ -24,78 +24,7 @@ object Profile {
       println(f"[profile] $label%-28s ${(System.nanoTime() - t0) / 1e9}%8.2fs  rows=$n")
     }
 
-    def shingleEx(persist: Boolean): DataFrame = {
-      val docs = graft.Tables.load(spark, dir, "documents")
-      val ex = docs.withColumn("w", split(lower(col("text")), " "))
-        .filter(size(col("w")) >= 3)
-        .withColumn("shingles", array_distinct(expr(
-          "transform(sequence(1, size(w)-2), i -> concat_ws(' ', element_at(w,i), element_at(w,i+1), element_at(w,i+2)))")))
-        .select(col("doc_id"), size(col("shingles")).as("n"), explode(col("shingles")).as("s"))
-      if (persist) { ex.persist(); ex.count(); ex } else ex
-    }
-
-    def jacc(ex: DataFrame, bcast: Boolean): Long = {
-      val a = ex.select(col("doc_id").as("doc_id_1"), col("n").as("n1"), col("s"))
-      val b0 = ex.select(col("doc_id").as("doc_id_2"), col("n").as("n2"), col("s"))
-      val b = if (bcast) broadcast(b0) else b0
-      a.join(b, Seq("s")).filter(col("doc_id_1") < col("doc_id_2"))
-        .groupBy("doc_id_1", "doc_id_2")
-        .agg(count(lit(1)).as("inter"), first("n1").as("n1"), first("n2").as("n2"))
-        .withColumn("j", col("inter") / (col("n1") + col("n2") - col("inter")))
-        .filter(col("j") >= 0.8).count()
-    }
-
     what match {
-      case "jaccard" =>
-        time("shuffle-join")(jacc(shingleEx(persist = false), bcast = false))
-        val exP = shingleEx(persist = true)
-        time("persist+shuffle")(jacc(exP, bcast = false))
-        time("persist+broadcast")(jacc(exP, bcast = true))
-        exP.unpersist()
-        time("broadcast-no-persist")(jacc(shingleEx(persist = false), bcast = true))
-      case "jaccard2" =>
-        def run(dfFilter: Boolean): Long = {
-          val docs = graft.Tables.load(spark, dir, "documents")
-          val ex0 = docs.withColumn("w", split(lower(col("text")), " "))
-            .filter(size(col("w")) >= 3)
-            .select(col("doc_id"),
-              explode(graft.functions.functions.word_shingles(col("w"), 3)).as("s"))
-            .persist()
-          ex0.count()
-          val counts = ex0.groupBy("doc_id").agg(count(lit(1)).as("n"))
-          val exBase = ex0.join(broadcast(counts), Seq("doc_id"))
-          val ex = if (dfFilter) {
-            val shared = ex0.groupBy("s").agg(count(lit(1)).as("df")).filter(col("df") > 1)
-              .select("s")
-            exBase.join(shared, Seq("s"))
-          } else exBase
-          val a = ex.select(col("doc_id").as("d1"), col("n").as("n1"), col("s"))
-          val b = ex.select(col("doc_id").as("d2"), col("n").as("n2"), col("s"))
-          val out = a.join(b, Seq("s")).filter(col("d1") < col("d2"))
-            .groupBy("d1", "d2")
-            .agg(count(lit(1)).as("i"), first("n1").as("n1"), first("n2").as("n2"))
-            .filter(col("i") / (col("n1") + col("n2") - col("i")) >= 0.8).count()
-          ex0.unpersist()
-          out
-        }
-        time("warm")(run(false))
-        time("no-df-filter")(run(false))
-        time("df>1 filter")(run(true))
-      case "cc" =>
-        val docs = graft.Tables.load(spark, dir, "documents")
-        def pairs0 = graft.operators.Dedup
-          .ngramJaccardPairs(docs, "doc_id", "text", minJaccard = Some(0.7999))
-        time("pairs-only")(pairs0.count())
-        time("pairs-again")(pairs0.count())
-        val cached = pairs0.persist()
-        cached.count()
-        time("cc-only")(graft.operators.Dedup
-          .connectedComponents(cached, "doc_id_1", "doc_id_2").count())
-        time("cc-only-again")(graft.operators.Dedup
-          .connectedComponents(cached, "doc_id_1", "doc_id_2").count())
-        cached.unpersist()
-        time("resolve-full")(graft.operators.Dedup
-          .resolveClusters(docs, "doc_id", pairs0, "doc_id_1", "doc_id_2").count())
       case "time" =>
         graft.SparkEntry.queries.get(args(2)) match {
           case Some(fn) =>
@@ -123,38 +52,6 @@ object Profile {
               println(f"[profile] $q warm-min ${laps.min}%8.3fs median ${laps.sorted.apply(n / 2)}%8.3fs")
             case None => println(s"unknown query $q")
           }
-        }
-      case "loadcost" =>
-        // cost of Tables.load itself (file listing + footer schema
-        // inference) per call, warm
-        Seq("lineitem", "orders", "customer", "documents", "embeddings",
-          "events", "nation").foreach { t =>
-          graft.Tables.load(spark, dir, t) // warm
-          val t0 = System.nanoTime()
-          (1 to 10).foreach(_ => graft.Tables.load(spark, dir, t))
-          println(f"[loadcost] $t%-12s ${(System.nanoTime() - t0) / 1e7 / 10}%6.1f ms/call")
-        }
-      case "q5steps" =>
-        // decompose q5_nation_revenue's DataFrame-construction cost
-        (1 to 3).foreach { i =>
-          def lap[T](label: String)(f: => T): T = {
-            val t0 = System.nanoTime()
-            val r = f
-            println(f"[q5steps] #$i $label%-14s ${(System.nanoTime() - t0) / 1e6}%7.1f ms")
-            r
-          }
-          val nation = lap("load nation")(graft.Tables.load(spark, dir, "nation"))
-          val customer = lap("load customer")(graft.Tables.load(spark, dir, "customer"))
-          val orders = lap("load orders")(graft.Tables.load(spark, dir, "orders"))
-          val lineitem = lap("load lineitem")(graft.Tables.load(spark, dir, "lineitem"))
-          val j1 = lap("join orders")(lineitem.join(orders, col("l_orderkey") === col("o_orderkey")))
-          val j2 = lap("join customer")(j1.join(customer, col("o_custkey") === col("c_custkey")))
-          val j3 = lap("join nation")(j2.join(broadcast(nation), col("c_nationkey") === col("n_nationkey")))
-          val g = lap("groupBy/agg")(j3.groupBy("n_name").agg(
-            round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
-            count(lit(1)).as("n_lineitems")))
-          val o = lap("orderBy")(g.orderBy("n_name"))
-          lap("count")(o.count())
         }
       case "jobs" =>
         // per-job wall-time breakdown of one warm pass: how many Spark
@@ -229,37 +126,6 @@ object Profile {
             case None => println(s"unknown query $name")
           }
         }
-      case "ivf-persist" =>
-        // build -> write cell-partitioned -> load -> partial probe, and
-        // show the statically-pruned cells scan (see IvfPersistSpec);
-        // default confs on purpose — that's the production claim
-        import org.apache.spark.sql.functions.col
-        val emb = graft.Tables.load(spark, dir, "embeddings")
-        val path = "target/profile-ivf"
-        graft.operators.IvfIndex.build(emb, "vec_id", "embedding", nCells = 8).write(path)
-        val loaded = graft.operators.IvfIndex.load(spark, path)
-        // 2 queries x nprobe 2 so the probed-cell union stays well under
-        // nCells and the pruning is visible in the partition count
-        val q = emb.filter(col("vec_id") < 2)
-          .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-        val topk = loaded.topK(q, k = 5, nprobe = 2)
-        topk.collect()
-        val probed = loaded.probes(q, 2).select("cell").distinct().count()
-        println(s"probed cells: $probed of ${loaded.nCells}")
-        // partitions-read from the SAME QueryExecution (metrics rule)
-        def scans(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
-          p.collect {
-            case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
-            case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec => scans(qs.plan)
-          }.flatten
-        val executed = topk.queryExecution.executedPlan match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-          case p => p
-        }
-        scans(executed).filter(_.metadata.get("Location").exists(_.contains("profile-ivf")))
-          .foreach(s => println(s"cells scan partitions read: " +
-            s.metrics.get("numPartitions").map(_.value).getOrElse(-1L)))
-        println(topk.queryExecution.executedPlan.toString)
       case other => println(s"unknown profile $other")
     }
     spark.stop()

@@ -32,6 +32,9 @@ class BigramLmPersistSpec extends AnyFunSuite {
 
   test("manifest-validated reload runs zero training jobs; wrong source refuses") {
     BigramLm.train(train, "text").write(path, source = "spec-v1")
+    ManifestFields.pin(path, Map(
+      "version" -> "2", "source" -> "spec-v1", "ctxRows" -> "31",
+      "modelRows" -> "916", "v" -> "31", "vocabRows" -> "31"))
     val before = BigramLm.trainCount
     val hit = BigramLm.loadIfValid(spark, path, "spec-v1")
     assert(hit.isDefined, "valid manifest refused")
@@ -77,6 +80,10 @@ class BigramLmPersistSpec extends AnyFunSuite {
     val takedown = corpus.filter(col("doc_id") === 2)
     BigramLm.train(corpus, "text").write(path, source = "base")
     assert(BigramLm.exciseFrom(spark, path, takedown, "text", "takedown-1"))
+    ManifestFields.pin(path, Map(
+      "version" -> "2", "source" -> "takedown-1",
+      "appliedSources" -> "base\u0001takedown-1", "ctxRows" -> "3",
+      "modelRows" -> "4", "v" -> "3", "vocabRows" -> "3"))
     val excised = BigramLm.load(spark, path)
     val survivor = BigramLm.train(corpus.filter(col("doc_id") =!= 2), "text")
     assert(excised.v === survivor.v, "v must re-derive over the survivors")

@@ -69,6 +69,10 @@ class BpeSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
     val merges = BpeTokenizer.train(docs, "text", nMerges = 60, vocabWords = 2000)
     BpeTokenizer.write(spark, path, merges, source = "spec-v1")
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "spec-v1",
+      "mergesSha" -> "72e34d395d93912838ea284a8c2b8fcee4e8504bf2c26297fff09dc838f62d8d",
+      "nMerges" -> "60"))
     val before = BpeTokenizer.trainCount
     val reloaded = BpeTokenizer.loadIfValid(spark, path, "spec-v1")
     assert(reloaded.isDefined, "valid manifest refused to load")

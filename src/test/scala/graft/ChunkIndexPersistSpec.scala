@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{CdcChunking, ChunkIndex, Multimodal}
+import graft.operators.{CdcChunking, ChunkIndex, Manifest, Multimodal}
 
 /** Durable CDC chunk-index lifecycle: write -> manifest-validated reload
   * with zero chunking jobs, exact table parity, source/param
@@ -34,6 +34,9 @@ class ChunkIndexPersistSpec extends AnyFunSuite {
 
   test("manifest-validated reload runs zero chunking builds; wrong source/params refuse") {
     ChunkIndex.build(media(corpus)).write(path, source = "spec-v1")
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "spec-v1", "appliedSources" -> "spec-v1",
+      "maskBits" -> "6", "rows" -> "1693", "tombRows" -> "0"))
     val before = ChunkIndex.buildCount
     val hit = ChunkIndex.loadIfValid(spark, path, "spec-v1")
     assert(hit.isDefined, "valid manifest refused")
@@ -49,6 +52,10 @@ class ChunkIndexPersistSpec extends AnyFunSuite {
     ChunkIndex.build(media(corpus)).write(path, source = "spec-v1")
     val base = ChunkIndex.load(spark, path).chunks.count()
     assert(ChunkIndex.appendTo(spark, path, media(arrivals), "day-1"))
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "day-1",
+      "appliedSources" -> "day-1\u0001spec-v1", "maskBits" -> "6",
+      "rows" -> "2296", "tombRows" -> "0"))
     val after = ChunkIndex.load(spark, path)
     val expected = CdcChunking.chunkTable(media(arrivals)).count()
     assert(after.chunks.count() === base + expected)
@@ -84,6 +91,10 @@ class ChunkIndexPersistSpec extends AnyFunSuite {
     ChunkIndex.build(media(docs)).write(path, source = "base")
     val takedown = docs.filter(col("doc_id") % 3 === 0).select("doc_id")
     assert(ChunkIndex.excise(spark, path, takedown, "takedown-1"))
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "takedown-1",
+      "appliedSources" -> "base\u0001takedown-1", "maskBits" -> "6",
+      "rows" -> "2296", "tombRows" -> "167"))
     val tombstoned = ChunkIndex.load(spark, path)
     // the baked anti join serves exactly the survivors-only chunk table
     // (chunking is per-doc local, so the oracle is a fresh build)
@@ -100,6 +111,10 @@ class ChunkIndexPersistSpec extends AnyFunSuite {
     // compaction drops the rows physically and clears the list
     val physBefore = spark.read.parquet(s"$path/chunks").count()
     ChunkIndex.compact(spark, path)
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "takedown-1",
+      "appliedSources" -> "base\u0001takedown-1", "maskBits" -> "6",
+      "rows" -> "1493", "tombRows" -> "0"))
     assert(spark.read.parquet(s"$path/chunks").count() < physBefore)
     assert(!new java.io.File(s"$path/tombstones").exists())
     assert(tableRows(ChunkIndex.load(spark, path)) === tableRows(survivors),
@@ -124,10 +139,14 @@ class ChunkIndexPersistSpec extends AnyFunSuite {
     assert(ChunkIndex.appendTo(spark, cPath,
       media(arrivals.filter(col("doc_id") % 8 =!= 0)), "day-2"))
     val before = tableRows(ChunkIndex.load(spark, cPath))
-    val filesBefore = ChunkIndex.chunksFileCount(spark, cPath)
+    val filesBefore = Manifest.parquetFileCount(spark, s"$cPath/chunks")
     assert(filesBefore > 1, "fixture degenerate: not fragmented")
     ChunkIndex.compact(spark, cPath, nFiles = 1)
-    assert(ChunkIndex.chunksFileCount(spark, cPath) === 1)
+    ManifestFields.pin(cPath, Map(
+      "version" -> "1", "source" -> "day-2",
+      "appliedSources" -> "day-1\u0001day-2\u0001spec-v1", "maskBits" -> "6",
+      "rows" -> "2296", "tombRows" -> "0"))
+    assert(Manifest.parquetFileCount(spark, s"$cPath/chunks") === 1)
     assert(tableRows(ChunkIndex.load(spark, cPath)) === before,
       "compaction changed the chunk table")
     // ledger survived the rewrite; the latest tag still validates

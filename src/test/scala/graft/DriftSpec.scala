@@ -98,6 +98,12 @@ class DriftSpec extends AnyFunSuite {
       // recovers, the report resets, and the ledger survives
       val rebuilt = IvfIndex.retrain(spark, path, nCells = 4,
         newSource = "retrain-1")
+      ManifestFields.pin(path, Map(
+        "version" -> "1", "source" -> "retrain-1",
+        "appliedSources" -> "base\u0001drift-day\u0001retrain-1",
+        "buildCellSizes" -> "0:500,1:100,2:100,3:100",
+        "centroidSha" -> "c406d7533027c953fb7181e13fa295fa9ee925ae33ef5d76b21b43f2a2b8c339",
+        "nCells" -> "4", "rows" -> "800", "tombRows" -> "0"))
       val recovered = recallAt1(rebuilt)
       assert(recovered >= 0.9,
         s"retrain did not restore recall: $staleRecall -> $recovered")
@@ -155,6 +161,12 @@ class DriftSpec extends AnyFunSuite {
       // retrain fits the codebook to the combined population: the sample
       // error drops back under the staleness bar and the report resets
       PqIndex.retrain(spark, path, m = 8, ksub = 16, newSource = "retrain-1")
+      ManifestFields.pin(path, Map(
+        "version" -> "1", "source" -> "retrain-1",
+        "appliedSources" -> "base\u0001drift-day\u0001retrain-1",
+        "buildMse" -> "26.199563774925966", "buildRows" -> "500",
+        "codebookSha" -> "686ebe4a26f82903c467abb52e4411378d93c8cc6e5497391667ca963c4a0bef",
+        "ksub" -> "16", "m" -> "8", "rows" -> "500", "tombRows" -> "0"))
       val after = PqIndex.staleness(spark, path)
       assert(!after.stale, s"retrained index reported stale: $after")
       assert(after.fracAppended === 0.0)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{InvertedIndex, TextAnalysis}
+import graft.operators.{InvertedIndex, Manifest, TextAnalysis}
 
 /** Durable inverted index: served BM25 == the fused one-call ranking
   * row-for-row, driver/engine bucket parity, manifest-validated zero-build
@@ -73,6 +73,11 @@ class InvertedIndexSpec extends AnyFunSuite {
     val docs = Tables.load(spark, TestSpark.sfDir, "documents")
     val path = "target/test-inverted-index"
     InvertedIndex.build(docs, "doc_id", "text").write(path, source = "tag-a")
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "tag-a", "idCol" -> "doc_id",
+      "nBuckets" -> "64", "nDl" -> "500", "nDocs" -> "500",
+      "postRows" -> "11743", "sumDl" -> "27939", "termRows" -> "31",
+      "tombRows" -> "0"))
     val builds = InvertedIndex.buildCount
     val reopened = InvertedIndex.loadIfValid(spark, path, source = "tag-a")
     assert(reopened.isDefined, "valid manifest must reopen")
@@ -120,6 +125,12 @@ class InvertedIndexSpec extends AnyFunSuite {
     val path = "target/test-inverted-index-append"
     InvertedIndex.build(base, "doc_id", "text").write(path, source = "base")
     assert(InvertedIndex.appendTo(spark, path, batch, "text", "day-1"))
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "day-1",
+      "appliedSources" -> "base\u0001day-1", "idCol" -> "doc_id",
+      "nBuckets" -> "64", "nDl" -> "500", "nDocs" -> "500",
+      "postRows" -> "11743", "sumDl" -> "27939", "termRows" -> "31",
+      "tombRows" -> "0"))
     val idx = InvertedIndex.load(spark, path)
     // df merged and scalars added: the served ranking over base+batch is
     // bit-identical to a fused pass over the whole corpus
@@ -157,12 +168,18 @@ class InvertedIndexSpec extends AnyFunSuite {
       docs.filter(col("doc_id") % 3 === 2), "text", "day-1"))
     assert(InvertedIndex.appendTo(spark, path,
       docs.filter(col("doc_id") % 3 === 0), "text", "day-2"))
-    val before = InvertedIndex.postingsFileCount(spark, path)
+    val before = Manifest.parquetFileCount(spark, s"$path/postings")
     val idxBefore = InvertedIndex.load(spark, path)
     assert(before > idxBefore.nBuckets,
       s"fixture degenerate: $before files is not fragmented past one per bucket")
     InvertedIndex.compact(spark, path)
-    val after = InvertedIndex.postingsFileCount(spark, path)
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "day-2",
+      "appliedSources" -> "base\u0001day-1\u0001day-2", "idCol" -> "doc_id",
+      "nBuckets" -> "64", "nDl" -> "500", "nDocs" -> "500",
+      "postRows" -> "11743", "sumDl" -> "27939", "termRows" -> "31",
+      "tombRows" -> "0"))
+    val after = Manifest.parquetFileCount(spark, s"$path/postings")
     assert(after < before, s"compaction did not shrink the file set ($before -> $after)")
     assert(after <= idxBefore.nBuckets, "compaction must leave <= one file per bucket")
     // served ranking unchanged bit-for-bit (same rows, same scalars)
@@ -196,6 +213,12 @@ class InvertedIndexSpec extends AnyFunSuite {
     val path = "target/test-inverted-index-excise"
     InvertedIndex.build(docs, "doc_id", "text").write(path, source = "base")
     assert(InvertedIndex.excise(spark, path, takedown, "text", "takedown-1"))
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "takedown-1",
+      "appliedSources" -> "base\u0001takedown-1", "idCol" -> "doc_id",
+      "nBuckets" -> "64", "nDl" -> "333", "nDocs" -> "333",
+      "postRows" -> "11743", "sumDl" -> "18028", "termRows" -> "31",
+      "tombRows" -> "167"))
     // BEFORE compaction: the tombstone anti-join plus the corrected
     // df/N/avgdl already serve EXACTLY the fresh-build-on-survivors
     // ranking — stale corpus stats are the bug this pin exists to catch
@@ -219,6 +242,12 @@ class InvertedIndexSpec extends AnyFunSuite {
     // compaction physically drops the tombstoned rows and clears the list
     val postBefore = tombstoned.postings.count()
     InvertedIndex.compact(spark, path)
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "takedown-1",
+      "appliedSources" -> "base\u0001takedown-1", "idCol" -> "doc_id",
+      "nBuckets" -> "64", "nDl" -> "333", "nDocs" -> "333",
+      "postRows" -> "7714", "sumDl" -> "18028", "termRows" -> "31",
+      "tombRows" -> "0"))
     val compacted = InvertedIndex.load(spark, path)
     assert(compacted.tombstones.isEmpty, "compaction must clear tombstones")
     assert(compacted.postings.count() < postBefore,

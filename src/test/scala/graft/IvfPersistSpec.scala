@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-import graft.operators.IvfIndex
+import graft.operators.{IvfIndex, Manifest}
 
 /** The cluster-scale IVF claim (IvfIndex scaladoc): the inverted file
   * persisted as a CELL-PARTITIONED table must (a) reproduce the in-session
@@ -96,6 +96,11 @@ class IvfPersistSpec extends AnyFunSuite {
     val p = "target/ivf-persist-manifest"
     val built = IvfIndex.build(emb, "vec_id", "embedding", nCells = 8)
     built.write(p, source = "tag-a")
+    ManifestFields.pin(p, Map(
+      "version" -> "1", "source" -> "tag-a", "appliedSources" -> "tag-a",
+      "buildCellSizes" -> "0:62,1:64,2:60,3:61,4:53,5:71,6:63,7:66",
+      "centroidSha" -> "024640b4265cd50d03176a445342b153f87cd3847ac45459f1d03adc9ab69682",
+      "nCells" -> "8", "rows" -> "500", "tombRows" -> "0"))
     // the second-session path: validate-and-load must NOT re-run the
     // quantizer fit (the corpus-sampling build) — the whole point of the
     // durable manifest
@@ -160,6 +165,12 @@ class IvfPersistSpec extends AnyFunSuite {
       val buildsBefore = IvfIndex.buildsRun.get()
       assert(IvfIndex.appendTo(spark, apPath, newPart, "vec_id", "embedding",
         newSource = "base-v1+delta"), "first append refused")
+      ManifestFields.pin(apPath, Map(
+        "version" -> "1", "source" -> "base-v1+delta",
+        "appliedSources" -> "base-v1\u0001base-v1+delta",
+        "buildCellSizes" -> "0:46,1:40,2:38,3:37,4:38,5:52,6:45,7:37",
+        "centroidSha" -> "7ac235f6470d41487dcdd2d2cace2362666e7306ca4aaa6e5452f78bb5b4e77a",
+        "nCells" -> "8", "rows" -> "500", "tombRows" -> "0"))
       assert(IvfIndex.buildsRun.get() == buildsBefore,
         "append ran a quantizer fit — the existing centroids are the contract")
 
@@ -256,11 +267,17 @@ class IvfPersistSpec extends AnyFunSuite {
       .select("q_id", "c_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
     val before = served()
-    val filesBefore = IvfIndex.cellsFileCount(spark, path)
+    val filesBefore = Manifest.parquetFileCount(spark, s"$path/cells")
     assert(filesBefore > 8,
       s"fixture degenerate: $filesBefore files is not fragmented past one per cell")
     IvfIndex.compact(spark, path)
-    val filesAfter = IvfIndex.cellsFileCount(spark, path)
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "day-2",
+      "appliedSources" -> "base\u0001day-1\u0001day-2",
+      "buildCellSizes" -> "0:27,1:19,2:24,3:23,4:12,5:21,6:17,7:24",
+      "centroidSha" -> "66b8bed16bd15b0d51ef9c852cd63d7ad3b55d8bc8936731bede39501db6cc9d",
+      "nCells" -> "8", "rows" -> "500", "tombRows" -> "0"))
+    val filesAfter = Manifest.parquetFileCount(spark, s"$path/cells")
     assert(filesAfter < filesBefore && filesAfter <= 8,
       s"compaction must leave <= one file per cell ($filesBefore -> $filesAfter)")
     assert(served() === before, "compaction changed the served ranking")
@@ -287,6 +304,12 @@ class IvfPersistSpec extends AnyFunSuite {
     try built.write(path, source = "base") finally built.close()
     val takedown = emb.filter(col("vec_id") % 7 === 0).select("vec_id")
     assert(IvfIndex.excise(spark, path, takedown, "vec_id", "takedown-1"))
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "takedown-1",
+      "appliedSources" -> "base\u0001takedown-1",
+      "buildCellSizes" -> "0:62,1:64,2:60,3:61,4:53,5:71,6:63,7:66",
+      "centroidSha" -> "024640b4265cd50d03176a445342b153f87cd3847ac45459f1d03adc9ab69682",
+      "nCells" -> "8", "rows" -> "500", "tombRows" -> "72"))
     // BEFORE compaction: the baked anti-join serves exactly what an index
     // over only the survivors (same frozen centroids) would
     val tombstoned = IvfIndex.load(spark, path)
@@ -313,6 +336,12 @@ class IvfPersistSpec extends AnyFunSuite {
     // compaction physically drops the tombstoned rows and clears the list
     val physBefore = spark.read.parquet(s"$path/cells").count()
     IvfIndex.compact(spark, path)
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "takedown-1",
+      "appliedSources" -> "base\u0001takedown-1",
+      "buildCellSizes" -> "0:62,1:64,2:60,3:61,4:53,5:71,6:63,7:66",
+      "centroidSha" -> "024640b4265cd50d03176a445342b153f87cd3847ac45459f1d03adc9ab69682",
+      "nCells" -> "8", "rows" -> "428", "tombRows" -> "0"))
     val physAfter = spark.read.parquet(s"$path/cells").count()
     assert(physAfter < physBefore, "compaction did not drop excised rows")
     assert(!new java.io.File(s"$path/tombstones").exists(),

@@ -65,6 +65,9 @@ class MarkovModelSpec extends AnyFunSuite {
 
   test("manifest-validated reload runs zero training jobs; wrong source refuses") {
     MarkovModel.train(fixturePairs).write(path, source = "spec-v1")
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "spec-v1", "countRows" -> "3",
+      "totalRows" -> "2"))
     val before = MarkovModel.trainCount
     val hit = MarkovModel.loadIfValid(spark, path, "spec-v1")
     assert(hit.isDefined, "valid manifest refused")
@@ -101,6 +104,10 @@ class MarkovModelSpec extends AnyFunSuite {
     val path = "target/markov-model-test/appended"
     MarkovModel.train(even).write(path, source = "base")
     assert(MarkovModel.appendTo(spark, path, odd, "day-1"))
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "day-1",
+      "appliedSources" -> "base\u0001day-1", "countRows" -> "3",
+      "totalRows" -> "2"))
     // additive counts: appended == full train, bit for bit
     val appended = MarkovModel.load(spark, path)
     val full = MarkovModel.train(fixturePairs)
@@ -135,6 +142,10 @@ class MarkovModelSpec extends AnyFunSuite {
     val user2 = fixturePairs.filter(col("user_id") === 2)
     MarkovModel.train(fixturePairs).write(path, source = "base")
     assert(MarkovModel.exciseFrom(spark, path, user2, "takedown-1"))
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "takedown-1",
+      "appliedSources" -> "base\u0001takedown-1", "countRows" -> "2",
+      "totalRows" -> "2"))
     // exact unlearning: excised == fresh train on the survivor, bit for
     // bit — AND the a->a class (only user 2's) dropped at count zero
     val excised = MarkovModel.load(spark, path)

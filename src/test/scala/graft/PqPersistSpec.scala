@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.PqIndex
+import graft.operators.{Manifest, PqIndex}
 
 /** Durable PQ index lifecycle: write -> manifest-validated reload with
   * zero build jobs, exact parity with the in-session index, and
@@ -59,6 +59,12 @@ class PqPersistSpec extends AnyFunSuite {
       val before = PqIndex.buildCount
       assert(PqIndex.appendTo(spark, apPath, newPart, "vec_id", "embedding",
         newSource = "base-v1+delta"), "first append refused")
+      ManifestFields.pin(apPath, Map(
+        "version" -> "1", "source" -> "base-v1+delta",
+        "appliedSources" -> "base-v1\u0001base-v1+delta",
+        "buildMse" -> "0.5184782905101092", "buildRows" -> "333",
+        "codebookSha" -> "ad07718c183976191f7e03085c80b8903e23eb859c58d6d696344b2fa4070d3b",
+        "ksub" -> "16", "m" -> "8", "rows" -> "500", "tombRows" -> "0"))
       assert(PqIndex.buildCount === before, "append ran a codebook fit")
       // IDEMPOTENCE: the same-tag retry no-ops (ledger refusal), and the
       // original write tag is refused too — row count cannot drift
@@ -99,10 +105,16 @@ class PqPersistSpec extends AnyFunSuite {
       .select("q_id", "c_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
     val before = served()
-    val filesBefore = PqIndex.codesFileCount(spark, path)
+    val filesBefore = Manifest.parquetFileCount(spark, s"$path/codes")
     assert(filesBefore > 1, "fixture degenerate: not fragmented")
     PqIndex.compact(spark, path, nFiles = 1)
-    assert(PqIndex.codesFileCount(spark, path) === 1)
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "day-2",
+      "appliedSources" -> "base\u0001day-1\u0001day-2",
+      "buildMse" -> "0.47409806486948314", "buildRows" -> "167",
+      "codebookSha" -> "ba5b88d621cf374d8b1bc88f882afbb439ef916b4d0c53ff53a7cda8ac800ec3",
+      "ksub" -> "16", "m" -> "8", "rows" -> "500", "tombRows" -> "0"))
+    assert(Manifest.parquetFileCount(spark, s"$path/codes") === 1)
     assert(served() === before, "compaction changed the served ranking")
     assert(!PqIndex.appendTo(spark, path,
       emb.filter(col("vec_id") % 3 === 0), "vec_id", "embedding", "day-2"))
@@ -148,6 +160,12 @@ class PqPersistSpec extends AnyFunSuite {
     try built.write(path, source = "base") finally built.close()
     val takedown = emb.filter(col("vec_id") % 7 === 0).select("vec_id")
     assert(PqIndex.excise(spark, path, takedown, "vec_id", "takedown-1"))
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "takedown-1",
+      "appliedSources" -> "base\u0001takedown-1",
+      "buildMse" -> "0.5369672440887394", "buildRows" -> "500",
+      "codebookSha" -> "4614e12bc709d3162f5e9d5f6bf6ce263b8ce74c78f5c0ec326905c79e029d26",
+      "ksub" -> "16", "m" -> "8", "rows" -> "500", "tombRows" -> "72"))
     val tombstoned = PqIndex.load(spark, path)
     // the baked anti join serves exactly what an index encoding only the
     // survivors under the same frozen codebook would
@@ -169,6 +187,12 @@ class PqPersistSpec extends AnyFunSuite {
     // compaction drops the rows physically and clears the list
     val physBefore = spark.read.parquet(s"$path/codes").count()
     PqIndex.compact(spark, path)
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "takedown-1",
+      "appliedSources" -> "base\u0001takedown-1",
+      "buildMse" -> "0.5369672440887394", "buildRows" -> "500",
+      "codebookSha" -> "4614e12bc709d3162f5e9d5f6bf6ce263b8ce74c78f5c0ec326905c79e029d26",
+      "ksub" -> "16", "m" -> "8", "rows" -> "428", "tombRows" -> "0"))
     assert(spark.read.parquet(s"$path/codes").count() < physBefore)
     assert(!new java.io.File(s"$path/tombstones").exists())
     assert(topkSet(PqIndex.load(spark, path)) === topkSet(survivorsIdx),
@@ -188,6 +212,11 @@ class PqPersistSpec extends AnyFunSuite {
     val built = PqIndex.build(emb, "vec_id", "embedding", m = 8, ksub = 16)
     try {
       built.write(path, source = "spec-v1")
+      ManifestFields.pin(path, Map(
+        "version" -> "1", "source" -> "spec-v1", "appliedSources" -> "spec-v1",
+        "buildMse" -> "0.5369672440887394", "buildRows" -> "500",
+        "codebookSha" -> "4614e12bc709d3162f5e9d5f6bf6ce263b8ce74c78f5c0ec326905c79e029d26",
+        "ksub" -> "16", "m" -> "8", "rows" -> "500", "tombRows" -> "0"))
       val before = PqIndex.buildCount
       val hit = PqIndex.loadIfValid(spark, path, "spec-v1")
       assert(hit.isDefined, "valid manifest refused")

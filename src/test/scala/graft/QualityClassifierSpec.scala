@@ -55,6 +55,9 @@ class QualityClassifierSpec extends AnyFunSuite {
     val trained = QualityClassifier.train(
       docs.filter(col("doc_id") % 5 === 0), "text", "lang")
     trained.write(path, source = "spec-v1")
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "spec-v1", "classRows" -> "5",
+      "countRows" -> "153", "v" -> "31"))
     val before = QualityClassifier.trainCount
     val reloaded = QualityClassifier.loadIfValid(spark, path, "spec-v1")
     assert(reloaded.isDefined, "valid manifest refused to load")
@@ -129,6 +132,10 @@ class QualityClassifierSpec extends AnyFunSuite {
     QualityClassifier.train(seeds, "text", "lang").write(path, "base")
     assert(QualityClassifier.exciseFrom(spark, path, takedown, "text",
       "lang", "takedown-1"))
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "takedown-1",
+      "appliedSources" -> "base\u0001takedown-1", "classRows" -> "2",
+      "countRows" -> "7", "v" -> "7"))
     val excised = QualityClassifier.load(spark, path)
     val survivor = QualityClassifier.train(
       seeds.filter(!col("doc_id").isin(2L, 5L)), "text", "lang")

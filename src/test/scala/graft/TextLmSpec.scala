@@ -156,6 +156,9 @@ class TextLmSpec extends AnyFunSuite {
     val path = "target/test-trigram-lm/" + java.util.UUID.randomUUID().toString
     val lm = graft.operators.TrigramLm.train(trigramTrainDocs, "text")
     lm.write(path, source = "spec-fixture")
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "spec-fixture", "biRows" -> "3",
+      "nTok" -> "9", "triRows" -> "2", "uniRows" -> "4", "v" -> "4"))
     val before = graft.operators.TrigramLm.trainCount
     val reopened = graft.operators.TrigramLm.loadIfValid(spark, path, "spec-fixture")
     assert(reopened.isDefined, "a complete, current manifest must reopen")
@@ -187,6 +190,10 @@ class TextLmSpec extends AnyFunSuite {
     graft.operators.TrigramLm.train(corpus, "text").write(path, "base")
     assert(graft.operators.TrigramLm.exciseFrom(spark, path, takedown,
       "text", "takedown-1"))
+    ManifestFields.pin(path, Map(
+      "version" -> "1", "source" -> "takedown-1",
+      "appliedSources" -> "base\u0001takedown-1", "biRows" -> "5",
+      "nTok" -> "10", "triRows" -> "5", "uniRows" -> "3", "v" -> "3"))
     val excised = graft.operators.TrigramLm.load(spark, path)
     val survivor = graft.operators.TrigramLm.train(
       corpus.filter(col("doc_id") =!= 2), "text")

@@ -253,4 +253,34 @@ class WriterLeaseSpec extends AnyFunSuite {
     rm(s"$path-next")
     assert(!WriterLease.adoptOrphanNext(spark, path))
   }
+
+  test("an IVF retrain interrupted after its first rename is adopted by " +
+      "the next reopen with zero builds; a pre-retrain batch still no-ops") {
+    def rm(p: String) =
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p))
+    val emb = Tables.load(spark, TestSpark.sfDir, "embeddings")
+    val path = "target/test-lease-retrain-crash"
+    Seq(path, s"$path-next", s"$path-old").foreach(rm)
+    val built = IvfIndex.build(emb.filter(col("vec_id") % 2 === 1),
+      "vec_id", "embedding", nCells = 4)
+    try built.write(path, "base") finally built.close()
+    val batch = emb.filter(col("vec_id") % 2 === 0)
+    assert(IvfIndex.appendTo(spark, path, batch, "vec_id", "embedding", "day-1"))
+    // the crash window: retrain staged the complete rebuild at -next and
+    // moved the live index aside to -old; the JVM died before the second
+    // rename, leaving nothing at the live path
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(path),
+      new java.io.File(s"$path-old"))
+    IvfIndex.retrain(spark, path, nCells = 4, newSource = "retrain-1").close()
+    assert(new java.io.File(path).renameTo(new java.io.File(s"$path-next")))
+    val builds = IvfIndex.buildsRun.get()
+    assert(IvfIndex.loadIfValid(spark, path, "retrain-1").isDefined,
+      "loadIfValid must adopt the complete staged retrain, not miss")
+    assert(IvfIndex.buildsRun.get() === builds, "adoption runs zero builds")
+    assert(!new java.io.File(s"$path-next").exists())
+    assert(!new java.io.File(s"$path-old").exists())
+    // the staged manifest carried the pre-retrain ledger
+    assert(!IvfIndex.appendTo(spark, path, batch, "vec_id", "embedding", "day-1"),
+      "a replayed pre-retrain batch must stay a ledger no-op")
+  }
 }
