@@ -207,7 +207,8 @@ object BigramLm {
       source: String): Option[BigramLm] =
     Manifest.reopen(spark, path, Format, source) { m =>
       val lm = open(spark, path, m)
-      Some(lm).filter(_ => m.get("v").contains(lm.v.toString) &&
+      // v is the vocabulary size: the manifest's own vocab row count
+      Some(lm).filter(_ => m.get("v") == m.get("vocabRows") &&
         m.counts("modelRows", lm.model) && m.counts("ctxRows", lm.ctx) &&
         m.counts("vocabRows", lm.vocab))
     }

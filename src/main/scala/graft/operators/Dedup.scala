@@ -373,58 +373,41 @@ object Dedup {
     * recall tests and the exact fallback for corpora small enough to
     * broadcast (O(n^2) scoring, full-corpus broadcast). At corpus scale
     * use `embeddingCosinePairs` (LSH candidates, identical output for
-    * near-dup thresholds at realistic dimensions). */
+    * near-dup thresholds at realistic dimensions). Ids must be bigint. */
   def embeddingCosinePairsExact(df: DataFrame, idCol: String, vecCol: String,
       minCosine: Double): DataFrame = {
     val emb = df.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
       .withColumn("nrm", vec_l2norm(col("v")))
-    emb.schema("vec_id").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        // BLOCKED kernel path (bigint ids — every embedding table here):
-        // vectors are dealt to a bounded number of hash blocks, each
-        // block PAIR joins as one row, and the native
-        // CosinePairsBlock kernel scores the cross pairs in place — the
-        // former broadcast nested-loop join materialized a joined row
-        // carrying both d-float vectors per candidate pair, and that row
-        // machinery cost several times the dot products themselves.
-        // Same pairs, bit-identical cosines (see the kernel's scaladoc);
-        // rows a strict-inequality pair could never emit under the join
-        // formulation (null id, null vector — null predicates drop them)
-        // are dropped up front. Block count bounds per-task memory at
-        // corpus/nBlocks vectors — same order as the full-corpus
-        // broadcast this exact fallback is documented to require.
-        val nBlocks = 32
-        import org.apache.spark.sql.graft.bridge
-        val clean = emb.filter(col("vec_id").isNotNull && col("nrm").isNotNull)
-        val blocks = clean
-          .groupBy(pmod(xxhash64(col("vec_id")), lit(nBlocks)).as("blk"))
-          .agg(collect_list(struct(col("vec_id"), col("v"), col("nrm"))).as("rows"))
-        val a = blocks.select(col("blk").as("blk1"), col("rows").as("rows1"))
-        val b = blocks.select(col("blk").as("blk2"), col("rows").as("rows2"))
-        val kernel = bridge.column(graft.functions.CosinePairsBlock(
-          bridge.expression(col("rows1")), bridge.expression(col("rows2")),
-          bridge.expression(col("blk1") === col("blk2")), minCosine))
-        a.join(broadcast(b), col("blk1") <= col("blk2"))
-          .select(explode(kernel).as("p"))
-          .select(col("p.vec_id_1").as("vec_id_1"),
-            col("p.vec_id_2").as("vec_id_2"), col("p.cosine").as("cosine"))
-      case _ =>
-        // generic-id fallback: the original broadcast cross join. The
-        // norm pre-filter pins the NaN-cosine contract to the kernel
-        // path's: a zero-norm (or NaN-component) vector's cosine is NaN
-        // and the kernel's Java `>=` drops it, but Spark's nan-safe
-        // comparison sorts NaN ABOVE all values, so `cosine >= minCosine`
-        // alone would KEEP NaN pairs here (r20 advice) — the two paths
-        // must agree. NaN norms need the explicit isnan guard for the
-        // same reason: NaN > 0 is TRUE under the nan-safe ordering.
-        val pos = emb.filter(col("nrm") > 0 && !isnan(col("nrm")))
-        val a = pos.select(col("vec_id").as("vec_id_1"), col("v").as("v1"), col("nrm").as("nrm1"))
-        val b = pos.select(col("vec_id").as("vec_id_2"), col("v").as("v2"), col("nrm").as("nrm2"))
-        a.crossJoin(broadcast(b)).filter(col("vec_id_1") < col("vec_id_2"))
-          .withColumn("cosine", vec_dot(col("v1"), col("v2")) / (col("nrm1") * col("nrm2")))
-          .filter(col("cosine") >= minCosine)
-          .select("vec_id_1", "vec_id_2", "cosine")
-    }
+    val idType = emb.schema("vec_id").dataType
+    require(idType == org.apache.spark.sql.types.LongType,
+      s"embeddingCosinePairsExact needs bigint ids, got ${idType.sql}")
+    // BLOCKED kernel: vectors are dealt to a bounded number of hash blocks, each
+    // block PAIR joins as one row, and the native
+    // CosinePairsBlock kernel scores the cross pairs in place — the
+    // former broadcast nested-loop join materialized a joined row
+    // carrying both d-float vectors per candidate pair, and that row
+    // machinery cost several times the dot products themselves.
+    // Same pairs, bit-identical cosines (see the kernel's scaladoc);
+    // rows a strict-inequality pair could never emit under the join
+    // formulation (null id, null vector — null predicates drop them)
+    // are dropped up front. Block count bounds per-task memory at
+    // corpus/nBlocks vectors — same order as the full-corpus
+    // broadcast this exact fallback is documented to require.
+    val nBlocks = 32
+    import org.apache.spark.sql.graft.bridge
+    val clean = emb.filter(col("vec_id").isNotNull && col("nrm").isNotNull)
+    val blocks = clean
+      .groupBy(pmod(xxhash64(col("vec_id")), lit(nBlocks)).as("blk"))
+      .agg(collect_list(struct(col("vec_id"), col("v"), col("nrm"))).as("rows"))
+    val a = blocks.select(col("blk").as("blk1"), col("rows").as("rows1"))
+    val b = blocks.select(col("blk").as("blk2"), col("rows").as("rows2"))
+    val kernel = bridge.column(graft.functions.CosinePairsBlock(
+      bridge.expression(col("rows1")), bridge.expression(col("rows2")),
+      bridge.expression(col("blk1") === col("blk2")), minCosine))
+    a.join(broadcast(b), col("blk1") <= col("blk2"))
+      .select(explode(kernel).as("p"))
+      .select(col("p.vec_id_1").as("vec_id_1"),
+        col("p.vec_id_2").as("vec_id_2"), col("p.cosine").as("cosine"))
   }
 
   /** SemDeDup-style semantic near-dup pairs (Abbas et al., "SemDeDup:

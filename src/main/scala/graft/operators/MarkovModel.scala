@@ -42,7 +42,7 @@ final class MarkovModel private[operators] (
     val totals: DataFrame) {
 
   /** DuckDB-compatible rounding (round the scaled double
-    * half-away-from-zero; see AnalyticsQueries.round). */
+    * half-away-from-zero; see queries.DuckDbRound). */
   private def round6(c: Column): Column = round(c * 1e6, 0) / 1e6
 
   /** The served transition matrix: (from_type, to_type, n, prob) with

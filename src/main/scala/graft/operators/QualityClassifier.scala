@@ -375,8 +375,10 @@ object QualityClassifier {
       source: String): Option[QualityClassifier] =
     Manifest.reopen(spark, path, Format, source) { m =>
       val clf = open(spark, path, m)
-      Some(clf).filter(_ => m.get("v").contains(clf.v.toString) &&
-        m.counts("classRows", clf.classes) && m.counts("countRows", clf.counts))
+      // v (distinct count words) has no metadata twin; only the tables
+      // are recounted
+      Some(clf).filter(_ => m.counts("classRows", clf.classes) &&
+        m.counts("countRows", clf.counts))
     }
 
   /** Reopen a written model: lazy parquet scans + the manifest scalar. */

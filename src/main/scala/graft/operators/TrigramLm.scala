@@ -262,8 +262,9 @@ object TrigramLm {
       source: String): Option[TrigramLm] =
     Manifest.reopen(spark, path, Format, source) { m =>
       val lm = open(spark, path, m)
-      Some(lm).filter(_ => m.get("v").contains(lm.v.toString) &&
-        m.get("nTok").contains(lm.nTok.toString) &&
+      // v is the unigram vocabulary size: the manifest's own uni row
+      // count (nTok, a sum over the unigram counts, has no metadata twin)
+      Some(lm).filter(_ => m.get("v") == m.get("uniRows") &&
         m.counts("triRows", lm.tri) && m.counts("biRows", lm.bi) &&
         m.counts("uniRows", lm.uni))
     }

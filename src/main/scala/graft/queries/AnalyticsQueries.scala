@@ -2,11 +2,12 @@ package graft.queries
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.DuckDbRound.round
 import graft.queries.QueryArtifacts.SessionDir
 import graft.streaming.StreamingOps
 
@@ -23,15 +24,6 @@ import graft.streaming.StreamingOps
 object AnalyticsQueries {
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** DuckDB-compatible rounding (shadows functions.round): round the scaled
-    * double half-away-from-zero, i.e. round(x*10^n)/10^n — the same
-    * computation DuckDB's round() performs, so values landing exactly on a
-    * scaled .5 boundary agree between engines. */
-  private def round(c: Column, scale: Int): Column = {
-    val p = math.pow(10, scale)
-    org.apache.spark.sql.functions.round(c * p, 0) / p
-  }
 
   /** The customer~supplier trade graph both PageRank rows rank over: an
     * order's lineitems connect its customer to each supplier, each
@@ -116,37 +108,23 @@ object AnalyticsQueries {
   private def eventsSourceTag(spark: SparkSession, dir: String): String =
     dir + "#" + QueryArtifacts.sourceDigest(spark, dir, "events")
 
-  /** (path, source tag) of the three durable Markov models — read by
-    * their builders and by [[coldServeHooks]]. */
-  private def markovLocation(spark: SparkSession, dir: String) =
-    (QueryArtifacts.path("target/markov-model", dir), eventsSourceTag(spark, dir))
-
-  private def markovAppendedLocation(spark: SparkSession, dir: String) =
-    (QueryArtifacts.path("target/markov-model-appended", dir),
-      eventsSourceTag(spark, dir) + "#append-batch")
-
-  private def markovExcisedLocation(spark: SparkSession, dir: String) =
-    (QueryArtifacts.path("target/markov-model-excised", dir),
-      eventsSourceTag(spark, dir) + "#excise-batch")
-
   /** One durable first-order Markov transition model per (session, dir),
     * trained on the shared [[transitionPairs]] table — the BigramLm
     * build-once / serve-many lifecycle (manifest-validated reopen, zero
     * training jobs on a hit). The transition report, the anomaly
     * scorer, and the streaming replay's probability join all serve from
-    * THIS frozen model. */
-  private val markovCache = QueryArtifacts.cache[SessionDir, graft.operators.MarkovModel]()
+    * THIS frozen model. The capstone serves each Markov model's
+    * matrix-sized transitions report. */
+  private[queries] val markovPersisted = QueryArtifacts.durable("markov",
+      QueryArtifacts.at("markov-model", eventsSourceTag),
+      graft.operators.MarkovModel.loadIfValid) { (spark, dir, path, tag) =>
+    graft.operators.MarkovModel.train(transitionPairs(spark, dir))
+      .write(path, tag)
+    graft.operators.MarkovModel.load(spark, path)
+  }(markovProbe)
 
-  private def markovPersisted(spark: SparkSession,
-      dir: String): graft.operators.MarkovModel =
-    markovCache((spark, dir)) {
-      val (path, tag) = markovLocation(spark, dir)
-      graft.operators.MarkovModel.loadIfValid(spark, path, tag).getOrElse {
-        graft.operators.MarkovModel.train(transitionPairs(spark, dir))
-          .write(path, tag)
-        graft.operators.MarkovModel.load(spark, path)
-      }
-    }
+  private def markovProbe(spark: SparkSession, dir: String,
+      m: graft.operators.MarkovModel): Long = m.transitions().count()
 
   /** The degree-capped (customer, supplier) interaction table the
     * co-occurrence row pairs over, PERSISTED once per (session, dir)
@@ -180,25 +158,19 @@ object AnalyticsQueries {
     * first serve (the ann_ivf_appended discipline). Build-once via the
     * manifest+ledger: a manifest whose source is the APPEND tag proves
     * the whole chain completed; anything else rebuilds it. */
-  private val markovAppendCache = QueryArtifacts.cache[SessionDir, graft.operators.MarkovModel]()
-
-  private def markovAppended(spark: SparkSession,
-      dir: String): graft.operators.MarkovModel =
-    markovAppendCache((spark, dir)) {
-      val (path, appendTag) = markovAppendedLocation(spark, dir)
-      val baseTag = eventsSourceTag(spark, dir) + "#append-base"
-      if (graft.operators.MarkovModel.loadIfValid(spark, path, appendTag).isEmpty) {
-        val pairs = transitionPairs(spark, dir)
-        graft.operators.MarkovModel
-          .train(pairs.filter(col("user_id") % 2 === 0))
-          .write(path, baseTag)
-        val odd = pairs.filter(col("user_id") % 2 === 1)
-        graft.operators.MarkovModel.appendTo(spark, path, odd, appendTag)
-        require(!graft.operators.MarkovModel.appendTo(spark, path, odd, appendTag),
-          "replaying an already-applied pairs batch must be a ledger no-op")
-      }
-      graft.operators.MarkovModel.load(spark, path)
-    }
+  private[queries] val markovAppended = QueryArtifacts.durable("markov_appended",
+      QueryArtifacts.at("markov-model-appended", eventsSourceTag, "#append-batch"),
+      graft.operators.MarkovModel.loadIfValid) { (spark, dir, path, appendTag) =>
+    val pairs = transitionPairs(spark, dir)
+    graft.operators.MarkovModel
+      .train(pairs.filter(col("user_id") % 2 === 0))
+      .write(path, eventsSourceTag(spark, dir) + "#append-base")
+    val odd = pairs.filter(col("user_id") % 2 === 1)
+    graft.operators.MarkovModel.appendTo(spark, path, odd, appendTag)
+    require(!graft.operators.MarkovModel.appendTo(spark, path, odd, appendTag),
+      "replaying an already-applied pairs batch must be a ledger no-op")
+    graft.operators.MarkovModel.load(spark, path)
+  }(markovProbe)
 
   /** Excised-model twin of [[markovAppended]] — EXACT UNLEARNING on one
     * durable artifact (r19, completing train → append → EXCISE for the
@@ -211,24 +183,19 @@ object AnalyticsQueries {
     * before first serve (the excised-family discipline). Build-once via
     * the manifest+ledger: a manifest whose source is the EXCISE tag
     * proves the whole chain completed; anything else rebuilds it. */
-  private val markovExciseCache = QueryArtifacts.cache[SessionDir, graft.operators.MarkovModel]()
-
-  private def markovExcised(spark: SparkSession,
-      dir: String): graft.operators.MarkovModel =
-    markovExciseCache((spark, dir)) {
-      val (path, exciseTag) = markovExcisedLocation(spark, dir)
-      val baseTag = eventsSourceTag(spark, dir) + "#excise-base"
-      if (graft.operators.MarkovModel.loadIfValid(spark, path, exciseTag).isEmpty) {
-        val pairs = transitionPairs(spark, dir)
-        graft.operators.MarkovModel.train(pairs).write(path, baseTag)
-        val takedown = pairs.filter(col("user_id") % 3 === 0)
-        graft.operators.MarkovModel.exciseFrom(spark, path, takedown, exciseTag)
-        require(!graft.operators.MarkovModel
-            .exciseFrom(spark, path, takedown, exciseTag),
-          "replaying an already-applied excise batch must be a ledger no-op")
-      }
-      graft.operators.MarkovModel.load(spark, path)
-    }
+  private[queries] val markovExcised = QueryArtifacts.durable("markov_excised",
+      QueryArtifacts.at("markov-model-excised", eventsSourceTag, "#excise-batch"),
+      graft.operators.MarkovModel.loadIfValid) { (spark, dir, path, exciseTag) =>
+    val pairs = transitionPairs(spark, dir)
+    graft.operators.MarkovModel.train(pairs)
+      .write(path, eventsSourceTag(spark, dir) + "#excise-base")
+    val takedown = pairs.filter(col("user_id") % 3 === 0)
+    graft.operators.MarkovModel.exciseFrom(spark, path, takedown, exciseTag)
+    require(!graft.operators.MarkovModel
+        .exciseFrom(spark, path, takedown, exciseTag),
+      "replaying an already-applied excise batch must be a ledger no-op")
+    graft.operators.MarkovModel.load(spark, path)
+  }(markovProbe)
 
   /** The co-occurrence COUNT table (s1, s2, co >= 5) over the capped
     * interactions, persisted once per (session, dir) — the item-item
@@ -288,27 +255,6 @@ object AnalyticsQueries {
         tolScaled = Some(4000000L))
       scores.withColumn("rounds", lit(rounds.toLong))
     }
-
-  /** Cold-reopen hook for the serve-everything capstone (see
-    * [[ServeAllQueries]]): fresh manifest reopen of the durable Markov
-    * model past the session cache + the matrix-sized transitions serve. */
-  private[queries] def coldServeHooks(spark: SparkSession, dir: String)
-      : Seq[(String, () => Unit, () => Option[Long])] = Seq(
-    ("markov",
-      () => { markovPersisted(spark, dir); () },
-      () => QueryArtifacts.reopenAt(spark, dir, markovLocation)(
-          graft.operators.MarkovModel.loadIfValid)
-        .map(_.transitions().count())),
-    ("markov_appended",
-      () => { markovAppended(spark, dir); () },
-      () => QueryArtifacts.reopenAt(spark, dir, markovAppendedLocation)(
-          graft.operators.MarkovModel.loadIfValid)
-        .map(_.transitions().count())),
-    ("markov_excised",
-      () => { markovExcised(spark, dir); () },
-      () => QueryArtifacts.reopenAt(spark, dir, markovExcisedLocation)(
-          graft.operators.MarkovModel.loadIfValid)
-        .map(_.transitions().count())))
 
   /** Release every family's session artifacts ([[QueryArtifacts.clearAll]]). */
   def clearCaches(): Unit = QueryArtifacts.clearAll()
@@ -610,9 +556,7 @@ object AnalyticsQueries {
     "markov_model_persisted" -> ((spark, dir) => {
       markovPersisted(spark, dir) // ensure the durable artifact exists
       val before = graft.operators.MarkovModel.trainCount
-      val reopened = QueryArtifacts.reopenAt(spark, dir, markovLocation)(
-          graft.operators.MarkovModel.loadIfValid)
-        .getOrElse(sys.error(
+      val reopened = markovPersisted.reopen(spark, dir).getOrElse(sys.error(
           "manifest reopen of the written Markov model must validate"))
       require(graft.operators.MarkovModel.trainCount == before,
         "a manifest reopen must run zero training jobs")

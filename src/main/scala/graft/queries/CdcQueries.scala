@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.{CdcChunking, Multimodal}
-import graft.queries.QueryArtifacts.SessionDir
 
 /** Content-defined chunking queries: the Gear-CDC chunk table and the
   * chunk-hash dedup over it. Stateless cut rule (maskBits = 6, expected
@@ -31,30 +30,18 @@ object CdcQueries {
     QueryArtifacts.sourceDigest(spark, dir, "documents")
 
   /** One durable chunk index per (session, dir) — written once, validated
-    * reopens after that (see operators.ChunkIndex). The at-most-once fill
-    * keeps two concurrent first calls from racing overwrite writes to the
-    * same path. */
-  private val chunkFileCache = QueryArtifacts.cache[SessionDir, graft.operators.ChunkIndex]()
+    * reopens after that (see operators.ChunkIndex); [[RagQueries]]' fresh
+    * reopen fence shares it. The capstone probes each chunk index with a
+    * bounded chunk lookup. */
+  private[queries] val chunkPersisted = QueryArtifacts.durable("chunk_index",
+      QueryArtifacts.at("cdc-chunk-index", chunkSourceTag),
+      graft.operators.ChunkIndex.loadIfValid(_, _, _)) { (spark, dir, path, tag) =>
+    graft.operators.ChunkIndex.build(media(spark, dir), maskBits = 6).write(path, tag)
+    graft.operators.ChunkIndex.load(spark, path)
+  }(chunkProbe)
 
-  /** Durable chunk-index location for a dir — (path, expected source
-    * tag), the reopen coordinates [[RagQueries]]' fresh-load fence shares
-    * with [[chunkPersisted]] and the cold-serve hooks. */
-  private[queries] def chunkLocation(spark: SparkSession,
-      dir: String): (String, String) =
-    (QueryArtifacts.path("target/cdc-chunk-index", dir), chunkSourceTag(spark, dir))
-
-  private def chunkExcisedLocation(spark: SparkSession, dir: String) =
-    (QueryArtifacts.path("target/cdc-chunk-index-excised", dir),
-      chunkSourceTag(spark, dir) + "#excise-batch")
-
-  private[queries] def chunkPersisted(spark: SparkSession, dir: String): graft.operators.ChunkIndex =
-    chunkFileCache((spark, dir)) {
-      val (path, tag) = chunkLocation(spark, dir)
-      graft.operators.ChunkIndex.loadIfValid(spark, path, tag).getOrElse {
-        graft.operators.ChunkIndex.build(media(spark, dir), maskBits = 6).write(path, tag)
-        graft.operators.ChunkIndex.load(spark, path)
-      }
-    }
+  private def chunkProbe(spark: SparkSession, dir: String,
+      idx: graft.operators.ChunkIndex): Long = idx.chunks.limit(5).count()
 
   /** Appended-and-COMPACTED durable chunk index (r17) — the incremental
     * lifecycle driver-gated like [[graft.operators.IvfIndex.appendTo]]'s
@@ -63,29 +50,22 @@ object CdcQueries {
     * then compacted to one file. Build-once via the manifest+ledger: a
     * manifest whose source is the APPEND tag proves the chain completed
     * and reopens with zero chunking jobs. */
-  private val chunkAppendCache = QueryArtifacts.cache[SessionDir, graft.operators.ChunkIndex]()
-
-  private def chunkAppendedCompacted(spark: SparkSession,
-      dir: String): graft.operators.ChunkIndex =
-    chunkAppendCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/cdc-chunk-index-appended", dir)
-      val baseTag = chunkSourceTag(spark, dir) + "#append-base"
-      val appendTag = chunkSourceTag(spark, dir) + "#append-batch"
-      if (graft.operators.ChunkIndex.loadIfValid(spark, path, appendTag).isEmpty) {
-        val m = media(spark, dir)
-        graft.operators.ChunkIndex
-          .build(m.filter(col("doc_id") % 2 === 1), maskBits = 6)
-          .write(path, baseTag)
-        graft.operators.ChunkIndex.appendTo(spark, path,
-          m.filter(col("doc_id") % 2 === 0), appendTag)
-        val replayed = graft.operators.ChunkIndex.appendTo(spark, path,
-          m.filter(col("doc_id") % 2 === 0), appendTag)
-        require(!replayed,
-          "replaying an already-applied append batch must be a ledger no-op")
-        graft.operators.ChunkIndex.compact(spark, path)
-      }
-      graft.operators.ChunkIndex.load(spark, path)
-    }
+  private val chunkAppendedCompacted = QueryArtifacts.durable("chunk_index_appended",
+      QueryArtifacts.at("cdc-chunk-index-appended", chunkSourceTag, "#append-batch"),
+      graft.operators.ChunkIndex.loadIfValid(_, _, _)) { (spark, dir, path, appendTag) =>
+    val m = media(spark, dir)
+    graft.operators.ChunkIndex
+      .build(m.filter(col("doc_id") % 2 === 1), maskBits = 6)
+      .write(path, chunkSourceTag(spark, dir) + "#append-base")
+    graft.operators.ChunkIndex.appendTo(spark, path,
+      m.filter(col("doc_id") % 2 === 0), appendTag)
+    val replayed = graft.operators.ChunkIndex.appendTo(spark, path,
+      m.filter(col("doc_id") % 2 === 0), appendTag)
+    require(!replayed,
+      "replaying an already-applied append batch must be a ledger no-op")
+    graft.operators.ChunkIndex.compact(spark, path)
+    graft.operators.ChunkIndex.load(spark, path)
+  }(chunkProbe)
 
   /** Excision-PLANTED durable chunk index (r17) — the takedown story for
     * the ingest gate's artifact: built over the full corpus, the
@@ -94,44 +74,22 @@ object CdcQueries {
     * the tombRows validation; the physical drop is pinned in
     * ChunkIndexPersistSpec). A removed document must vanish from overlap
     * checks too, or it keeps rejecting its own re-crawls forever. */
-  private val chunkExciseCache = QueryArtifacts.cache[SessionDir, graft.operators.ChunkIndex]()
-
-  private def chunkExcised(spark: SparkSession,
-      dir: String): graft.operators.ChunkIndex =
-    chunkExciseCache((spark, dir)) {
-      val (path, exciseTag) = chunkExcisedLocation(spark, dir)
-      if (graft.operators.ChunkIndex.loadIfValid(spark, path, exciseTag).isEmpty) {
-        val takedown = Tables.load(spark, dir, "documents")
-          .filter(col("doc_id") % 3 === 0).select("doc_id")
-        // the pre-takedown state IS the persisted full-corpus chunk
-        // index (same maskBits) — clone its completed artifact instead
-        // of re-running the Gear chunking pass (r18, ensure-phase dedup)
-        chunkPersisted(spark, dir)
-        QueryArtifacts.cloneArtifact(chunkLocation(spark, dir)._1, path)
-        graft.operators.ChunkIndex.excise(spark, path, takedown, exciseTag)
-        val replayed = graft.operators.ChunkIndex.excise(spark, path,
-          takedown, exciseTag)
-        require(!replayed,
-          "replaying an already-applied excise batch must be a ledger no-op")
-      }
-      graft.operators.ChunkIndex.load(spark, path)
-    }
-
-  /** Cold-reopen hook for the serve-everything capstone (see
-    * [[ServeAllQueries]]): fresh manifest reopen of the durable chunk
-    * index past the session cache + one bounded chunk lookup. */
-  private[queries] def coldServeHooks(spark: SparkSession, dir: String)
-      : Seq[(String, () => Unit, () => Option[Long])] = Seq(
-    ("chunk_index",
-      () => { chunkPersisted(spark, dir); () },
-      () => QueryArtifacts.reopenAt(spark, dir, chunkLocation)(
-          graft.operators.ChunkIndex.loadIfValid(_, _, _))
-        .map(_.chunks.limit(5).count())),
-    ("chunk_index_excised",
-      () => { chunkExcised(spark, dir); () },
-      () => QueryArtifacts.reopenAt(spark, dir, chunkExcisedLocation)(
-          graft.operators.ChunkIndex.loadIfValid(_, _, _))
-        .map(_.chunks.limit(5).count())))
+  private[queries] val chunkExcised = QueryArtifacts.durable("chunk_index_excised",
+      QueryArtifacts.at("cdc-chunk-index-excised", chunkSourceTag, "#excise-batch"),
+      graft.operators.ChunkIndex.loadIfValid(_, _, _)) { (spark, dir, path, exciseTag) =>
+    val takedown = Tables.load(spark, dir, "documents")
+      .filter(col("doc_id") % 3 === 0).select("doc_id")
+    // the pre-takedown state IS the persisted full-corpus chunk
+    // index (same maskBits) — clone its completed artifact instead
+    // of re-running the Gear chunking pass (r18, ensure-phase dedup)
+    QueryArtifacts.cloneArtifact(chunkPersisted.builtPath(spark, dir), path)
+    graft.operators.ChunkIndex.excise(spark, path, takedown, exciseTag)
+    val replayed = graft.operators.ChunkIndex.excise(spark, path,
+      takedown, exciseTag)
+    require(!replayed,
+      "replaying an already-applied excise batch must be a ledger no-op")
+    graft.operators.ChunkIndex.load(spark, path)
+  }(chunkProbe)
 
   val queries: ListMap[String, Q] = ListMap(
     // Per-doc CDC chunk table: offsets + md5 per chunk. Cut positions are

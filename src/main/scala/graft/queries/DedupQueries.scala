@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.Dedup
+import graft.queries.DuckDbRound.round
 import graft.queries.QueryArtifacts.SessionDir
 import graft.streaming.StreamingOps
 
@@ -19,15 +20,6 @@ import graft.streaming.StreamingOps
 object DedupQueries {
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** DuckDB-compatible rounding (shadows functions.round): round the scaled
-    * double half-away-from-zero, i.e. round(x*10^n)/10^n — the same
-    * computation DuckDB's round() performs, so values landing exactly on a
-    * scaled .5 boundary agree between engines. */
-  private def round(c: Column, scale: Int): Column = {
-    val p = math.pow(10, scale)
-    org.apache.spark.sql.functions.round(c * p, 0) / p
-  }
 
   /** The >= 0.8 jaccard pairs back FOUR queries below — derived by a
     * plain filter over the persisted >= 0.6 table ([[jaccardPairs06]]):

@@ -2,12 +2,13 @@ package graft.queries
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.KmvSketch.kmv_sketch
 import graft.operators.{Dedup, Packing, Sampling}
+import graft.queries.DuckDbRound.round
 import graft.queries.QueryArtifacts.SessionDir
 import graft.streaming.StreamingOps
 
@@ -21,12 +22,6 @@ import graft.streaming.StreamingOps
 object PipelineQueries {
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** DuckDB-compatible rounding (see DedupQueries.round). */
-  private def round(c: Column, scale: Int): Column = {
-    val p = math.pow(10, scale)
-    org.apache.spark.sql.functions.round(c * p, 0) / p
-  }
 
   /** The KMV set-algebra report over a 1-row (a_hashes, a_est, b_hashes,
     * b_est) sketch-pair frame — union sketch = the k smallest of the

@@ -117,15 +117,76 @@ private[graft] object QueryArtifacts {
     org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(src), d)
   }
 
-  /** Fresh `loadIfValid` of a durable artifact at its location — the
-    * (path, source tag) pair its builder writes under, defined once per
-    * artifact next to the builder — bypassing every session cache. */
-  def reopenAt[T](spark: SparkSession, dir: String,
-      location: (SparkSession, String) => (String, String))(
-      loadIfValid: (SparkSession, String, String) => Option[T]): Option[T] = {
-    val (path, tag) = location(spark, dir)
-    loadIfValid(spark, path, tag)
+  /** A durable artifact's location: `target/<name>` per dir, tagged with
+    * the family's source tag plus the lifecycle step (`suffix`) a chained
+    * artifact's manifest must carry. */
+  def at(name: String, sourceTag: (SparkSession, String) => String,
+      suffix: String = ""): (SparkSession, String) => (String, String) =
+    (spark, dir) => (path(s"target/$name", dir), sourceTag(spark, dir) + suffix)
+
+  /** One durable artifact, declared once: its name in the serve-everything
+    * capstone, its location ((path, source tag) per dir), the family's
+    * validated reopen, the chain that builds it up to its tag, and the
+    * bounded request the capstone serves from a fresh reopen. */
+  final class Durable[T] private[QueryArtifacts] (val name: String,
+      val location: (SparkSession, String) => (String, String),
+      loadIfValid: (SparkSession, String, String) => Option[T],
+      build: (SparkSession, String, String, String) => T,
+      probe: (SparkSession, String, T) => Long) {
+    private val handles = cache[SessionDir, T]()
+
+    /** The session's handle, filled at most once per (session, dir): the
+      * artifact on disk if its manifest validates at the tag, else the
+      * chain's rebuild. */
+    def apply(spark: SparkSession, dir: String): T =
+      handles((spark, dir)) {
+        val (p, tag) = location(spark, dir)
+        loadIfValid(spark, p, tag).getOrElse(build(spark, dir, p, tag))
+      }
+
+    /** The artifact's path once the session's handle exists — the source
+      * a clone or a staleness report reads. */
+    def builtPath(spark: SparkSession, dir: String): String = {
+      apply(spark, dir)
+      location(spark, dir)._1
+    }
+
+    /** A fresh validated reopen past every session cache; never builds. */
+    def reopen(spark: SparkSession, dir: String): Option[T] = {
+      val (p, tag) = location(spark, dir)
+      loadIfValid(spark, p, tag)
+    }
+
+    /** The capstone's entry: (name, ensure the artifact exists, fresh
+      * reopen + bounded probe returning the served row count). */
+    def coldServe(spark: SparkSession,
+        dir: String): (String, () => Unit, () => Option[Long]) =
+      (name, () => { apply(spark, dir); () },
+        () => reopen(spark, dir).map(probe(spark, dir, _)))
   }
+
+  /** Declare a durable artifact; `build(spark, dir, path, tag)` runs the
+    * chain up to `tag` and returns the handle, `probe` is the capstone's
+    * bounded request over a reopened handle. */
+  def durable[T](name: String,
+      location: (SparkSession, String) => (String, String),
+      loadIfValid: (SparkSession, String, String) => Option[T])(
+      build: (SparkSession, String, String, String) => T)(
+      probe: (SparkSession, String, T) => Long): Durable[T] =
+    new Durable(name, location, loadIfValid, build, probe)
+
+  /** Every durable family's build/train counter — the fence a reopen
+    * must not move (the capstone's and the RAG rows'). */
+  def buildCounters(): Seq[Long] = Seq(
+    graft.operators.IvfIndex.buildsRun.get(),
+    graft.operators.PqIndex.buildCount.toLong,
+    graft.operators.InvertedIndex.buildCount.toLong,
+    graft.operators.ChunkIndex.buildCount.toLong,
+    graft.operators.BigramLm.trainCount.toLong,
+    graft.operators.TrigramLm.trainCount.toLong,
+    graft.operators.QualityClassifier.trainCount.toLong,
+    graft.operators.BpeTokenizer.trainCount.toLong,
+    graft.operators.MarkovModel.trainCount.toLong)
 
   /** Digest of `<dir>/<table>.parquet`'s file listing (names, lengths,
     * mtimes; 16 hex chars) — the source tag durable artifacts validate

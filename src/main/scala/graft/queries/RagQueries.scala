@@ -2,10 +2,11 @@ package graft.queries
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.DuckDbRound.round
 import graft.queries.QueryArtifacts.SessionDir
 
 /** The end-to-end RAG SERVING capstone (r18) — the serving twin of
@@ -57,18 +58,14 @@ object RagQueries {
 
   import graft.functions.functions.{vec_dot, vec_l2norm}
 
-  /** DuckDB-compatible round-6 (see SimilarityQueries.round). */
-  private def round6(c: Column): Column =
-    org.apache.spark.sql.functions.round(c * 1e6, 0) / 1e6
-
   private val Terms = Seq("hash", "join", "vector")
 
-  /** Build/train counters over the three artifact families this pipeline
-    * serves from — the fence the reopen+serve phase must not move. */
-  private def buildCounters(): Seq[Long] = Seq(
-    graft.operators.InvertedIndex.buildCount.toLong,
-    graft.operators.IvfIndex.buildsRun.get(),
-    graft.operators.ChunkIndex.buildCount.toLong)
+  /** A FRESH manifest reopen past every session cache of an artifact the
+    * ensure phase has built. */
+  private def reopened[T](d: QueryArtifacts.Durable[T], spark: SparkSession,
+      dir: String): T =
+    d.reopen(spark, dir).getOrElse(throw new IllegalStateException(
+      s"${d.name} manifest at ${d.location(spark, dir)._1} failed validation after ensure"))
 
   /** The six serving stages over ALREADY-REOPENED artifacts — shared by
     * the base pipeline and its excised twin, so the takedown row gates
@@ -103,9 +100,9 @@ object RagQueries {
     val short = fused.select("doc_id")
       .join(corpusVecs.select(col("vec_id").as("doc_id"), col("embedding")),
         "doc_id")
-      .withColumn("rel", round6(
+      .withColumn("rel", round(
         vec_dot(typedlit(q0.toSeq), col("embedding"))
-          / (lit(q0n) * vec_l2norm(col("embedding")))))
+          / (lit(q0n) * vec_l2norm(col("embedding"))), 6))
     val picks = graft.operators.Retrieval.mmrRerank(short, "doc_id",
       "rel", "embedding", k = 5, lambdaRel = 0.7, lambdaDiv = 0.3)
     val zeroBuild = fence()
@@ -142,24 +139,14 @@ object RagQueries {
       CdcQueries.chunkPersisted(spark, dir)
       // FENCE + FRESH manifest reopens past every session cache: from
       // here to the MMR collect, zero build/train jobs may run
-      val before = buildCounters()
-      val (invPath, invTag) = TextQueries.invIndexLocation(spark, dir)
-      val inv = graft.operators.InvertedIndex
-        .loadIfValid(spark, invPath, invTag)
-        .getOrElse(throw new IllegalStateException(
-          s"inverted-index manifest at $invPath failed validation after ensure"))
-      val (ivfPath, ivfTag) = SimilarityQueries.ivfLocation(spark, dir)
-      val ivf = graft.operators.IvfIndex.loadIfValid(spark, ivfPath, ivfTag)
-        .getOrElse(throw new IllegalStateException(
-          s"IVF manifest at $ivfPath failed validation after ensure"))
-      val (chPath, chTag) = CdcQueries.chunkLocation(spark, dir)
-      val chunkIdx = graft.operators.ChunkIndex.loadIfValid(spark, chPath, chTag)
-        .getOrElse(throw new IllegalStateException(
-          s"chunk-index manifest at $chPath failed validation after ensure"))
+      val before = QueryArtifacts.buildCounters()
+      val inv = reopened(TextQueries.invertedIndexPersisted, spark, dir)
+      val ivf = reopened(SimilarityQueries.ivfPersisted, spark, dir)
+      val chunkIdx = reopened(CdcQueries.chunkPersisted, spark, dir)
       val corpusVecs = ivf.cells
         .select(col("c_id").as("vec_id"), col("cv").as("embedding"))
       ragStages(spark, dir, inv, corpusVecs, chunkIdx.chunks,
-        () => buildCounters() == before)
+        () => QueryArtifacts.buildCounters() == before)
     }
 
   /** The excised-serving result, computed ONCE per (session, dir): the
@@ -177,9 +164,9 @@ object RagQueries {
       // rag_serve_pipeline, which also ensures the source artifacts)
       val x = ragServed(spark, dir).filter(col("pick_rank") === 1)
         .select("doc_id").head().getLong(0)
-      val (invPath, invTag) = TextQueries.invIndexLocation(spark, dir)
-      val (ivfPath, ivfTag) = SimilarityQueries.ivfLocation(spark, dir)
-      val (chPath, chTag) = CdcQueries.chunkLocation(spark, dir)
+      val (invPath, invTag) = TextQueries.invertedIndexPersisted.location(spark, dir)
+      val (ivfPath, ivfTag) = SimilarityQueries.ivfPersisted.location(spark, dir)
+      val (chPath, chTag) = CdcQueries.chunkPersisted.location(spark, dir)
       val invX = QueryArtifacts.path("target/rag-inv-excised", dir)
       val ivfX = QueryArtifacts.path("target/rag-ivf-excised", dir)
       val chX = QueryArtifacts.path("target/rag-chunks-excised", dir)
@@ -218,7 +205,7 @@ object RagQueries {
           "replaying an already-applied takedown must be a ledger no-op")
       }
       // FENCE + FRESH reopens of the three TOMBSTONED artifacts
-      val before = buildCounters()
+      val before = QueryArtifacts.buildCounters()
       val inv2 = graft.operators.InvertedIndex
         .loadIfValid(spark, invX, xTag(invTag))
         .getOrElse(throw new IllegalStateException(
@@ -236,7 +223,7 @@ object RagQueries {
       val corpusVecs = ivf2.cells
         .select(col("c_id").as("vec_id"), col("cv").as("embedding"))
       ragStages(spark, dir, inv2, corpusVecs, ch2.chunks,
-          () => buildCounters() == before)
+          () => QueryArtifacts.buildCounters() == before)
         .withColumn("excised_doc", lit(x))
         // structurally true on the oracle side (the survivor derivation
         // cannot pick a filtered-out doc), genuinely computed here: a

@@ -11,10 +11,9 @@ import graft.queries.QueryArtifacts.SessionDir
   * session (or here, a fresh reopen past every session cache) opens
   * EVERY durable artifact the engine maintains — base, appended, excised
   * (including the exact-unlearning forms of every trained count model),
-  * AND drift-refitted lifecycles, 23 reopens — through its validation
-  * manifest, runs ZERO
-  * build/fit/train jobs doing so, and serves one bounded request from
-  * each. One row per artifact:
+  * AND drift-refitted lifecycles — through its validation manifest, runs
+  * ZERO build/fit/train jobs doing so, and serves one bounded request
+  * from each. One row per artifact:
   *
   *   zero_build — the reopen+serve left every operator build/train
   *                counter untouched (a manifest that failed validation
@@ -22,12 +21,11 @@ import graft.queries.QueryArtifacts.SessionDir
   *                row; HERE a failed validation yields false directly)
   *   served     — the bounded request returned at least one row (token)
   *
-  * The artifact inventory and the per-family reopen lambdas live with
-  * their owners ([[SimilarityQueries.coldServeHooks]],
-  * [[TextQueries.coldServeHooks]], [[CdcQueries.coldServeHooks]],
-  * [[AnalyticsQueries.coldServeHooks]]); this object only sequences the
-  * two phases — ensure (the durable forms exist; builds are legal
-  * here) and reopen+serve (counter-fenced per artifact). ServeAllSpec
+  * The inventory is [[durables]]: each artifact's declaration
+  * ([[QueryArtifacts.Durable]]) carries its location, reopen, build chain
+  * and bounded probe; this object only sequences the two phases —
+  * ensure (the durable forms exist; builds are legal here) and
+  * reopen+serve (counter-fenced per artifact). ServeAllSpec
   * additionally pins the whole reopen phase's cost with a Spark JOB
   * budget: manifest validation + one bounded serve is a handful of jobs
   * per artifact, where any accidental retrain (BPE's merge loop, the
@@ -37,33 +35,33 @@ object ServeAllQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Every operator build/train counter in the durable-artifact family —
-    * the fence the reopen phase must not move. */
-  private def buildCounters(): Seq[Long] = Seq(
-    graft.operators.IvfIndex.buildsRun.get(),
-    graft.operators.PqIndex.buildCount.toLong,
-    graft.operators.InvertedIndex.buildCount.toLong,
-    graft.operators.ChunkIndex.buildCount.toLong,
-    graft.operators.BigramLm.trainCount.toLong,
-    graft.operators.TrigramLm.trainCount.toLong,
-    graft.operators.QualityClassifier.trainCount.toLong,
-    graft.operators.BpeTokenizer.trainCount.toLong,
-    graft.operators.MarkovModel.trainCount.toLong)
+  /** Every durable artifact the capstone reopens, named explicitly: the
+    * owning objects initialise lazily, so a registry they filled on
+    * initialisation would miss families no earlier row has touched. The
+    * appended PQ and chunk indexes are served by their own rows only. */
+  private def durables: Seq[QueryArtifacts.Durable[_]] = Seq(
+    SimilarityQueries.ivfPersisted, SimilarityQueries.pqPersisted,
+    SimilarityQueries.driftIndex, SimilarityQueries.excisedServeIndex,
+    SimilarityQueries.refittedIndex, SimilarityQueries.pqExcisedServeIndex,
+    SimilarityQueries.pqRefittedIndex,
+    TextQueries.bigramLmPersisted, TextQueries.bigramLmExcised,
+    TextQueries.trigramLmPersisted, TextQueries.trigramLmExcised,
+    TextQueries.invertedIndexPersisted, TextQueries.invAppendedCompacted,
+    TextQueries.invExcisedCompacted, TextQueries.clfPersisted,
+    TextQueries.clfExcised, TextQueries.bpeMerges,
+    CdcQueries.chunkPersisted, CdcQueries.chunkExcised,
+    AnalyticsQueries.markovPersisted, AnalyticsQueries.markovAppended,
+    AnalyticsQueries.markovExcised)
 
   private[graft] def hooks(spark: SparkSession, dir: String)
       : Seq[(String, () => Unit, () => Option[Long])] =
-    SimilarityQueries.coldServeHooks(spark, dir) ++
-      TextQueries.coldServeHooks(spark, dir) ++
-      CdcQueries.coldServeHooks(spark, dir) ++
-      AnalyticsQueries.coldServeHooks(spark, dir)
+    durables.map(_.coldServe(spark, dir)) :+
+      SimilarityQueries.ivfpqColdServe(spark, dir)
 
   /** The capstone's verdict rows, computed ONCE per (session, dir) — the
     * replay-row discipline: a cold-start check is a per-session event
-    * (reopen + fence + serve across 23 artifacts, ~15 s at sf0.1 on a
-    * quiet box — r17 judge re-bench: 15.4 s total over the then-18, max
-    * 1.85 s per artifact; the excised-model
-    * reopens added r19/r20 are matrix-/model-table-sized scans), not a
-    * per-pass derivation; every later call reads the verdicts.
+    * (reopen + fence + serve across every artifact), not a per-pass
+    * derivation; every later call reads the verdicts.
     *
     * Each entry also carries the wall time of every artifact's
     * counter-fenced reopen+serve — the actual manifest-validation +
@@ -86,11 +84,11 @@ object ServeAllQueries {
       val hs = hooks(spark, dir)
       hs.foreach(_._2()) // ensure phase: durable forms exist
       hs.map { case (name, _, reopen) =>
-        val before = buildCounters()
+        val before = QueryArtifacts.buildCounters()
         val t0 = System.nanoTime()
         val served = reopen()
         val ms = (System.nanoTime() - t0) / 1000000L
-        val zeroBuild = buildCounters() == before && served.isDefined
+        val zeroBuild = QueryArtifacts.buildCounters() == before && served.isDefined
         ((name, zeroBuild, served.exists(_ > 0)), (name, ms))
       }.sortBy(_._1._1).unzip
     }._1

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.DuckDbRound.round
 import graft.queries.QueryArtifacts.SessionDir
 import graft.streaming.StreamingOps
 
@@ -26,15 +27,6 @@ import graft.streaming.StreamingOps
 object SimilarityQueries {
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** DuckDB-compatible rounding (shadows functions.round): round the scaled
-    * double half-away-from-zero, i.e. round(x*10^n)/10^n — the same
-    * computation DuckDB's round() performs, so values landing exactly on a
-    * scaled .5 boundary agree between engines. */
-  private def round(c: Column, scale: Int): Column = {
-    val p = math.pow(10, scale)
-    org.apache.spark.sql.functions.round(c * p, 0) / p
-  }
 
   import graft.functions.functions.{vec_dot, vec_l2norm}
 
@@ -67,112 +59,45 @@ object SimilarityQueries {
     * was regenerated, the tag changes and the index rebuilds), the load
     * pays only metadata validation, zero build jobs (IvfPersistSpec
     * asserts this). The loaded index holds no persist; its residency is
-    * the partitioned table. */
-  private val ivfFileCache = QueryArtifacts.cache[SessionDir, graft.operators.IvfIndex]()
+    * the partitioned table. The capstone probes every vector index with
+    * [[probeQueries]]. */
+  private[queries] val ivfPersisted = QueryArtifacts.durable("ivf",
+      QueryArtifacts.at("ivf-file-index", ivfSourceTag),
+      graft.operators.IvfIndex.loadIfValid) { (spark, dir, path, tag) =>
+    ivfIndex(spark, dir).write(path, tag)
+    graft.operators.IvfIndex.load(spark, path)
+  }(ivfProbe)
 
   /** Identity of the indexed data: dir plus a metadata fingerprint of its
     * embeddings files. */
   private def ivfSourceTag(spark: SparkSession, dir: String): String =
     dir + "#" + QueryArtifacts.sourceDigest(spark, dir, "embeddings")
 
-  /** Durable IVF location for a dir — (path, expected source tag), the
-    * reopen coordinates [[RagQueries]]' fresh-load fence shares with
-    * [[ivfPersisted]] and the cold-serve hooks. */
-  private[queries] def ivfLocation(spark: SparkSession,
-      dir: String): (String, String) =
-    vectorLocation(spark, dir, "ivf-file-index")
-
-  /** (path, source tag) of each durable vector index — the one location
-    * its builder writes and [[coldServeHooks]] reopens. `suffix` names the
-    * lifecycle step a chained index's manifest must carry. */
-  private def vectorLocation(spark: SparkSession, dir: String, name: String,
-      suffix: String = ""): (String, String) =
-    (QueryArtifacts.path(s"target/$name", dir), ivfSourceTag(spark, dir) + suffix)
-
-  private def pqLocation(spark: SparkSession, dir: String) =
-    vectorLocation(spark, dir, "pq-file-index")
-  private def ivfDriftLocation(spark: SparkSession, dir: String) =
-    vectorLocation(spark, dir, "ivf-drift-index", "#drift-append")
-  private def ivfExcisedLocation(spark: SparkSession, dir: String) =
-    vectorLocation(spark, dir, "ivf-excised-index", "#excise-batch")
-  private def ivfRefitLocation(spark: SparkSession, dir: String) =
-    vectorLocation(spark, dir, "ivf-refit-index", "#refit-done")
-  private def pqExcisedLocation(spark: SparkSession, dir: String) =
-    vectorLocation(spark, dir, "pq-excised-index", "#excise-batch")
-  private def pqRefitLocation(spark: SparkSession, dir: String) =
-    vectorLocation(spark, dir, "pq-refit-index", "#pq-refit-done")
-
-  private[queries] def ivfPersisted(spark: SparkSession, dir: String): graft.operators.IvfIndex =
-    // the at-most-once fill keeps two concurrent first calls from racing
-    // overwrite-mode writes to the same path
-    ivfFileCache((spark, dir)) {
-      // path keyed by a digest of the RAW dir string besides the readable
-      // sanitization: distinct dirs (/a/b vs /a_b) can never collide
-      val (path, tag) = ivfLocation(spark, dir)
-      graft.operators.IvfIndex.loadIfValid(spark, path, tag).getOrElse {
-        ivfIndex(spark, dir).write(path, tag)
-        graft.operators.IvfIndex.load(spark, path)
-      }
-    }
-
-  /** Cold-reopen hooks for the serve-everything capstone (see
-    * [[ServeAllQueries]]): (artifact, ensure-the-durable-form-exists,
-    * FRESH manifest reopen bypassing every session cache + one bounded
-    * serve returning the served row count). The reopen lambdas call
-    * `loadIfValid` directly so a build can only happen in the ensure
-    * phase — the capstone pins the reopen phase train/build-free via the
-    * operator counters. */
-  private[queries] def coldServeHooks(spark: SparkSession, dir: String)
-      : Seq[(String, () => Unit, () => Option[Long])] = {
-    def q5 = Tables.load(spark, dir, "embeddings")
+  /** The capstone's bounded request against a reopened vector index. */
+  private def probeQueries(spark: SparkSession, dir: String): DataFrame =
+    Tables.load(spark, dir, "embeddings")
       .filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-    Seq(
-      ("ivf",
-        () => { ivfPersisted(spark, dir); () },
-        () => QueryArtifacts.reopenAt(spark, dir, ivfLocation)(
-            graft.operators.IvfIndex.loadIfValid)
-          .map(_.topK(q5, k = 5, nprobe = 6).count())),
-      ("pq",
-        () => { pqPersisted(spark, dir); () },
-        () => QueryArtifacts.reopenAt(spark, dir, pqLocation)(
-            graft.operators.PqIndex.loadIfValid)
-          .map(_.topK(q5, k = 5, nCandidates = 64).count())),
-      ("ivfpq",
-        () => { ivfPersisted(spark, dir); pqPersisted(spark, dir); () },
-        () => for {
-          i <- QueryArtifacts.reopenAt(spark, dir, ivfLocation)(
-              graft.operators.IvfIndex.loadIfValid)
-          p <- QueryArtifacts.reopenAt(spark, dir, pqLocation)(
-              graft.operators.PqIndex.loadIfValid)
-        } yield new graft.operators.IvfPq(i, p)
-          .topK(q5, k = 5, nprobe = 6, nCandidates = 64).count()),
-      ("ivf_appended",
-        () => { driftIndexPath(spark, dir); () },
-        () => QueryArtifacts.reopenAt(spark, dir, ivfDriftLocation)(
-            graft.operators.IvfIndex.loadIfValid)
-          .map(_.topK(q5, k = 5, nprobe = 6).count())),
-      ("ivf_excised",
-        () => { excisedServeIndex(spark, dir); () },
-        () => QueryArtifacts.reopenAt(spark, dir, ivfExcisedLocation)(
-            graft.operators.IvfIndex.loadIfValid)
-          .map(_.topK(q5, k = 5, nprobe = 6).count())),
-      ("ivf_refitted",
-        () => { refittedIndex(spark, dir); () },
-        () => QueryArtifacts.reopenAt(spark, dir, ivfRefitLocation)(
-            graft.operators.IvfIndex.loadIfValid)
-          .map(_.topK(q5, k = 5, nprobe = 6).count())),
-      ("pq_excised",
-        () => { pqExcisedServeIndex(spark, dir); () },
-        () => QueryArtifacts.reopenAt(spark, dir, pqExcisedLocation)(
-            graft.operators.PqIndex.loadIfValid)
-          .map(_.topK(q5, k = 5, nCandidates = 64).count())),
-      ("pq_refitted",
-        () => { pqRefittedIndex(spark, dir); () },
-        () => QueryArtifacts.reopenAt(spark, dir, pqRefitLocation)(
-            graft.operators.PqIndex.loadIfValid)
-          .map(_.topK(q5, k = 5, nCandidates = 64).count())))
-  }
+
+  private def ivfProbe(spark: SparkSession, dir: String,
+      i: graft.operators.IvfIndex): Long =
+    i.topK(probeQueries(spark, dir), k = 5, nprobe = 6).count()
+
+  private def pqProbe(spark: SparkSession, dir: String,
+      p: graft.operators.PqIndex): Long =
+    p.topK(probeQueries(spark, dir), k = 5, nCandidates = 64).count()
+
+  /** The capstone's one composite entry: the IVF and PQ artifacts
+    * reopened fresh and served together through [[graft.operators.IvfPq]]. */
+  private[queries] def ivfpqColdServe(spark: SparkSession,
+      dir: String): (String, () => Unit, () => Option[Long]) =
+    ("ivfpq",
+      () => { ivfPersisted(spark, dir); pqPersisted(spark, dir); () },
+      () => for {
+        i <- ivfPersisted.reopen(spark, dir)
+        p <- pqPersisted.reopen(spark, dir)
+      } yield new graft.operators.IvfPq(i, p)
+        .topK(probeQueries(spark, dir), k = 5, nprobe = 6, nCandidates = 64).count())
 
   /** One PQ index per (session, dir) — build/encode once, every query and
     * bench pass reuses the persisted code table (see operators.PqIndex). */
@@ -187,16 +112,12 @@ object SimilarityQueries {
     * target/, manifest-validated on reopen so a second session loads with
     * ZERO build/encode jobs (same build-once lifecycle as
     * [[ivfPersisted]]; PqPersistSpec asserts the skip). */
-  private val pqFileCache = QueryArtifacts.cache[SessionDir, graft.operators.PqIndex]()
-
-  private def pqPersisted(spark: SparkSession, dir: String): graft.operators.PqIndex =
-    pqFileCache((spark, dir)) {
-      val (path, tag) = pqLocation(spark, dir)
-      graft.operators.PqIndex.loadIfValid(spark, path, tag).getOrElse {
-        pqIndex(spark, dir).write(path, tag)
-        graft.operators.PqIndex.load(spark, path)
-      }
-    }
+  private[queries] val pqPersisted = QueryArtifacts.durable("pq",
+      QueryArtifacts.at("pq-file-index", ivfSourceTag),
+      graft.operators.PqIndex.loadIfValid) { (spark, dir, path, tag) =>
+    pqIndex(spark, dir).write(path, tag)
+    graft.operators.PqIndex.load(spark, path)
+  }(pqProbe)
 
   /** One drift-PLANTED durable IVF index per (session, dir): the coarse
     * quantizer is built (and its cell-balance snapshot committed) over the
@@ -205,76 +126,66 @@ object SimilarityQueries {
     * index-maintenance situation [[graft.operators.IvfIndex.staleness]]
     * exists to flag. Build-once like [[ivfPersisted]]: a manifest whose
     * source tag matches the appended state reopens with zero build jobs. */
-  private val driftCache = QueryArtifacts.cache[SessionDir, String]()
+  private[queries] val driftIndex = QueryArtifacts.durable("ivf_appended",
+      QueryArtifacts.at("ivf-drift-index", ivfSourceTag, "#drift-append"),
+      graft.operators.IvfIndex.loadIfValid) { (spark, dir, path, appendTag) =>
+    val emb = Tables.load(spark, dir, "embeddings")
+    val idx = graft.operators.IvfIndex.build(
+      emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", nCells = 8)
+    try idx.write(path, ivfSourceTag(spark, dir) + "#drift-base")
+    finally idx.close()
+    graft.operators.IvfIndex.appendTo(spark, path,
+      emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", appendTag)
+    // OPTIMIZE after the append (r16): the served index is the
+    // compacted one-file-per-cell layout, so ann_ivf_appended's
+    // parity gate and the capstone's ivf_appended reopen exercise
+    // compaction on the driver path, not just in IvfPersistSpec
+    graft.operators.IvfIndex.compact(spark, path)
+    graft.operators.IvfIndex.load(spark, path)
+  }(ivfProbe)
 
-  private def driftIndexPath(spark: SparkSession, dir: String): String =
-    driftCache((spark, dir)) {
-      val (path, appendTag) = ivfDriftLocation(spark, dir)
-      val baseTag = ivfSourceTag(spark, dir) + "#drift-base"
-      // a completed build+append leaves source == appendTag in the
-      // manifest; anything else (absent, torn, stale fixture) rebuilds
-      if (graft.operators.IvfIndex.loadIfValid(spark, path, appendTag).isEmpty) {
-        val emb = Tables.load(spark, dir, "embeddings")
-        val idx = graft.operators.IvfIndex.build(
-          emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", nCells = 8)
-        try idx.write(path, baseTag) finally idx.close()
-        graft.operators.IvfIndex.appendTo(spark, path,
-          emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", appendTag)
-        // OPTIMIZE after the append (r16): the served index is the
-        // compacted one-file-per-cell layout, so ann_ivf_appended's
-        // parity gate and the capstone's ivf_appended reopen exercise
-        // compaction on the driver path, not just in IvfPersistSpec
-        graft.operators.IvfIndex.compact(spark, path)
-      }
-      path
-    }
-
-  /** PQ twin of [[driftIndexPath]]: codebook frozen on the odd half, even
+  /** PQ twin of [[driftIndex]]: codebook frozen on the odd half, even
     * half encoded + appended under it. */
-  private val pqDriftCache = QueryArtifacts.cache[SessionDir, String]()
+  private val pqDriftIndex = QueryArtifacts.durable("pq_appended",
+      QueryArtifacts.at("pq-drift-index", ivfSourceTag, "#drift-append"),
+      graft.operators.PqIndex.loadIfValid) { (spark, dir, path, appendTag) =>
+    val emb = Tables.load(spark, dir, "embeddings")
+    // ksub = 16, not the serving index's 256: the half-corpus training
+    // slice can be smaller than 256 points at small sf, and the
+    // report's driver-checked fields are size-independent
+    val idx = graft.operators.PqIndex.build(
+      emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding",
+      m = 8, ksub = 16)
+    try idx.write(path, ivfSourceTag(spark, dir) + "#drift-base")
+    finally idx.close()
+    graft.operators.PqIndex.appendTo(spark, path,
+      emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", appendTag)
+    // OPTIMIZE after the append (r16, the driftIndex discipline)
+    graft.operators.PqIndex.compact(spark, path)
+    graft.operators.PqIndex.load(spark, path)
+  }(pqProbe)
 
-  private def pqDriftIndexPath(spark: SparkSession, dir: String): String =
-    pqDriftCache((spark, dir)) {
-      val path = QueryArtifacts.path("target/pq-drift-index", dir)
-      val baseTag = ivfSourceTag(spark, dir) + "#drift-base"
-      val appendTag = ivfSourceTag(spark, dir) + "#drift-append"
-      if (graft.operators.PqIndex.loadIfValid(spark, path, appendTag).isEmpty) {
-        val emb = Tables.load(spark, dir, "embeddings")
-        // ksub = 16, not the serving index's 256: the half-corpus training
-        // slice can be smaller than 256 points at small sf, and the
-        // report's driver-checked fields are size-independent
-        val idx = graft.operators.PqIndex.build(
-          emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding",
-          m = 8, ksub = 16)
-        try idx.write(path, baseTag) finally idx.close()
-        graft.operators.PqIndex.appendTo(spark, path,
-          emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", appendTag)
-        // OPTIMIZE after the append (r16, the driftIndexPath discipline)
-        graft.operators.PqIndex.compact(spark, path)
-      }
-      path
-    }
-
-  /** Serving handle on [[driftIndexPath]]'s appended index (build at
+  /** Serving handle on [[driftIndex]]'s appended index (build at
     * %2==1, append %2==0 — the full incremental lifecycle), with the
     * REPLAYED-LEDGER no-op pinned: before first serve, the even batch's
     * appendTo is re-issued under its original tag and must REFUSE
     * (return false) — the crashed-job-retry protection a daily-append
-    * corpus actually leans on. One load per (session, dir); the serve
-    * plan is the usual statically-pruned partitioned scan. */
+    * corpus actually leans on. Once per (session, dir); the serve plan is
+    * the usual statically-pruned partitioned scan. */
   private val appendServeCache = QueryArtifacts.cache[SessionDir, graft.operators.IvfIndex]()
 
   private def appendedServeIndex(spark: SparkSession,
       dir: String): graft.operators.IvfIndex =
     appendServeCache((spark, dir)) {
-      val path = driftIndexPath(spark, dir)
+      val idx = driftIndex(spark, dir)
+      val path = driftIndex.builtPath(spark, dir)
       val appendTag = ivfSourceTag(spark, dir) + "#drift-append"
       val emb = Tables.load(spark, dir, "embeddings")
       val replayed = graft.operators.IvfIndex.appendTo(spark, path,
         emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", appendTag)
       require(!replayed,
         "replaying an already-applied append batch must be a ledger no-op")
-      graft.operators.IvfIndex.load(spark, path)
+      idx
     }
 
   /** Streaming ingest → durable index FOLD replay (r17; see
@@ -323,10 +234,10 @@ object SimilarityQueries {
     }
 
   /** Drift-REMEDIATED durable IVF index (r17) — the actuation half of
-    * the drift story ([[driftIndexPath]] measures; this one acts): the
+    * the drift story ([[driftIndex]] measures; this one acts): the
     * same half/half drift state (quantizer frozen on the odd vec_ids,
     * even half appended — fracAppended >= 0.5, provably stale) is CLONED
-    * from [[driftIndexPath]]'s completed artifact (byte-identical by
+    * from [[driftIndex]]'s completed artifact (byte-identical by
     * construction; re-deriving it re-paid the quantizer fit and both
     * assignment scans every ensure phase),
     * then [[graft.operators.IvfIndex.refitIfStale]] runs the
@@ -336,42 +247,37 @@ object SimilarityQueries {
     * must be a ZERO-BUILD no-op (the no-drift branch, fenced by the
     * build counter). Build-once via the manifest+ledger: a manifest
     * whose source is the refit tag proves the whole chain completed. */
-  private val refitCache = QueryArtifacts.cache[SessionDir, graft.operators.IvfIndex]()
-
-  private def refittedIndex(spark: SparkSession,
-      dir: String): graft.operators.IvfIndex =
-    refitCache((spark, dir)) {
-      val (path, refitTag) = ivfRefitLocation(spark, dir)
-      if (graft.operators.IvfIndex.loadIfValid(spark, path, refitTag).isEmpty) {
-        // the stale starting state (quantizer frozen on the odd half,
-        // even half appended) is byte-identical to the drift chain's
-        // completed build+append+compact artifact — CLONE it instead of
-        // re-running the quantizer fit and both assignment scans (r18,
-        // ensure-phase dedup); a production refit acts on an EXISTING
-        // index, so starting from the sibling's files is the honest
-        // shape, and staleness (ledger + build-time balance snapshot)
-        // travels with the manifest
-        QueryArtifacts.cloneArtifact(driftIndexPath(spark, dir), path)
-        // MEASURE + DECIDE + ACT: the planted drift must trip the bound
-        // and trigger exactly one refit
-        require(graft.operators.IvfIndex.refitIfStale(spark, path,
-          nCells = 8, refitTag),
-          "the planted half/half drift must trigger a quantizer refit")
-        // the refreshed quantizer is healthy: the same decision rule is
-        // now a zero-build no-op (counter-fenced)
-        val builds = graft.operators.IvfIndex.buildsRun.get()
-        require(!graft.operators.IvfIndex.refitIfStale(spark, path,
-          nCells = 8, refitTag + "#again"),
-          "a just-refitted index must not be stale")
-        require(graft.operators.IvfIndex.buildsRun.get() == builds,
-          "the no-drift branch must run zero build jobs")
-      }
-      graft.operators.IvfIndex.load(spark, path)
-    }
+  private[queries] val refittedIndex = QueryArtifacts.durable("ivf_refitted",
+      QueryArtifacts.at("ivf-refit-index", ivfSourceTag, "#refit-done"),
+      graft.operators.IvfIndex.loadIfValid) { (spark, dir, path, refitTag) =>
+    // the stale starting state (quantizer frozen on the odd half,
+    // even half appended) is byte-identical to the drift chain's
+    // completed build+append+compact artifact — CLONE it instead of
+    // re-running the quantizer fit and both assignment scans (r18,
+    // ensure-phase dedup); a production refit acts on an EXISTING
+    // index, so starting from the sibling's files is the honest
+    // shape, and staleness (ledger + build-time balance snapshot)
+    // travels with the manifest
+    QueryArtifacts.cloneArtifact(driftIndex.builtPath(spark, dir), path)
+    // MEASURE + DECIDE + ACT: the planted drift must trip the bound
+    // and trigger exactly one refit
+    require(graft.operators.IvfIndex.refitIfStale(spark, path,
+      nCells = 8, refitTag),
+      "the planted half/half drift must trigger a quantizer refit")
+    // the refreshed quantizer is healthy: the same decision rule is
+    // now a zero-build no-op (counter-fenced)
+    val builds = graft.operators.IvfIndex.buildsRun.get()
+    require(!graft.operators.IvfIndex.refitIfStale(spark, path,
+      nCells = 8, refitTag + "#again"),
+      "a just-refitted index must not be stale")
+    require(graft.operators.IvfIndex.buildsRun.get() == builds,
+      "the no-drift branch must run zero build jobs")
+    graft.operators.IvfIndex.load(spark, path)
+  }(ivfProbe)
 
   /** Drift-REMEDIATED durable PQ index (r18) — [[refittedIndex]]'s
     * codebook twin, completing measure → decide → act for the code
-    * table: the stale starting state is CLONED from [[pqDriftIndexPath]]
+    * table: the stale starting state is CLONED from [[pqDriftIndex]]
     * (codebook frozen on the odd half at the bootstrap ksub=16, even
     * half encoded+appended under it — fracAppended >= 0.5, provably
     * stale), then [[graft.operators.PqIndex.refitIfStale]] must FIRE
@@ -380,48 +286,42 @@ object SimilarityQueries {
     * [[pqIndex]], so the refreshed codebook is the proven one) — and the
     * immediately repeated call must be a ZERO-build no-op (counter
     * fence). Build-once via the manifest+ledger. */
-  private val pqRefitCache = QueryArtifacts.cache[SessionDir, graft.operators.PqIndex]()
+  private[queries] val pqRefittedIndex = QueryArtifacts.durable("pq_refitted",
+      QueryArtifacts.at("pq-refit-index", ivfSourceTag, "#pq-refit-done"),
+      graft.operators.PqIndex.loadIfValid) { (spark, dir, path, refitTag) =>
+    QueryArtifacts.cloneArtifact(pqDriftIndex.builtPath(spark, dir), path)
+    require(graft.operators.PqIndex.refitIfStale(spark, path,
+      m = 8, ksub = 256, refitTag),
+      "the planted half/half drift must trigger a codebook refit")
+    val builds = graft.operators.PqIndex.buildCount
+    require(!graft.operators.PqIndex.refitIfStale(spark, path,
+      m = 8, ksub = 256, refitTag + "#again"),
+      "a just-refitted codebook must not be stale")
+    require(graft.operators.PqIndex.buildCount == builds,
+      "the no-drift branch must run zero build jobs")
+    graft.operators.PqIndex.load(spark, path)
+  }(pqProbe)
 
-  private def pqRefittedIndex(spark: SparkSession,
-      dir: String): graft.operators.PqIndex =
-    pqRefitCache((spark, dir)) {
-      val (path, refitTag) = pqRefitLocation(spark, dir)
-      if (graft.operators.PqIndex.loadIfValid(spark, path, refitTag).isEmpty) {
-        QueryArtifacts.cloneArtifact(pqDriftIndexPath(spark, dir), path)
-        require(graft.operators.PqIndex.refitIfStale(spark, path,
-          m = 8, ksub = 256, refitTag),
-          "the planted half/half drift must trigger a codebook refit")
-        val builds = graft.operators.PqIndex.buildCount
-        require(!graft.operators.PqIndex.refitIfStale(spark, path,
-          m = 8, ksub = 256, refitTag + "#again"),
-          "a just-refitted codebook must not be stale")
-        require(graft.operators.PqIndex.buildCount == builds,
-          "the no-drift branch must run zero build jobs")
-      }
-      graft.operators.PqIndex.load(spark, path)
-    }
-
-  /** Serving handle on [[pqDriftIndexPath]]'s appended PQ index — the
-    * [[appendedServeIndex]] pattern for the code table. The
-    * build/append/compact chain itself lives in (and is forced by the
-    * call to) [[pqDriftIndexPath]]; this function only PINS the
-    * replayed-ledger no-op before first serve — re-issuing the even
-    * batch's append under its original tag must REFUSE — and loads the
-    * completed artifact. One load per (session, dir); serving is the
-    * usual code-column ADC scan. */
+  /** Serving handle on [[pqDriftIndex]]'s appended PQ index — the
+    * [[appendedServeIndex]] pattern for the code table: the
+    * build/append/compact chain lives in [[pqDriftIndex]]; this function
+    * only PINS the replayed-ledger no-op before first serve — re-issuing
+    * the even batch's append under its original tag must REFUSE. Once per
+    * (session, dir); serving is the usual code-column ADC scan. */
   private val pqAppendServeCache = QueryArtifacts.cache[SessionDir, graft.operators.PqIndex]()
 
   private def pqAppendedServeIndex(spark: SparkSession,
       dir: String): graft.operators.PqIndex =
     pqAppendServeCache((spark, dir)) {
-      val path = pqDriftIndexPath(spark, dir)
+      val idx = pqDriftIndex(spark, dir)
+      val path = pqDriftIndex.builtPath(spark, dir)
       val appendTag = ivfSourceTag(spark, dir) + "#drift-append"
       val emb = Tables.load(spark, dir, "embeddings")
       val replayed = graft.operators.PqIndex.appendTo(spark, path,
         emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", appendTag)
       require(!replayed,
         "replaying an already-applied append batch must be a ledger no-op")
-      graft.operators.PqIndex.load(spark, path)
+      idx
     }
 
   /** Excision-PLANTED durable IVF index (r17) — the DELETE chapter:
@@ -433,60 +333,49 @@ object SimilarityQueries {
     * manifest's tombRows validation — the state a 100 TB index is in
     * between a takedown and its next scheduled OPTIMIZE. The physical
     * drop at compact is pinned in IvfPersistSpec. Build-once via the
-    * manifest+ledger (the [[driftIndexPath]] discipline). */
-  private val ivfExciseCache = QueryArtifacts.cache[SessionDir, graft.operators.IvfIndex]()
-
-  private def excisedServeIndex(spark: SparkSession,
-      dir: String): graft.operators.IvfIndex =
-    ivfExciseCache((spark, dir)) {
-      val (path, exciseTag) = ivfExcisedLocation(spark, dir)
-      if (graft.operators.IvfIndex.loadIfValid(spark, path, exciseTag).isEmpty) {
-        val emb = Tables.load(spark, dir, "embeddings")
-        val takedown = emb.filter(col("vec_id") % 7 === 0).select("vec_id")
-        // the pre-takedown state IS the persisted full-corpus index
-        // (same build params) — clone its completed artifact instead of
-        // re-running the quantizer fit + assignment scan (r18,
-        // ensure-phase dedup); a takedown acts on the live serving
-        // index, so starting from its files is the production shape
-        ivfPersisted(spark, dir)
-        QueryArtifacts.cloneArtifact(ivfLocation(spark, dir)._1, path)
-        graft.operators.IvfIndex.excise(spark, path, takedown, "vec_id",
-          exciseTag)
-        val replayed = graft.operators.IvfIndex.excise(spark, path,
-          takedown, "vec_id", exciseTag)
-        require(!replayed,
-          "replaying an already-applied excise batch must be a ledger no-op")
-      }
-      graft.operators.IvfIndex.load(spark, path)
-    }
+    * manifest+ledger (the [[driftIndex]] discipline). */
+  private[queries] val excisedServeIndex = QueryArtifacts.durable("ivf_excised",
+      QueryArtifacts.at("ivf-excised-index", ivfSourceTag, "#excise-batch"),
+      graft.operators.IvfIndex.loadIfValid) { (spark, dir, path, exciseTag) =>
+    val emb = Tables.load(spark, dir, "embeddings")
+    val takedown = emb.filter(col("vec_id") % 7 === 0).select("vec_id")
+    // the pre-takedown state IS the persisted full-corpus index
+    // (same build params) — clone its completed artifact instead of
+    // re-running the quantizer fit + assignment scan (r18,
+    // ensure-phase dedup); a takedown acts on the live serving
+    // index, so starting from its files is the production shape
+    QueryArtifacts.cloneArtifact(ivfPersisted.builtPath(spark, dir), path)
+    graft.operators.IvfIndex.excise(spark, path, takedown, "vec_id",
+      exciseTag)
+    val replayed = graft.operators.IvfIndex.excise(spark, path,
+      takedown, "vec_id", exciseTag)
+    require(!replayed,
+      "replaying an already-applied excise batch must be a ledger no-op")
+    graft.operators.IvfIndex.load(spark, path)
+  }(ivfProbe)
 
   /** PQ twin of [[excisedServeIndex]]: codes built over the full corpus,
     * the vec_id%7==0 slice tombstoned (NOT compacted — the served
     * artifact keeps its pending tombstones, gating the anti-join ADC
     * path and the tombRows manifest validation); physical drop at
     * compact is pinned in PqPersistSpec. */
-  private val pqExciseCache = QueryArtifacts.cache[SessionDir, graft.operators.PqIndex]()
-
-  private def pqExcisedServeIndex(spark: SparkSession,
-      dir: String): graft.operators.PqIndex =
-    pqExciseCache((spark, dir)) {
-      val (path, exciseTag) = pqExcisedLocation(spark, dir)
-      val baseTag = ivfSourceTag(spark, dir) + "#excise-base"
-      if (graft.operators.PqIndex.loadIfValid(spark, path, exciseTag).isEmpty) {
-        val emb = Tables.load(spark, dir, "embeddings")
-        val takedown = emb.filter(col("vec_id") % 7 === 0).select("vec_id")
-        val idx = graft.operators.PqIndex.build(
-          emb, "vec_id", "embedding", m = 8, ksub = 16)
-        try idx.write(path, baseTag) finally idx.close()
-        graft.operators.PqIndex.excise(spark, path, takedown, "vec_id",
-          exciseTag)
-        val replayed = graft.operators.PqIndex.excise(spark, path,
-          takedown, "vec_id", exciseTag)
-        require(!replayed,
-          "replaying an already-applied excise batch must be a ledger no-op")
-      }
-      graft.operators.PqIndex.load(spark, path)
-    }
+  private[queries] val pqExcisedServeIndex = QueryArtifacts.durable("pq_excised",
+      QueryArtifacts.at("pq-excised-index", ivfSourceTag, "#excise-batch"),
+      graft.operators.PqIndex.loadIfValid) { (spark, dir, path, exciseTag) =>
+    val emb = Tables.load(spark, dir, "embeddings")
+    val takedown = emb.filter(col("vec_id") % 7 === 0).select("vec_id")
+    val idx = graft.operators.PqIndex.build(
+      emb, "vec_id", "embedding", m = 8, ksub = 16)
+    try idx.write(path, ivfSourceTag(spark, dir) + "#excise-base")
+    finally idx.close()
+    graft.operators.PqIndex.excise(spark, path, takedown, "vec_id",
+      exciseTag)
+    val replayed = graft.operators.PqIndex.excise(spark, path,
+      takedown, "vec_id", exciseTag)
+    require(!replayed,
+      "replaying an already-applied excise batch must be a ledger no-op")
+    graft.operators.PqIndex.load(spark, path)
+  }(pqProbe)
 
   /** Writer-fencing lifecycle verdicts (r18): the maintenance-op
     * concurrency contract driven at the driver surface, not just in
@@ -1324,7 +1213,7 @@ object SimilarityQueries {
     // fixture-parity assumption a regeneration could silently break —
     // so those disjuncts stay pinned in DriftSpec instead.
     "ann_ivf_drift_report" -> ((spark, dir) => {
-      val rep = graft.operators.IvfIndex.staleness(spark, driftIndexPath(spark, dir))
+      val rep = graft.operators.IvfIndex.staleness(spark, driftIndex.builtPath(spark, dir))
       import spark.implicits._
       Seq((rep.fracAppended, rep.fracAppended >= 0.5))
         .toDF("frac_appended", "stale_by_fraction")
@@ -1412,7 +1301,7 @@ object SimilarityQueries {
     // exact-arithmetic driver fields; the sample-MSE growth disjunct
     // stays pinned in DriftSpec.
     "ann_pq_drift_report" -> ((spark, dir) => {
-      val rep = graft.operators.PqIndex.staleness(spark, pqDriftIndexPath(spark, dir))
+      val rep = graft.operators.PqIndex.staleness(spark, pqDriftIndex.builtPath(spark, dir))
       import spark.implicits._
       Seq((rep.fracAppended, rep.fracAppended >= 0.5))
         .toDF("frac_appended", "stale_by_fraction")

@@ -2,10 +2,11 @@ package graft.queries
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.DuckDbRound.round
 
 /** Standard-SQL operator surface beyond the core analytics set: distinct
   * aggregation, set operations, ROLLUP grouping, semi/anti joins, and the
@@ -15,13 +16,6 @@ import graft.Tables
 object SqlSurfaceQueries {
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** DuckDB-compatible rounding (shadows functions.round); see
-    * AnalyticsQueries for rationale. */
-  private def round(c: Column, scale: Int): Column = {
-    val p = math.pow(10, scale)
-    org.apache.spark.sql.functions.round(c * p, 0) / p
-  }
 
   val queries: ListMap[String, Q] = ListMap(
     // Table PROFILING (r15): per-column null count, exact distinct

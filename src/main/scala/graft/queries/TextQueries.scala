@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.queries.DuckDbRound.round
 import graft.queries.QueryArtifacts.SessionDir
 import graft.streaming.StreamingOps
 
@@ -21,15 +22,6 @@ import graft.streaming.StreamingOps
 object TextQueries {
 
   type Q = (SparkSession, String) => DataFrame
-
-  /** DuckDB-compatible rounding (shadows functions.round): round the scaled
-    * double half-away-from-zero, i.e. round(x*10^n)/10^n — the same
-    * computation DuckDB's round() performs, so values landing exactly on a
-    * scaled .5 boundary agree between engines. */
-  private def round(c: Column, scale: Int): Column = {
-    val p = math.pow(10, scale)
-    org.apache.spark.sql.functions.round(c * p, 0) / p
-  }
 
   import graft.operators.TextAnalysis
   import TextAnalysis.{enMarkers => enM, esMarkers => esM, frMarkers => frM,
@@ -55,19 +47,21 @@ object TextQueries {
     * IDENTICAL vocabulary, which is the contract a tokenizer must keep
     * anyway. Training scans the corpus once for the bounded top-word
     * sample (see BpeTokenizer.train). */
-  private val bpeCache = QueryArtifacts.cache[SessionDir, Array[Array[String]]]()
-
-  private def bpeMerges(spark: SparkSession, dir: String): Array[Array[String]] =
-    bpeCache((spark, dir)) {
-      val (path, tag) = bpeLocation(spark, dir)
-      graft.operators.BpeTokenizer.loadIfValid(spark, path, tag).getOrElse {
-        val merges = graft.operators.BpeTokenizer.train(
-          Tables.load(spark, dir, "documents"), "text",
-          nMerges = 200, vocabWords = 5000)
-        graft.operators.BpeTokenizer.write(spark, path, merges, tag)
-        merges
-      }
-    }
+  private[queries] val bpeMerges = QueryArtifacts.durable("bpe",
+      QueryArtifacts.at("bpe-merges", lmSourceTag),
+      graft.operators.BpeTokenizer.loadIfValid) { (spark, dir, path, tag) =>
+    val merges = graft.operators.BpeTokenizer.train(
+      Tables.load(spark, dir, "documents"), "text",
+      nMerges = 200, vocabWords = 5000)
+    graft.operators.BpeTokenizer.write(spark, path, merges, tag)
+    merges
+  } { (spark, _, merges) =>
+    // one literal encode under the reopened merge table
+    spark.range(1).select(
+      size(graft.operators.BpeTokenizer.encode(
+        lit("the quick brown fox"), merges)).cast("long").as("n"))
+      .head().getLong(0)
+  }
 
   /** One persisted bigram-LM score table per (session, dir), shared by
     * lm_bigram_quality and perplexity_buckets — the bucketing query reads
@@ -1285,185 +1279,32 @@ object TextQueries {
           col("missing_from_file") === 0 && col("extra_in_file") === 0)
     }))
 
+  private def lmSourceTag(spark: SparkSession, dir: String): String =
+    dir + "#" + QueryArtifacts.sourceDigest(spark, dir, "documents")
+
+  /** The capstone's bounded request against a reopened LM or classifier:
+    * three docs to score. */
+  private def docs3(spark: SparkSession, dir: String): DataFrame =
+    Tables.load(spark, dir, "documents").filter(col("doc_id") < 3)
+
+  /** The capstone's bounded request against a reopened inverted index:
+    * the three-term bucket-pruned BM25 probe. */
+  private def invProbe(spark: SparkSession, dir: String,
+      idx: graft.operators.InvertedIndex): Long =
+    idx.serve(Seq("hash", "join", "vector")).count()
+
   /** One durable bigram LM per (session, dir), trained on the %5!=0 slice
     * — the same build-once file lifecycle as SimilarityQueries'
     * ivfPersisted (manifest-validated reopen, path keyed by a digest of
     * the dir, source tag from the documents table's file metadata). */
-  private val lmFileCache = QueryArtifacts.cache[SessionDir, graft.operators.BigramLm]()
-
-  private def lmSourceTag(spark: SparkSession, dir: String): String =
-    dir + "#" + QueryArtifacts.sourceDigest(spark, dir, "documents")
-
-  /** (path, source tag) of each durable text artifact — the one location
-    * its builder writes and [[coldServeHooks]] reopens
-    * ([[invIndexLocation]] is shared with [[RagQueries]] too). `suffix`
-    * names the lifecycle step a chained artifact's manifest must carry. */
-  private def textLocation(spark: SparkSession, dir: String, name: String,
-      suffix: String = ""): (String, String) =
-    (QueryArtifacts.path(s"target/$name", dir), lmSourceTag(spark, dir) + suffix)
-
-  private def bpeLocation(spark: SparkSession, dir: String) =
-    textLocation(spark, dir, "bpe-merges")
-  private def bigramLocation(spark: SparkSession, dir: String) =
-    textLocation(spark, dir, "bigram-lm")
-  private def bigramExcisedLocation(spark: SparkSession, dir: String) =
-    textLocation(spark, dir, "bigram-lm-excised", "#excise-batch")
-  private def trigramLocation(spark: SparkSession, dir: String) =
-    textLocation(spark, dir, "trigram-lm")
-  private def trigramExcisedLocation(spark: SparkSession, dir: String) =
-    textLocation(spark, dir, "trigram-lm-excised", "#excise-batch")
-  private def clfLocation(spark: SparkSession, dir: String) =
-    textLocation(spark, dir, "quality-clf")
-  private def clfExcisedLocation(spark: SparkSession, dir: String) =
-    textLocation(spark, dir, "quality-clf-excised", "#excise-batch")
-  private def invAppendedLocation(spark: SparkSession, dir: String) =
-    textLocation(spark, dir, "inverted-index-appended", "#append-batch")
-  private def invExcisedLocation(spark: SparkSession, dir: String) =
-    textLocation(spark, dir, "inverted-index-excised", "#excise-batch")
-
-  /** Appended-and-COMPACTED durable inverted index — the index family's
-    * full maintenance lifecycle on one artifact: built over the odd
-    * doc_ids, the even half appended as a daily batch (df merge + ledger),
-    * then [[graft.operators.InvertedIndex.compact]]ed back to one file
-    * per bucket. Build-once via the manifest+ledger (the driftIndexPath
-    * discipline): a manifest whose source is the APPEND tag proves the
-    * whole chain completed, so a later session reopens with zero
-    * tokenize/aggregate jobs; anything else (absent, torn, stale
-    * fixture) rebuilds the chain from scratch. */
-  private val invAppendCache = QueryArtifacts.cache[SessionDir, graft.operators.InvertedIndex]()
-
-  private def invAppendedCompacted(spark: SparkSession,
-      dir: String): graft.operators.InvertedIndex =
-    invAppendCache((spark, dir)) {
-      val (path, appendTag) = invAppendedLocation(spark, dir)
-      val baseTag = lmSourceTag(spark, dir) + "#append-base"
-      if (graft.operators.InvertedIndex.loadIfValid(spark, path, appendTag).isEmpty) {
-        val docs = Tables.load(spark, dir, "documents")
-        graft.operators.InvertedIndex
-          .build(docs.filter(col("doc_id") % 2 === 1), "doc_id", "text")
-          .write(path, baseTag)
-        graft.operators.InvertedIndex.appendTo(spark, path,
-          docs.filter(col("doc_id") % 2 === 0), "text", appendTag)
-        graft.operators.InvertedIndex.compact(spark, path)
-      }
-      graft.operators.InvertedIndex.load(spark, path)
-    }
-
-  /** Excised-and-COMPACTED durable inverted index — the DELETE chapter of
-    * the index-maintenance story (r17): built over the FULL corpus, the
-    * doc_id%3==0 slice excised as a takedown batch (tombstones + df/scalar
-    * correction — see [[graft.operators.InvertedIndex.excise]]), the
-    * replayed-excise ledger no-op pinned, then compacted so the
-    * tombstoned posting rows are physically gone. Build-once via the
-    * manifest+ledger (the [[invAppendedCompacted]] discipline): a
-    * manifest whose source is the EXCISE tag proves the whole chain
-    * completed and reopens with zero tokenize jobs. */
-  private val invExciseCache = QueryArtifacts.cache[SessionDir, graft.operators.InvertedIndex]()
-
-  private def invExcisedCompacted(spark: SparkSession,
-      dir: String): graft.operators.InvertedIndex =
-    invExciseCache((spark, dir)) {
-      val (path, exciseTag) = invExcisedLocation(spark, dir)
-      if (graft.operators.InvertedIndex.loadIfValid(spark, path, exciseTag).isEmpty) {
-        val docs = Tables.load(spark, dir, "documents")
-        val takedown = docs.filter(col("doc_id") % 3 === 0)
-        // the pre-takedown state IS the persisted full-corpus index —
-        // clone its completed artifact instead of re-tokenizing the
-        // whole corpus a second time (r18, ensure-phase dedup); a
-        // takedown acts on the live serving index, so starting from its
-        // files is the production shape
-        invertedIndexPersisted(spark, dir)
-        QueryArtifacts.cloneArtifact(invIndexLocation(spark, dir)._1, path)
-        graft.operators.InvertedIndex.excise(spark, path, takedown, "text",
-          exciseTag)
-        // crashed-job-retry protection, pinned on the driver path: a
-        // replayed excise of the same batch must be a ledger no-op
-        val replayed = graft.operators.InvertedIndex.excise(spark, path,
-          takedown, "text", exciseTag)
-        require(!replayed,
-          "replaying an already-applied excise batch must be a ledger no-op")
-        graft.operators.InvertedIndex.compact(spark, path)
-      }
-      graft.operators.InvertedIndex.load(spark, path)
-    }
-
-  /** Cold-reopen hooks for the serve-everything capstone (see
-    * [[ServeAllQueries]] and [[SimilarityQueries.coldServeHooks]]'s
-    * contract): fresh `loadIfValid` reopens past the session caches, one
-    * bounded serve each — three scored docs for the LMs and the
-    * classifier, the three-term bucket-pruned BM25 probe for the index,
-    * one literal encode for the BPE merges. */
-  private[queries] def coldServeHooks(spark: SparkSession, dir: String)
-      : Seq[(String, () => Unit, () => Option[Long])] = {
-    def docs3 = Tables.load(spark, dir, "documents").filter(col("doc_id") < 3)
-    Seq(
-      ("bigram_lm",
-        () => { bigramLmPersisted(spark, dir); () },
-        () => QueryArtifacts.reopenAt(spark, dir, bigramLocation)(
-            graft.operators.BigramLm.loadIfValid)
-          .map(_.score(docs3, "doc_id", "text").count())),
-      ("bigram_lm_excised",
-        () => { bigramLmExcised(spark, dir); () },
-        () => QueryArtifacts.reopenAt(spark, dir, bigramExcisedLocation)(
-            graft.operators.BigramLm.loadIfValid)
-          .map(_.score(docs3, "doc_id", "text").count())),
-      ("trigram_lm",
-        () => { trigramLmPersisted(spark, dir); () },
-        () => QueryArtifacts.reopenAt(spark, dir, trigramLocation)(
-            graft.operators.TrigramLm.loadIfValid)
-          .map(_.score(docs3, "doc_id", "text").count())),
-      ("trigram_lm_excised",
-        () => { trigramLmExcised(spark, dir); () },
-        () => QueryArtifacts.reopenAt(spark, dir, trigramExcisedLocation)(
-            graft.operators.TrigramLm.loadIfValid)
-          .map(_.score(docs3, "doc_id", "text").count())),
-      ("inverted_index",
-        () => { invertedIndexPersisted(spark, dir); () },
-        () => QueryArtifacts.reopenAt(spark, dir, invIndexLocation)(
-            graft.operators.InvertedIndex.loadIfValid)
-          .map(_.serve(Seq("hash", "join", "vector")).count())),
-      ("classifier",
-        () => { clfPersisted(spark, dir); () },
-        () => QueryArtifacts.reopenAt(spark, dir, clfLocation)(
-            graft.operators.QualityClassifier.loadIfValid)
-          .map(_.score(docs3, "doc_id", "text").count())),
-      ("classifier_excised",
-        () => { clfExcised(spark, dir); () },
-        () => QueryArtifacts.reopenAt(spark, dir, clfExcisedLocation)(
-            graft.operators.QualityClassifier.loadIfValid)
-          .map(_.score(docs3, "doc_id", "text").count())),
-      ("inverted_index_appended",
-        () => { invAppendedCompacted(spark, dir); () },
-        () => QueryArtifacts.reopenAt(spark, dir, invAppendedLocation)(
-            graft.operators.InvertedIndex.loadIfValid)
-          .map(_.serve(Seq("hash", "join", "vector")).count())),
-      ("inverted_index_excised",
-        () => { invExcisedCompacted(spark, dir); () },
-        () => QueryArtifacts.reopenAt(spark, dir, invExcisedLocation)(
-            graft.operators.InvertedIndex.loadIfValid)
-          .map(_.serve(Seq("hash", "join", "vector")).count())),
-      ("bpe",
-        () => { bpeMerges(spark, dir); () },
-        () => QueryArtifacts.reopenAt(spark, dir, bpeLocation)(
-            graft.operators.BpeTokenizer.loadIfValid)
-          .map { m =>
-            spark.range(1).select(
-              size(graft.operators.BpeTokenizer.encode(
-                lit("the quick brown fox"), m)).cast("long").as("n"))
-              .head().getLong(0)
-          }))
-  }
-
-  private def bigramLmPersisted(spark: SparkSession, dir: String): graft.operators.BigramLm =
-    lmFileCache((spark, dir)) {
-      val (path, tag) = bigramLocation(spark, dir)
-      graft.operators.BigramLm.loadIfValid(spark, path, tag).getOrElse {
-        val docs = Tables.load(spark, dir, "documents")
-        graft.operators.BigramLm.train(docs.filter(col("doc_id") % 5 =!= 0), "text")
-          .write(path, tag)
-        graft.operators.BigramLm.load(spark, path)
-      }
-    }
+  private[queries] val bigramLmPersisted = QueryArtifacts.durable("bigram_lm",
+      QueryArtifacts.at("bigram-lm", lmSourceTag),
+      graft.operators.BigramLm.loadIfValid) { (spark, dir, path, tag) =>
+    val docs = Tables.load(spark, dir, "documents")
+    graft.operators.BigramLm.train(docs.filter(col("doc_id") % 5 =!= 0), "text")
+      .write(path, tag)
+    graft.operators.BigramLm.load(spark, path)
+  }((spark, dir, m) => m.score(docs3(spark, dir), "doc_id", "text").count())
 
   /** Excised twin of [[bigramLmPersisted]] — EXACT UNLEARNING for the
     * reference LM (r19, the MarkovModel excise recipe on the CCNet
@@ -1474,43 +1315,32 @@ object TextQueries {
     * scalar v re-derives as the surviving vocab rows, so held-out docs
     * scored under the excised model must hash against a fresh
     * survivor-only train; replayed-ledger no-op pinned. */
-  private val lmExciseCache = QueryArtifacts.cache[SessionDir, graft.operators.BigramLm]()
-
-  private def bigramLmExcised(spark: SparkSession,
-      dir: String): graft.operators.BigramLm =
-    lmExciseCache((spark, dir)) {
-      val srcPath = bigramLocation(spark, dir)._1
-      val (path, exciseTag) = bigramExcisedLocation(spark, dir)
-      if (graft.operators.BigramLm.loadIfValid(spark, path, exciseTag).isEmpty) {
-        bigramLmPersisted(spark, dir) // ensure the source artifact exists
-        QueryArtifacts.cloneArtifact(srcPath, path)
-        val takedown = Tables.load(spark, dir, "documents")
-          .filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 3 === 0)
-        graft.operators.BigramLm.exciseFrom(spark, path, takedown, "text",
-          exciseTag)
-        require(!graft.operators.BigramLm.exciseFrom(spark, path, takedown,
-            "text", exciseTag),
-          "replaying an already-applied excise batch must be a ledger no-op")
-      }
-      graft.operators.BigramLm.load(spark, path)
-    }
+  private[queries] val bigramLmExcised = QueryArtifacts.durable("bigram_lm_excised",
+      QueryArtifacts.at("bigram-lm-excised", lmSourceTag, "#excise-batch"),
+      graft.operators.BigramLm.loadIfValid) { (spark, dir, path, exciseTag) =>
+    QueryArtifacts.cloneArtifact(bigramLmPersisted.builtPath(spark, dir), path)
+    val takedown = Tables.load(spark, dir, "documents")
+      .filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 3 === 0)
+    graft.operators.BigramLm.exciseFrom(spark, path, takedown, "text",
+      exciseTag)
+    require(!graft.operators.BigramLm.exciseFrom(spark, path, takedown,
+        "text", exciseTag),
+      "replaying an already-applied excise batch must be a ledger no-op")
+    graft.operators.BigramLm.load(spark, path)
+  }((spark, dir, m) => m.score(docs3(spark, dir), "doc_id", "text").count())
 
   /** One durable trigram LM per (session, dir), trained on the %5!=0
     * slice — the [[bigramLmPersisted]] lifecycle for the interpolated
     * trigram model (manifest-validated reopen, zero training jobs on a
     * hit). */
-  private val trigramFileCache = QueryArtifacts.cache[SessionDir, graft.operators.TrigramLm]()
-
-  private def trigramLmPersisted(spark: SparkSession, dir: String): graft.operators.TrigramLm =
-    trigramFileCache((spark, dir)) {
-      val (path, tag) = trigramLocation(spark, dir)
-      graft.operators.TrigramLm.loadIfValid(spark, path, tag).getOrElse {
-        val docs = Tables.load(spark, dir, "documents")
-        graft.operators.TrigramLm.train(docs.filter(col("doc_id") % 5 =!= 0), "text")
-          .write(path, tag)
-        graft.operators.TrigramLm.load(spark, path)
-      }
-    }
+  private[queries] val trigramLmPersisted = QueryArtifacts.durable("trigram_lm",
+      QueryArtifacts.at("trigram-lm", lmSourceTag),
+      graft.operators.TrigramLm.loadIfValid) { (spark, dir, path, tag) =>
+    val docs = Tables.load(spark, dir, "documents")
+    graft.operators.TrigramLm.train(docs.filter(col("doc_id") % 5 =!= 0), "text")
+      .write(path, tag)
+    graft.operators.TrigramLm.load(spark, path)
+  }((spark, dir, m) => m.score(docs3(spark, dir), "doc_id", "text").count())
 
   /** Excised twin of [[trigramLmPersisted]] — EXACT UNLEARNING for the
     * interpolated trigram LM (r20, the [[bigramLmExcised]] chain one
@@ -1521,67 +1351,99 @@ object TextQueries {
     * nTok) re-derive from the surviving unigram table, so held-out docs
     * scored under the excised model must hash against a fresh
     * survivor-only train; replayed-ledger no-op pinned. */
-  private val trigramExciseCache = QueryArtifacts.cache[SessionDir, graft.operators.TrigramLm]()
-
-  private def trigramLmExcised(spark: SparkSession,
-      dir: String): graft.operators.TrigramLm =
-    trigramExciseCache((spark, dir)) {
-      val srcPath = trigramLocation(spark, dir)._1
-      val (path, exciseTag) = trigramExcisedLocation(spark, dir)
-      if (graft.operators.TrigramLm.loadIfValid(spark, path, exciseTag).isEmpty) {
-        trigramLmPersisted(spark, dir) // ensure the source artifact exists
-        QueryArtifacts.cloneArtifact(srcPath, path)
-        val takedown = Tables.load(spark, dir, "documents")
-          .filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 3 === 0)
-        graft.operators.TrigramLm.exciseFrom(spark, path, takedown, "text",
-          exciseTag)
-        require(!graft.operators.TrigramLm.exciseFrom(spark, path, takedown,
-            "text", exciseTag),
-          "replaying an already-applied excise batch must be a ledger no-op")
-      }
-      graft.operators.TrigramLm.load(spark, path)
-    }
+  private[queries] val trigramLmExcised = QueryArtifacts.durable("trigram_lm_excised",
+      QueryArtifacts.at("trigram-lm-excised", lmSourceTag, "#excise-batch"),
+      graft.operators.TrigramLm.loadIfValid) { (spark, dir, path, exciseTag) =>
+    QueryArtifacts.cloneArtifact(trigramLmPersisted.builtPath(spark, dir), path)
+    val takedown = Tables.load(spark, dir, "documents")
+      .filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 3 === 0)
+    graft.operators.TrigramLm.exciseFrom(spark, path, takedown, "text",
+      exciseTag)
+    require(!graft.operators.TrigramLm.exciseFrom(spark, path, takedown,
+        "text", exciseTag),
+      "replaying an already-applied excise batch must be a ledger no-op")
+    graft.operators.TrigramLm.load(spark, path)
+  }((spark, dir, m) => m.score(docs3(spark, dir), "doc_id", "text").count())
 
   /** One durable inverted index per (session, dir) — same build-once file
     * lifecycle as [[bigramLmPersisted]] (manifest-validated reopen, zero
     * tokenize jobs on a hit); serving reads only the query terms' hash
-    * buckets via static partition pruning. */
-  private val invFileCache = QueryArtifacts.cache[SessionDir, graft.operators.InvertedIndex]()
+    * buckets via static partition pruning. [[RagQueries]]' fresh-reopen
+    * fence shares it. */
+  private[queries] val invertedIndexPersisted = QueryArtifacts.durable("inverted_index",
+      QueryArtifacts.at("inverted-index", lmSourceTag),
+      graft.operators.InvertedIndex.loadIfValid) { (spark, dir, path, tag) =>
+    graft.operators.InvertedIndex
+      .build(Tables.load(spark, dir, "documents"), "doc_id", "text")
+      .write(path, tag)
+    graft.operators.InvertedIndex.load(spark, path)
+  }(invProbe)
 
-  /** Durable inverted-index location for a dir — (path, expected source
-    * tag), the reopen coordinates [[RagQueries]]' fresh-load fence and the
-    * cold-serve hooks share with [[invertedIndexPersisted]]. */
-  private[queries] def invIndexLocation(spark: SparkSession,
-      dir: String): (String, String) =
-    textLocation(spark, dir, "inverted-index")
+  /** Appended-and-COMPACTED durable inverted index — the index family's
+    * full maintenance lifecycle on one artifact: built over the odd
+    * doc_ids, the even half appended as a daily batch (df merge + ledger),
+    * then [[graft.operators.InvertedIndex.compact]]ed back to one file
+    * per bucket. Build-once via the manifest+ledger (the driftIndex
+    * discipline): a manifest whose source is the APPEND tag proves the
+    * whole chain completed, so a later session reopens with zero
+    * tokenize/aggregate jobs; anything else (absent, torn, stale
+    * fixture) rebuilds the chain from scratch. */
+  private[queries] val invAppendedCompacted = QueryArtifacts.durable("inverted_index_appended",
+      QueryArtifacts.at("inverted-index-appended", lmSourceTag, "#append-batch"),
+      graft.operators.InvertedIndex.loadIfValid) { (spark, dir, path, appendTag) =>
+    val docs = Tables.load(spark, dir, "documents")
+    graft.operators.InvertedIndex
+      .build(docs.filter(col("doc_id") % 2 === 1), "doc_id", "text")
+      .write(path, lmSourceTag(spark, dir) + "#append-base")
+    graft.operators.InvertedIndex.appendTo(spark, path,
+      docs.filter(col("doc_id") % 2 === 0), "text", appendTag)
+    graft.operators.InvertedIndex.compact(spark, path)
+    graft.operators.InvertedIndex.load(spark, path)
+  }(invProbe)
 
-  private[queries] def invertedIndexPersisted(spark: SparkSession,
-      dir: String): graft.operators.InvertedIndex =
-    invFileCache((spark, dir)) {
-      val (path, tag) = invIndexLocation(spark, dir)
-      graft.operators.InvertedIndex.loadIfValid(spark, path, tag).getOrElse {
-        graft.operators.InvertedIndex
-          .build(Tables.load(spark, dir, "documents"), "doc_id", "text")
-          .write(path, tag)
-        graft.operators.InvertedIndex.load(spark, path)
-      }
-    }
+  /** Excised-and-COMPACTED durable inverted index — the DELETE chapter of
+    * the index-maintenance story (r17): built over the FULL corpus, the
+    * doc_id%3==0 slice excised as a takedown batch (tombstones + df/scalar
+    * correction — see [[graft.operators.InvertedIndex.excise]]), the
+    * replayed-excise ledger no-op pinned, then compacted so the
+    * tombstoned posting rows are physically gone. Build-once via the
+    * manifest+ledger (the [[invAppendedCompacted]] discipline): a
+    * manifest whose source is the EXCISE tag proves the whole chain
+    * completed and reopens with zero tokenize jobs. */
+  private[queries] val invExcisedCompacted = QueryArtifacts.durable("inverted_index_excised",
+      QueryArtifacts.at("inverted-index-excised", lmSourceTag, "#excise-batch"),
+      graft.operators.InvertedIndex.loadIfValid) { (spark, dir, path, exciseTag) =>
+    val docs = Tables.load(spark, dir, "documents")
+    val takedown = docs.filter(col("doc_id") % 3 === 0)
+    // the pre-takedown state IS the persisted full-corpus index —
+    // clone its completed artifact instead of re-tokenizing the
+    // whole corpus a second time (r18, ensure-phase dedup); a
+    // takedown acts on the live serving index, so starting from its
+    // files is the production shape
+    QueryArtifacts.cloneArtifact(invertedIndexPersisted.builtPath(spark, dir), path)
+    graft.operators.InvertedIndex.excise(spark, path, takedown, "text",
+      exciseTag)
+    // crashed-job-retry protection, pinned on the driver path: a
+    // replayed excise of the same batch must be a ledger no-op
+    val replayed = graft.operators.InvertedIndex.excise(spark, path,
+      takedown, "text", exciseTag)
+    require(!replayed,
+      "replaying an already-applied excise batch must be a ledger no-op")
+    graft.operators.InvertedIndex.compact(spark, path)
+    graft.operators.InvertedIndex.load(spark, path)
+  }(invProbe)
 
   /** One durable quality classifier per (session, dir), trained on the
     * %5==0 labeled seed slice — same build-once file lifecycle as
     * [[bigramLmPersisted]]. */
-  private val clfFileCache = QueryArtifacts.cache[SessionDir, graft.operators.QualityClassifier]()
-
-  private def clfPersisted(spark: SparkSession, dir: String): graft.operators.QualityClassifier =
-    clfFileCache((spark, dir)) {
-      val (path, tag) = clfLocation(spark, dir)
-      graft.operators.QualityClassifier.loadIfValid(spark, path, tag).getOrElse {
-        graft.operators.QualityClassifier
-          .train(seedSlice(spark, dir), "text", "lang")
-          .write(path, tag)
-        graft.operators.QualityClassifier.load(spark, path)
-      }
-    }
+  private[queries] val clfPersisted = QueryArtifacts.durable("classifier",
+      QueryArtifacts.at("quality-clf", lmSourceTag),
+      graft.operators.QualityClassifier.loadIfValid) { (spark, dir, path, tag) =>
+    graft.operators.QualityClassifier
+      .train(seedSlice(spark, dir), "text", "lang")
+      .write(path, tag)
+    graft.operators.QualityClassifier.load(spark, path)
+  }((spark, dir, m) => m.score(docs3(spark, dir), "doc_id", "text").count())
 
   /** Excised twin of [[clfPersisted]] — EXACT UNLEARNING for the trained
     * curation classifier (r20, the [[bigramLmExcised]] chain on the
@@ -1593,27 +1455,19 @@ object TextQueries {
     * words, so held-out docs scored under the excised model must hash
     * against a fresh survivor-only train; replayed-ledger no-op
     * pinned. */
-  private val clfExciseCache = QueryArtifacts.cache[SessionDir, graft.operators.QualityClassifier]()
-
-  private def clfExcised(spark: SparkSession,
-      dir: String): graft.operators.QualityClassifier =
-    clfExciseCache((spark, dir)) {
-      val srcPath = clfLocation(spark, dir)._1
-      val (path, exciseTag) = clfExcisedLocation(spark, dir)
-      if (graft.operators.QualityClassifier
-          .loadIfValid(spark, path, exciseTag).isEmpty) {
-        clfPersisted(spark, dir) // ensure the source artifact exists
-        QueryArtifacts.cloneArtifact(srcPath, path)
-        val takedown = seedSlice(spark, dir)
-          .filter(col("doc_id") % 3 === 0)
-        graft.operators.QualityClassifier.exciseFrom(spark, path, takedown,
-          "text", "lang", exciseTag)
-        require(!graft.operators.QualityClassifier.exciseFrom(spark, path,
-            takedown, "text", "lang", exciseTag),
-          "replaying an already-applied excise batch must be a ledger no-op")
-      }
-      graft.operators.QualityClassifier.load(spark, path)
-    }
+  private[queries] val clfExcised = QueryArtifacts.durable("classifier_excised",
+      QueryArtifacts.at("quality-clf-excised", lmSourceTag, "#excise-batch"),
+      graft.operators.QualityClassifier.loadIfValid) { (spark, dir, path, exciseTag) =>
+    QueryArtifacts.cloneArtifact(clfPersisted.builtPath(spark, dir), path)
+    val takedown = seedSlice(spark, dir)
+      .filter(col("doc_id") % 3 === 0)
+    graft.operators.QualityClassifier.exciseFrom(spark, path, takedown,
+      "text", "lang", exciseTag)
+    require(!graft.operators.QualityClassifier.exciseFrom(spark, path,
+        takedown, "text", "lang", exciseTag),
+      "replaying an already-applied excise batch must be a ledger no-op")
+    graft.operators.QualityClassifier.load(spark, path)
+  }((spark, dir, m) => m.score(docs3(spark, dir), "doc_id", "text").count())
 
   /** One TRAINED char-trigram language-ID model per (session, dir) —
     * the same NB sufficient statistics as [[clfPersisted]] but over the

@@ -49,6 +49,20 @@ class BigramLmPersistSpec extends AnyFunSuite {
     assert(BigramLm.loadIfValid(spark, path, "spec-v1").isEmpty)
   }
 
+  test("a manifest whose v disagrees with its vocab row count refuses") {
+    val path = "target/bigram-lm-test/wrong-v"
+    BigramLm.train(train, "text").write(path, source = "spec-v1")
+    assert(BigramLm.loadIfValid(spark, path, "spec-v1").isDefined)
+    // every row count still matches its table; only the scalar is wrong
+    ManifestFields.rewrite(path, "v" -> "32")
+    assert(ManifestFields(path)("vocabRows") === "31")
+    assert(BigramLm.loadIfValid(spark, path, "spec-v1").isEmpty,
+      "v must equal the vocab row count")
+    ManifestFields.rewrite(path, "v" -> "31")
+    assert(BigramLm.loadIfValid(spark, path, "spec-v1").isDefined,
+      "the rewritten manifest with the true v must reopen")
+  }
+
   test("held-out scoring floors unseen bigrams at the add-one rates") {
     import spark.implicits._
     val tr = Seq((1L, "a b a c")).toDF("doc_id", "text")

@@ -24,4 +24,15 @@ object ManifestFields extends Assertions {
     assert(actual == expected,
       s"manifest at $path: expected $expected, found $actual")
   }
+
+  /** Overwrite fields of the manifest at `path`, keeping the others. The
+    * local file system's checksum sidecar is dropped with the old bytes,
+    * or the next read would fail on the checksum instead of the fields. */
+  def rewrite(path: String, updates: (String, String)*): Unit = {
+    val props = new java.util.Properties()
+    (apply(path) ++ updates).foreach { case (k, v) => props.setProperty(k, v) }
+    val out = new java.io.FileOutputStream(s"$path/_MANIFEST.properties")
+    try props.store(out, null) finally out.close()
+    new java.io.File(s"$path/._MANIFEST.properties.crc").delete()
+  }
 }

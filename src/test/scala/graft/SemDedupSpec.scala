@@ -147,18 +147,25 @@ class SemDedupSpec extends AnyFunSuite {
       (7L, Array.tabulate(8)(d => (math.cos(d) * 0.5).toFloat)),
       (41L, Array.fill(8)(0.0f)))
     val df = rows.toDF("vec_id", "embedding")
-    // reference: the generic-id fallback path, forced by widening the id
-    // to a non-long type the fast path refuses (decimal), then casting
-    // the output back. The zero-norm row 41 goes through BOTH paths: the
-    // kernel drops its NaN cosine at the Java `>=`, and the fallback's
-    // nrm > 0 pre-filter (r20 advice — Spark's nan-safe `>=` would KEEP
-    // NaN pairs) drops it identically, so set equality plus the explicit
-    // no-41 assertion below pins the shared zero-norm contract.
-    val ref = Dedup.embeddingCosinePairsExact(
-        df.withColumn("vec_id", col("vec_id").cast("decimal(20,0)")),
-        "vec_id", "embedding", minCosine = 0.35)
-      .select(col("vec_id_1").cast("long"), col("vec_id_2").cast("long"),
-        col("cosine"))
+    // reference: the broadcast cross-join formulation. The zero-norm row
+    // 41 goes through BOTH: the kernel drops its NaN cosine at the Java
+    // `>=`, and the reference's nrm > 0 pre-filter drops it identically
+    // (Spark's nan-safe `>=` sorts NaN above all values and would KEEP
+    // NaN pairs; NaN > 0 is true under the same ordering, hence the
+    // isnan guard), so set equality plus the explicit no-41 assertion
+    // below pins the zero-norm contract.
+    val pos = df.select(col("vec_id"), col("embedding").as("v"))
+      .withColumn("nrm", graft.functions.functions.vec_l2norm(col("v")))
+      .filter(col("nrm") > 0 && !isnan(col("nrm")))
+    val ref = pos.select(col("vec_id").as("vec_id_1"), col("v").as("v1"),
+        col("nrm").as("nrm1"))
+      .crossJoin(broadcast(pos.select(col("vec_id").as("vec_id_2"),
+        col("v").as("v2"), col("nrm").as("nrm2"))))
+      .filter(col("vec_id_1") < col("vec_id_2"))
+      .withColumn("cosine", graft.functions.functions.vec_dot(col("v1"),
+        col("v2")) / (col("nrm1") * col("nrm2")))
+      .filter(col("cosine") >= 0.35)
+      .select("vec_id_1", "vec_id_2", "cosine")
       .as[(Long, Long, Double)].collect().toSet
     val fast = Dedup.embeddingCosinePairsExact(df, "vec_id", "embedding",
         minCosine = 0.35)
@@ -169,6 +176,11 @@ class SemDedupSpec extends AnyFunSuite {
     assert(!fast.exists { case (a, b, _) => a == b }, "no self pairs")
     assert(!fast.exists { case (a, b, _) => a == 41L || b == 41L },
       "zero-norm vector must drop at the threshold")
+    val refused = intercept[IllegalArgumentException](
+      Dedup.embeddingCosinePairsExact(
+        df.withColumn("vec_id", col("vec_id").cast("decimal(20,0)")),
+        "vec_id", "embedding", minCosine = 0.35))
+    assert(refused.getMessage.contains("DECIMAL(20,0)"))
   }
 
   test("kernel same-block enumeration is independent of array order (r20 advice)") {

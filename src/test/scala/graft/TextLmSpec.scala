@@ -174,6 +174,21 @@ class TextLmSpec extends AnyFunSuite {
     assert(mem.toSeq === file.toSeq)
   }
 
+  test("trigram: a manifest whose v disagrees with its uni row count refuses") {
+    val path = "target/test-trigram-lm/" + java.util.UUID.randomUUID().toString
+    graft.operators.TrigramLm.train(trigramTrainDocs, "text")
+      .write(path, source = "spec-fixture")
+    assert(graft.operators.TrigramLm.loadIfValid(spark, path, "spec-fixture").isDefined)
+    // every row count still matches its table; only the scalar is wrong
+    ManifestFields.rewrite(path, "v" -> "5")
+    assert(ManifestFields(path)("uniRows") === "4")
+    assert(graft.operators.TrigramLm.loadIfValid(spark, path, "spec-fixture").isEmpty,
+      "v must equal the uni row count")
+    ManifestFields.rewrite(path, "v" -> "4")
+    assert(graft.operators.TrigramLm.loadIfValid(spark, path, "spec-fixture").isDefined,
+      "the rewritten manifest with the true v must reopen")
+  }
+
   test("trigram: exciseFrom unlearns a doc batch exactly — all three " +
       "count tables AND both scalars — with ledger no-op and refusals") {
     import spark.implicits._
